@@ -19,6 +19,10 @@ Scale notes (100 TB):
   reference serializes every insert behind a chunk RwLock
   (/root/reference/src/chunk/chunk.rs:110-114); here concurrent
   writers can only produce duplicate dim rows, which reads drop.
+- Known series cost no dim work on ingest: a batch's distinct
+  series_ids are checked on the driver against the live dim files'
+  ids, cached per (immutable) file name, and only a batch carrying a
+  new series runs the dim anti-join and appends a dim file.
 
 Snapshot isolation (manifest-as-commit):
 - Every mutation — ingest append, compaction, delete, retention —
@@ -49,8 +53,9 @@ import shutil
 import time
 import uuid
 from contextlib import contextmanager
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -113,6 +118,11 @@ class MonolithDB:
         "parquet.bloom.filter.enabled#signature": "true",
         "parquet.bloom.filter.enabled#series_id": "true",
     }
+    # series_ids per live dim file name, the write path's known-series
+    # probe (_get_or_create_series). Dim files are immutable — a dim
+    # rewrite commits new names — so an entry never goes stale; entries
+    # for files a commit dropped are pruned on the next probe.
+    _dim_ids: dict = field(default_factory=dict, init=False, repr=False, compare=False)
 
     def __post_init__(self) -> None:
         self.samples_path = os.path.join(self.path, "samples")
@@ -625,6 +635,70 @@ class MonolithDB:
 
     # ------------------------------------------------------------------ write
 
+    def _get_or_create_series(self, df: DataFrame) -> tuple[list[str], DataFrame | None]:
+        """J5 get-or-create for a persisted batch carrying series_id /
+        signature / labels: stage dim rows for the batch's series the
+        live dim lacks. Returns (staged dim file names, the new-series
+        frame), or ([], None) when every series is already known.
+
+        The steady state — every series known — is decided on the
+        driver: the batch's distinct series_ids (one distinct over the
+        batch) are compared with the live dim files' ids, read once per
+        file with pyarrow and cached per file name (``_dim_ids``), so
+        no dim scan, anti-join or empty dim file runs. Only a batch
+        with some new id pays for the left_anti against the dim and the
+        dim write; an empty dim skips the probe. Content-hash ids keep
+        this idempotent without a critical section: two writers racing
+        on one new series both append it, and reads drop the duplicate
+        dim row."""
+        live = self._load_manifest()["series"]
+        new_series = df.select("series_id", "signature", "labels").dropDuplicates(
+            ["series_id"]
+        )
+        if live:
+            unknown = np.array(
+                [r[0] for r in df.select("series_id").distinct().collect()],
+                dtype=np.int64,
+            )
+            for ids in self._live_dim_ids(live):
+                unknown = unknown[~np.isin(unknown, ids)]
+                if not unknown.size:
+                    return [], None
+            # Same size gate as the query path: force-broadcasting a
+            # high-cardinality dim on every micro-batch would be the
+            # write path's scaling cliff.
+            new_series = new_series.join(
+                self._dim_hint(self._dim_scan(live).select("series_id")),
+                "series_id",
+                "left_anti",
+            )
+        dim_files = self._stage_and_move(
+            new_series.sortWithinPartitions("series_id"),
+            self.series_path,
+            options=self._DIM_WRITE_OPTS,
+        )
+        return dim_files, new_series
+
+    def _live_dim_ids(self, live: list[str]) -> list:
+        """The series_id array of each live dim file, from the per-file
+        cache (loaded on first sight), which is pruned to ``live``.
+        Concurrent writers may each rebuild the dict and the last
+        assignment wins; that can only cost a file's re-read, never a
+        wrong answer, since every entry is a function of an immutable
+        file."""
+        import pyarrow.parquet as pq
+
+        cache = self._dim_ids
+        self._dim_ids = cache = {
+            fn: cache[fn]
+            if fn in cache
+            else pq.read_table(
+                os.path.join(self.series_path, fn), columns=["series_id"]
+            )["series_id"].to_numpy()
+            for fn in live
+        }
+        return list(cache.values())
+
     def write(
         self,
         df: DataFrame,
@@ -635,12 +709,22 @@ class MonolithDB:
 
         The reference's write path (/root/reference/src/db.rs:176-194 →
         chunk.rs:110-137): range/zero filter (F1) → get-or-create series
-        (J5) → append points (S5). Here: filter → dim anti-join append →
-        fact append, all set-at-a-time, made visible by ONE manifest
-        commit — dim and fact rows of a batch appear atomically, and an
-        all-invalid batch (e.g. every ts==0; the reference errors
-        per-point, we drop set-at-a-time) moves zero files and commits
-        nothing, so no footer-less dirs and no emptiness probe.
+        (J5) → append points (S5). Here: filter → get-or-create
+        (_get_or_create_series) → fact append, all set-at-a-time, made
+        visible by ONE manifest commit — dim and fact rows of a batch
+        appear atomically, and an all-invalid batch (e.g. every ts==0;
+        the reference errors per-point, we drop set-at-a-time) moves
+        zero files and commits nothing, so no footer-less dirs and no
+        emptiness probe.
+
+        A batch whose series are all known — the steady state of a
+        remote-write stream — runs no dim job at all: its distinct
+        series_ids are checked on the driver against the live dim
+        files' ids, cached per file name. That cache is safe because
+        dim files are immutable: a dim rewrite (delete_series) commits
+        files under new names, and entries for files no longer live
+        are dropped. Only a batch with some new series runs the dim
+        anti-join and appends a dim file.
 
         With ``return_count=True``, returns how many sample rows
         survived the validity filter and were actually ingested (the
@@ -661,24 +745,7 @@ class MonolithDB:
         try:
             if return_count:
                 n_written = df.count()
-            # J5 get-or-create as a left_anti against the existing dim —
-            # content-hash ids make this idempotent (no critical section).
-            new_series = df.select("series_id", "signature", "labels").dropDuplicates(["series_id"])
-            existing = self._series_raw()
-            if existing is not None:
-                # Same size gate as the query path: force-broadcasting
-                # a high-cardinality dim on every micro-batch would be
-                # the write path's scaling cliff.
-                new_series = new_series.join(
-                    self._dim_hint(existing.select("series_id")),
-                    "series_id",
-                    "left_anti",
-                )
-            dim_files = self._stage_and_move(
-                new_series.sortWithinPartitions("series_id"),
-                self.series_path,
-                options=self._DIM_WRITE_OPTS,
-            )
+            dim_files, new_series = self._get_or_create_series(df)
             # Incremental posting maintenance (the reference's indexer
             # updates postings at insert time, sled_indexer.rs
             # get-or-create): if a FRESH label index exists, stage
@@ -770,8 +837,9 @@ class MonolithDB:
         keep it idempotent) → fact append into ``exemplars/chunk_id=N``
         partitions (the SAME chunk grid as samples, so query pruning is
         one predicate) — visible through ONE manifest commit. A batch
-        whose series are all known touches no dim file, so the posting
-        index stays fresh through steady-state exemplar ingest; a batch
+        whose series are all known runs no dim job and touches no dim
+        file (the same get-or-create as write()), so the posting index
+        stays fresh through steady-state exemplar ingest; a batch
         that DOES create series drops a stale index like any other dim
         change (readers fall back to the dim scan until the next
         build)."""
@@ -788,21 +856,7 @@ class MonolithDB:
         try:
             if return_count:
                 n_written = df.count()
-            new_series = df.select(
-                "series_id", "signature", "labels"
-            ).dropDuplicates(["series_id"])
-            existing = self._series_raw()
-            if existing is not None:
-                new_series = new_series.join(
-                    self._dim_hint(existing.select("series_id")),
-                    "series_id",
-                    "left_anti",
-                )
-            dim_files = self._stage_and_move(
-                new_series.sortWithinPartitions("series_id"),
-                self.series_path,
-                options=self._DIM_WRITE_OPTS,
-            )
+            dim_files, _ = self._get_or_create_series(df)
             fact_files = self._stage_and_move(
                 df.select(
                     "series_id", "timestamp", "value", "exemplar_labels",
@@ -876,8 +930,9 @@ class MonolithDB:
         # (or a historical) manifest, so a concurrent delete/compact
         # commit can't change what this DataFrame reads.
         files = self._load_manifest(at_version)["series"]
-        if not files:
-            return None
+        return self._dim_scan(files) if files else None
+
+    def _dim_scan(self, files: list[str]) -> DataFrame:
         return self.spark.read.parquet(
             *[os.path.join(self.series_path, f) for f in files]
         )
@@ -1141,9 +1196,7 @@ class MonolithDB:
         man = self._load_manifest()
         if not man["series"]:
             return man
-        src = self.spark.read.parquet(
-            *[os.path.join(self.series_path, f) for f in man["series"]]
-        ).dropDuplicates(["series_id"])
+        src = self._dim_scan(man["series"]).dropDuplicates(["series_id"])
         postings = self._postings_of(src, n_buckets)
         moved = self._stage_and_move(
             postings,

@@ -19,7 +19,10 @@ from __future__ import annotations
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+import pyarrow as pa
+
 from monolith_spark.engine import MonolithDB
+from monolith_spark.labels import SAMPLES_SCHEMA
 from monolith_spark.labels import LabelMatcher as EngineMatcher
 from monolith_spark.sources import otlp
 from monolith_spark.sources import remote as proto
@@ -27,30 +30,52 @@ from monolith_spark.sources import remote as proto
 from monolith_spark.barrier import barrier as _lineage_barrier
 
 
-def write_request_to_df(spark, req: proto.WriteRequest):
-    from monolith_spark.labels import SAMPLES_SCHEMA
+def _labels_array(maps: list[dict[str, str]]):
+    """One Arrow map<string,string> entry per label dict."""
+    offsets, keys, values = [0], [], []
+    for m in maps:
+        keys.extend(m)
+        values.extend(m.values())
+        offsets.append(len(keys))
+    return pa.MapArray.from_arrays(
+        pa.array(offsets, pa.int32()),
+        pa.array(keys, pa.string()),
+        pa.array(values, pa.string()),
+    )
 
-    rows = [
-        (ts.labels, s.timestamp, s.value)
-        for ts in req.timeseries
-        for s in ts.samples
-    ]
-    return spark.createDataFrame(rows, SAMPLES_SCHEMA)
+
+def _points_columns(req: proto.WriteRequest, attr: str):
+    """The request's ``attr`` points ("samples" or "exemplars") and
+    their [labels, timestamp, value] columns as Arrow arrays — each
+    series' label map is built once and gathered per point. A frame
+    built from a pyarrow.Table is planned as a LocalTableScan, so the
+    engine's signature / series_id / chunk_id projection folds into
+    the local relation and no job pays for Python row conversion."""
+    points = [(i, p) for i, s in enumerate(req.timeseries) for p in getattr(s, attr)]
+    owner = pa.array([i for i, _ in points], pa.int64())
+    return [p for _, p in points], {
+        "labels": _labels_array([s.labels for s in req.timeseries]).take(owner),
+        "timestamp": pa.array([p.timestamp for _, p in points], pa.int64()),
+        "value": pa.array([p.value for _, p in points], pa.float64()),
+    }
+
+
+def write_request_to_df(spark, req: proto.WriteRequest):
+    """The request's samples as a ``SAMPLES_SCHEMA`` frame."""
+    _, cols = _points_columns(req, "samples")
+    return spark.createDataFrame(pa.table(cols), SAMPLES_SCHEMA)
 
 
 def exemplars_request_to_df(spark, req: proto.WriteRequest):
     """The request's exemplars as a write_exemplars-shaped DataFrame
     ([series labels, timestamp, value, exemplar_labels]), or None when
     the request carries none."""
-    rows = [
-        (ts.labels, e.timestamp, e.value, e.labels)
-        for ts in req.timeseries
-        for e in ts.exemplars
-    ]
-    if not rows:
+    exemplars, cols = _points_columns(req, "exemplars")
+    if not exemplars:
         return None
+    cols["exemplar_labels"] = _labels_array([e.labels for e in exemplars])
     return spark.createDataFrame(
-        rows,
+        pa.table(cols),
         "labels map<string,string>, timestamp long, value double, "
         "exemplar_labels map<string,string>",
     )

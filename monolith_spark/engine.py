@@ -19,10 +19,17 @@ Scale notes (100 TB):
   reference serializes every insert behind a chunk RwLock
   (/root/reference/src/chunk/chunk.rs:110-114); here concurrent
   writers can only produce duplicate dim rows, which reads drop.
-- Known series cost no dim work on ingest: a batch's distinct
+- Ingest picks its path from the input. A batch already on the
+  driver (a server request frame, planned as a LocalRelation) is
+  appended in process, as the reference appends a request: collected
+  with no Spark job and written per chunk with pyarrow. A distributed
+  frame (Parquet scans, rules, streaming micro-batches) keeps the
+  Spark write, the only one that handles data the driver does not
+  hold. On both, known series cost no dim work: a batch's distinct
   series_ids are checked on the driver against the live dim files'
   ids, cached per (immutable) file name, and only a batch carrying a
-  new series runs the dim anti-join and appends a dim file.
+  new series runs the dim anti-join and appends a dim file — so a
+  steady-state request write runs zero Spark jobs.
 
 Snapshot isolation (manifest-as-commit):
 - Every mutation — ingest append, compaction, delete, retention —
@@ -66,7 +73,7 @@ from monolith_spark.labels import (
     matcher_predicate,
     regex_literal_set,
     series_id_expr,
-    signature_expr,
+    signature_sql_text,
     superset_predicate,
 )
 from monolith_spark.operators.timeseries import (
@@ -84,6 +91,17 @@ from monolith_spark.operators.timeseries import (
 DEFAULT_CHUNK_MS = 12_000 * 1000
 
 QueryMatcher = LabelMatcher
+
+
+def _fsync_dir(path: str) -> None:
+    """Make the renames into ``path`` durable: a rename is a change to
+    the directory, so it survives a power loss only once the directory
+    itself is fsync'd."""
+    fd = os.open(path, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
 
 
 @dataclass
@@ -296,6 +314,7 @@ class MonolithDB:
             f.flush()
             os.fsync(f.fileno())
         os.replace(cur_tmp, os.path.join(d, "CURRENT"))
+        _fsync_dir(d)  # the swing itself survives a power loss
 
     def _commit(self, mutate, op: str = "unknown") -> dict:
         """Commit a new snapshot: under the lock, re-read the latest
@@ -635,35 +654,43 @@ class MonolithDB:
 
     # ------------------------------------------------------------------ write
 
-    def _get_or_create_series(self, df: DataFrame) -> tuple[list[str], DataFrame | None]:
-        """J5 get-or-create for a persisted batch carrying series_id /
-        signature / labels: stage dim rows for the batch's series the
-        live dim lacks. Returns (staged dim file names, the new-series
-        frame), or ([], None) when every series is already known.
+    def _get_or_create_series(
+        self, df: DataFrame, batch_ids: np.ndarray | None = None
+    ) -> tuple[list[str], DataFrame | None]:
+        """J5 get-or-create for a batch carrying series_id / signature /
+        labels: stage dim rows for the batch's series the live dim
+        lacks. Returns (staged dim file names, the new-series frame),
+        or ([], None) when every series is already known.
 
         The steady state — every series known — is decided on the
-        driver: the batch's distinct series_ids (one distinct over the
-        batch) are compared with the live dim files' ids, read once per
-        file with pyarrow and cached per file name (``_dim_ids``), so
-        no dim scan, anti-join or empty dim file runs. Only a batch
-        with some new id pays for the left_anti against the dim and the
-        dim write; an empty dim skips the probe. Content-hash ids keep
-        this idempotent without a critical section: two writers racing
-        on one new series both append it, and reads drop the duplicate
-        dim row."""
+        driver: the batch's distinct series_ids (``batch_ids`` when the
+        caller already holds them, else one distinct over the batch)
+        are compared with the live dim files' ids, read once per file
+        with pyarrow and cached per file name (``_dim_ids``), so no dim
+        scan, anti-join or empty dim file runs. Only a batch with some
+        new id pays for the left_anti against the dim and the dim
+        write; an empty dim skips the probe. Content-hash ids keep this
+        idempotent without a critical section: two writers racing on
+        one new series both append it, and reads drop the duplicate dim
+        row."""
+        if batch_ids is not None and not batch_ids.size:
+            return [], None
         live = self._load_manifest()["series"]
-        new_series = df.select("series_id", "signature", "labels").dropDuplicates(
-            ["series_id"]
-        )
         if live:
-            unknown = np.array(
-                [r[0] for r in df.select("series_id").distinct().collect()],
-                dtype=np.int64,
-            )
+            unknown = batch_ids
+            if unknown is None:
+                unknown = np.array(
+                    [r[0] for r in df.select("series_id").distinct().collect()],
+                    dtype=np.int64,
+                )
             for ids in self._live_dim_ids(live):
                 unknown = unknown[~np.isin(unknown, ids)]
                 if not unknown.size:
                     return [], None
+        new_series = df.select("series_id", "signature", "labels").dropDuplicates(
+            ["series_id"]
+        )
+        if live:
             # Same size gate as the query path: force-broadcasting a
             # high-cardinality dim on every micro-batch would be the
             # write path's scaling cliff.
@@ -699,53 +726,60 @@ class MonolithDB:
         }
         return list(cache.values())
 
-    def write(
+    def _append(
         self,
         df: DataFrame,
+        table: str,
+        point_cols: list[str],
+        op: str,
         window: tuple[int, int] | None = None,
         return_count: bool = False,
     ) -> int | None:
-        """Ingest a batch of [labels, timestamp, value] rows.
+        """The fact append behind write() and write_exemplars(): the F1
+        filter and the signature / series_id / chunk_id projection →
+        get-or-create → series_id and the input's ``point_cols``
+        appended to ``table``'s ``chunk_id=N`` partitions, made visible
+        by ONE manifest commit (none when nothing survived the filter).
 
-        The reference's write path (/root/reference/src/db.rs:176-194 →
-        chunk.rs:110-137): range/zero filter (F1) → get-or-create series
-        (J5) → append points (S5). Here: filter → get-or-create
-        (_get_or_create_series) → fact append, all set-at-a-time, made
-        visible by ONE manifest commit — dim and fact rows of a batch
-        appear atomically, and an all-invalid batch (e.g. every ts==0;
-        the reference errors per-point, we drop set-at-a-time) moves
-        zero files and commits nothing, so no footer-less dirs and no
-        emptiness probe.
-
-        A batch whose series are all known — the steady state of a
-        remote-write stream — runs no dim job at all: its distinct
-        series_ids are checked on the driver against the live dim
-        files' ids, cached per file name. That cache is safe because
-        dim files are immutable: a dim rewrite (delete_series) commits
-        files under new names, and entries for files no longer live
-        are dropped. Only a batch with some new series runs the dim
-        anti-join and appends a dim file.
-
-        With ``return_count=True``, returns how many sample rows
-        survived the validity filter and were actually ingested (the
-        remote-write 2.0 ``-Samples-Written`` header must report the
-        receiver's truth, not the request's claim) — one extra count
-        job against the already-persisted batch, so opt-in to keep the
-        bulk-ingest path at its usual job count.
-        """
-        df = valid_points(df, window=window)
-        df = df.withColumn("signature", signature_expr("labels")).withColumn(
-            "series_id", F.xxhash64(F.col("signature"))
+        The path follows the input, with no option. A batch whose
+        projection optimizes to a LocalRelation — every server request
+        frame: it is built from Arrow on the driver, and Spark folds the
+        filter and projection into the local rows — is collected with
+        no Spark job; its distinct ids are checked on the driver and
+        each chunk's rows go to one Parquet file written by pyarrow
+        (_write_local_facts). Any other frame (Parquet scans, rule
+        output, streaming micro-batches) need not fit on the driver, so
+        it is persisted and written by Spark: a distinct for the ids,
+        then a ``repartition("chunk_id")`` fact write. Both paths create
+        new series with the same Spark dim write."""
+        # SQL text, like signature_expr's: one py4j round trip per
+        # select where Column-by-Column construction costs dozens
+        sig = signature_sql_text("`labels`")
+        df = valid_points(df, window=window).selectExpr(
+            "labels",
+            *point_cols,
+            f"{sig} AS signature",
+            f"xxhash64({sig}) AS series_id",
+            f"CAST(FLOOR(timestamp / {self.chunk_size_ms}) AS BIGINT) AS chunk_id",
         )
-        df = df.withColumn(
-            "chunk_id", F.floor(F.col("timestamp") / F.lit(self.chunk_size_ms)).cast("long")
-        )
-        df.persist()
-        n_written: int | None = None
+        fact_cols = ["series_id", *point_cols, "chunk_id"]
+        facts = df.selectExpr(*fact_cols)
+        plan = facts._jdf.queryExecution().optimizedPlan()
+        local = plan.getClass().getSimpleName() == "LocalRelation"
+        if not local:
+            df.persist()
         try:
-            if return_count:
-                n_written = df.count()
-            dim_files, new_series = self._get_or_create_series(df)
+            if local:
+                rows = facts.collect()
+                n_written = len(rows)
+                cols = dict(zip(fact_cols, zip(*rows)))
+                batch_ids = np.unique(
+                    np.array(cols.get("series_id", ()), dtype=np.int64)
+                )
+            else:
+                n_written = df.count() if return_count else None
+                batch_ids = None
+            dim_files, new_series = self._get_or_create_series(df, batch_ids)
             # Incremental posting maintenance (the reference's indexer
             # updates postings at insert time, sled_indexer.rs
             # get-or-create): if a FRESH label index exists, stage
@@ -769,15 +803,19 @@ class MonolithDB:
                         options=self._INDEX_WRITE_OPTS,
                     )
                     post_stats = self._posting_stats_from_moved(post_files)
-            # Time-sorted within partitions → Parquet row-group min/max
-            # stats implement F3's binary search.
-            fact_files = self._stage_and_move(
-                df.select("series_id", "timestamp", "value", "chunk_id")
-                .repartition("chunk_id")
-                .sortWithinPartitions("series_id", "timestamp"),
-                self.samples_path,
-                partition_by="chunk_id",
-            )
+            table_path = os.path.join(self.path, table)
+            if local:
+                fact_files = self._write_local_facts(cols, table_path)
+            else:
+                # Time-sorted within partitions → Parquet row-group
+                # min/max stats implement F3's binary search.
+                fact_files = self._stage_and_move(
+                    df.selectExpr(*fact_cols)
+                    .repartition("chunk_id")
+                    .sortWithinPartitions("series_id", "timestamp"),
+                    table_path,
+                    partition_by="chunk_id",
+                )
             if dim_files or fact_files:
 
                 def add(man: dict) -> None:
@@ -791,10 +829,9 @@ class MonolithDB:
                         post_files and idx and idx["series"] == man["series"]
                     )
                     man["series"] = sorted(set(man["series"]) | set(dim_files))
+                    chunks = man.setdefault(table, {})
                     for cid, files in fact_files.items():
-                        man["samples"][cid] = sorted(
-                            set(man["samples"].get(cid, [])) | set(files)
-                        )
+                        chunks[cid] = sorted(set(chunks.get(cid, [])) | set(files))
                     if extend_idx:
                         for b, files in post_files.items():
                             idx["buckets"][b] = sorted(
@@ -819,10 +856,111 @@ class MonolithDB:
                         # entry; build_label_index recreates it.
                         del man["label_index"]
 
-                self._commit(add, op="write")
+                self._commit(add, op=op)
         finally:
-            df.unpersist()
-        return n_written
+            if not local:
+                df.unpersist()
+        return n_written if return_count else None
+
+    def _write_local_facts(
+        self, cols: dict[str, tuple], table_path: str
+    ) -> dict[str, list[str]]:
+        """The driver-side fact write of a collected batch (column name
+        → values, chunk_id included): one Parquet file per chunk, rows
+        sorted by (series_id, timestamp) as the Spark write sorts them,
+        chunk_id left to the directory name. Each file is written under
+        ``_staged/``, fsync'd and renamed into ``chunk_id=N/``; like
+        _stage_and_move, it is live only once a commit lists it.
+        Returns {chunk_id: [basename]}."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        if not cols:
+            return {}
+        chunk = np.array(cols["chunk_id"], dtype=np.int64)
+        order = np.lexsort((
+            np.array(cols["timestamp"], dtype=np.int64),
+            np.array(cols["series_id"], dtype=np.int64),
+            chunk,
+        ))
+        types = {
+            "series_id": pa.int64(),
+            "timestamp": pa.int64(),
+            "value": pa.float64(),
+            "exemplar_labels": pa.map_(pa.string(), pa.string()),
+        }
+        table = pa.table({
+            name: pa.array(values, types[name])
+            for name, values in cols.items()
+            if name != "chunk_id"
+        }).take(order)
+        chunk = chunk[order]
+        cids, starts = np.unique(chunk, return_index=True)
+        staging = os.path.join(self.path, "_staged", uuid.uuid4().hex)
+        os.makedirs(staging)
+        moved: dict[str, list[str]] = {}
+        try:
+            for cid, lo, hi in zip(cids, starts, [*starts[1:], len(chunk)]):
+                fn = f"part-{uuid.uuid4().hex}.parquet"
+                tmp = os.path.join(staging, fn)
+                with open(tmp, "wb") as f:
+                    pq.write_table(table.slice(lo, hi - lo), f)
+                    f.flush()
+                    os.fsync(f.fileno())
+                dst_dir = os.path.join(table_path, f"chunk_id={cid}")
+                os.makedirs(dst_dir, exist_ok=True)
+                os.rename(tmp, os.path.join(dst_dir, fn))
+                _fsync_dir(dst_dir)
+                moved[str(cid)] = [fn]
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
+        return moved
+
+    def write(
+        self,
+        df: DataFrame,
+        window: tuple[int, int] | None = None,
+        return_count: bool = False,
+    ) -> int | None:
+        """Ingest a batch of [labels, timestamp, value] rows.
+
+        The reference's write path (src/db.rs:176-194 →
+        src/chunk/chunk.rs:110-137): range/zero filter (F1) → get-or-create series
+        (J5) → append points (S5). Here: filter → get-or-create
+        (_get_or_create_series) → fact append, all set-at-a-time, made
+        visible by ONE manifest commit — dim and fact rows of a batch
+        appear atomically, and an all-invalid batch (e.g. every ts==0;
+        the reference errors per-point, we drop set-at-a-time) moves
+        zero files and commits nothing.
+
+        Which path runs depends on the input (_append). A batch already
+        on the driver — a server request frame, planned as a
+        LocalRelation — is appended in process like the reference's:
+        collected with no Spark job and written per chunk by pyarrow,
+        so a batch whose series are all known runs ZERO Spark jobs. A
+        distributed frame (Parquet-backed: rules, ingest_scrape,
+        streaming sinks) keeps the Spark write, the only one that
+        handles data the driver does not hold: persist, a distinct for
+        the series ids, and a ``repartition("chunk_id")`` fact write.
+        On both paths known series cost no dim job: the ids are checked
+        on the driver against the live dim files' ids, cached per file
+        name, which is safe because dim files are immutable (a dim
+        rewrite — delete_series — commits new names, and entries for
+        files no longer live are dropped). Only a batch with some new
+        series runs the dim anti-join and appends a dim file.
+
+        With ``return_count=True``, returns how many sample rows
+        survived the validity filter and were actually ingested (the
+        remote-write 2.0 ``-Samples-Written`` header must report the
+        receiver's truth, not the request's claim): the collected row
+        count on the local path, one extra count job against the
+        persisted batch on the distributed one — opt-in, to keep bulk
+        ingest at its usual job count.
+        """
+        return self._append(
+            df, "samples", ["timestamp", "value"], "write",
+            window=window, return_count=return_count,
+        )
 
     # -------------------------------------------------------------- exemplars
 
@@ -831,57 +969,20 @@ class MonolithDB:
     ) -> int | None:
         """Ingest exemplars — [labels (series labels), timestamp,
         value, exemplar_labels] rows, the trace-id'd sample references
-        remote-write 1.0/2.0 carry alongside samples. Same set-at-a-time
-        shape as write(): ts!=0 filter → dim get-or-create (exemplars
-        may reference series never written as samples; content-hash ids
-        keep it idempotent) → fact append into ``exemplars/chunk_id=N``
-        partitions (the SAME chunk grid as samples, so query pruning is
-        one predicate) — visible through ONE manifest commit. A batch
-        whose series are all known runs no dim job and touches no dim
-        file (the same get-or-create as write()), so the posting index
-        stays fresh through steady-state exemplar ingest; a batch
-        that DOES create series drops a stale index like any other dim
-        change (readers fall back to the dim scan until the next
-        build)."""
-        df = valid_points(df)
-        df = df.withColumn("signature", signature_expr("labels")).withColumn(
-            "series_id", F.xxhash64(F.col("signature"))
+        remote-write 1.0/2.0 carry alongside samples. The same append
+        as write(), paths included (_append): ts!=0 filter → dim
+        get-or-create (exemplars may reference series never written as
+        samples; content-hash ids keep it idempotent) → fact append
+        into ``exemplars/chunk_id=N`` partitions (the SAME chunk grid as
+        samples, so query pruning is one predicate) — visible through
+        ONE manifest commit. A server frame runs no Spark job when its
+        series are all known; a batch that creates series extends a
+        fresh label index with their postings, like write()."""
+        return self._append(
+            df, "exemplars",
+            ["timestamp", "value", "exemplar_labels"],
+            "write-exemplars", return_count=return_count,
         )
-        df = df.withColumn(
-            "chunk_id",
-            F.floor(F.col("timestamp") / F.lit(self.chunk_size_ms)).cast("long"),
-        )
-        df.persist()
-        n_written: int | None = None
-        try:
-            if return_count:
-                n_written = df.count()
-            dim_files, _ = self._get_or_create_series(df)
-            fact_files = self._stage_and_move(
-                df.select(
-                    "series_id", "timestamp", "value", "exemplar_labels",
-                    "chunk_id",
-                )
-                .repartition("chunk_id")
-                .sortWithinPartitions("series_id", "timestamp"),
-                self.exemplars_path,
-                partition_by="chunk_id",
-            )
-            if dim_files or fact_files:
-
-                def add(man: dict) -> None:
-                    man["series"] = sorted(set(man["series"]) | set(dim_files))
-                    ex = man.setdefault("exemplars", {})
-                    for cid, files in fact_files.items():
-                        ex[cid] = sorted(set(ex.get(cid, [])) | set(files))
-                    idx = man.get("label_index")
-                    if idx is not None and idx["series"] != man["series"]:
-                        del man["label_index"]
-
-                self._commit(add, op="write-exemplars")
-        finally:
-            df.unpersist()
-        return n_written
 
     def exemplars(self, at_version: int | None = None) -> DataFrame:
         """The exemplars fact table at a snapshot — explicit file-list

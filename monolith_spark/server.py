@@ -17,6 +17,7 @@ happens in Spark; HTTP is just transport (SURVEY §2.1 S2).
 from __future__ import annotations
 
 import threading
+import zlib
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 import pyarrow as pa
@@ -58,6 +59,23 @@ def _points_columns(req: proto.WriteRequest, attr: str):
         "timestamp": pa.array([p.timestamp for _, p in points], pa.int64()),
         "value": pa.array([p.value for _, p in points], pa.float64()),
     }
+
+
+def _gunzip_bounded(body: bytes, cap: int) -> bytes | None:
+    """A gzip body (every member) decoded to at most ``cap`` bytes, or
+    None when it decodes to more: the decoder stops one byte past the
+    cap, so a small bomb never expands in memory. A truncated stream
+    raises ValueError."""
+    out = bytearray()
+    while body:
+        d = zlib.decompressobj(wbits=31)
+        out += d.decompress(body, cap + 1 - len(out))
+        if len(out) > cap:
+            return None
+        if not d.eof:
+            raise ValueError("truncated gzip body")
+        body = d.unused_data
+    return bytes(out)
 
 
 def write_request_to_df(spark, req: proto.WriteRequest):
@@ -944,9 +962,12 @@ class MonolithServer:
                             int(self.headers.get("Content-Length", "0"))
                         )
                         if self.headers.get("Content-Encoding") == "gzip":
-                            import gzip as _gzip
-
-                            body = _gzip.decompress(body)
+                            body = _gunzip_bounded(body, proto.MAX_DECODED_BYTES)
+                            if body is None:
+                                self.send_response(413)
+                                self.send_header("Content-Length", "0")
+                                self.end_headers()
+                                return
                         req, meta, stats = otlp.otlp_to_write_request(body)
                         if req.timeseries:
                             server.db.write(

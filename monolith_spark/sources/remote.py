@@ -29,13 +29,27 @@ except Exception:  # pragma: no cover - not installed in this container
 
 # ------------------------------------------------------------------ snappy
 
+# Largest decoded request body accepted on ingest: Prometheus's
+# remote-write decode limit. A small compressed body can declare (or
+# expand to) far more than it carries, so decoders check this bound
+# before they allocate.
+MAX_DECODED_BYTES = 32 << 20
+
+
 def snappy_decompress(data: bytes) -> bytes:
-    """Snappy block-format decompressor (pure python)."""
+    """Snappy block-format decompressor (pure python). Rejects a
+    declared length over MAX_DECODED_BYTES before decoding anything,
+    and a stream that would outgrow its declared length before the
+    element that overflows is copied."""
+    # preamble: uncompressed length varint
+    ulen, pos = _read_varint(data, 0)
+    if ulen > MAX_DECODED_BYTES:
+        raise ValueError(
+            f"snappy stream declares {ulen} bytes, over the "
+            f"{MAX_DECODED_BYTES}-byte decode limit"
+        )
     if _snappy_c is not None:
         return _snappy_c.decompress(data)
-    pos = 0
-    # preamble: uncompressed length varint
-    ulen, pos = _read_varint(data, pos)
     out = bytearray()
     while pos < len(data):
         tag = data[pos]
@@ -48,6 +62,8 @@ def snappy_decompress(data: bytes) -> bytes:
                 ln = int.from_bytes(data[pos: pos + nbytes], "little")
                 pos += nbytes
             ln += 1
+            if len(out) + ln > ulen:
+                raise ValueError("corrupt snappy stream: output past declared length")
             out += data[pos: pos + ln]
             pos += ln
         else:
@@ -65,6 +81,8 @@ def snappy_decompress(data: bytes) -> bytes:
                 pos += 4
             if offset == 0 or offset > len(out):
                 raise ValueError("corrupt snappy stream: bad copy offset")
+            if len(out) + ln > ulen:
+                raise ValueError("corrupt snappy stream: output past declared length")
             # overlapping copies are legal and common (RLE-style)
             start = len(out) - offset
             for i in range(ln):

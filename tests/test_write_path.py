@@ -1,6 +1,8 @@
-"""Remote-write ingest path: the Arrow-built request frames and the
-engine's known-series get-or-create (no dim job for series the live dim
-already holds), including the cases that replace or race on dim files."""
+"""Remote-write ingest path: the Arrow-built request frames, the
+engine's driver-local append of them (no Spark job for series the live
+dim already holds) against the distributed append of the same rows, the
+cases that replace or race on dim files, and the bounds and durability
+of what the ingest path decodes and commits."""
 
 from __future__ import annotations
 
@@ -131,9 +133,10 @@ def test_http_empty_request_and_rw2_written_count(spark, tmp_path):
 
 
 def test_known_series_write_runs_no_dim_job(spark, tmp_path):
-    """Steady state: rewriting a known series set runs at most 5 Spark
-    jobs, adds no dim file and commits exactly one manifest version; one
-    new series among known ones adds exactly one dim row."""
+    """Steady state: rewriting a known series set from a request frame
+    runs no Spark job at all, adds no dim file and commits exactly one
+    manifest version; one new series among known ones adds exactly one
+    dim row."""
     db = MonolithDB(spark, str(tmp_path / "db"), chunk_size_ms=60_000)
     names = [f"s{i}" for i in range(20)]
     _write(spark, db, {n: [(1_000, 1.0), (2_000, 2.0)] for n in names})
@@ -141,7 +144,7 @@ def test_known_series_write_runs_no_dim_job(spark, tmp_path):
 
     n_jobs = _jobs(spark, "known_write", lambda: _write(
         spark, db, {n: [(3_000, 3.0), (4_000, 4.0)] for n in names}))
-    assert n_jobs <= 5, n_jobs
+    assert n_jobs == 0, n_jobs
     assert _dim_files(db) == files
     man = db._read_current()
     assert man["version"] == version + 1 and man["series"] == files
@@ -212,3 +215,176 @@ def test_concurrent_writers_create_one_series(spark, tmp_path):
     (r,) = db.query({"s": "x"}, 0, 10**9).collect()
     assert [p["timestamp"] for p in r["points"]] == stamps
     assert len(_rows(db, "old")) == 1 + len(stamps)
+
+
+# ------------------------------------------- driver-local vs distributed
+
+
+def _parquet_frame(spark, df, path: str):
+    """The same rows as a Parquet-backed frame: the distributed path."""
+    df.write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_local_and_distributed_appends_agree(spark, tmp_path):
+    """One request sequence written as request frames (driver-local
+    append) and as Parquet-backed frames (Spark append) into two dbs:
+    return counts, commits, dim rows, samples and exemplars all match
+    row for row — across a chunk boundary, with ±Inf, ts == 0 dropped,
+    an all-invalid batch committing nothing, a new series among known
+    ones and an exemplar label map."""
+    dbs = {k: MonolithDB(spark, str(tmp_path / k), chunk_size_ms=60_000)
+           for k in ("local", "dist")}
+    seq = iter(range(1000))
+
+    def both(req, exemplars: bool = False) -> int:
+        counts = {}
+        for kind, db in dbs.items():
+            df = (exemplars_request_to_df if exemplars else write_request_to_df)(
+                spark, req)
+            if kind == "dist":
+                df = _parquet_frame(spark, df, str(tmp_path / f"in{next(seq)}"))
+            write = db.write_exemplars if exemplars else db.write
+            counts[kind] = write(df, return_count=True)
+        assert counts["local"] == counts["dist"]
+        return counts["local"]
+
+    inf = float("inf")
+    first = {f"s{i}": [(0, 9.0), (59_000, inf), (61_000, -inf), (62_000, i + 0.5)]
+             for i in range(4)}
+    assert both(_req(first)) == 12  # ts == 0 dropped; chunks 0 and 1
+    versions = {k: db._read_current()["version"] for k, db in dbs.items()}
+    assert both(_req({"s0": [(0, 1.0)], "s1": [(0, 2.0)]})) == 0
+    assert {k: db._read_current()["version"] for k, db in dbs.items()} == versions
+
+    assert both(_req({"s0": [(120_500, 3.0)], "s1": [(119_000, 4.0)],
+                      "new": [(121_000, 5.0)]})) == 3
+    assert {k: db._series_raw().count() for k, db in dbs.items()} == {
+        "local": 5, "dist": 5}
+
+    req = _req({"s2": [(63_000, 7.0)], "s3": [(64_000, 8.0)]})
+    req.timeseries[0].exemplars = [
+        proto.Exemplar({"trace_id": "a", "span_id": "1"}, 7.0, 59_500),
+        proto.Exemplar({}, -inf, 0),
+    ]
+    req.timeseries[1].exemplars = [proto.Exemplar({"trace_id": "b"}, 8.0, 64_000)]
+    assert both(req, exemplars=True) == 2
+
+    def facts(frame) -> list[tuple]:
+        return sorted(
+            tuple(sorted(v.items()) if isinstance(v, dict) else v for v in r)
+            for r in frame.select(sorted(frame.columns)).collect()
+        )
+
+    local, dist = dbs["local"], dbs["dist"]
+    assert facts(local.samples()) == facts(dist.samples())
+    assert len(facts(local.samples())) == 15
+    assert facts(local.exemplars()) == facts(dist.exemplars())
+    assert facts(local.series()) == facts(dist.series())
+    assert [h["op"] for h in local.history()] == [h["op"] for h in dist.history()]
+
+
+def test_request_frames_keep_label_index_fresh(spark, tmp_path):
+    """New series arriving as request frames, in samples or only in
+    exemplars, get postings in the same commit: the label index stays
+    fresh and serves them."""
+    db = MonolithDB(spark, str(tmp_path / "db"), chunk_size_ms=60_000)
+    _write(spark, db, {"a": [(1_000, 1.0)], "b": [(1_000, 2.0)]})
+    db.build_label_index()
+    _write(spark, db, {"a": [(2_000, 3.0)], "c": [(2_000, 4.0)]})
+    assert db._index_fresh(db._load_manifest())
+    req = _req({"d": []})
+    req.timeseries[0].exemplars = [proto.Exemplar({"trace_id": "t"}, 5.0, 3_000)]
+    db.write_exemplars(exemplars_request_to_df(spark, req))
+    assert db._index_fresh(db._load_manifest())
+    assert _rows(db, "c") == [(2_000, 4.0)]
+    assert [dict(r["exemplar_labels"]) for r in
+            db.query_exemplars({"s": "d"}, 0, 10**9).collect()] == [{"trace_id": "t"}]
+
+
+def test_staleness_marker_bits_survive_storage(spark, tmp_path):
+    """The Prometheus staleness marker is a NaN with payload bits; a
+    request frame's rows keep them through the driver-local Parquet
+    write, so a read returns the marker, not a canonical NaN."""
+    stale = struct.unpack("<d", struct.pack("<Q", STALE_NAN_BITS))[0]
+    db = MonolithDB(spark, str(tmp_path / "db"), chunk_size_ms=60_000)
+    _write(spark, db, {"a": [(1_000, 1.0), (2_000, stale)]})
+    rows = sorted(db.query_flat({"s": "a"}, 0, 10**9).collect(),
+                  key=lambda r: r["timestamp"])
+    assert [_bits(r["value"]) for r in rows] == [_bits(1.0), STALE_NAN_BITS]
+
+
+# --------------------------------------------- durability and input bounds
+
+
+def test_manifest_directory_synced_after_swing(spark, tmp_path, monkeypatch):
+    """A commit fsyncs the _manifest directory after CURRENT is
+    replaced, so the swing itself survives a power loss."""
+    db = MonolithDB(spark, str(tmp_path / "db"), chunk_size_ms=60_000)
+    db.set_metric_metadata({"m": {"type": "gauge"}})  # manifest exists
+    d_ino = os.stat(db._manifest_dir()).st_ino
+    events: list[str] = []
+    real_fsync, real_replace = os.fsync, os.replace
+
+    def fsync(fd):
+        if os.fstat(fd).st_ino == d_ino:
+            events.append("fsync-dir")
+        return real_fsync(fd)
+
+    def replace(src, dst):
+        real_replace(src, dst)
+        events.append(f"replace-{os.path.basename(dst)}")
+
+    monkeypatch.setattr(os, "fsync", fsync)
+    monkeypatch.setattr(os, "replace", replace)
+    db.set_metric_metadata({"m": {"help": "h"}})
+    assert "replace-CURRENT" in events
+    assert "fsync-dir" in events[events.index("replace-CURRENT"):]
+
+
+def test_snappy_decode_is_bounded():
+    """A forged declared length past the decode limit is rejected
+    before decoding, and a stream that outgrows its declared length
+    stops at the element that would overflow it."""
+    forged = proto._write_varint(proto.MAX_DECODED_BYTES + 1) + b"\x00x"
+    try:
+        proto.snappy_decompress(forged)
+        raise AssertionError("forged length accepted")
+    except ValueError as e:
+        assert "decode limit" in str(e)
+    # declares 8 bytes, then a 4-byte literal and a 64-byte copy of it
+    overlong = proto._write_varint(8) + bytes([3 << 2]) + b"abcd" + bytes(
+        [(63 << 2) | 2]) + (4).to_bytes(2, "little")
+    try:
+        proto.snappy_decompress(overlong)
+        raise AssertionError("overlong stream accepted")
+    except ValueError as e:
+        assert "past declared length" in str(e)
+    data = b"abc" * 1000
+    assert proto.snappy_decompress(proto.snappy_compress(data)) == data
+
+
+def test_otlp_gzip_bomb_is_413(spark, tmp_path):
+    """An OTLP body that gunzips to one byte past the decode limit is
+    answered 413 without being expanded; nothing is committed."""
+    import gzip
+    import http.client
+
+    from monolith_spark.server import MonolithServer
+    from monolith_spark.sources import otlp
+
+    db = MonolithDB(spark, str(tmp_path / "db"), chunk_size_ms=60_000)
+    srv = MonolithServer(db, port=0)
+    srv.serve_background()
+    try:
+        conn = http.client.HTTPConnection("127.0.0.1", srv.port, timeout=60)
+        bomb = gzip.compress(bytes(proto.MAX_DECODED_BYTES + 1), compresslevel=9)
+        conn.request("POST", otlp.OTLP_PATH, body=bomb, headers={
+            "Content-Type": otlp.OTLP_CONTENT_TYPE, "Content-Encoding": "gzip"})
+        resp = conn.getresponse()
+        resp.read()
+        conn.close()
+        assert resp.status == 413
+        assert db._read_current() is None
+    finally:
+        srv.shutdown()

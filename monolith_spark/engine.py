@@ -19,17 +19,20 @@ Scale notes (100 TB):
   reference serializes every insert behind a chunk RwLock
   (/root/reference/src/chunk/chunk.rs:110-114); here concurrent
   writers can only produce duplicate dim rows, which reads drop.
-- Ingest picks its path from the input. A batch already on the
-  driver (a server request frame, planned as a LocalRelation) is
-  appended in process, as the reference appends a request: collected
-  with no Spark job and written per chunk with pyarrow. A distributed
-  frame (Parquet scans, rules, streaming micro-batches) keeps the
-  Spark write, the only one that handles data the driver does not
-  hold. On both, known series cost no dim work: a batch's distinct
-  series_ids are checked on the driver against the live dim files'
-  ids, cached per (immutable) file name, and only a batch carrying a
-  new series runs the dim anti-join and appends a dim file — so a
-  steady-state request write runs zero Spark jobs.
+- Ingest picks its path from the input. An IngestBatch — a decoded
+  request, already on the driver as label maps and point columns — is
+  appended in process, as the reference appends a request: no
+  DataFrame is built, series ids come from a memo of Spark's own
+  signature + xxhash64 (bounded to the live dim's series; a label set
+  not seen yet costs one jobless LocalRelation collect), and each
+  chunk's rows are written with pyarrow, samples and exemplars in one
+  commit. Any DataFrame (Parquet scans, rules, streaming micro-batches)
+  takes the Spark write, the only one that handles data the driver
+  does not hold. On both, known series cost no dim work: a batch's
+  distinct series_ids are checked on the driver against the live dim
+  files' ids, cached per (immutable) file name, and only a batch
+  carrying a new series runs the dim anti-join and appends a dim file
+  — so a steady-state request write makes zero py4j calls.
 
 Snapshot isolation (manifest-as-commit):
 - Every mutation — ingest append, compaction, delete, retention —
@@ -57,6 +60,7 @@ import fcntl
 import json
 import os
 import shutil
+import threading
 import time
 import uuid
 from contextlib import contextmanager
@@ -65,10 +69,12 @@ from dataclasses import dataclass, field
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from monolith_spark.labels import (
     EQ,
     RE,
+    SAMPLES_SCHEMA,
     LabelMatcher,
     matcher_predicate,
     regex_literal_set,
@@ -91,6 +97,7 @@ from monolith_spark.operators.timeseries import (
 DEFAULT_CHUNK_MS = 12_000 * 1000
 
 QueryMatcher = LabelMatcher
+_LABELS_SCHEMA = StructType([SAMPLES_SCHEMA["labels"]])
 
 
 def _fsync_dir(path: str) -> None:
@@ -102,6 +109,79 @@ def _fsync_dir(path: str) -> None:
         os.fsync(fd)
     finally:
         os.close(fd)
+
+
+def _labels_array(maps: list[dict[str, str]]):
+    """One Arrow map<string,string> entry per label dict."""
+    import pyarrow as pa
+
+    offsets, keys, values = [0], [], []
+    for m in maps:
+        keys.extend(m)
+        values.extend(m.values())
+        offsets.append(len(keys))
+    return pa.MapArray.from_arrays(
+        pa.array(offsets, pa.int32()),
+        pa.array(keys, pa.string()),
+        pa.array(values, pa.string()),
+    )
+
+
+@dataclass
+class Points:
+    """One point kind of an IngestBatch, as columns: per point, the
+    index of its series in ``IngestBatch.labels``, its timestamp (ms)
+    and value, and for exemplars its own label map."""
+
+    owner: np.ndarray  # int64
+    timestamp: np.ndarray  # int64
+    value: np.ndarray  # float64
+    labels: list[dict[str, str]] | None = None
+
+    def valid(self, window: tuple[int, int] | None = None) -> np.ndarray:
+        """The F1/F2 mask of valid_points: ts != 0, and inside
+        ``window`` (bounds inclusive) when one is given."""
+        ts = self.timestamp
+        keep = ts != 0
+        if window is not None:
+            keep &= (ts >= window[0]) & (ts <= window[1])
+        return keep
+
+
+@dataclass
+class IngestBatch:
+    """A write batch already on the driver — a decoded remote-write
+    request: each series' label map once, and its samples and
+    exemplars (None when it carries none) as point columns.
+    MonolithDB.write takes it in place of a DataFrame and appends it in
+    process, with no DataFrame built."""
+
+    labels: list[dict[str, str]]
+    samples: Points
+    exemplars: Points | None = None
+
+    def frame(self, spark: SparkSession, exemplars: bool = False) -> DataFrame | None:
+        """The samples (or exemplars) as a DataFrame — SAMPLES_SCHEMA,
+        plus ``exemplar_labels`` for exemplars — built from Arrow, so
+        Spark plans it as a LocalTableScan; None for absent exemplars."""
+        import pyarrow as pa
+
+        pts = self.exemplars if exemplars else self.samples
+        if pts is None:
+            return None
+        cols = {
+            "labels": _labels_array(self.labels).take(pa.array(pts.owner, pa.int64())),
+            "timestamp": pa.array(pts.timestamp, pa.int64()),
+            "value": pa.array(pts.value, pa.float64()),
+        }
+        if not exemplars:
+            return spark.createDataFrame(pa.table(cols), SAMPLES_SCHEMA)
+        cols["exemplar_labels"] = _labels_array(pts.labels)
+        return spark.createDataFrame(
+            pa.table(cols),
+            "labels map<string,string>, timestamp long, value double, "
+            "exemplar_labels map<string,string>",
+        )
 
 
 @dataclass
@@ -131,16 +211,26 @@ class MonolithDB:
     # skip row groups (the sled point-get analog at rest); series_id →
     # the IN-pushdown hydration path (_hydrate) skips row groups, with
     # min/max doing the coarse cut since dim files are series_id-sorted
-    # at write. Negligible write cost on a dim.
+    # at write. Adaptive sizing fits each filter to its column's
+    # distinct count, so a one-series dim file is not a fixed ~2 MB.
     _DIM_WRITE_OPTS = {
         "parquet.bloom.filter.enabled#signature": "true",
         "parquet.bloom.filter.enabled#series_id": "true",
+        "parquet.bloom.filter.adaptive.enabled": "true",
     }
     # series_ids per live dim file name, the write path's known-series
-    # probe (_get_or_create_series). Dim files are immutable — a dim
-    # rewrite commits new names — so an entry never goes stale; entries
-    # for files a commit dropped are pruned on the next probe.
+    # probe (_unknown_ids). Dim files are immutable — a dim rewrite
+    # commits new names — so an entry never goes stale; entries for
+    # files a commit dropped are pruned on the next probe.
     _dim_ids: dict = field(default_factory=dict, init=False, repr=False, compare=False)
+    # label set (frozenset of its items) → series_id, the IngestBatch
+    # path's memo of Spark's own signature + xxhash64 (_batch_series_ids).
+    # A pure function, so never stale; it holds only series of the live
+    # dim and is pruned when _dim_ids drops a file.
+    _sid_memo: dict = field(default_factory=dict, init=False, repr=False, compare=False)
+    _sid_memo_lock: threading.Lock = field(
+        default_factory=threading.Lock, init=False, repr=False, compare=False
+    )
 
     def __post_init__(self) -> None:
         self.samples_path = os.path.join(self.path, "samples")
@@ -654,69 +744,18 @@ class MonolithDB:
 
     # ------------------------------------------------------------------ write
 
-    def _get_or_create_series(
-        self, df: DataFrame, batch_ids: np.ndarray | None = None
-    ) -> tuple[list[str], DataFrame | None]:
-        """J5 get-or-create for a batch carrying series_id / signature /
-        labels: stage dim rows for the batch's series the live dim
-        lacks. Returns (staged dim file names, the new-series frame),
-        or ([], None) when every series is already known.
-
-        The steady state — every series known — is decided on the
-        driver: the batch's distinct series_ids (``batch_ids`` when the
-        caller already holds them, else one distinct over the batch)
-        are compared with the live dim files' ids, read once per file
-        with pyarrow and cached per file name (``_dim_ids``), so no dim
-        scan, anti-join or empty dim file runs. Only a batch with some
-        new id pays for the left_anti against the dim and the dim
-        write; an empty dim skips the probe. Content-hash ids keep this
-        idempotent without a critical section: two writers racing on
-        one new series both append it, and reads drop the duplicate dim
-        row."""
-        if batch_ids is not None and not batch_ids.size:
-            return [], None
-        live = self._load_manifest()["series"]
-        if live:
-            unknown = batch_ids
-            if unknown is None:
-                unknown = np.array(
-                    [r[0] for r in df.select("series_id").distinct().collect()],
-                    dtype=np.int64,
-                )
-            for ids in self._live_dim_ids(live):
-                unknown = unknown[~np.isin(unknown, ids)]
-                if not unknown.size:
-                    return [], None
-        new_series = df.select("series_id", "signature", "labels").dropDuplicates(
-            ["series_id"]
-        )
-        if live:
-            # Same size gate as the query path: force-broadcasting a
-            # high-cardinality dim on every micro-batch would be the
-            # write path's scaling cliff.
-            new_series = new_series.join(
-                self._dim_hint(self._dim_scan(live).select("series_id")),
-                "series_id",
-                "left_anti",
-            )
-        dim_files = self._stage_and_move(
-            new_series.sortWithinPartitions("series_id"),
-            self.series_path,
-            options=self._DIM_WRITE_OPTS,
-        )
-        return dim_files, new_series
-
     def _live_dim_ids(self, live: list[str]) -> list:
         """The series_id array of each live dim file, from the per-file
-        cache (loaded on first sight), which is pruned to ``live``.
-        Concurrent writers may each rebuild the dict and the last
+        cache (loaded on first sight), which is pruned to ``live``; when
+        that drops a file, the series-id memo is pruned to the ids still
+        live. Concurrent writers may each rebuild the dict and the last
         assignment wins; that can only cost a file's re-read, never a
         wrong answer, since every entry is a function of an immutable
         file."""
         import pyarrow.parquet as pq
 
         cache = self._dim_ids
-        self._dim_ids = cache = {
+        self._dim_ids = fresh = {
             fn: cache[fn]
             if fn in cache
             else pq.read_table(
@@ -724,7 +763,153 @@ class MonolithDB:
             )["series_id"].to_numpy()
             for fn in live
         }
-        return list(cache.values())
+        if cache.keys() - fresh.keys():
+            alive = np.concatenate([np.empty(0, np.int64), *fresh.values()])
+            with self._sid_memo_lock:
+                memo = self._sid_memo
+                keep = np.isin(np.fromiter(memo.values(), np.int64, len(memo)), alive)
+                self._sid_memo = {
+                    k: sid for (k, sid), ok in zip(memo.items(), keep) if ok
+                }
+        return list(fresh.values())
+
+    @staticmethod
+    def _unknown_ids(ids: np.ndarray, dim_ids: list) -> np.ndarray:
+        """The ids in ``ids`` that no live dim file holds (``dim_ids``,
+        from _live_dim_ids) — the J5 known-series probe, run on the
+        driver, so a batch of known series costs no dim scan or
+        anti-join."""
+        for known in dim_ids:
+            if not ids.size:
+                break
+            ids = ids[~np.isin(ids, known)]
+        return ids
+
+    def _series_frame(self, maps: list[dict[str, str]]) -> DataFrame:
+        """[labels, signature, series_id] of label maps held on the
+        driver: an Arrow-built LocalRelation under Spark's own signature
+        and xxhash64 (the only definition of the id), which collects
+        with no Spark job."""
+        import pyarrow as pa
+
+        sig = signature_sql_text("`labels`")
+        return self.spark.createDataFrame(
+            pa.table({"labels": _labels_array(maps)}), _LABELS_SCHEMA
+        ).selectExpr("labels", f"{sig} AS signature", f"xxhash64({sig}) AS series_id")
+
+    def _batch_series_ids(self, maps: list[dict[str, str]]) -> tuple[np.ndarray, dict]:
+        """Each label map's series_id: from the memo (``_sid_memo``),
+        else — for label sets this process has not seen — from one
+        collect of _series_frame. Returns the ids and the newly resolved
+        {label set: id}, which the caller memoizes once the commit has
+        put them in the live dim. The memo's dicts only ever gain entries (a prune
+        swaps in a new dict), so lock-free reads are safe."""
+        memo = self._sid_memo
+        keys = [frozenset(m.items()) for m in maps]
+        unseen = {k: m for k, m in zip(keys, maps) if k not in memo}
+        resolved = {}
+        if unseen:
+            rows = self._series_frame(list(unseen.values())).select("series_id").collect()
+            resolved = dict(zip(unseen, (r[0] for r in rows)))
+        ids = [resolved[k] if k in resolved else memo[k] for k in keys]
+        return np.array(ids, dtype=np.int64), resolved
+
+    def _commit_append(
+        self,
+        op: str,
+        facts: dict[str, dict[str, list[str]]],
+        new_series: DataFrame | None,
+        live: list[str],
+    ) -> None:
+        """The commit both appends share: dim rows for ``new_series``
+        (series_id / signature / labels, None when every series is
+        known) that the ``live`` dim lacks — J5 get-or-create's Spark
+        left_anti + bloom-filtered dim write — with their postings, then
+        those and the staged ``facts`` ({table: {chunk_id: [files]}})
+        made visible by ONE manifest commit; none when nothing was
+        staged. Content-hash ids keep this idempotent without a critical
+        section: two writers racing on one new series both append it,
+        and reads drop the duplicate dim row."""
+        dim_files: list[str] = []
+        if new_series is not None:
+            new_series = new_series.select(
+                "series_id", "signature", "labels"
+            ).dropDuplicates(["series_id"])
+            if live:
+                # Same size gate as the query path: force-broadcasting
+                # a high-cardinality dim on every micro-batch would be
+                # the write path's scaling cliff.
+                new_series = new_series.join(
+                    self._dim_hint(self._dim_scan(live).select("series_id")),
+                    "series_id",
+                    "left_anti",
+                )
+            dim_files = self._stage_and_move(
+                new_series.sortWithinPartitions("series_id"),
+                self.series_path,
+                options=self._DIM_WRITE_OPTS,
+            )
+        # Incremental posting maintenance (the reference's indexer
+        # updates postings at insert time, sled_indexer.rs
+        # get-or-create): if a FRESH label index exists, stage postings
+        # for the batch's new series so the index stays fresh across
+        # ingests instead of going stale on the first write after
+        # build. If freshness broke meanwhile, the staged files are
+        # simply never referenced (vacuum food).
+        post_files: dict[str, list[str]] = {}
+        post_stats: dict = {}
+        if dim_files:
+            cur = self._read_current()
+            idx0 = (cur or {}).get("label_index")
+            if idx0 and idx0["series"] == cur["series"]:
+                post_files = self._stage_and_move(
+                    self._postings_of(new_series, idx0["n_buckets"]),
+                    self.index_path,
+                    partition_by="kp",
+                    options=self._INDEX_WRITE_OPTS,
+                )
+                post_stats = self._posting_stats_from_moved(post_files)
+        if not (dim_files or any(facts.values())):
+            return
+
+        def add(man: dict) -> None:
+            # Index freshness decided on the LOCKED manifest, before our
+            # dim files merge in: only a still-fresh index may absorb
+            # the incremental postings — otherwise it stays (or goes)
+            # stale and readers fall back until the next
+            # build_label_index.
+            idx = man.get("label_index")
+            extend_idx = post_files and idx and idx["series"] == man["series"]
+            man["series"] = sorted(set(man["series"]) | set(dim_files))
+            for table, fact_files in facts.items():
+                chunks = man.setdefault(table, {})
+                for cid, files in fact_files.items():
+                    chunks[cid] = sorted(set(chunks.get(cid, [])) | set(files))
+            if extend_idx:
+                for b, files in post_files.items():
+                    idx["buckets"][b] = sorted(
+                        set(idx["buckets"].get(b, [])) | set(files)
+                    )
+                # merge planner stats: counts add exactly; NDV of a
+                # union is unknowable from parts, so keep the max — an
+                # UNDER-estimate of true NDV biases the per-value
+                # estimate upward, i.e. conservatively (skips a probe,
+                # never serves a wrong plan).
+                ks = idx.setdefault("key_stats", {})
+                for k, (n, ndv) in post_stats.items():
+                    if k in ks:
+                        ks[k] = [ks[k][0] + n, max(ks[k][1], ndv)]
+                    else:
+                        ks[k] = [n, ndv]
+                idx["series"] = man["series"]
+            elif idx is not None and idx["series"] != man["series"]:
+                # An index left stale (raced commit / legacy state)
+                # would ride every future manifest, pinning dead posting
+                # files forever — drop the entry; build_label_index
+                # recreates it.
+                del man["label_index"]
+
+        self._commit(add, op=op)
 
     def _append(
         self,
@@ -735,23 +920,15 @@ class MonolithDB:
         window: tuple[int, int] | None = None,
         return_count: bool = False,
     ) -> int | None:
-        """The fact append behind write() and write_exemplars(): the F1
-        filter and the signature / series_id / chunk_id projection →
-        get-or-create → series_id and the input's ``point_cols``
-        appended to ``table``'s ``chunk_id=N`` partitions, made visible
-        by ONE manifest commit (none when nothing survived the filter).
-
-        The path follows the input, with no option. A batch whose
-        projection optimizes to a LocalRelation — every server request
-        frame: it is built from Arrow on the driver, and Spark folds the
-        filter and projection into the local rows — is collected with
-        no Spark job; its distinct ids are checked on the driver and
-        each chunk's rows go to one Parquet file written by pyarrow
-        (_write_local_facts). Any other frame (Parquet scans, rule
-        output, streaming micro-batches) need not fit on the driver, so
-        it is persisted and written by Spark: a distinct for the ids,
-        then a ``repartition("chunk_id")`` fact write. Both paths create
-        new series with the same Spark dim write."""
+        """The Spark append of a DataFrame, behind write() and
+        write_exemplars(): the F1 filter and the signature / series_id /
+        chunk_id projection, persisted → a distinct of the batch's ids
+        checked against the live dim (_unknown_ids) → series_id and the
+        input's ``point_cols`` written by a ``repartition("chunk_id")``
+        Spark write into ``table``'s ``chunk_id=N`` partitions →
+        _commit_append. Any DataFrame takes this path, whatever its
+        plan: it need not fit on the driver. A batch already on the
+        driver comes as an IngestBatch instead (_append_batch)."""
         # SQL text, like signature_expr's: one py4j round trip per
         # select where Column-by-Column construction costs dozens
         sig = signature_sql_text("`labels`")
@@ -762,138 +939,110 @@ class MonolithDB:
             f"xxhash64({sig}) AS series_id",
             f"CAST(FLOOR(timestamp / {self.chunk_size_ms}) AS BIGINT) AS chunk_id",
         )
-        fact_cols = ["series_id", *point_cols, "chunk_id"]
-        facts = df.selectExpr(*fact_cols)
-        plan = facts._jdf.queryExecution().optimizedPlan()
-        local = plan.getClass().getSimpleName() == "LocalRelation"
-        if not local:
-            df.persist()
+        df.persist()
         try:
-            if local:
-                rows = facts.collect()
-                n_written = len(rows)
-                cols = dict(zip(fact_cols, zip(*rows)))
-                batch_ids = np.unique(
-                    np.array(cols.get("series_id", ()), dtype=np.int64)
+            n_written = df.count() if return_count else None
+            live = self._load_manifest()["series"]
+            new_series = df
+            if live:
+                ids = np.array(
+                    [r[0] for r in df.select("series_id").distinct().collect()],
+                    dtype=np.int64,
                 )
-            else:
-                n_written = df.count() if return_count else None
-                batch_ids = None
-            dim_files, new_series = self._get_or_create_series(df, batch_ids)
-            # Incremental posting maintenance (the reference's indexer
-            # updates postings at insert time, sled_indexer.rs
-            # get-or-create): if a FRESH label index exists, stage
-            # postings for the batch's new series so the index stays
-            # fresh across ingests instead of going stale on the first
-            # write after build. If freshness broke meanwhile, the
-            # staged files are simply never referenced (vacuum food).
-            post_files: dict[str, list[str]] = {}
-            post_stats: dict = {}
-            if dim_files:
-                cur = self._read_current()
-                idx0 = (cur or {}).get("label_index")
-                if idx0 and idx0["series"] == cur["series"]:
-                    batch_postings = self._postings_of(
-                        new_series, idx0["n_buckets"]
-                    )
-                    post_files = self._stage_and_move(
-                        batch_postings,
-                        self.index_path,
-                        partition_by="kp",
-                        options=self._INDEX_WRITE_OPTS,
-                    )
-                    post_stats = self._posting_stats_from_moved(post_files)
-            table_path = os.path.join(self.path, table)
-            if local:
-                fact_files = self._write_local_facts(cols, table_path)
-            else:
-                # Time-sorted within partitions → Parquet row-group
-                # min/max stats implement F3's binary search.
-                fact_files = self._stage_and_move(
-                    df.selectExpr(*fact_cols)
-                    .repartition("chunk_id")
-                    .sortWithinPartitions("series_id", "timestamp"),
-                    table_path,
-                    partition_by="chunk_id",
-                )
-            if dim_files or fact_files:
-
-                def add(man: dict) -> None:
-                    # Index freshness decided on the LOCKED manifest,
-                    # before our dim files merge in: only a still-fresh
-                    # index may absorb the incremental postings —
-                    # otherwise it stays (or goes) stale and readers
-                    # fall back until the next build_label_index.
-                    idx = man.get("label_index")
-                    extend_idx = (
-                        post_files and idx and idx["series"] == man["series"]
-                    )
-                    man["series"] = sorted(set(man["series"]) | set(dim_files))
-                    chunks = man.setdefault(table, {})
-                    for cid, files in fact_files.items():
-                        chunks[cid] = sorted(set(chunks.get(cid, [])) | set(files))
-                    if extend_idx:
-                        for b, files in post_files.items():
-                            idx["buckets"][b] = sorted(
-                                set(idx["buckets"].get(b, [])) | set(files)
-                            )
-                        # merge planner stats: counts add exactly; NDV of
-                        # a union is unknowable from parts, so keep the
-                        # max — an UNDER-estimate of true NDV biases the
-                        # per-value estimate upward, i.e. conservatively
-                        # (skips a probe, never serves a wrong plan).
-                        ks = idx.setdefault("key_stats", {})
-                        for k, (n, ndv) in post_stats.items():
-                            if k in ks:
-                                ks[k] = [ks[k][0] + n, max(ks[k][1], ndv)]
-                            else:
-                                ks[k] = [n, ndv]
-                        idx["series"] = man["series"]
-                    elif idx is not None and idx["series"] != man["series"]:
-                        # An index left stale (raced commit / legacy
-                        # state) would ride every future manifest,
-                        # pinning dead posting files forever — drop the
-                        # entry; build_label_index recreates it.
-                        del man["label_index"]
-
-                self._commit(add, op=op)
+                if not self._unknown_ids(ids, self._live_dim_ids(live)).size:
+                    new_series = None
+            # Time-sorted within partitions → Parquet row-group min/max
+            # stats implement F3's binary search.
+            facts = self._stage_and_move(
+                df.selectExpr("series_id", *point_cols, "chunk_id")
+                .repartition("chunk_id")
+                .sortWithinPartitions("series_id", "timestamp"),
+                os.path.join(self.path, table),
+                partition_by="chunk_id",
+            )
+            self._commit_append(op, {table: facts}, new_series, live)
         finally:
-            if not local:
-                df.unpersist()
-        return n_written if return_count else None
+            df.unpersist()
+        return n_written
+
+    def _append_batch(
+        self,
+        batch: IngestBatch,
+        tables: tuple[str, ...],
+        op: str,
+        window: tuple[int, int] | None = None,
+    ) -> dict[str, int]:
+        """The in-process append of an IngestBatch's ``tables``
+        ("samples", "exemplars"), as the reference appends a request:
+        the F1 filter and chunk_id in numpy, series ids from the memo
+        (_batch_series_ids: a label set this process has not seen costs
+        one jobless collect), the ids checked against the live dim
+        (_unknown_ids), each table's rows for a chunk written to one
+        Parquet file by pyarrow (_write_local_facts) → _commit_append:
+        every table in ONE manifest commit. Only a batch with a new
+        series runs Spark jobs (its dim write); a steady-state batch
+        makes no py4j call. Returns the points ingested per table."""
+        import pyarrow as pa
+
+        points = {t: getattr(batch, t) for t in tables}
+        keep = {t: pts.valid(window) for t, pts in points.items()}
+        used = np.unique(np.concatenate(
+            [np.empty(0, np.int64)] + [pts.owner[keep[t]] for t, pts in points.items()]
+        ))
+        counts = {t: int(keep[t].sum()) for t in tables}
+        if not used.size:
+            return counts
+        live = self._load_manifest()["series"]
+        dim_ids = self._live_dim_ids(live)  # prunes the memo first
+        sids = np.zeros(len(batch.labels), dtype=np.int64)
+        sids[used], resolved = self._batch_series_ids([batch.labels[i] for i in used])
+        unknown = self._unknown_ids(np.unique(sids[used]), dim_ids)
+        new_series = None
+        if unknown.size:
+            new = used[np.isin(sids[used], unknown)]
+            new_series = self._series_frame([batch.labels[i] for i in new])
+        facts = {}
+        for t, pts in points.items():
+            k = keep[t]
+            ts = pts.timestamp[k]
+            if not ts.size:
+                continue
+            cols = {
+                "series_id": pa.array(sids[pts.owner[k]]),
+                "timestamp": pa.array(ts),
+                "value": pa.array(pts.value[k]),
+            }
+            if pts.labels is not None:
+                cols["exemplar_labels"] = _labels_array(pts.labels).filter(pa.array(k))
+            # Spark's FLOOR(timestamp / chunk_size_ms): double division
+            chunk = np.floor(ts / self.chunk_size_ms).astype(np.int64)
+            facts[t] = self._write_local_facts(
+                pa.table(cols), chunk, os.path.join(self.path, t)
+            )
+        self._commit_append(op, facts, new_series, live)
+        if resolved:  # every resolved series is now in the live dim
+            with self._sid_memo_lock:
+                self._sid_memo.update(resolved)
+        return counts
 
     def _write_local_facts(
-        self, cols: dict[str, tuple], table_path: str
+        self, table, chunk: np.ndarray, table_path: str
     ) -> dict[str, list[str]]:
-        """The driver-side fact write of a collected batch (column name
-        → values, chunk_id included): one Parquet file per chunk, rows
+        """The driver-side fact write of a pyarrow ``table`` whose rows
+        fall in chunks ``chunk``: one Parquet file per chunk, rows
         sorted by (series_id, timestamp) as the Spark write sorts them,
         chunk_id left to the directory name. Each file is written under
         ``_staged/``, fsync'd and renamed into ``chunk_id=N/``; like
         _stage_and_move, it is live only once a commit lists it.
         Returns {chunk_id: [basename]}."""
-        import pyarrow as pa
         import pyarrow.parquet as pq
 
-        if not cols:
-            return {}
-        chunk = np.array(cols["chunk_id"], dtype=np.int64)
         order = np.lexsort((
-            np.array(cols["timestamp"], dtype=np.int64),
-            np.array(cols["series_id"], dtype=np.int64),
+            table["timestamp"].to_numpy(),
+            table["series_id"].to_numpy(),
             chunk,
         ))
-        types = {
-            "series_id": pa.int64(),
-            "timestamp": pa.int64(),
-            "value": pa.float64(),
-            "exemplar_labels": pa.map_(pa.string(), pa.string()),
-        }
-        table = pa.table({
-            name: pa.array(values, types[name])
-            for name, values in cols.items()
-            if name != "chunk_id"
-        }).take(order)
+        table = table.take(order)
         chunk = chunk[order]
         cids, starts = np.unique(chunk, return_index=True)
         staging = os.path.join(self.path, "_staged", uuid.uuid4().hex)
@@ -918,7 +1067,7 @@ class MonolithDB:
 
     def write(
         self,
-        df: DataFrame,
+        df: DataFrame | IngestBatch,
         window: tuple[int, int] | None = None,
         return_count: bool = False,
     ) -> int | None:
@@ -926,37 +1075,43 @@ class MonolithDB:
 
         The reference's write path (src/db.rs:176-194 →
         src/chunk/chunk.rs:110-137): range/zero filter (F1) → get-or-create series
-        (J5) → append points (S5). Here: filter → get-or-create
-        (_get_or_create_series) → fact append, all set-at-a-time, made
-        visible by ONE manifest commit — dim and fact rows of a batch
-        appear atomically, and an all-invalid batch (e.g. every ts==0;
-        the reference errors per-point, we drop set-at-a-time) moves
-        zero files and commits nothing.
+        (J5) → append points (S5). Here: filter → get-or-create → fact
+        append, all set-at-a-time, made visible by ONE manifest commit —
+        dim and fact rows of a batch appear atomically, and an
+        all-invalid batch (e.g. every ts==0; the reference errors
+        per-point, we drop set-at-a-time) moves zero files and commits
+        nothing.
 
-        Which path runs depends on the input (_append). A batch already
-        on the driver — a server request frame, planned as a
-        LocalRelation — is appended in process like the reference's:
-        collected with no Spark job and written per chunk by pyarrow,
-        so a batch whose series are all known runs ZERO Spark jobs. A
-        distributed frame (Parquet-backed: rules, ingest_scrape,
-        streaming sinks) keeps the Spark write, the only one that
-        handles data the driver does not hold: persist, a distinct for
-        the series ids, and a ``repartition("chunk_id")`` fact write.
-        On both paths known series cost no dim job: the ids are checked
-        on the driver against the live dim files' ids, cached per file
-        name, which is safe because dim files are immutable (a dim
-        rewrite — delete_series — commits new names, and entries for
-        files no longer live are dropped). Only a batch with some new
-        series runs the dim anti-join and appends a dim file.
+        The input picks the path, with no option. An IngestBatch — a
+        decoded request, already on the driver — is appended in process
+        like the reference's (_append_batch): no DataFrame is built;
+        series ids come from a memo of Spark's own signature + xxhash64,
+        bounded to the live dim's series and pruned with it, and each
+        chunk's rows are written by pyarrow, so a batch whose series are
+        all known makes ZERO py4j calls. Its exemplars, if any, land in
+        the same commit as its samples. Any DataFrame takes the Spark
+        write (_append), the only one that handles data the driver does
+        not hold: persist, a distinct for the series ids, and a
+        ``repartition("chunk_id")`` fact write. On both paths known
+        series cost no dim job: the ids are checked on the driver
+        against the live dim files' ids, cached per file name, which is
+        safe because dim files are immutable (a dim rewrite —
+        delete_series — commits new names, and entries for files no
+        longer live are dropped). Only a batch with some new series
+        runs the dim anti-join and appends a dim file.
 
         With ``return_count=True``, returns how many sample rows
         survived the validity filter and were actually ingested (the
         remote-write 2.0 ``-Samples-Written`` header must report the
-        receiver's truth, not the request's claim): the collected row
-        count on the local path, one extra count job against the
-        persisted batch on the distributed one — opt-in, to keep bulk
-        ingest at its usual job count.
+        receiver's truth, not the request's claim): counted in numpy for
+        a batch, by one extra count job against the persisted frame for
+        a DataFrame — opt-in, to keep bulk ingest at its usual job
+        count.
         """
+        if isinstance(df, IngestBatch):
+            tables = ("samples",) if df.exemplars is None else ("samples", "exemplars")
+            n = self._append_batch(df, tables, "write", window=window)["samples"]
+            return n if return_count else None
         return self._append(
             df, "samples", ["timestamp", "value"], "write",
             window=window, return_count=return_count,
@@ -965,19 +1120,24 @@ class MonolithDB:
     # -------------------------------------------------------------- exemplars
 
     def write_exemplars(
-        self, df: DataFrame, return_count: bool = False
+        self, df: DataFrame | IngestBatch, return_count: bool = False
     ) -> int | None:
         """Ingest exemplars — [labels (series labels), timestamp,
         value, exemplar_labels] rows, the trace-id'd sample references
-        remote-write 1.0/2.0 carry alongside samples. The same append
-        as write(), paths included (_append): ts!=0 filter → dim
-        get-or-create (exemplars may reference series never written as
-        samples; content-hash ids keep it idempotent) → fact append
-        into ``exemplars/chunk_id=N`` partitions (the SAME chunk grid as
-        samples, so query pruning is one predicate) — visible through
-        ONE manifest commit. A server frame runs no Spark job when its
-        series are all known; a batch that creates series extends a
-        fresh label index with their postings, like write()."""
+        remote-write 1.0/2.0 carry alongside samples — or an
+        IngestBatch's exemplars alone (write() ingests them with its
+        samples). The same append as write(), paths included: ts!=0
+        filter → dim get-or-create (exemplars may reference series never
+        written as samples; content-hash ids keep it idempotent) → fact
+        append into ``exemplars/chunk_id=N`` partitions (the SAME chunk
+        grid as samples, so query pruning is one predicate) — visible
+        through ONE manifest commit. A batch that creates series extends
+        a fresh label index with their postings, like write()."""
+        if isinstance(df, IngestBatch):
+            n = 0
+            if df.exemplars is not None:
+                n = self._append_batch(df, ("exemplars",), "write-exemplars")["exemplars"]
+            return n if return_count else None
         return self._append(
             df, "exemplars",
             ["timestamp", "value", "exemplar_labels"],
@@ -1258,6 +1418,7 @@ class MonolithDB:
     _INDEX_WRITE_OPTS = {
         "parquet.bloom.filter.enabled#k": "true",
         "parquet.bloom.filter.enabled#v": "true",
+        "parquet.bloom.filter.adaptive.enabled": "true",
     }
 
     @staticmethod

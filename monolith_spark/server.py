@@ -20,10 +20,9 @@ import threading
 import zlib
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
-import pyarrow as pa
+import numpy as np
 
-from monolith_spark.engine import MonolithDB
-from monolith_spark.labels import SAMPLES_SCHEMA
+from monolith_spark.engine import IngestBatch, MonolithDB, Points
 from monolith_spark.labels import LabelMatcher as EngineMatcher
 from monolith_spark.sources import otlp
 from monolith_spark.sources import remote as proto
@@ -31,34 +30,29 @@ from monolith_spark.sources import remote as proto
 from monolith_spark.barrier import barrier as _lineage_barrier
 
 
-def _labels_array(maps: list[dict[str, str]]):
-    """One Arrow map<string,string> entry per label dict."""
-    offsets, keys, values = [0], [], []
-    for m in maps:
-        keys.extend(m)
-        values.extend(m.values())
-        offsets.append(len(keys))
-    return pa.MapArray.from_arrays(
-        pa.array(offsets, pa.int32()),
-        pa.array(keys, pa.string()),
-        pa.array(values, pa.string()),
+def request_batch(req: proto.WriteRequest) -> IngestBatch:
+    """The request as the engine's driver-held batch: each series'
+    label map once, its samples' and exemplars' owner index, timestamp
+    and value as numpy columns (exemplars None when it carries none).
+    MonolithDB.write appends it in process, with no DataFrame."""
+    series = req.timeseries
+
+    def points(attr: str) -> Points:
+        owner = [i for i, s in enumerate(series) for _ in getattr(s, attr)]
+        pts = [p for s in series for p in getattr(s, attr)]
+        return Points(
+            np.array(owner, dtype=np.int64),
+            np.array([p.timestamp for p in pts], dtype=np.int64),
+            np.array([p.value for p in pts], dtype=np.float64),
+            [p.labels for p in pts] if attr == "exemplars" else None,
+        )
+
+    exemplars = points("exemplars")
+    return IngestBatch(
+        [s.labels for s in series],
+        points("samples"),
+        exemplars if exemplars.owner.size else None,
     )
-
-
-def _points_columns(req: proto.WriteRequest, attr: str):
-    """The request's ``attr`` points ("samples" or "exemplars") and
-    their [labels, timestamp, value] columns as Arrow arrays — each
-    series' label map is built once and gathered per point. A frame
-    built from a pyarrow.Table is planned as a LocalTableScan, so the
-    engine's signature / series_id / chunk_id projection folds into
-    the local relation and no job pays for Python row conversion."""
-    points = [(i, p) for i, s in enumerate(req.timeseries) for p in getattr(s, attr)]
-    owner = pa.array([i for i, _ in points], pa.int64())
-    return [p for _, p in points], {
-        "labels": _labels_array([s.labels for s in req.timeseries]).take(owner),
-        "timestamp": pa.array([p.timestamp for _, p in points], pa.int64()),
-        "value": pa.array([p.value for _, p in points], pa.float64()),
-    }
 
 
 def _gunzip_bounded(body: bytes, cap: int) -> bytes | None:
@@ -79,24 +73,17 @@ def _gunzip_bounded(body: bytes, cap: int) -> bytes | None:
 
 
 def write_request_to_df(spark, req: proto.WriteRequest):
-    """The request's samples as a ``SAMPLES_SCHEMA`` frame."""
-    _, cols = _points_columns(req, "samples")
-    return spark.createDataFrame(pa.table(cols), SAMPLES_SCHEMA)
+    """The request's samples as a ``SAMPLES_SCHEMA`` frame, built from
+    Arrow (a LocalTableScan) — for callers that want a DataFrame; the
+    server itself writes request_batch(req)."""
+    return request_batch(req).frame(spark)
 
 
 def exemplars_request_to_df(spark, req: proto.WriteRequest):
     """The request's exemplars as a write_exemplars-shaped DataFrame
     ([series labels, timestamp, value, exemplar_labels]), or None when
     the request carries none."""
-    exemplars, cols = _points_columns(req, "exemplars")
-    if not exemplars:
-        return None
-    cols["exemplar_labels"] = _labels_array([e.labels for e in exemplars])
-    return spark.createDataFrame(
-        pa.table(cols),
-        "labels map<string,string>, timestamp long, value double, "
-        "exemplar_labels map<string,string>",
-    )
+    return request_batch(req).frame(spark, exemplars=True)
 
 
 def query_exemplars_api(
@@ -687,6 +674,24 @@ class MonolithServer:
             def log_message(self, *a):  # quiet
                 pass
 
+            def _read_body(self) -> bytes | None:
+                """The POST body, or None once refused: a declared
+                Content-Length past the decode limit is answered 413,
+                and one that is not a length (negative would read to
+                EOF) 400, before a byte is read; the unread connection
+                is closed."""
+                try:
+                    n = int(self.headers.get("Content-Length", "0"))
+                except ValueError:
+                    n = -1
+                if 0 <= n <= proto.MAX_DECODED_BYTES:
+                    return self.rfile.read(n)
+                self.send_response(400 if n < 0 else 413)
+                self.send_header("Content-Length", "0")
+                self.end_headers()
+                self.close_connection = True
+                return None
+
             def do_GET(self) -> None:
                 """Prometheus HTTP API: instant query
                 (GET /api/v1/query?query=<promql>&time=<unix_s>) plus
@@ -936,9 +941,10 @@ class MonolithServer:
                     # read APIs form-encoded (URL-length safety);
                     # merge the body params into the query string and
                     # delegate to the GET logic
-                    body = self.rfile.read(
-                        int(self.headers.get("Content-Length", "0"))
-                    ).decode("utf-8", "replace")
+                    body = self._read_body()
+                    if body is None:
+                        return
+                    body = body.decode("utf-8", "replace")
                     merged = "&".join(x for x in (u.query, body) if x)
                     self.path = u.path + (f"?{merged}" if merged else "")
                     return self.do_GET()
@@ -958,9 +964,9 @@ class MonolithServer:
                             self.send_header("Content-Length", "0")
                             self.end_headers()
                             return
-                        body = self.rfile.read(
-                            int(self.headers.get("Content-Length", "0"))
-                        )
+                        body = self._read_body()
+                        if body is None:
+                            return
                         if self.headers.get("Content-Encoding") == "gzip":
                             body = _gunzip_bounded(body, proto.MAX_DECODED_BYTES)
                             if body is None:
@@ -970,9 +976,7 @@ class MonolithServer:
                                 return
                         req, meta, stats = otlp.otlp_to_write_request(body)
                         if req.timeseries:
-                            server.db.write(
-                                write_request_to_df(server.db.spark, req)
-                            )
+                            server.db.write(request_batch(req))
                         if meta:
                             server.db.set_metric_metadata(meta)
                         # success: empty ExportMetricsServiceResponse
@@ -1123,7 +1127,9 @@ class MonolithServer:
                         self.end_headers()
                         return
                 try:
-                    body = self.rfile.read(int(self.headers.get("Content-Length", "0")))
+                    body = self._read_body()
+                    if body is None:
+                        return
                     raw = proto.snappy_decompress(body)
                     if self.path == write_path:
                         ctype = self.headers.get("Content-Type", "")
@@ -1137,19 +1143,15 @@ class MonolithServer:
                             # the -Written headers must carry the
                             # receiver's truth (rows that survived
                             # valid_points and were ingested), not the
-                            # request's claimed counts
+                            # request's claimed counts; samples and
+                            # exemplars land in one commit
+                            batch = request_batch(req)
                             n_samples = server.db.write(
-                                write_request_to_df(server.db.spark, req),
-                                return_count=True,
-                            )
-                            edf = exemplars_request_to_df(
-                                server.db.spark, req
+                                batch, return_count=True
                             )
                             n_ex = 0
-                            if edf is not None:
-                                n_ex = server.db.write_exemplars(
-                                    edf, return_count=True
-                                )
+                            if batch.exemplars is not None:
+                                n_ex = int(batch.exemplars.valid().sum())
                             if meta:
                                 server.db.set_metric_metadata(meta)
                             # remote-write 2.0: success is 204 No Content
@@ -1170,10 +1172,7 @@ class MonolithServer:
                             self.end_headers()
                             return
                         req = proto.decode_write_request(raw)
-                        server.db.write(write_request_to_df(server.db.spark, req))
-                        edf = exemplars_request_to_df(server.db.spark, req)
-                        if edf is not None:
-                            server.db.write_exemplars(edf)
+                        server.db.write(request_batch(req))
                         payload = b""
                     else:
                         rreq = proto.decode_read_request(raw)

@@ -376,7 +376,7 @@ def otlp_to_write_request(
     data: bytes,
 ) -> tuple[WriteRequest, dict[str, dict], dict[str, int]]:
     """Decode an OTLP export and map it to the v1 WriteRequest shape
-    (so the existing write_request_to_df path ingests it), plus the
+    (so the server's request_batch path ingests it), plus the
     metric metadata {name: {type, help, unit}} and ingest stats
     {points, expanded_exponential}."""
     blocks = decode_export_metrics_request(data)

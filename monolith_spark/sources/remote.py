@@ -777,7 +777,7 @@ def _expand_native_histogram(
 
 def v2_to_v1(req: WriteRequestV2) -> tuple[WriteRequest, dict[str, dict]]:
     """Resolve the symbol table: a v1-shaped WriteRequest (labels as
-    dicts — what write_request_to_df ingests) plus the request's
+    dicts — what server.request_batch ingests) plus the request's
     metric metadata {name: {type, help, unit}} for
     db.set_metric_metadata. Validates per spec: symbols[0] == "",
     labels_refs in (name, value) pairs, refs in range."""

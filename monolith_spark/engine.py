@@ -152,13 +152,15 @@ class Points:
 class IngestBatch:
     """A write batch already on the driver — a decoded remote-write
     request: each series' label map once, and its samples and
-    exemplars (None when it carries none) as point columns.
-    MonolithDB.write takes it in place of a DataFrame and appends it in
-    process, with no DataFrame built."""
+    exemplars (None when it carries none) as point columns, plus the
+    request's metric metadata ({name: {type, help, unit}}, None when it
+    carries none). MonolithDB.write takes it in place of a DataFrame
+    and appends it in process, with no DataFrame built."""
 
     labels: list[dict[str, str]]
     samples: Points
     exemplars: Points | None = None
+    metadata: dict[str, dict] | None = None
 
     def frame(self, spark: SparkSession, exemplars: bool = False) -> DataFrame | None:
         """The samples (or exemplars) as a DataFrame — SAMPLES_SCHEMA,
@@ -596,6 +598,13 @@ class MonolithDB:
         per-metric (a scrape that carries only # TYPE never erases a
         stored help string). Unknown metric types are rejected loudly
         — a typo'd TYPE line must not poison /api/v1/metadata."""
+        norm = self._metadata_entries(meta)
+        if norm:
+            self._commit_append("metadata", {}, None, [], metadata=norm)
+
+    def _metadata_entries(self, meta: dict[str, dict]) -> dict[str, dict]:
+        """``meta`` normalized to {name: {type, help, unit}} strings,
+        empty entries dropped; ValueError on an unknown type."""
         norm: dict[str, dict] = {}
         for name, m in meta.items():
             entry = {}
@@ -610,15 +619,7 @@ class MonolithDB:
                 )
             if entry:
                 norm[str(name)] = entry
-        if not norm:
-            return
-
-        def mutate(man: dict) -> None:
-            mm = man.setdefault("metric_metadata", {})
-            for name, entry in norm.items():
-                mm.setdefault(name, {}).update(entry)
-
-        self._commit(mutate, op="metadata")
+        return norm
 
     def metric_metadata(self, at_version: int | None = None) -> dict:
         """{metric_name: {type, help, unit}} at the current (or a
@@ -820,14 +821,16 @@ class MonolithDB:
         facts: dict[str, dict[str, list[str]]],
         new_series: DataFrame | None,
         live: list[str],
+        metadata: dict[str, dict] | None = None,
     ) -> None:
         """The commit both appends share: dim rows for ``new_series``
         (series_id / signature / labels, None when every series is
         known) that the ``live`` dim lacks — J5 get-or-create's Spark
         left_anti + bloom-filtered dim write — with their postings, then
-        those and the staged ``facts`` ({table: {chunk_id: [files]}})
-        made visible by ONE manifest commit; none when nothing was
-        staged. Content-hash ids keep this idempotent without a critical
+        those, the staged ``facts`` ({table: {chunk_id: [files]}}) and
+        normalized metric ``metadata`` (_metadata_entries) made visible
+        by ONE manifest commit; none when there is nothing to add.
+        Content-hash ids keep this idempotent without a critical
         section: two writers racing on one new series both append it,
         and reads drop the duplicate dim row."""
         dim_files: list[str] = []
@@ -869,7 +872,7 @@ class MonolithDB:
                     options=self._INDEX_WRITE_OPTS,
                 )
                 post_stats = self._posting_stats_from_moved(post_files)
-        if not (dim_files or any(facts.values())):
+        if not (dim_files or any(facts.values()) or metadata):
             return
 
         def add(man: dict) -> None:
@@ -881,6 +884,9 @@ class MonolithDB:
             idx = man.get("label_index")
             extend_idx = post_files and idx and idx["series"] == man["series"]
             man["series"] = sorted(set(man["series"]) | set(dim_files))
+            for name, entry in (metadata or {}).items():
+                mm = man.setdefault("metric_metadata", {})
+                mm.setdefault(name, {}).update(entry)
             for table, fact_files in facts.items():
                 chunks = man.setdefault(table, {})
                 for cid, files in fact_files.items():
@@ -971,6 +977,7 @@ class MonolithDB:
         tables: tuple[str, ...],
         op: str,
         window: tuple[int, int] | None = None,
+        metadata: dict[str, dict] | None = None,
     ) -> dict[str, int]:
         """The in-process append of an IngestBatch's ``tables``
         ("samples", "exemplars"), as the reference appends a request:
@@ -979,9 +986,11 @@ class MonolithDB:
         one jobless collect), the ids checked against the live dim
         (_unknown_ids), each table's rows for a chunk written to one
         Parquet file by pyarrow (_write_local_facts) → _commit_append:
-        every table in ONE manifest commit. Only a batch with a new
-        series runs Spark jobs (its dim write); a steady-state batch
-        makes no py4j call. Returns the points ingested per table."""
+        every table, and the normalized ``metadata``, in ONE manifest
+        commit (a batch with no valid point commits its metadata alone).
+        Only a batch with a new series runs Spark jobs (its dim write);
+        a steady-state batch makes no py4j call. Returns the points
+        ingested per table."""
         import pyarrow as pa
 
         points = {t: getattr(batch, t) for t in tables}
@@ -991,6 +1000,7 @@ class MonolithDB:
         ))
         counts = {t: int(keep[t].sum()) for t in tables}
         if not used.size:
+            self._commit_append("metadata", {}, None, [], metadata)
             return counts
         live = self._load_manifest()["series"]
         dim_ids = self._live_dim_ids(live)  # prunes the memo first
@@ -1019,7 +1029,7 @@ class MonolithDB:
             facts[t] = self._write_local_facts(
                 pa.table(cols), chunk, os.path.join(self.path, t)
             )
-        self._commit_append(op, facts, new_series, live)
+        self._commit_append(op, facts, new_series, live, metadata)
         if resolved:  # every resolved series is now in the live dim
             with self._sid_memo_lock:
                 self._sid_memo.update(resolved)
@@ -1088,17 +1098,18 @@ class MonolithDB:
         series ids come from a memo of Spark's own signature + xxhash64,
         bounded to the live dim's series and pruned with it, and each
         chunk's rows are written by pyarrow, so a batch whose series are
-        all known makes ZERO py4j calls. Its exemplars, if any, land in
-        the same commit as its samples. Any DataFrame takes the Spark
-        write (_append), the only one that handles data the driver does
-        not hold: persist, a distinct for the series ids, and a
-        ``repartition("chunk_id")`` fact write. On both paths known
-        series cost no dim job: the ids are checked on the driver
-        against the live dim files' ids, cached per file name, which is
-        safe because dim files are immutable (a dim rewrite —
-        delete_series — commits new names, and entries for files no
-        longer live are dropped). Only a batch with some new series
-        runs the dim anti-join and appends a dim file.
+        all known makes ZERO py4j calls. Its exemplars and metric
+        metadata, if any, land in the same commit as its samples; the
+        metadata is validated first, so a rejected batch stages nothing.
+        Any DataFrame takes the Spark write (_append), the only one that
+        handles data the driver does not hold: persist, a distinct for
+        the series ids, and a ``repartition("chunk_id")`` fact write. On
+        both paths known series cost no dim job: the ids are checked on
+        the driver against the live dim files' ids, cached per file
+        name, which is safe because dim files are immutable (a dim
+        rewrite — delete_series — commits new names, and entries for
+        files no longer live are dropped). Only a batch with some new
+        series runs the dim anti-join and appends a dim file.
 
         With ``return_count=True``, returns how many sample rows
         survived the validity filter and were actually ingested (the
@@ -1110,7 +1121,8 @@ class MonolithDB:
         """
         if isinstance(df, IngestBatch):
             tables = ("samples",) if df.exemplars is None else ("samples", "exemplars")
-            n = self._append_batch(df, tables, "write", window=window)["samples"]
+            meta = self._metadata_entries(df.metadata or {})
+            n = self._append_batch(df, tables, "write", window, meta)["samples"]
             return n if return_count else None
         return self._append(
             df, "samples", ["timestamp", "value"], "write",

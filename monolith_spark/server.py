@@ -30,11 +30,14 @@ from monolith_spark.sources import remote as proto
 from monolith_spark.barrier import barrier as _lineage_barrier
 
 
-def request_batch(req: proto.WriteRequest) -> IngestBatch:
+def request_batch(
+    req: proto.WriteRequest, metadata: dict[str, dict] | None = None
+) -> IngestBatch:
     """The request as the engine's driver-held batch: each series'
     label map once, its samples' and exemplars' owner index, timestamp
-    and value as numpy columns (exemplars None when it carries none).
-    MonolithDB.write appends it in process, with no DataFrame."""
+    and value as numpy columns (exemplars None when it carries none),
+    and its metric ``metadata``. MonolithDB.write appends it in process,
+    with no DataFrame, in one commit."""
     series = req.timeseries
 
     def points(attr: str) -> Points:
@@ -52,6 +55,7 @@ def request_batch(req: proto.WriteRequest) -> IngestBatch:
         [s.labels for s in series],
         points("samples"),
         exemplars if exemplars.owner.size else None,
+        metadata or None,
     )
 
 
@@ -77,13 +81,6 @@ def write_request_to_df(spark, req: proto.WriteRequest):
     Arrow (a LocalTableScan) — for callers that want a DataFrame; the
     server itself writes request_batch(req)."""
     return request_batch(req).frame(spark)
-
-
-def exemplars_request_to_df(spark, req: proto.WriteRequest):
-    """The request's exemplars as a write_exemplars-shaped DataFrame
-    ([series labels, timestamp, value, exemplar_labels]), or None when
-    the request carries none."""
-    return request_batch(req).frame(spark, exemplars=True)
 
 
 def query_exemplars_api(
@@ -975,10 +972,8 @@ class MonolithServer:
                                 self.end_headers()
                                 return
                         req, meta, stats = otlp.otlp_to_write_request(body)
-                        if req.timeseries:
-                            server.db.write(request_batch(req))
-                        if meta:
-                            server.db.set_metric_metadata(meta)
+                        # samples and metadata land in one commit
+                        server.db.write(request_batch(req, meta))
                         # success: empty ExportMetricsServiceResponse
                         # (all-default message = zero bytes).
                         # Exponential histograms classic-expand on
@@ -1143,17 +1138,15 @@ class MonolithServer:
                             # the -Written headers must carry the
                             # receiver's truth (rows that survived
                             # valid_points and were ingested), not the
-                            # request's claimed counts; samples and
-                            # exemplars land in one commit
-                            batch = request_batch(req)
+                            # request's claimed counts; samples,
+                            # exemplars and metadata land in one commit
+                            batch = request_batch(req, meta)
                             n_samples = server.db.write(
                                 batch, return_count=True
                             )
                             n_ex = 0
                             if batch.exemplars is not None:
                                 n_ex = int(batch.exemplars.valid().sum())
-                            if meta:
-                                server.db.set_metric_metadata(meta)
                             # remote-write 2.0: success is 204 No Content
                             self.send_response(204)
                             self.send_header(

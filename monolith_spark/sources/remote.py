@@ -778,8 +778,8 @@ def _expand_native_histogram(
 def v2_to_v1(req: WriteRequestV2) -> tuple[WriteRequest, dict[str, dict]]:
     """Resolve the symbol table: a v1-shaped WriteRequest (labels as
     dicts — what server.request_batch ingests) plus the request's
-    metric metadata {name: {type, help, unit}} for
-    db.set_metric_metadata. Validates per spec: symbols[0] == "",
+    metric metadata {name: {type, help, unit}}, which request_batch
+    carries into the same commit. Validates per spec: symbols[0] == "",
     labels_refs in (name, value) pairs, refs in range."""
     if req.symbols and req.symbols[0] != "":
         raise ValueError('PRW2 symbols[0] must be the empty string ""')

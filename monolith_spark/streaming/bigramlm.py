@@ -16,8 +16,8 @@ tables injected (two equi-joins, no retrain pass over history).
 This is how a 100 TB/day ingest keeps its CCNet quality model
 CURRENT: O(batch) count aggregation per micro-batch, state bounded by
 vocabulary size, and scoring/bucketing any snapshot against the live
-model is exactly the batch computation (asserted in tests). Same
-epoch-dir + marker idempotency as ContinuousCMS/ContinuousNBModel.
+model is exactly the batch computation (asserted in tests). Replays
+are idempotent by EpochSink's epoch-dir + marker ledger.
 """
 
 from __future__ import annotations
@@ -27,14 +27,14 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from monolith_spark.operators import ranking as _ranking
 from monolith_spark.operators.text import bigram_lm_score, doc_bigrams, tokens_expr
+from monolith_spark.streaming.epoch import EpochSink
 
 
 @dataclass
-class ContinuousBigramLM:
+class ContinuousBigramLM(EpochSink):
     """foreachBatch sink maintaining additive unigram/bigram count
     state under ``path``; ``score(docs)`` / ``buckets(docs)`` apply
     the whole-stream model exactly as the batch operator would."""
@@ -47,12 +47,8 @@ class ContinuousBigramLM:
         self.uni_path = os.path.join(self.path, "unigrams")
         self.bi_path = os.path.join(self.path, "bigrams")
         self._epochs_dir = os.path.join(self.path, "_epochs")
-        os.makedirs(self._epochs_dir, exist_ok=True)
 
-    def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        marker = os.path.join(self._epochs_dir, f"{epoch_id}.done")
-        if os.path.exists(marker):
-            return
+    def write_epoch(self, batch_df: DataFrame, epoch_id: int) -> None:
         batch = batch_df.select("doc_id", F.col(self.text_col).alias("text"))
         epoch_dir = f"epoch={epoch_id}"
         (
@@ -68,16 +64,6 @@ class ContinuousBigramLM:
             .agg(F.count("*").alias("c2"))
             .write.mode("overwrite")
             .parquet(os.path.join(self.bi_path, epoch_dir))
-        )
-        with open(marker, "w") as f:
-            f.write("")
-
-    def start(self, docs_stream: DataFrame, checkpoint_dir: str) -> StreamingQuery:
-        return (
-            docs_stream.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.process_batch)
-            .start()
         )
 
     def unigrams(self) -> DataFrame:

@@ -4,8 +4,8 @@ Counter addition is the CMS merge operation (operators/sketches.py:
 cms_merge), which makes the sketch a perfect continuous aggregate:
 each micro-batch appends its own depth×width partial sketch — O(batch)
 work with a few-KB output, independent of stream history or key
-cardinality — and reads re-merge by summing counters. The same
-epoch-dir + marker idempotency as ContinuousRollup: a replayed epoch
+cardinality — and reads re-merge by summing counters. EpochSink's
+epoch-dir + marker ledger makes it idempotent: a replayed epoch
 overwrites its own partition instead of double-counting.
 
 This is the streaming path for "what are the heavy hitters so far" at
@@ -20,13 +20,13 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from monolith_spark.operators.sketches import cms_estimate, cms_sketch
+from monolith_spark.streaming.epoch import EpochSink
 
 
 @dataclass
-class ContinuousCMS:
+class ContinuousCMS(EpochSink):
     """foreachBatch sink maintaining a count-min sketch of ``key_col``
     under ``path`` (epoch-partitioned parquet of counter partials)."""
 
@@ -38,25 +38,11 @@ class ContinuousCMS:
 
     def __post_init__(self) -> None:
         self._epochs_dir = self.path + "_epochs"
-        os.makedirs(self._epochs_dir, exist_ok=True)
 
-    def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        marker = os.path.join(self._epochs_dir, f"{epoch_id}.done")
-        if os.path.exists(marker):
-            return
+    def write_epoch(self, batch_df: DataFrame, epoch_id: int) -> None:
         cms_sketch(batch_df, self.key_col, self.depth, self.width).write.mode(
             "overwrite"
         ).parquet(os.path.join(self.path, f"epoch={epoch_id}"))
-        with open(marker, "w") as f:
-            f.write("")
-
-    def start(self, stream_df: DataFrame, checkpoint_dir: str) -> StreamingQuery:
-        return (
-            stream_df.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.process_batch)
-            .start()
-        )
 
     def sketch(self) -> DataFrame:
         """The merged whole-stream sketch [d, bucket, n]."""

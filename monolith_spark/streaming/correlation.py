@@ -17,7 +17,7 @@ points→days reduction happens before anything persists), and the
 derived correlations are exactly those the batch query computes over
 everything streamed so far (asserted in tests — DECIMAL partials
 re-associate exactly, the double conversion happens once at read).
-Same epoch-dir + marker idempotency as ContinuousLengthGate.
+Replays are idempotent by EpochSink's epoch-dir + marker ledger.
 """
 
 from __future__ import annotations
@@ -27,13 +27,14 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+
+from monolith_spark.streaming.epoch import EpochSink
 
 _DEC = "decimal(18,2)"
 
 
 @dataclass
-class ContinuousCorrelation:
+class ContinuousCorrelation(EpochSink):
     """foreachBatch sink maintaining day-grain Pearson state under
     ``path``; ``correlations()`` derives the exact whole-stream
     per-series correlation vs the purchase trend.
@@ -55,7 +56,6 @@ class ContinuousCorrelation:
         self.y_path = os.path.join(self.path, "y")
         self.x_path = os.path.join(self.path, "x")
         self._epochs_dir = os.path.join(self.path, "_epochs")
-        os.makedirs(self._epochs_dir, exist_ok=True)
 
     def _day(self):
         return (
@@ -64,10 +64,7 @@ class ContinuousCorrelation:
             .alias("day")
         )
 
-    def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        marker = os.path.join(self._epochs_dir, f"{epoch_id}.done")
-        if os.path.exists(marker):
-            return
+    def write_epoch(self, batch_df: DataFrame, epoch_id: int) -> None:
         s = batch_df.filter(F.col("timestamp").between(self.lo, self.hi))
         d = F.col("value").cast(_DEC)
         epoch = f"epoch={epoch_id}"
@@ -85,16 +82,6 @@ class ContinuousCorrelation:
             .agg(F.sum(d).cast(_DEC).alias("xv"))
             .write.mode("overwrite")
             .parquet(os.path.join(self.x_path, epoch))
-        )
-        with open(marker, "w") as f:
-            f.write("")
-
-    def start(self, samples_stream: DataFrame, checkpoint_dir: str) -> StreamingQuery:
-        return (
-            samples_stream.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.process_batch)
-            .start()
         )
 
     def _merged(self) -> tuple[DataFrame, DataFrame] | None:

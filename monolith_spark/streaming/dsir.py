@@ -16,8 +16,8 @@ This is how a 100 TB/day ingest keeps its data-selection weights
 CURRENT: O(batch) bucket aggregation per micro-batch, state bounded at
 n_buckets rows per epoch, and scoring any snapshot against the live
 model is exactly the batch computation (streamed ≡ batch asserted in
-tests/test_streaming.py). Same epoch-dir + marker idempotency as
-ContinuousCMS/ContinuousNBModel/ContinuousBigramLM.
+tests/test_streaming.py). Replays are idempotent by EpochSink's
+epoch-dir + marker ledger.
 """
 
 from __future__ import annotations
@@ -27,13 +27,13 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from monolith_spark.operators.text import dsir_bucket_counts, dsir_scores
+from monolith_spark.streaming.epoch import EpochSink
 
 
 @dataclass
-class ContinuousDSIR:
+class ContinuousDSIR(EpochSink):
     """foreachBatch sink maintaining additive DSIR bucket-count state
     under ``path``; ``score(docs)`` applies the whole-stream model
     exactly as the batch operator would. ``target_pred`` is a SQL
@@ -49,28 +49,14 @@ class ContinuousDSIR:
     def __post_init__(self) -> None:
         self.counts_path = os.path.join(self.path, "bucket_counts")
         self._epochs_dir = os.path.join(self.path, "_epochs")
-        os.makedirs(self._epochs_dir, exist_ok=True)
 
-    def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        marker = os.path.join(self._epochs_dir, f"{epoch_id}.done")
-        if os.path.exists(marker):
-            return
+    def write_epoch(self, batch_df: DataFrame, epoch_id: int) -> None:
         (
             dsir_bucket_counts(
                 batch_df, F.expr(self.target_pred), self.n_buckets, self.text_col
             )
             .write.mode("overwrite")
             .parquet(os.path.join(self.counts_path, f"epoch={epoch_id}"))
-        )
-        with open(marker, "w") as f:
-            f.write("")
-
-    def start(self, docs_stream: DataFrame, checkpoint_dir: str) -> StreamingQuery:
-        return (
-            docs_stream.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.process_batch)
-            .start()
         )
 
     def bucket_counts(self) -> DataFrame:

@@ -13,8 +13,8 @@ This is how a 100 TB/day ingest keeps its quality gates CURRENT
 without rescanning the corpus: O(batch) work per micro-batch, state
 bounded by |sources| × |distinct lengths|, and the derived thresholds
 are exactly those the batch gate would compute over everything
-streamed so far (asserted in tests). Same epoch-dir + marker
-idempotency as ContinuousCMS/KMV.
+streamed so far (asserted in tests). Replays are idempotent by
+EpochSink's epoch-dir + marker ledger.
 """
 
 from __future__ import annotations
@@ -24,13 +24,13 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from monolith_spark.operators.text import token_count
+from monolith_spark.streaming.epoch import EpochSink
 
 
 @dataclass
-class ContinuousLengthGate:
+class ContinuousLengthGate(EpochSink):
     """foreachBatch sink maintaining per-source token-length histogram
     state under ``path``; ``thresholds()`` derives the exact [q05,q95]
     band per source over everything streamed so far."""
@@ -42,12 +42,8 @@ class ContinuousLengthGate:
 
     def __post_init__(self) -> None:
         self._epochs_dir = self.path + "_epochs"
-        os.makedirs(self._epochs_dir, exist_ok=True)
 
-    def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        marker = os.path.join(self._epochs_dir, f"{epoch_id}.done")
-        if os.path.exists(marker):
-            return
+    def write_epoch(self, batch_df: DataFrame, epoch_id: int) -> None:
         (
             batch_df.select(
                 F.col(self.source_col).alias("source"),
@@ -57,16 +53,6 @@ class ContinuousLengthGate:
             .agg(F.count("*").alias("c"))
             .write.mode("overwrite")
             .parquet(os.path.join(self.path, f"epoch={epoch_id}"))
-        )
-        with open(marker, "w") as f:
-            f.write("")
-
-    def start(self, docs_stream: DataFrame, checkpoint_dir: str) -> StreamingQuery:
-        return (
-            docs_stream.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.process_batch)
-            .start()
         )
 
     def histogram(self) -> DataFrame:

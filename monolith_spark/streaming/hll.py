@@ -24,11 +24,12 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+
+from monolith_spark.streaming.epoch import EpochSink
 
 
 @dataclass
-class ContinuousHLL:
+class ContinuousHLL(EpochSink):
     """foreachBatch sink maintaining per-group HLL sketches of
     ``value_col`` under ``path`` (epoch-partitioned parquet)."""
 
@@ -40,7 +41,6 @@ class ContinuousHLL:
 
     def __post_init__(self) -> None:
         self._epochs_dir = self.path + "_epochs"
-        os.makedirs(self._epochs_dir, exist_ok=True)
 
     def _partial(self, batch_df: DataFrame) -> DataFrame:
         agg = F.hll_sketch_agg(self.value_col, self.lgk).alias("sketch")
@@ -48,22 +48,9 @@ class ContinuousHLL:
             return batch_df.groupBy(*self.group_cols).agg(agg)
         return batch_df.agg(agg)
 
-    def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        marker = os.path.join(self._epochs_dir, f"{epoch_id}.done")
-        if os.path.exists(marker):
-            return
+    def write_epoch(self, batch_df: DataFrame, epoch_id: int) -> None:
         self._partial(batch_df).write.mode("overwrite").parquet(
             os.path.join(self.path, f"epoch={epoch_id}")
-        )
-        with open(marker, "w") as f:
-            f.write("")
-
-    def start(self, stream_df: DataFrame, checkpoint_dir: str) -> StreamingQuery:
-        return (
-            stream_df.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.process_batch)
-            .start()
         )
 
     def read(self) -> DataFrame:

@@ -28,10 +28,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from monolith_spark.engine import MonolithDB
+from monolith_spark.streaming.epoch import EpochSink
 
 
 @dataclass
-class StreamingIngest:
+class StreamingIngest(EpochSink):
     """foreachBatch sink writing a samples stream into a MonolithDB.
 
     late_policy:
@@ -50,23 +51,15 @@ class StreamingIngest:
     def __post_init__(self) -> None:
         if self.late_policy not in ("keep", "drop"):
             raise ValueError(f"late_policy must be keep|drop, got {self.late_policy!r}")
+        # Before start() binds it to a stream: the ledger of batches
+        # handed to process_batch directly.
         self._epochs_dir = os.path.join(self.db.path, "_epochs")
-        os.makedirs(self._epochs_dir, exist_ok=True)
 
     # -- exactly-once: foreachBatch may replay an epoch after recovery;
-    # -- MonolithDB.write is append-only, so an epoch ledger makes it
+    # -- MonolithDB.write is append-only, so the epoch ledger makes it
     # -- idempotent (the streaming analog of the reference's WAL design,
-    # -- /root/reference/doc/wal.md).
-    def _epoch_done(self, epoch_id: int) -> bool:
-        return os.path.exists(os.path.join(self._epochs_dir, f"{epoch_id}.done"))
-
-    def _mark_epoch(self, epoch_id: int) -> None:
-        with open(os.path.join(self._epochs_dir, f"{epoch_id}.done"), "w") as f:
-            f.write("")
-
-    def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        if self._epoch_done(epoch_id):
-            return
+    # -- its doc/wal.md).
+    def write_epoch(self, batch_df: DataFrame, epoch_id: int) -> None:
         window = None
         if self.late_policy == "drop":
             row = batch_df.selectExpr("max(timestamp) AS m").head()
@@ -99,25 +92,20 @@ class StreamingIngest:
                 )
             if ex.limit(1).count() > 0:
                 self.db.write_exemplars(ex)
-        self._mark_epoch(epoch_id)
 
     def start(
         self,
         stream_df: DataFrame,
         checkpoint_dir: str,
-        trigger_seconds: int | None = None,
+        trigger_seconds: float | None = None,
     ) -> StreamingQuery:
         """Attach the sink to a streaming [labels, timestamp, value]
-        DataFrame. trigger_seconds ≈ the reference's chunk-swap timer
-        cadence (ST1); None → process available data immediately."""
-        writer = (
-            stream_df.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.process_batch)
-        )
-        if trigger_seconds is not None:
-            writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-        return writer.start()
+        DataFrame. Epoch ids restart at 0 with each checkpoint, so the
+        stream's ledger lives in ``checkpoint_dir``: two streams into
+        one db, or a stream restarted on a fresh checkpoint, never skip
+        each other's epochs."""
+        self._epochs_dir = os.path.join(checkpoint_dir, "_epochs")
+        return super().start(stream_df, checkpoint_dir, trigger_seconds)
 
 
 def dedup_stream(samples_stream: DataFrame, watermark_delay: str = "1 minute") -> DataFrame:

@@ -11,8 +11,8 @@ Layout: ``path/epoch_id=<n>/cell=<k>/*.parquet`` plus the
 ``_ivf_centroids.json`` sidecar. Every batch writes ONLY its own
 epoch directory with mode=overwrite, so a crash-and-replay of an
 epoch clobbers its own half-written output instead of duplicating
-rows (same replay contract as StreamingNearDupIndex); the ``.done``
-epoch ledger is the fast-path skip. Probes via
+rows (same replay contract as StreamingNearDupIndex); EpochSink's
+``.done`` epoch ledger is the fast-path skip. Probes via
 `similarity.ivf_topk_indexed` work unchanged: ``cell`` is still a
 partition column (second level), so the driver-resolved IN-filter
 prunes to probed cells across every epoch.
@@ -26,13 +26,13 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from monolith_spark.operators.similarity import _cell_sims, _dbl, norm_expr
+from monolith_spark.streaming.epoch import EpochSink
 
 
 @dataclass
-class StreamingIVFIndex:
+class StreamingIVFIndex(EpochSink):
     """foreachBatch sink appending cell-assigned vectors to a
     persisted IVF index under fixed centroids."""
 
@@ -53,18 +53,8 @@ class StreamingIVFIndex:
             with open(self._meta, "w") as fh:
                 json.dump(self.centroids, fh)
         self._epochs_dir = os.path.join(self.path, "_epochs")
-        os.makedirs(self._epochs_dir, exist_ok=True)
 
-    def _epoch_done(self, epoch_id: int) -> bool:
-        return os.path.exists(os.path.join(self._epochs_dir, f"{epoch_id}.done"))
-
-    def _mark_epoch(self, epoch_id: int) -> None:
-        with open(os.path.join(self._epochs_dir, f"{epoch_id}.done"), "w") as f:
-            f.write("")
-
-    def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        if self._epoch_done(epoch_id):
-            return
+    def write_epoch(self, batch_df: DataFrame, epoch_id: int) -> None:
         assigned = batch_df.select(
             F.col(self.id_col).alias("neighbor_id"),
             _dbl(self.vec_col).alias("c_vec"),
@@ -77,16 +67,3 @@ class StreamingIVFIndex:
             .mode("overwrite")
             .parquet(os.path.join(self.path, f"epoch_id={int(epoch_id)}"))
         )
-        self._mark_epoch(epoch_id)
-
-    def start(
-        self, stream: DataFrame, checkpoint: str, trigger_seconds: float | None = None
-    ) -> StreamingQuery:
-        writer = (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("update")
-        )
-        if trigger_seconds is not None:
-            writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-        return writer.start()

@@ -14,7 +14,7 @@ the then-current centroids), so a replayed epoch recomputes the same
 state: epoch e's output state is a pure function of (state after e−1,
 batch e). State files are keyed by epoch (``_state/<epoch>.json``,
 overwrite-on-replay) with the previous epoch's file as input — the
-same crash-and-replay contract as the ``.done`` ledgers elsewhere.
+same crash-and-replay contract as EpochSink's ``.done`` ledger.
 
 Assignments for each batch are optionally materialized to
 ``path/epoch_id=<n>/`` parquet (cluster-partitioned), making the
@@ -29,15 +29,17 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from monolith_spark.operators.similarity import _dbl, sqdist_expr
+from monolith_spark.streaming.epoch import EpochSink
 
 
 @dataclass
-class StreamingKMeans:
+class StreamingKMeans(EpochSink):
     """foreachBatch mini-batch k-means: driver-held (centroids,
-    counts) state, batch assignment + per-cluster sums in DataFrames."""
+    counts) state, batch assignment + per-cluster sums in DataFrames.
+    Takes EpochSink's ``start`` only: its per-epoch state file is its
+    ledger, so ``process_batch`` replaces the marker protocol."""
 
     spark: SparkSession
     path: str
@@ -129,19 +131,6 @@ class StreamingKMeans:
         with open(tmp, "w") as fh:
             json.dump({"centroids": self.centroids, "counts": self._counts}, fh)
         os.replace(tmp, self._state_file(epoch_id))
-
-    # ------------------------------------------------------------ start
-    def start(
-        self, stream: DataFrame, checkpoint: str, trigger_seconds: float | None = None
-    ) -> StreamingQuery:
-        writer = (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("update")
-        )
-        if trigger_seconds is not None:
-            writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-        return writer.start()
 
 
 def minibatch_kmeans_batch(

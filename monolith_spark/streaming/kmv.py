@@ -5,7 +5,7 @@ operators/sketches.py:kmv_merge) makes it a perfect continuous
 aggregate, like the CMS twin: each micro-batch writes its own
 per-group k-row partial — O(batch) work, ≤ k rows per group out,
 independent of stream history — and reads re-merge by ranking the
-union. Same epoch-dir + marker idempotency as ContinuousCMS: a
+union. EpochSink's epoch-dir + marker ledger makes it idempotent: a
 replayed epoch overwrites its own partition instead of re-unioning.
 
 This is the streaming path for "how many distinct users/keys so far"
@@ -21,13 +21,13 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from monolith_spark.operators.sketches import kmv_estimate, kmv_sketch
+from monolith_spark.streaming.epoch import EpochSink
 
 
 @dataclass
-class ContinuousKMV:
+class ContinuousKMV(EpochSink):
     """foreachBatch sink maintaining per-group KMV sketches of
     ``key_col`` under ``path`` (epoch-partitioned parquet of k-row
     partials)."""
@@ -40,25 +40,11 @@ class ContinuousKMV:
 
     def __post_init__(self) -> None:
         self._epochs_dir = self.path + "_epochs"
-        os.makedirs(self._epochs_dir, exist_ok=True)
 
-    def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        marker = os.path.join(self._epochs_dir, f"{epoch_id}.done")
-        if os.path.exists(marker):
-            return
+    def write_epoch(self, batch_df: DataFrame, epoch_id: int) -> None:
         kmv_sketch(batch_df, self.key_col, self.group_cols, self.k).write.mode(
             "overwrite"
         ).parquet(os.path.join(self.path, f"epoch={epoch_id}"))
-        with open(marker, "w") as f:
-            f.write("")
-
-    def start(self, stream_df: DataFrame, checkpoint_dir: str) -> StreamingQuery:
-        return (
-            stream_df.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.process_batch)
-            .start()
-        )
 
     def sketch(self) -> DataFrame:
         """The merged whole-stream sketch [*group_cols, h] — the k

@@ -6,8 +6,8 @@ pair of additive counters per token — counts from disjoint corpus
 slices sum to the whole-corpus model. That makes it a perfect
 continuous aggregate in the ContinuousCMS mold: each micro-batch
 appends its own (tok, c_pos, c_neg) partial — O(batch) work,
-vocab-of-batch output — and reads re-merge by summing. The same
-epoch-dir + marker idempotency as ContinuousRollup: a replayed epoch
+vocab-of-batch output — and reads re-merge by summing. EpochSink's
+epoch-dir + marker ledger makes it idempotent: a replayed epoch
 overwrites its own partition instead of double-counting.
 
 This is how the quality model stays fresh at 100 TB/day ingest: the
@@ -25,13 +25,13 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from monolith_spark.operators.text import nb_score, nb_token_counts
+from monolith_spark.streaming.epoch import EpochSink
 
 
 @dataclass
-class ContinuousNBModel:
+class ContinuousNBModel(EpochSink):
     """foreachBatch sink maintaining NB token class-counts under
     ``path`` (epoch-partitioned parquet of count partials)."""
 
@@ -45,12 +45,8 @@ class ContinuousNBModel:
 
     def __post_init__(self) -> None:
         self._epochs_dir = self.path + "_epochs"
-        os.makedirs(self._epochs_dir, exist_ok=True)
 
-    def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        marker = os.path.join(self._epochs_dir, f"{epoch_id}.done")
-        if os.path.exists(marker):
-            return
+    def write_epoch(self, batch_df: DataFrame, epoch_id: int) -> None:
         nb_token_counts(
             batch_df,
             self.id_col,
@@ -59,16 +55,6 @@ class ContinuousNBModel:
             self.max_tokens,
             self.min_stopword_ratio,
         ).write.mode("overwrite").parquet(os.path.join(self.path, f"epoch={epoch_id}"))
-        with open(marker, "w") as f:
-            f.write("")
-
-    def start(self, stream_df: DataFrame, checkpoint_dir: str) -> StreamingQuery:
-        return (
-            stream_df.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.process_batch)
-            .start()
-        )
 
     def counts(self) -> DataFrame:
         """The merged whole-stream model [tok, c_pos, c_neg]."""

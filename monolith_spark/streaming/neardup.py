@@ -26,8 +26,8 @@ Replay safety: every write targets the replayed epoch's own partition
 directory (overwrite, not append), and the cross-batch probe excludes
 the current epoch's partition — so a crash between writes cannot
 double-ingest a batch, double-report matches, or self-match a batch
-against its own half-persisted signatures. The epoch ledger remains as
-a fast-path skip for fully-completed epochs.
+against its own half-persisted signatures. EpochSink's epoch ledger
+remains as a fast-path skip for fully-completed epochs.
 """
 
 from __future__ import annotations
@@ -37,7 +37,6 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from monolith_spark.barrier import barrier as _lineage_barrier
 from monolith_spark.operators.dedup import (
@@ -45,12 +44,13 @@ from monolith_spark.operators.dedup import (
     minhash_band_signatures,
     minhash_signatures,
 )
+from monolith_spark.streaming.epoch import EpochSink
 
 _MATCH_SCHEMA = "new_doc_id long, old_doc_id long, jaccard double, epoch_id long"
 
 
 @dataclass
-class StreamingNearDupIndex:
+class StreamingNearDupIndex(EpochSink):
     """foreachBatch sink maintaining an incremental near-dup index.
 
     Matches surface as [new_doc_id, old_doc_id, jaccard, epoch_id]
@@ -70,14 +70,6 @@ class StreamingNearDupIndex:
         self.shingle_path = os.path.join(self.path, "shingles")
         self.match_path = os.path.join(self.path, "matches")
         self._epochs_dir = os.path.join(self.path, "_epochs")
-        os.makedirs(self._epochs_dir, exist_ok=True)
-
-    def _epoch_done(self, epoch_id: int) -> bool:
-        return os.path.exists(os.path.join(self._epochs_dir, f"{epoch_id}.done"))
-
-    def _mark_epoch(self, epoch_id: int) -> None:
-        with open(os.path.join(self._epochs_dir, f"{epoch_id}.done"), "w") as f:
-            f.write("")
 
     def _read_index(self, base: str, epoch_id: int) -> DataFrame | None:
         """Prior epochs of a partitioned index table (None before the
@@ -126,12 +118,9 @@ class StreamingNearDupIndex:
             .select("new_doc_id", "old_doc_id", "jaccard")
         )
 
-    def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        if self._epoch_done(epoch_id):
-            return
+    def write_epoch(self, batch_df: DataFrame, epoch_id: int) -> None:
         batch = batch_df.select("doc_id", "text")
         if batch.isEmpty():
-            self._mark_epoch(epoch_id)
             return
         batch = batch.transform(_lineage_barrier, eager=True)
         sigs = minhash_band_signatures(
@@ -185,15 +174,6 @@ class StreamingNearDupIndex:
         sigs.write.mode("overwrite").parquet(os.path.join(self.sig_path, epoch_dir))
         sh_new.write.mode("overwrite").parquet(
             os.path.join(self.shingle_path, epoch_dir)
-        )
-        self._mark_epoch(epoch_id)
-
-    def start(self, docs_stream: DataFrame, checkpoint_dir: str) -> StreamingQuery:
-        return (
-            docs_stream.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.process_batch)
-            .start()
         )
 
     def matches(self) -> DataFrame:

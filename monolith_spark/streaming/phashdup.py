@@ -29,8 +29,8 @@ Per micro-batch:
 
 Replay safety mirrors StreamingNearDupIndex: every write targets the
 replayed epoch's own partition (overwrite), the cross-batch probe
-excludes the current epoch's partition, and a ``.done`` ledger
-fast-skips fully completed epochs — a crash between writes cannot
+excludes the current epoch's partition, and EpochSink's ``.done``
+ledger fast-skips fully completed epochs — a crash between writes cannot
 double-ingest, double-report, or self-match a half-persisted batch.
 """
 
@@ -41,17 +41,17 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from monolith_spark.operators.multimodal import image_hashes, with_hash_bands
 
 from monolith_spark.barrier import barrier as _lineage_barrier
+from monolith_spark.streaming.epoch import EpochSink
 
 _MATCH_SCHEMA = "new_media_id long, old_media_id long, hamming long, epoch_id long"
 
 
 @dataclass
-class StreamingImageDedupIndex:
+class StreamingImageDedupIndex(EpochSink):
     """foreachBatch sink maintaining an incremental image-dedup index.
 
     Matches surface as [new_media_id, old_media_id, hamming, epoch_id]
@@ -70,14 +70,6 @@ class StreamingImageDedupIndex:
         self.band_path = os.path.join(self.path, "bands")
         self.match_path = os.path.join(self.path, "matches")
         self._epochs_dir = os.path.join(self.path, "_epochs")
-        os.makedirs(self._epochs_dir, exist_ok=True)
-
-    def _epoch_done(self, epoch_id: int) -> bool:
-        return os.path.exists(os.path.join(self._epochs_dir, f"{epoch_id}.done"))
-
-    def _mark_epoch(self, epoch_id: int) -> None:
-        with open(os.path.join(self._epochs_dir, f"{epoch_id}.done"), "w") as f:
-            f.write("")
 
     def _old_bands(self, epoch_id: int) -> DataFrame | None:
         if not os.path.exists(self.band_path):
@@ -102,12 +94,9 @@ class StreamingImageDedupIndex:
             .select("new_media_id", "old_media_id", "hamming")
         )
 
-    def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        if self._epoch_done(epoch_id):
-            return
+    def write_epoch(self, batch_df: DataFrame, epoch_id: int) -> None:
         batch = batch_df.select("media_id", "payload")
         if batch.isEmpty():
-            self._mark_epoch(epoch_id)
             return
         hashes = (
             image_hashes(batch)
@@ -161,15 +150,6 @@ class StreamingImageDedupIndex:
             )
         bands.write.mode("overwrite").parquet(
             os.path.join(self.band_path, epoch_dir)
-        )
-        self._mark_epoch(epoch_id)
-
-    def start(self, media_stream: DataFrame, checkpoint_dir: str) -> StreamingQuery:
-        return (
-            media_stream.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.process_batch)
-            .start()
         )
 
     def matches(self) -> DataFrame:

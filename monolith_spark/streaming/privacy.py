@@ -8,8 +8,8 @@ so the state is per-epoch (quasi, user) partials with their event
 counts: distinct-by-construction within an epoch, distinct-merged on
 read. Event counts are additive; the distinct-user merge is a set
 union — both exact, so the streamed release equals the batch release
-over everything streamed so far. Same epoch-dir + marker idempotency
-as ContinuousRollup: replays overwrite their own partition.
+over everything streamed so far. EpochSink's epoch-dir + marker
+ledger makes it idempotent: replays overwrite their own partition.
 
 State is O(distinct (group, user) pairs) on cheap storage — the same
 ledger a batch release would scan, incrementally maintained; a
@@ -23,11 +23,12 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+
+from monolith_spark.streaming.epoch import EpochSink
 
 
 @dataclass
-class ContinuousKAnonymity:
+class ContinuousKAnonymity(EpochSink):
     """foreachBatch sink maintaining per-group distinct-user ledgers
     under ``path``; ``release()`` applies the k bound to everything
     streamed so far."""
@@ -40,27 +41,13 @@ class ContinuousKAnonymity:
 
     def __post_init__(self) -> None:
         self._epochs_dir = self.path + "_epochs"
-        os.makedirs(self._epochs_dir, exist_ok=True)
 
-    def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        marker = os.path.join(self._epochs_dir, f"{epoch_id}.done")
-        if os.path.exists(marker):
-            return
+    def write_epoch(self, batch_df: DataFrame, epoch_id: int) -> None:
         (
             batch_df.groupBy(*self.quasi_cols, self.user_col)
             .agg(F.count("*").alias("n_events"))
             .write.mode("overwrite")
             .parquet(os.path.join(self.path, f"epoch={epoch_id}"))
-        )
-        with open(marker, "w") as f:
-            f.write("")
-
-    def start(self, stream_df: DataFrame, checkpoint_dir: str) -> StreamingQuery:
-        return (
-            stream_df.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.process_batch)
-            .start()
         )
 
     def ledger(self) -> DataFrame:

@@ -11,8 +11,8 @@ only the rollup table (orders of magnitude smaller than samples).
 Correctness properties:
 - partials are decomposable aggregates, so append order and batch
   boundaries never change the merged result;
-- replays are idempotent via the same epoch-ledger trick as the ingest
-  sink (a replayed epoch is skipped, not re-appended);
+- replays are idempotent via EpochSink's epoch ledger (a replayed
+  epoch is skipped, not re-appended);
 - avg is derived at read time (sum/count) — never averaged partials.
 """
 
@@ -23,10 +23,10 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from monolith_spark.engine import MonolithDB
 from monolith_spark.labels import series_id_expr
+from monolith_spark.streaming.epoch import EpochSink
 
 
 def bucket_partials(samples: DataFrame, step_ms: int) -> DataFrame:
@@ -49,7 +49,7 @@ def bucket_partials(samples: DataFrame, step_ms: int) -> DataFrame:
 
 
 @dataclass
-class ContinuousRollup:
+class ContinuousRollup(EpochSink):
     """foreachBatch sink maintaining the rollup table beside a
     MonolithDB (path: <db>/rollup_<step_ms>)."""
 
@@ -59,28 +59,14 @@ class ContinuousRollup:
     def __post_init__(self) -> None:
         self.path = os.path.join(self.db.path, f"rollup_{self.step_ms}")
         self._epochs_dir = self.path + "_epochs"
-        os.makedirs(self._epochs_dir, exist_ok=True)
 
-    def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        marker = os.path.join(self._epochs_dir, f"{epoch_id}.done")
-        if os.path.exists(marker):
-            return
+    def write_epoch(self, batch_df: DataFrame, epoch_id: int) -> None:
         # Per-epoch partition dir + overwrite: a replay after a crash
         # BETWEEN the write and the marker rewrites the same dir rather
         # than appending a second copy — idempotent even without the
         # marker (which remains as a cheap skip).
         bucket_partials(batch_df, self.step_ms).write.mode("overwrite").parquet(
             os.path.join(self.path, f"epoch={epoch_id}")
-        )
-        with open(marker, "w") as f:
-            f.write("")
-
-    def start(self, stream_df: DataFrame, checkpoint_dir: str) -> StreamingQuery:
-        return (
-            stream_df.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.process_batch)
-            .start()
         )
 
     def read(self) -> DataFrame:

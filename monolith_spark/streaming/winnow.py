@@ -29,8 +29,8 @@ fetch. Per micro-batch:
 
 Replay safety is the neardup idiom verbatim: every write targets the
 replayed epoch's own partition (overwrite), the cross-batch probe
-excludes the current epoch's partition, and a ``.done`` ledger
-fast-paths completed epochs.
+excludes the current epoch's partition, and EpochSink's ``.done``
+ledger fast-paths completed epochs.
 """
 
 from __future__ import annotations
@@ -40,11 +40,11 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from monolith_spark.operators.text import winnow_fingerprints_expr
 
 from monolith_spark.barrier import barrier as _lineage_barrier
+from monolith_spark.streaming.epoch import EpochSink
 
 _MATCH_SCHEMA = (
     "new_doc_id long, old_doc_id long, shared long, containment double, epoch_id long"
@@ -52,7 +52,7 @@ _MATCH_SCHEMA = (
 
 
 @dataclass
-class StreamingWinnowIndex:
+class StreamingWinnowIndex(EpochSink):
     """foreachBatch sink maintaining an incremental winnowing
     copy-detection index.
 
@@ -72,14 +72,6 @@ class StreamingWinnowIndex:
         self.fp_path = os.path.join(self.path, "fingerprints")
         self.match_path = os.path.join(self.path, "matches")
         self._epochs_dir = os.path.join(self.path, "_epochs")
-        os.makedirs(self._epochs_dir, exist_ok=True)
-
-    def _epoch_done(self, epoch_id: int) -> bool:
-        return os.path.exists(os.path.join(self._epochs_dir, f"{epoch_id}.done"))
-
-    def _mark_epoch(self, epoch_id: int) -> None:
-        with open(os.path.join(self._epochs_dir, f"{epoch_id}.done"), "w") as f:
-            f.write("")
 
     def _prior_fps(self, epoch_id: int) -> DataFrame | None:
         if not os.path.exists(self.fp_path):
@@ -109,12 +101,9 @@ class StreamingWinnowIndex:
             .select("new_doc_id", "old_doc_id", "shared", "containment")
         )
 
-    def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        if self._epoch_done(epoch_id):
-            return
+    def write_epoch(self, batch_df: DataFrame, epoch_id: int) -> None:
         batch = batch_df.select("doc_id", "text")
         if batch.isEmpty():
-            self._mark_epoch(epoch_id)
             return
         fps = (
             batch.select(
@@ -151,15 +140,6 @@ class StreamingWinnowIndex:
                 os.path.join(self.match_path, epoch_dir)
             )
         fps.write.mode("overwrite").parquet(os.path.join(self.fp_path, epoch_dir))
-        self._mark_epoch(epoch_id)
-
-    def start(self, docs_stream: DataFrame, checkpoint_dir: str) -> StreamingQuery:
-        return (
-            docs_stream.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.process_batch)
-            .start()
-        )
 
     def matches(self) -> DataFrame:
         if not os.path.exists(self.match_path):

@@ -133,8 +133,10 @@ def test_scrape_stream_ingest(spark, tmp_path):
     q = StreamingIngest(db).start(
         scrape_stream(spark, str(scrape_dir)), str(tmp_path / "ckpt")
     )
-    q.processAllAvailable()
-    q.stop()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
 
     got = {
         (r["signature"], r["timestamp"], r["value"])
@@ -374,8 +376,10 @@ def test_scrape_stream_carries_exemplars(spark, tmp_path):
         scrape_stream(spark, str(scrape_dir), with_exemplars=True),
         str(tmp_path / "ckpt"),
     )
-    q.processAllAvailable()
-    q.stop()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
 
     assert db.query_flat({}, 0, 10_000_000).count() == 3
     got = {

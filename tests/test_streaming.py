@@ -20,6 +20,17 @@ def _write_slice(spark, path, rows):
     spark.createDataFrame(rows, SAMPLES_SCHEMA).coalesce(1).write.mode("append").parquet(path)
 
 
+@pytest.fixture(autouse=True)
+def _stop_queries(spark):
+    """Stop every StreamingQuery a test leaves running, failed tests
+    included, so no micro-batch outlives its test."""
+    try:
+        yield
+    finally:
+        for q in spark.streams.active:
+            q.stop()
+
+
 def test_stream_ingest_end_to_end(spark, tmp_path):
     src = str(tmp_path / "src")
     _write_slice(spark, src, [({"m": "a"}, 1000, 1.0), ({"m": "a"}, 2000, 2.0)])
@@ -1368,3 +1379,198 @@ def test_stream_ingest_keeps_label_index_fresh(spark, tmp_path):
     assert db._index_fresh(man)  # fresh after batches
     assert db.query_flat({"m": "b"}, 0, 100_000).count() == 1
     assert db.query_flat({"m": "a"}, 0, 100_000).count() == 2
+
+
+# ------------------------------------------------------ EpochSink ledger
+
+_DOCS = "doc_id long, text string"
+_FOX = "the quick brown fox jumps over the lazy dog near the river bank today"
+
+
+def _replay_case(spark, tmp_path, name):
+    """(sink, epoch-0 batch, epoch-1 batch, read) for one marker-ledger
+    sink; ``read()`` is the sink's read state as a list of rows."""
+    p = str(tmp_path / name)
+    df = spark.createDataFrame
+    if name == "cms":
+        from monolith_spark.streaming.cms import ContinuousCMS
+
+        sink = ContinuousCMS(spark, p)
+        return (sink, df([("a",)] * 3 + [("b",)], "key string"),
+                df([("a",), ("c",)], "key string"), lambda: sink.sketch().collect())
+    if name == "hll":
+        from monolith_spark.streaming.hll import ContinuousHLL
+
+        sink = ContinuousHLL(spark, p, value_col="user", group_cols=["g"])
+        sch = "g string, user long"
+        return (sink, df([("x", i) for i in range(5)], sch),
+                df([("x", i) for i in range(3, 9)], sch), lambda: sink.read().collect())
+    if name == "kmv":
+        from monolith_spark.streaming.kmv import ContinuousKMV
+
+        sink = ContinuousKMV(spark, p, k=4)
+        sch = "grp string, key string"
+        return (sink, df([("g", f"x{i}") for i in range(6)], sch),
+                df([("g", f"y{i}") for i in range(6)], sch),
+                lambda: sink.estimate().collect())
+    if name == "privacy":
+        from monolith_spark.streaming.privacy import ContinuousKAnonymity
+
+        sink = ContinuousKAnonymity(spark, p, k=1)
+        sch = "event_type string, user_id long"
+        return (sink, df([("view", 1), ("view", 2)], sch),
+                df([("view", 1), ("buy", 3)], sch), lambda: sink.ledger().collect())
+    if name == "nbmodel":
+        from monolith_spark.streaming.nbmodel import ContinuousNBModel
+
+        sink = ContinuousNBModel(spark, p)
+        return (sink, df([(1, _FOX * 3)], _DOCS), df([(2, "short doc")], _DOCS),
+                lambda: sink.counts().collect())
+    if name == "gates":
+        from monolith_spark.streaming.gates import ContinuousLengthGate
+
+        sink = ContinuousLengthGate(spark, p)
+        sch = "source string, text string"
+        return (sink, df([("s", _FOX), ("s", "a b")], sch), df([("s", _FOX)], sch),
+                lambda: sink.histogram().collect())
+    if name == "dsir":
+        from monolith_spark.streaming.dsir import ContinuousDSIR
+
+        sink = ContinuousDSIR(spark, p, target_pred="source = 't'", n_buckets=16)
+        sch = "doc_id long, source string, text string"
+        return (sink, df([(1, "t", _FOX), (2, "r", "lorem ipsum dolor")], sch),
+                df([(3, "t", "quick fox")], sch), lambda: sink.bucket_counts().collect())
+    if name == "bigramlm":
+        from monolith_spark.streaming.bigramlm import ContinuousBigramLM
+
+        sink = ContinuousBigramLM(spark, p)
+        return (sink, df([(1, _FOX)], _DOCS), df([(2, "the quick red fox")], _DOCS),
+                lambda: sink.unigrams().collect() + sink.bigrams().collect())
+    if name == "correlation":
+        from monolith_spark.streaming.correlation import ContinuousCorrelation
+
+        sink = ContinuousCorrelation(spark, p)
+        sch = "labels map<string,string>, timestamp long, value double, signature string"
+        day = lambda d: sink.lo + d * sink.day_ms  # noqa: E731
+        buy = {"event_type": "purchase"}
+        return (sink,
+                df([(buy, day(0), 2.0, "s1"), (buy, day(1), 3.0, "s1")], sch),
+                df([(buy, day(1), 4.0, "s1"), ({}, day(2), 1.0, "s2")], sch),
+                lambda: [r for t in sink._merged() for r in t.collect()])
+    if name == "rollup":
+        from monolith_spark.streaming.rollup import ContinuousRollup
+
+        sink = ContinuousRollup(MonolithDB(spark, p, chunk_size_ms=60_000), step_ms=60_000)
+        return (sink, df([({"m": "a"}, 1_000, 1.0)], SAMPLES_SCHEMA),
+                df([({"m": "a"}, 2_000, 5.0), ({"m": "b"}, 61_000, 2.0)], SAMPLES_SCHEMA),
+                lambda: sink.read().collect())
+    if name == "neardup":
+        from monolith_spark.streaming.neardup import StreamingNearDupIndex
+
+        sink = StreamingNearDupIndex(spark, p)
+        return (sink, df([(1, _FOX)], _DOCS), df([(2, _FOX), (3, _FOX)], _DOCS),
+                lambda: sink.matches().collect())
+    if name == "winnow":
+        from monolith_spark.streaming.winnow import StreamingWinnowIndex
+
+        sink = StreamingWinnowIndex(spark, p)
+        return (sink, df([(1, _FOX)], _DOCS), df([(2, _FOX + " again")], _DOCS),
+                lambda: sink.matches().collect())
+    if name == "phashdup":
+        from monolith_spark.operators import multimodal as mm
+        from monolith_spark.streaming.phashdup import StreamingImageDedupIndex
+
+        sink = StreamingImageDedupIndex(spark, p)
+        img = mm.encode_ppm(mm.synth_image_varied(3, 11, 8))
+        sch = "media_id long, payload binary"
+        return (sink, df([(1, img)], sch), df([(2, img), (3, img)], sch),
+                lambda: sink.matches().collect())
+    if name == "ivf":
+        from monolith_spark.streaming.ivf import StreamingIVFIndex
+
+        sink = StreamingIVFIndex(spark, p, centroids=[[1.0, 0.0], [0.0, 1.0]])
+        sch = "vec_id long, embedding array<float>"
+        return (sink, df([(1, [1.0, 0.1]), (2, [0.1, 1.0])], sch),
+                df([(3, [0.9, 0.2])], sch),
+                lambda: spark.read.parquet(p).drop("c_vec").collect())
+    raise ValueError(name)
+
+
+@pytest.mark.parametrize("name", [
+    "cms", "hll", "kmv", "privacy", "nbmodel", "gates", "dsir", "bigramlm",
+    "correlation", "rollup", "neardup", "winnow", "phashdup", "ivf",
+])
+def test_epoch_sink_crash_replay_is_idempotent(spark, tmp_path, name):
+    """Every sink whose epoch writes overwrite the epoch's own
+    partition: a crash after epoch 1's writes but before its marker
+    replays epoch 1, and the read state stays that of one application.
+    A replay of a marked epoch is skipped. (StreamingIngest appends, so
+    an unmarked replay would append twice; StreamingKMeans keeps its own
+    state-file ledger.)"""
+    sink, b0, b1, read = _replay_case(spark, tmp_path, name)
+    sink.process_batch(b0, 0)
+    sink.process_batch(b1, 1)
+    once = sorted(map(repr, read()))
+    assert once
+    sink.process_batch(b1, 0)  # marked: skipped
+    assert sorted(map(repr, read())) == once
+    marker = os.path.join(sink._epochs_dir, "1.done")
+    assert os.path.exists(marker)
+    os.remove(marker)
+    sink.process_batch(b1, 1)
+    assert sorted(map(repr, read())) == once
+    assert os.path.exists(marker)
+
+
+def test_only_epoch_sink_drives_foreach_batch():
+    """Structural guard: in monolith_spark/streaming/, only epoch.py
+    calls ``.foreachBatch(`` or builds a ``.done`` marker path; every
+    other sink reaches both through EpochSink. Docstrings may mention
+    ``.done`` — only code counts."""
+    import ast
+
+    import monolith_spark.streaming as pkg
+
+    root = os.path.dirname(pkg.__file__)
+    offenders = []
+    for fn in sorted(os.listdir(root)):
+        if not fn.endswith(".py") or fn == "epoch.py":
+            continue
+        tree = ast.parse(open(os.path.join(root, fn)).read())
+        docstrings = {
+            id(node.body[0].value)
+            for node in ast.walk(tree)
+            if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef,
+                                 ast.AsyncFunctionDef))
+            and node.body and isinstance(node.body[0], ast.Expr)
+            and isinstance(node.body[0].value, ast.Constant)
+        }
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute) and node.attr == "foreachBatch":
+                offenders.append(f"{fn}:{node.lineno} foreachBatch")
+            if (isinstance(node, ast.Constant) and isinstance(node.value, str)
+                    and ".done" in node.value and id(node) not in docstrings):
+                offenders.append(f"{fn}:{node.lineno} .done")
+    assert offenders == []
+
+
+def test_two_ingest_streams_into_one_db_keep_their_epochs(spark, tmp_path):
+    """Two StreamingIngest streams into ONE db, each with its own
+    checkpoint and file source: epoch ids restart at 0 per checkpoint,
+    so each stream keeps its own ledger and both streams' series read
+    back."""
+    db = MonolithDB(spark, str(tmp_path / "db"), chunk_size_ms=60_000)
+    for job in ("a", "b"):
+        src = str(tmp_path / f"src_{job}")
+        _write_slice(spark, src, [({"job": job}, 1_000, 1.0)])
+        q = StreamingIngest(db).start(
+            samples_file_stream(spark, src), str(tmp_path / f"ckpt_{job}"))
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    jobs = {r["labels"]["job"] for r in db.series().collect()}
+    assert jobs == {"a", "b"}
+    assert db.query_flat({}, 0, 10**9).count() == 2
+    for job in ("a", "b"):  # each stream's ledger lives in its checkpoint
+        assert os.path.exists(tmp_path / f"ckpt_{job}" / "_epochs" / "0.done")

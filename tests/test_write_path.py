@@ -17,11 +17,7 @@ import pytest
 
 from monolith_spark.engine import MonolithDB
 from monolith_spark.labels import SAMPLES_SCHEMA
-from monolith_spark.server import (
-    exemplars_request_to_df,
-    request_batch,
-    write_request_to_df,
-)
+from monolith_spark.server import request_batch, write_request_to_df
 from monolith_spark.sources import remote as proto
 
 STALE_NAN_BITS = 0x7FF0000000000002  # Prometheus staleness marker
@@ -109,10 +105,10 @@ def test_request_frame_schema_and_values_survive(spark):
     ]
     assert write_request_to_df(spark, proto.WriteRequest()).count() == 0
 
-    assert exemplars_request_to_df(spark, req) is None
+    assert request_batch(req).frame(spark, exemplars=True) is None
     assert request_batch(req).exemplars is None
     req.timeseries[1].exemplars = [proto.Exemplar({"trace_id": "t1"}, 2.0, 2_500)]
-    (ex,) = exemplars_request_to_df(spark, req).collect()
+    (ex,) = request_batch(req).frame(spark, exemplars=True).collect()
     assert (dict(ex["labels"]), ex["timestamp"], ex["value"],
             dict(ex["exemplar_labels"])) == (
         {"ключ": "значение ✓", "job": "ä"}, 2_500, 2.0, {"trace_id": "t1"})
@@ -163,6 +159,94 @@ def test_http_empty_request_and_rw2_written_count(spark, tmp_path):
         assert db._read_current()["version"] == version
     finally:
         srv.shutdown()
+
+
+def _otlp_gauge(help_: str, points: list[tuple[int, float]]) -> bytes:
+    """A hand-encoded OTLP ExportMetricsServiceRequest: one gauge ``m``
+    (unit ``s``, description ``help_``) with ``points`` [(ts_ms,
+    value)] and a service.name resource attribute."""
+    def vi(n):
+        out = b""
+        while True:
+            b7, n = n & 0x7F, n >> 7
+            out += bytes([b7 | (0x80 if n else 0)])
+            if not n:
+                return out
+
+    def ld(fno, payload):
+        return bytes([(fno << 3) | 2]) + vi(len(payload)) + payload
+
+    gauge = b"".join(
+        ld(1, bytes([(3 << 3) | 1]) + struct.pack("<Q", ts * 1_000_000)
+           + bytes([(4 << 3) | 1]) + struct.pack("<d", v))
+        for ts, v in points
+    )
+    metric = ld(1, b"m") + ld(2, help_.encode()) + ld(3, b"s") + ld(5, gauge)
+    resource = ld(1, ld(1, b"service.name") + ld(2, ld(1, b"api")))
+    return ld(1, ld(1, resource) + ld(2, ld(2, metric)))
+
+
+@pytest.mark.parametrize("kind", ["rw2", "otlp"])
+def test_request_with_metadata_commits_once(spark, tmp_path, kind):
+    """A remote-write 2.0 or OTLP request that carries samples and
+    metric metadata adds exactly one manifest version, and that version
+    holds both; a metadata-only request adds one version too, and a
+    batch with an unknown metric type is rejected with nothing
+    committed."""
+    import http.client
+
+    from monolith_spark.server import MonolithServer
+    from monolith_spark.sources import otlp
+
+    def post(help_: str, points: list[tuple[int, float]]) -> int:
+        if kind == "otlp":
+            path, headers = otlp.OTLP_PATH, {"Content-Type": otlp.OTLP_CONTENT_TYPE}
+            payload = _otlp_gauge(help_, points)
+        else:
+            path, headers = "/write", {"Content-Type": proto.V2_CONTENT_TYPE,
+                                       "X-Prometheus-Remote-Write-Version": "2.0.0"}
+            series = proto.TimeSeries(
+                {"__name__": "m"}, [proto.Sample(v, ts) for ts, v in points])
+            v2 = proto.v1_to_v2(proto.WriteRequest(timeseries=[series]),
+                                {"m": {"type": "gauge", "help": help_, "unit": "s"}})
+            payload = proto.snappy_compress(proto.encode_write_request_v2(v2))
+        conn = http.client.HTTPConnection("127.0.0.1", srv.port, timeout=60)
+        try:
+            conn.request("POST", path, body=payload, headers=headers)
+            resp = conn.getresponse()
+            resp.read()
+            return resp.status
+        finally:
+            conn.close()
+
+    def points_at(version: int) -> int:
+        return db.query_flat({"__name__": "m"}, 0, 10**9, at_version=version).count()
+
+    db = MonolithDB(spark, str(tmp_path / "db"), chunk_size_ms=60_000)
+    srv = MonolithServer(db, port=0)
+    srv.serve_background()
+    try:
+        assert post("first", [(5_000, 1.5), (6_000, 2.5)]) in (200, 204)
+        assert [h["op"] for h in db.history()] == ["migrate", "write"]
+        v1 = db._read_current()["version"]
+        assert db.metric_metadata(at_version=v1)["m"] == {
+            "type": "gauge", "help": "first", "unit": "s"}
+        assert points_at(v1) == 2
+
+        assert post("second", []) in (200, 204)
+        assert len(db.history()) == 3
+        assert db.metric_metadata()["m"]["help"] == "second"
+        assert points_at(db._read_current()["version"]) == 2
+
+    finally:
+        srv.shutdown()
+    version = db._read_current()["version"]
+    facts = os.path.join(db.path, "samples", "chunk_id=0")
+    files = sorted(os.listdir(facts))
+    with pytest.raises(ValueError, match="unknown metric type"):
+        db.write(request_batch(_req({"a": [(7_000, 3.5)]}), {"m": {"type": "gaugee"}}))
+    assert db._read_current()["version"] == version
+    assert sorted(os.listdir(facts)) == files  # nothing staged
 
 
 # ------------------------------------------------- known-series get-or-create

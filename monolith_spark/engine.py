@@ -416,16 +416,18 @@ class MonolithDB:
         swing. A crash anywhere before the CURRENT swing leaves the
         previous snapshot fully intact."""
         with self._manifest_lock():
+            # both sources hand back a dict no one else holds, so it is
+            # mutated in place
             man = self._read_current()
             if man is None:
                 man = self._migrate_legacy()
-            new = json.loads(json.dumps(man))
-            mutate(new)
-            new["version"] = man["version"] + 1
-            new["committed_ms"] = int(time.time() * 1000)
-            new["op"] = op
-            self._write_version(new)
-            return new
+            version = man["version"]
+            mutate(man)
+            man["version"] = version + 1
+            man["committed_ms"] = int(time.time() * 1000)
+            man["op"] = op
+            self._write_version(man)
+            return man
 
     def _stage_and_move(
         self,

@@ -17,10 +17,12 @@ the same wire surface in pure Python from the public specs:
 Remote-write 1.0 requests, the ingest hot path, decode in columns
 (decode_write_request → _decode_series): Python walks the series and
 their labels and only steps over each Sample; one numpy pass then
-parses every Sample laid out as Prometheus writes it (0x09 + double,
-0x10 + varint timestamp), and a scalar parser takes any other layout.
-A length or fixed field that runs past its parent message, or a known
-field of the wrong wire type, raises ValueError.
+parses every Sample whose fields are in field-number order with
+nothing else (0x09 + double, then 0x10 + varint timestamp), either one
+left out when it is zero, as proto3 writers such as Prometheus do. A
+scalar parser takes any other layout: reordered or unknown fields, a
+multi-byte length, and two zero-value layouts (see _SAMPLE_SPAN). A length or fixed field that runs past its parent
+message, or a known field of the wrong wire type, raises ValueError.
 
 No generated code, no external deps beyond numpy; wire-compatible with
 real Prometheus clients for every message this engine consumes/produces.
@@ -32,6 +34,7 @@ import struct
 from dataclasses import dataclass, field
 
 import numpy as np
+from numpy.lib.stride_tricks import sliding_window_view
 
 try:  # the C library beats the pure-python path when present
     import snappy as _snappy_c  # type: ignore
@@ -80,7 +83,7 @@ def snappy_decompress(data: bytes) -> bytes:
         else:
             if kind == 1:  # copy with 1-byte offset
                 ln = ((tag >> 2) & 0x7) + 4
-                offset = ((tag >> 5) << 8) | data[pos]
+                offset = ((tag >> 5) << 8) | int.from_bytes(data[pos: pos + 1], "little")
                 pos += 1
             elif kind == 2:  # copy with 2-byte offset
                 ln = (tag >> 2) + 1
@@ -394,13 +397,9 @@ def _dec_label(data: bytes) -> tuple[str, str]:
 
 
 def _dec_sample(data: bytes) -> Sample:
-    s = Sample()
-    for f, wt, v in _iter_fields(data):
-        if f == 1 and wt == 1:
-            s.value = struct.unpack("<d", v)[0]
-        elif f == 2 and wt == 0:
-            s.timestamp = _signed64(v)
-    return s
+    """A Sample message; remote-write 2.0 Samples have the same fields."""
+    ts, bits = _dec_sample_at(data, 0, len(data))
+    return Sample(struct.unpack("<d", bits.to_bytes(8, "little"))[0], ts)
 
 
 def _dec_exemplar(data: bytes) -> Exemplar:
@@ -416,36 +415,60 @@ def _dec_exemplar(data: bytes) -> Exemplar:
     return e
 
 
-# Every Sample Prometheus writes has one layout: a one-byte length,
-# tag 0x09 + the little-endian double, then tag 0x10 + the timestamp
-# varint (1 to 10 bytes). _sample_columns takes this many bytes of each
-# Sample field, from its length on.
+# The Sample layouts the bulk pass parses: a one-byte length, then the
+# fields in field-number order with nothing else, either one left out
+# when it is zero (proto3 writers, Prometheus's included, omit a zero
+# value or timestamp): tag 0x09 + the little-endian double, then tag
+# 0x10 + the timestamp varint (1 to 10 bytes). The length byte picks
+# the layout, so the two zero-value layouts whose length a valued
+# layout has go to the scalar parser: a negative timestamp (10 varint
+# bytes, length 11) and one in [2^49, 2^56) ms (8 bytes, length 9). A
+# Sample is at most this many bytes from its length on.
 _SAMPLE_SPAN = 21
+# Samples parsed per numpy pass: bounds the pass's temporary arrays
+# (~300 bytes a Sample) on a request of many small Samples.
+_BULK_ROWS = 1 << 16
+# A layout's row in _LAYOUT: the mask and the expected value of a
+# Sample's _SAMPLE_SPAN bytes, the mask of the timestamp's payload bits
+# in bytes 2 on, and the mask of the value's bytes 2-9.
+_MASK, _WANT = slice(0, 21), slice(21, 42)
+_TS_MASK, _VALUE_MASK = slice(42, 61), slice(61, 69)
 
 
 def _layout_table() -> np.ndarray:
-    """Per value of a Sample's length byte: the mask and the expected
-    bytes of a Sample in Prometheus's layout of that length (tags, and
-    the varint's continuation bits: set on every byte but its last; a
-    tenth byte may hold bit 63 only), and the mask of its varint's
-    payload bits. A length byte no such Sample has matches nothing."""
-    t = np.zeros((256, 3, _SAMPLE_SPAN), np.uint8)
-    t[:, 0, 0] = 0xFF
-    t[:, 1, 0] = np.arange(256) ^ 1
-    for ln in range(11, 21):
-        vlen = ln - 10
-        t[ln, 0, [1, 10]] = 0xFF
-        t[ln, 1, :2] = ln, 0x09
-        t[ln, 1, 10] = 0x10
-        t[ln, 0, 11:11 + vlen] = 0x80
-        t[ln, 1, 11:10 + vlen] = 0x80
-        t[ln, 2, 11:11 + vlen] = 0x7F
-    t[20, 0, 20] = 0xFE
+    """_LAYOUT[length byte]: checks a Sample's tags and its varint's
+    continuation bits (set on every byte but the last; a tenth byte may
+    hold bit 63 only). A length no bulk layout has matches nothing."""
+    t = np.zeros((256, 69), np.uint8)
+    t[:, 0] = 0xFF
+    t[:, _WANT.start] = np.arange(256) ^ 1
+    layouts = [(0, v) for v in range(10) if v != 8]  # (has value, varint bytes)
+    layouts += [(1, v) for v in range(11)]
+    for has_value, vlen in layouts:
+        ln = 9 * has_value + (vlen and 1 + vlen)
+        mask, want = t[ln, _MASK], t[ln, _WANT]
+        want[0] = ln
+        p = 1  # the timestamp's tag
+        if has_value:
+            mask[1], want[1] = 0xFF, 0x09
+            t[ln, _VALUE_MASK] = 0xFF
+            p = 10
+        if vlen:
+            mask[p], want[p] = 0xFF, 0x10
+            mask[p + 1:p + 1 + vlen] = 0x80
+            want[p + 1:p + vlen] = 0x80
+            if vlen == 10:
+                mask[p + vlen] = 0xFE
+            t[ln, _TS_MASK][p - 1:p - 1 + vlen] = 0x7F
     return t
 
 
 _LAYOUT = _layout_table()
-_VARINT_WEIGHTS = np.array([1 << (7 * k) for k in range(10)], np.uint64)
+# Weights of the timestamp's bytes 2 on: a timestamp that comes first
+# ends by byte 10, one after a value starts at byte 11.
+_VARINT_WEIGHTS = np.array(
+    [1 << (7 * k) for k in range(9)] + [1 << (7 * k) for k in range(10)], np.uint64
+)
 
 
 def _dec_series(
@@ -459,45 +482,40 @@ def _dec_series(
     labels = ts.labels
     while pos < end:
         key = data[pos]
-        ln = data[pos + 1]  # every field has a value byte after its key
-        if key == 0x12 and ln < 0x80:  # Sample
-            at.append(pos + 1)
-            pos += 2 + ln
-        elif key == 0x0A and ln < 0x80:  # Label
-            p = pos + 2
-            pos = p + ln
+        if key > 0x7F:
+            key, pos = _read_varint(data, pos)
+        else:
+            pos += 1
+        if key == 0x12:  # Sample: _sample_columns parses it
+            at.append(pos)
+        elif key != 0x0A and key != 0x1A:
+            if key >> 3 <= 3:
+                raise _wrong_wire_type(key)
+            pos = _skip_field(data, pos, key & 0x7)
+            continue
+        ln = data[pos]
+        if ln > 0x7F:
+            ln, p = _read_varint(data, pos)
+        else:
+            p = pos + 1
+        pos = p + ln
+        if key == 0x0A:  # Label
             raw = data[p:pos]
             kv = label_cache.get(raw)
             if kv is None:
                 kv = label_cache[raw] = _dec_label(raw)
             labels[kv[0]] = kv[1]
-        else:  # a multi-byte key or length, an Exemplar, an unknown field
-            key, p = _read_varint(data, pos)
-            if key == 0x12 or key == 0x0A or key == 0x1A:
-                ln, q = _read_varint(data, p)
-                pos = q + ln
-                if key == 0x12:
-                    at.append(p)
-                elif key == 0x0A:
-                    k, v = _dec_label(data[q:pos])
-                    labels[k] = v
-                else:
-                    ts.exemplars.append(_dec_exemplar(data[q:pos]))
-            elif key >> 3 <= 3:
-                raise _wrong_wire_type(key)
-            else:
-                pos = _skip_field(data, p, key & 0x7)
+        elif key == 0x1A:  # Exemplar
+            ts.exemplars.append(_dec_exemplar(data[p:pos]))
     if pos != end:
         raise _truncated("TimeSeries")
     return ts
 
 
-def _dec_sample_at(data: bytes, pos: int) -> tuple[int, int]:
-    """(timestamp, value bits) of the Sample whose length varint is at
-    ``pos``, in any field layout: omitted zero fields, either order,
-    unknown fields, a multi-byte length."""
-    ln, pos = _read_varint(data, pos)
-    end = pos + ln
+def _dec_sample_at(data: bytes, pos: int, end: int) -> tuple[int, int]:
+    """(timestamp, value bits) of the Sample message in data[pos:end],
+    in any field layout: omitted zero fields, either order, unknown
+    fields."""
     ts = bits = 0
     while pos < end:
         key, pos = _read_varint(data, pos)
@@ -517,27 +535,26 @@ def _dec_sample_at(data: bytes, pos: int) -> tuple[int, int]:
     return _signed64(ts), bits
 
 
-def _sample_columns(data: bytes, at: list[int]) -> tuple[np.ndarray, np.ndarray]:
+def _sample_columns(
+    data: bytes, windows: np.ndarray, at: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
     """(timestamp int64, value float64) columns of the Sample fields
-    whose lengths sit at ``at``. One numpy pass parses every Sample in
-    Prometheus's layout; _dec_sample_at parses the rest. Values are
-    moved as raw bits, so NaN payloads (staleness markers) survive.
-    The pass is a handful of whole-array operations: each one drops
-    the GIL, and a thread that drops it may wait a switch interval for
-    it back while other request threads run."""
-    if not at:
-        return np.zeros(0, np.int64), np.zeros(0, np.float64)
-    padded = data + bytes(_SAMPLE_SPAN)
-    rows = np.frombuffer(
-        b"".join([padded[p:p + _SAMPLE_SPAN] for p in at]), np.uint8
-    ).reshape(len(at), _SAMPLE_SPAN)
+    whose lengths sit at offsets ``at``; ``windows`` holds the
+    _SAMPLE_SPAN bytes from each offset of ``data``. One numpy pass
+    parses every Sample in a bulk layout; _dec_sample_at parses the
+    rest. Values are moved as raw bits, so NaN payloads (staleness
+    markers) survive. The pass is a handful of whole-array operations:
+    each one drops the GIL, and a thread that drops it may wait a
+    switch interval for it back while other request threads run."""
+    rows = windows[at]
     t = _LAYOUT[rows[:, 0]]
-    fast = ((rows & t[:, 0]) == t[:, 1]).all(1)
-    ts = ((rows[:, 11:] & t[:, 2, 11:]).astype(np.uint64) @ _VARINT_WEIGHTS).view(np.int64)
-    value = rows[:, 2:10].copy().view("<u8").ravel()
-    if not fast.all():
-        for i in np.flatnonzero(~fast).tolist():
-            ts[i], value[i] = _dec_sample_at(data, at[i])
+    bad = (rows & t[:, _MASK]) != t[:, _WANT]
+    ts = ((rows[:, 2:] & t[:, _TS_MASK]).astype(np.uint64) @ _VARINT_WEIGHTS).view(np.int64)
+    value = (rows[:, 2:10] & t[:, _VALUE_MASK]).view("<u8").ravel()
+    if bad.any():
+        for i in np.flatnonzero(bad.any(1)).tolist():
+            ln, p = _read_varint(data, int(at[i]))
+            ts[i], value[i] = _dec_sample_at(data, p, p + ln)
     return ts, value.view(np.float64)
 
 
@@ -572,8 +589,15 @@ def _decode_series(data: bytes) -> list[TimeSeries]:
             raise _truncated("message")
     except IndexError:
         raise _truncated("message") from None
-    ts, value = _sample_columns(data, at)
-    samples = list(map(Sample, value.tolist(), ts.tolist()))
+    offsets = np.array(at, np.intp)
+    del at  # a list slot and an int a Sample: freed before the Samples are built
+    windows = sliding_window_view(
+        np.frombuffer(data + bytes(_SAMPLE_SPAN), np.uint8), _SAMPLE_SPAN
+    )
+    samples: list[Sample] = []
+    for lo in range(0, len(offsets), _BULK_ROWS):
+        ts, value = _sample_columns(data, windows, offsets[lo:lo + _BULK_ROWS])
+        samples += map(Sample, value.tolist(), ts.tolist())
     i = 0
     for s, c in zip(series, counts):
         s.samples = samples[i:i + c]

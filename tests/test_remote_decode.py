@@ -9,6 +9,7 @@ from __future__ import annotations
 import http.client
 import random
 import struct
+from itertools import zip_longest
 
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -265,34 +266,86 @@ def test_hostile_body_is_rejected_or_decoded_as_the_oracle_does(body, rng):
         assert _canon(got) == _canon(oracle_decode(bad))
 
 
-def test_prometheus_layout_and_scalar_layouts_in_one_request():
-    """One request mixing the layout the bulk pass parses with each
-    layout only the scalar parser takes, in wire order."""
-    def sample(*fields: bytes) -> bytes:
-        return proto._len_delim(2, b"".join(fields))
+def _v(x: float) -> bytes:
+    return b"\x09" + struct.pack("<d", x)
 
-    v = lambda x: b"\x09" + struct.pack("<d", x)          # noqa: E731
-    t = lambda ms: b"\x10" + proto._write_varint(ms)      # noqa: E731
-    series = proto._len_delim(1, proto._enc_label("__name__", "m")) + b"".join([
-        sample(v(1.5), t(1000)),                  # Prometheus layout
-        sample(t(2000), v(2.5)),                  # reordered
-        sample(t(3000)),                          # zero value omitted
-        sample(v(4.5)),                           # zero timestamp omitted
-        sample(),                                 # both omitted
-        sample(v(5.5), t(-6000)),                 # 10-byte varint
-        sample(v(6.5), t(7000), proto._len_delim(9, b"x" * 200)),  # 2-byte length
-        sample(v(7.5), b"\x1d\x00\x00\x00\x00", t(8000)),          # fixed32 field
-        sample(b"\x09" + _f64(STALE_NAN_BITS), t(9000)),           # staleness NaN
-        sample(v(8.5), b"\x18\x05"),  # an unknown varint where the timestamp sits
-    ])
-    req = proto.decode_write_request(proto._len_delim(1, series))
-    (ts,) = req.timeseries
-    assert ts.labels == {"__name__": "m"}
-    assert [(s.timestamp, _bits(s.value)) for s in ts.samples] == [
-        (1000, _bits(1.5)), (2000, _bits(2.5)), (3000, 0), (0, _bits(4.5)),
-        (0, 0), (-6000, _bits(5.5)), (7000, _bits(6.5)), (8000, _bits(7.5)),
-        (9000, STALE_NAN_BITS), (0, _bits(8.5)),
+
+def _t(ms: int) -> bytes:
+    return b"\x10" + proto._write_varint(ms)
+
+
+def _sample_field(*fields: bytes) -> bytes:
+    return proto._len_delim(2, b"".join(fields))
+
+
+def _one_series(*samples: bytes) -> bytes:
+    series = proto._len_delim(1, proto._enc_label("__name__", "m")) + b"".join(samples)
+    return proto._len_delim(1, series)
+
+
+# Sample messages in field-number order with a zero field left out, as
+# proto3 writers (Prometheus's among them) encode them, and what they
+# decode to
+_BULK_LAYOUTS = [
+    (_v(1.5) + _t(1000), (1000, _bits(1.5))),
+    (_v(2.5) + _t(1), (1, _bits(2.5))),                  # 1-byte varint
+    (_v(3.5) + _t(-6000), (-6000, _bits(3.5))),          # 10-byte varint
+    (_v(-0.0) + _t(5), (5, _bits(-0.0))),
+    (b"\x09" + _f64(STALE_NAN_BITS) + _t(9000), (9000, STALE_NAN_BITS)),
+    (_t(3000), (3000, 0)),                               # zero value
+    (_t(1 << 56), (1 << 56, 0)),                         # ... 9-byte varint
+    (_v(4.5), (0, _bits(4.5))),                          # zero timestamp
+    (b"", (0, 0)),                                       # both zero
+]
+
+
+def test_bulk_layouts_are_parsed_without_the_scalar_parser(monkeypatch):
+    """Every layout the bulk pass covers, zero fields left out included,
+    decodes exactly with the scalar parser out of reach."""
+    def scalar(*_):
+        raise AssertionError("a bulk-layout Sample reached the scalar parser")
+
+    monkeypatch.setattr(proto, "_dec_sample_at", scalar)
+    body = _one_series(*(_sample_field(f) for f, _ in _BULK_LAYOUTS))
+    (ts,) = proto.decode_write_request(body).timeseries
+    assert [(s.timestamp, _bits(s.value)) for s in ts.samples] == [w for _, w in _BULK_LAYOUTS]
+
+
+def test_scalar_layouts_among_bulk_layouts_in_one_request():
+    """Each layout only the scalar parser takes, between bulk-layout
+    Samples, in wire order."""
+    scalar = [
+        (_t(2000) + _v(2.5), (2000, _bits(2.5))),                          # reordered
+        (_v(6.5) + _t(7000) + proto._len_delim(9, b"x" * 200), (7000, _bits(6.5))),  # 2-byte length
+        (_v(7.5) + b"\x1d\x00\x00\x00\x00" + _t(8000), (8000, _bits(7.5))),  # fixed32 field
+        (_v(8.5) + b"\x18\x05", (0, _bits(8.5))),       # unknown varint after the value
+        (_t(1) + _t(2), (2, 0)),                          # repeated field: the last wins
+        (_t(-1), (-1, 0)),          # zero value, 10-byte varint: length 11, as a valued Sample
+        (_t(1 << 49), (1 << 49, 0)),    # zero value, 8-byte varint: length 9, as a zero timestamp
     ]
+    mixed = [x for pair in zip_longest(_BULK_LAYOUTS, scalar) for x in pair if x]
+    body = _one_series(*(_sample_field(f) for f, _ in mixed))
+    (ts,) = proto.decode_write_request(body).timeseries
+    assert [(s.timestamp, _bits(s.value)) for s in ts.samples] == [w for _, w in mixed]
+
+
+def test_bulk_pass_in_several_blocks_matches_the_oracle(monkeypatch):
+    """A request whose Samples span several bulk passes, with scalar
+    layouts in each, decodes as the oracle does."""
+    monkeypatch.setattr(proto, "_BULK_ROWS", 4)
+    body = proto.encode_write_request(_request()) + _one_series(
+        *(_sample_field(f) for f in [_t(5) + _v(1.0)] + [f for f, _ in _BULK_LAYOUTS]))
+    assert _canon(proto.decode_write_request(body)) == _canon(oracle_decode(body))
+
+
+def test_remote_write_v2_samples_share_the_scalar_parser():
+    """Remote-write 2.0 Samples (same fields as 1.0) decode through the
+    same scalar parser: any field order, and a wrong wire type raises."""
+    for raw, want in _BULK_LAYOUTS + [(_t(2000) + _v(2.5), (2000, _bits(2.5)))]:
+        s = proto._dec_sample(raw)
+        assert (s.timestamp, _bits(s.value)) == want
+    with pytest.raises(ValueError):
+        proto._dec_sample(b"\x08\x01")
 
 
 # ------------------------------------------------------------ truncation
@@ -472,6 +525,7 @@ def test_snappy_copy_elements(stream, want):
     bytes([8, 0]) + b"a" + bytes([(4 - 1) << 2 | 2, 0, 0]),      # offset 0
     bytes([4, 0]) + b"a" + bytes([(8 - 4) << 2 | 1, 1]),          # past declared length
     bytes([8, 3 << 2]) + b"abcd" + bytes([(4 - 1) << 2 | 2, 4]),  # offset cut short
+    bytes([8, 3 << 2]) + b"abcd" + bytes([(4 - 4) << 2 | 1]),     # copy-1 offset missing
     bytes([8, 7 << 2]) + b"abcd",                                 # literal cut short
 ])
 def test_snappy_corrupt_streams_raise(stream):

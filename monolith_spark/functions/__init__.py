@@ -1,8 +1,10 @@
 """Public scalar/expression function library (SURVEY §2.5).
 
-One import surface for every reusable Column-level function the engine
+One import surface for every reusable expression builder the engine
 defines, grouped by family. All are JVM-codegen expressions (no Python
-UDFs) unless noted in their home module.
+UDFs) unless noted in their home module. The label and similarity
+builders are column names in, one parsed SQL expression each (names
+pass through ``labels.sql_name``).
 
 - labels / signatures (E1/E2 analogs): canonical sorted-escaped
   signature, content-hash series id, matcher predicates

@@ -19,8 +19,9 @@ Divergences (documented in SURVEY.md §7.4):
   partitions/executors and idempotent under concurrent ingest — the
   get-or-create critical section disappears.
 
-Everything here is a Column expression (JVM-side, codegen'd); no
-Python UDFs on the ingest or query hot path.
+Every builder here takes column names and returns ONE parsed SQL
+expression (JVM-side, codegen'd); no Python UDFs on the ingest or
+query hot path.
 """
 
 from __future__ import annotations
@@ -51,21 +52,32 @@ RE = "RE"
 NRE = "NRE"
 
 
-def _escape(col: Column) -> Column:
-    # Backslash first so escape characters are not double-escaped.
-    col = F.replace(col, F.lit("\\"), F.lit("\\\\"))
-    col = F.replace(col, F.lit(","), F.lit("\\,"))
-    return F.replace(col, F.lit("="), F.lit("\\="))
-
-
 def sql_str_lit(s: str) -> str:
     """A Spark-SQL single-quoted string literal for ``s`` (backslash
     escaping — the default parser mode get_spark runs under)."""
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
+def sql_name(name: str, builder: str) -> str:
+    """A column name as a backtick-quoted SQL identifier (embedded
+    backticks doubled) — the one boundary every expression builder
+    passes its column names through. A Column is refused: builders
+    compose SQL text, so a caller holding a Column composes the
+    ``*_sql`` body instead."""
+    if not isinstance(name, str):
+        raise TypeError(
+            f"{builder}() takes a column name, not {type(name).__name__}"
+        )
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _escape_label(s: str) -> str:
+    # Backslash first so escape characters are not double-escaped.
+    return s.replace("\\", "\\\\").replace(",", "\\,").replace("=", "\\=")
+
+
 def _escape_sql(e: str) -> str:
-    # SQL-text twin of _escape (backslash first, then , and =)
+    # _escape_label over a Spark SQL string expression
     return (
         "replace(replace(replace(" + e +
         ", '\\\\', '\\\\\\\\'), ',', '\\\\,'), '=', '\\\\=')"
@@ -73,12 +85,11 @@ def _escape_sql(e: str) -> str:
 
 
 def signature_sql_text(map_sql: str = "labels") -> str:
-    """SQL text of the canonical signature over an arbitrary map-typed
-    SQL expression. Building the expression as ONE parsed string costs
-    one py4j round-trip where the Column-by-Column construction costs
-    ~85 ms of socket chatter per call (the §7.3 driver-time trap) —
-    the parsed tree is expression-identical, so results and plans do
-    not change."""
+    """SQL text of the canonical signature over a map-typed SQL
+    expression. Every builder here parses ONE SQL string — a fixed
+    handful of py4j round trips, where composing Column objects costs
+    one or more per node (~85 ms of socket chatter per signature, the
+    §7.3 driver-time trap)."""
     return (
         "array_join(transform(array_sort(map_entries(" + map_sql + ")), "
         "e -> concat(" + _escape_sql("e.key") + ", '=', "
@@ -86,30 +97,25 @@ def signature_sql_text(map_sql: str = "labels") -> str:
     )
 
 
-def signature_expr(labels: Column | str = "labels") -> Column:
-    """Canonical signature of a label map: sorted ``k=v`` joined by ``,``.
+def signature_expr(labels: str = "labels") -> Column:
+    """Canonical signature of a label map column: sorted ``k=v`` joined
+    by ``,``.
 
     Mirrors encode_labels (/root/reference/src/indexer/sled_indexer.rs:275-289)
     minus the storage-key prefix, plus escaping (see module docstring).
-    A string argument is a column name (the hot path — parsed as one
-    SQL expression); a Column argument takes the composed construction.
+    The map_entries sort orders by key (keys are unique).
     """
-    if isinstance(labels, str):
-        return F.expr(signature_sql_text(f"`{labels}`"))
-    entries = F.array_sort(F.map_entries(labels))  # struct<key,value>; keys unique → sorts by key
-    return F.array_join(
-        F.transform(entries, lambda e: F.concat(_escape(e["key"]), F.lit("="), _escape(e["value"]))),
-        ",",
-    )
+    return F.expr(signature_sql_text(sql_name(labels, "signature_expr")))
 
 
-def series_id_expr(labels: Column | str = "labels") -> Column:
+def series_id_expr(labels: str = "labels") -> Column:
     """Stable 64-bit series id: xxhash64 of the canonical signature."""
-    return F.xxhash64(signature_expr(labels))
+    sig = signature_sql_text(sql_name(labels, "series_id_expr"))
+    return F.expr(f"xxhash64({sig})")
 
 
-def signature_sql(pairs: list[tuple[str, str]], dialect: str = "duckdb") -> str:
-    """ANSI-SQL signature builder for oracle parity checks.
+def signature_sql(pairs: list[tuple[str, str]]) -> str:
+    """DuckDB-SQL signature builder for oracle parity checks.
 
     ``pairs`` is ``[(label_key, sql_expr_for_value), ...]``; keys must be
     literal strings. Produces the same escaped ``k=v,...`` string the
@@ -121,20 +127,20 @@ def signature_sql(pairs: list[tuple[str, str]], dialect: str = "duckdb") -> str:
         out = f"replace({out}, ',', '\\,')"
         return f"replace({out}, '=', '\\=')"
 
-    def esc_lit(k: str) -> str:
-        return k.replace("\\", "\\\\").replace(",", "\\,").replace("=", "\\=")
-
-    parts = [f"'{esc_lit(k)}=' || {esc_sql(v)}" for k, v in sorted(pairs)]
+    parts = [f"'{_escape_label(k)}=' || {esc_sql(v)}" for k, v in sorted(pairs)]
     return " || ',' || ".join(parts)
 
 
-def label_value(labels: Column | str, key: str) -> Column:
+def _label_value_sql(map_sql: str, key: str) -> str:
+    return f"try_element_at({map_sql}, {sql_str_lit(key)})"
+
+
+def label_value(labels: str, key: str) -> Column:
     """Null-safe map lookup (ANSI-proof: missing key → NULL, not error)."""
-    labels = F.col(labels) if isinstance(labels, str) else labels
-    return F.try_element_at(labels, F.lit(key))
+    return F.expr(_label_value_sql(sql_name(labels, "label_value"), key))
 
 
-def superset_predicate(labels: Column | str, matchers: dict[str, str]) -> Column:
+def superset_predicate(labels: str, matchers: dict[str, str]) -> Column:
     """J4 contains-all-labels semantics: labels ⊇ matchers.
 
     The AND of per-label equality lookups — Catalyst folds this into one
@@ -142,10 +148,11 @@ def superset_predicate(labels: Column | str, matchers: dict[str, str]) -> Column
     intersection (/root/reference/src/common/utils.rs:56-128).
     An empty matcher set matches every series.
     """
-    pred = F.lit(True)
-    for k, v in matchers.items():
-        pred = pred & (label_value(labels, k) == F.lit(v))
-    return pred
+    col = sql_name(labels, "superset_predicate")
+    return F.expr(" AND ".join(
+        ["true"] + [f"({_label_value_sql(col, k)} = {sql_str_lit(v)})"
+                    for k, v in matchers.items()]
+    ))
 
 
 @dataclass(frozen=True)
@@ -157,7 +164,7 @@ class LabelMatcher:
     type: str = EQ  # EQ | NEQ | RE | NRE
 
 
-def matcher_predicate(labels: Column | str, matchers: list["LabelMatcher"]) -> Column:
+def matcher_predicate(labels: str, matchers: list["LabelMatcher"]) -> Column:
     """Full Prometheus matcher semantics (extension beyond the reference).
 
     - EQ: label present and equal.
@@ -165,62 +172,36 @@ def matcher_predicate(labels: Column | str, matchers: list["LabelMatcher"]) -> C
       as the empty string).
     - RE / NRE: fully-anchored regex on the label value ('' if absent).
     """
-    if not matchers:
-        return F.lit(True)
-    if isinstance(labels, str):
-        # hot path: the whole conjunction as ONE parsed SQL expression
-        # (one py4j round-trip instead of ~6 per matcher — §7.3)
-        parts = []
-        for m in matchers:
-            val = (f"coalesce(try_element_at(`{labels}`, "
-                   f"{sql_str_lit(m.name)}), '')")
-            pat = sql_str_lit(f"^(?:{m.value})$")
-            if m.type == EQ:
-                parts.append(f"{val} = {sql_str_lit(m.value)}")
-            elif m.type == NEQ:
-                parts.append(f"{val} != {sql_str_lit(m.value)}")
-            elif m.type == RE:
-                parts.append(f"{val} RLIKE {pat}")
-            elif m.type == NRE:
-                parts.append(f"NOT ({val} RLIKE {pat})")
-            else:  # pragma: no cover
-                raise ValueError(f"unknown matcher type {m.type!r}")
-        return F.expr("(" + ") AND (".join(parts) + ")")
-    pred = F.lit(True)
+    col = sql_name(labels, "matcher_predicate")
+    parts = []
     for m in matchers:
-        val = F.coalesce(label_value(labels, m.name), F.lit(""))
+        val = f"coalesce({_label_value_sql(col, m.name)}, '')"
+        pat = sql_str_lit(f"^(?:{m.value})$")
         if m.type == EQ:
-            p = val == F.lit(m.value)
+            parts.append(f"{val} = {sql_str_lit(m.value)}")
         elif m.type == NEQ:
-            p = val != F.lit(m.value)
+            parts.append(f"{val} != {sql_str_lit(m.value)}")
         elif m.type == RE:
-            p = val.rlike(f"^(?:{m.value})$")
+            parts.append(f"{val} RLIKE {pat}")
         elif m.type == NRE:
-            p = ~val.rlike(f"^(?:{m.value})$")
+            parts.append(f"NOT ({val} RLIKE {pat})")
         else:  # pragma: no cover
             raise ValueError(f"unknown matcher type {m.type!r}")
-        pred = pred & p
-    return pred
+    return F.expr("(" + ") AND (".join(parts) + ")" if parts else "true")
 
 
-def exact_signature_predicate(labels: Column | str, full_labels: dict[str, str]) -> Column:
+def exact_signature_predicate(labels: str, full_labels: dict[str, str]) -> Column:
     """J5 exact label-set lookup: the whole (sorted, escaped) signature
     must equal the query's (/root/reference/src/indexer/sled_indexer.rs:98-107)."""
-
-    def esc(s: str) -> str:
-        return s.replace("\\", "\\\\").replace(",", "\\,").replace("=", "\\=")
-
-    sig = ",".join(f"{esc(k)}={esc(v)}" for k, v in sorted(full_labels.items()))
-    return signature_expr(labels) == F.lit(sig)
+    sig = signature_sql_text(sql_name(labels, "exact_signature_predicate"))
+    return F.expr(f"{sig} = {sql_str_lit(python_signature(full_labels))}")
 
 
 def python_signature(labels: dict[str, str]) -> str:
     """Driver-side twin of signature_expr, for tests and point lookups."""
-
-    def esc(s: str) -> str:
-        return s.replace("\\", "\\\\").replace(",", "\\,").replace("=", "\\=")
-
-    return ",".join(f"{esc(k)}={esc(v)}" for k, v in sorted(labels.items()))
+    return ",".join(
+        f"{_escape_label(k)}={_escape_label(v)}" for k, v in sorted(labels.items())
+    )
 
 
 def regex_literal_set(pattern: str, cap: int = 64) -> set[str] | None:

@@ -16,24 +16,44 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from monolith_spark.labels import sql_name
 from monolith_spark.operators.text import hash60_expr
 
 from monolith_spark.barrier import barrier as _lineage_barrier
 
 
 def _dbl_sql(v: str) -> str:
-    """SQL text of the double cast-map over a SQL expression — the
-    text twin of _dbl, for builders that compose whole expressions as
-    ONE F.expr parse (a Column-API higher-order function costs ~10 ms
-    of py4j chatter per build; the JL/IVF serving frame held 112 of
-    them = ~1.2 s per FRESH plan construction)."""
+    """SQL text of the double cast-map over a SQL expression. Every
+    builder here composes SQL text and parses it ONCE: a Column-API
+    higher-order function costs ~10 ms of py4j chatter per build (the
+    JL/IVF serving frame held 112 of them = ~1.2 s per FRESH plan
+    construction)."""
     return f"transform({v}, x -> CAST(x AS DOUBLE))"
 
 
-def _dbl(v: Column | str) -> Column:
-    if isinstance(v, str):
-        return F.expr(_dbl_sql(f"`{v}`"))
-    return F.transform(v, lambda x: x.cast("double"))
+def _dbl(v: str) -> Column:
+    return F.expr(_dbl_sql(sql_name(v, "_dbl")))
+
+
+def _dbl_norm(v: str) -> Column:
+    """norm_expr of the double cast of a named vector column."""
+    return F.expr(norm_sql(_dbl_sql(sql_name(v, "_dbl_norm"))))
+
+
+def _plane_signs(prefix: str, dim: int) -> list[float]:
+    """The ±1 components of one seedless sign plane (hyperplane LSH,
+    JL): component d is +1 iff the md5 of ``f"{prefix}{d}"`` has an
+    even first-15-hex value — the formula hash60_expr evaluates, so the
+    SQL oracles replaying the derivation stay bit-identical. Derived
+    driver-side and embedded as literals: the in-plan form ran one
+    md5+conv per component PER ROW."""
+    import hashlib
+
+    return [
+        1.0 if int(hashlib.md5(f"{prefix}{d}".encode()).hexdigest()[:15], 16) % 2 == 0
+        else -1.0
+        for d in range(dim)
+    ]
 
 
 def _lit_dbl_array(xs) -> Column:
@@ -65,12 +85,14 @@ def _lit_dbl_array_sql(xs) -> str:
     return "array(" + ",".join(out) + ")"
 
 
+def _lit_dbl_matrix_sql(xss) -> str:
+    """SQL text of a literal array<array<double>> (see _lit_dbl_array,
+    incl. the non-finite guard)."""
+    return "array(" + ",".join(_lit_dbl_array_sql(xs) for xs in xss) + ")"
+
+
 def _lit_dbl_matrix(xss) -> Column:
-    """Literal array<array<double>> in one parsed expression (see
-    _lit_dbl_array, incl. the non-finite guard)."""
-    return F.expr(
-        "array(" + ",".join(_lit_dbl_array_sql(xs) for xs in xss) + ")"
-    )
+    return F.expr(_lit_dbl_matrix_sql(xss))
 
 
 def _infer_dim(df: DataFrame, vec_col: str) -> int:
@@ -87,8 +109,8 @@ def _infer_dim(df: DataFrame, vec_col: str) -> int:
 
 
 def dot_sql(a: str, b: str) -> str:
-    """SQL text of dot_expr over two SQL expressions — identical
-    sequential left-fold tree, one parse (§7.3)."""
+    """Sequential left-fold dot product in double (order-deterministic)
+    over two SQL expressions."""
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, "
         "(acc, x) -> acc + x)"
@@ -99,25 +121,24 @@ def norm_sql(a: str) -> str:
     return f"sqrt({dot_sql(a, a)})"
 
 
-def dot_expr(a: Column | str, b: Column | str) -> Column:
-    """Sequential-fold dot product in double (order-deterministic).
-    String arguments are column names (one-parse fast path)."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(dot_sql(f"`{a}`", f"`{b}`"))
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
+def cosine_sql(a: str, b: str) -> str:
+    a, b = _dbl_sql(a), _dbl_sql(b)
+    return f"{dot_sql(a, b)} / ({norm_sql(a)} * {norm_sql(b)})"
+
+
+def dot_expr(a: str, b: str) -> Column:
+    """Sequential-fold dot product of two array columns."""
+    return F.expr(dot_sql(sql_name(a, "dot_expr"), sql_name(b, "dot_expr")))
+
+
+def norm_expr(a: str) -> Column:
+    return F.expr(norm_sql(sql_name(a, "norm_expr")))
+
+
+def cosine_expr(a: str, b: str) -> Column:
+    return F.expr(
+        cosine_sql(sql_name(a, "cosine_expr"), sql_name(b, "cosine_expr"))
     )
-
-
-def norm_expr(a: Column | str) -> Column:
-    if isinstance(a, str):
-        return F.expr(norm_sql(f"`{a}`"))
-    return F.sqrt(dot_expr(a, a))
-
-
-def cosine_expr(a: Column | str, b: Column | str) -> Column:
-    a, b = _dbl(a), _dbl(b)
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
 
 
 def brute_force_topk(
@@ -136,12 +157,12 @@ def brute_force_topk(
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
         _dbl(vec_col).alias("q_vec"),
-        norm_expr(_dbl(vec_col)).alias("qn"),
+        _dbl_norm(vec_col).alias("qn"),
     )
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         _dbl(vec_col).alias("c_vec"),
-        norm_expr(_dbl(vec_col)).alias("cn"),
+        _dbl_norm(vec_col).alias("cn"),
     )
     scored = (
         c.crossJoin(F.broadcast(q))
@@ -159,49 +180,36 @@ def brute_force_topk(
     )
 
 
-def hyperplane_signature(vec_col: Column | str, planes: int, dim: int) -> Column:
+def hyperplane_sql(vec_sql: str, planes: int, dim: int, plane_offset: int = 0) -> str:
+    """SQL text of a random-hyperplane LSH signature over planes
+    [plane_offset, plane_offset + planes): bit p - plane_offset is set
+    iff the sequential-fold projection onto plane p is positive."""
+    v = _dbl_sql(vec_sql)
+    bits = [
+        f"CASE WHEN {dot_sql(v, _lit_dbl_array_sql(_plane_signs(f'plane{p}:', dim)))}"
+        f" > 0 THEN {1 << (p - plane_offset)} ELSE 0 END"
+        for p in range(plane_offset, plane_offset + planes)
+    ]
+    return "CAST(" + " + ".join(bits) + " AS BIGINT)"
+
+
+def hyperplane_signature(vec_col: str, planes: int, dim: int) -> Column:
     """Seedless random-hyperplane LSH signature (BIGINT, `planes` bits).
 
     Plane p's component for dimension d is +1/-1 from the parity of a
     md5-derived hash of (p, d) — reproducible anywhere with md5.
     """
-    return hyperplane_signature_offset(vec_col, planes, dim, 0)
+    name = sql_name(vec_col, "hyperplane_signature")
+    return F.expr(hyperplane_sql(name, planes, dim))
 
 
 def hyperplane_signature_offset(
-    vec_col: Column | str, planes: int, dim: int, plane_offset: int
+    vec_col: str, planes: int, dim: int, plane_offset: int
 ) -> Column:
     """hyperplane_signature with globally-numbered planes (for
     multi-table LSH: table t uses planes [t*planes, (t+1)*planes))."""
-    import hashlib
-
-    v = _dbl(vec_col)
-    bits = []
-
-    # Plane components depend only on the constants (p, d): derive them
-    # driver-side with the exact md5→first-15-hex→%2 formula hash60_expr
-    # evaluates (the SQL oracles replaying the derivation stay
-    # bit-identical) and embed literals — the in-plan version ran
-    # planes×dim md5+conv calls per row (same trap as jl_expr).
-    def _sign(prefix: str, d: int) -> float:
-        h = int(hashlib.md5(f"{prefix}{d}".encode()).hexdigest()[:15], 16)
-        return 1.0 if h % 2 == 0 else -1.0
-
-    for p in range(plane_offset, plane_offset + planes):
-        proj = F.aggregate(
-            F.zip_with(
-                v,
-                _lit_dbl_array(_sign(f"plane{p}:", d) for d in range(dim)),
-                lambda x, s: x * s,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(proj > 0, F.lit(1 << (p - plane_offset))).otherwise(F.lit(0)))
-    sig = bits[0]
-    for b in bits[1:]:
-        sig = sig + b
-    return sig.cast("long")
+    name = sql_name(vec_col, "hyperplane_signature_offset")
+    return F.expr(hyperplane_sql(name, planes, dim, plane_offset))
 
 
 def int8_quantize_stats(
@@ -269,14 +277,14 @@ def embedding_near_dup_pairs(
     base = df.select(
         F.col(id_col).alias("vid"),
         _dbl(vec_col).alias("vec"),
-        norm_expr(_dbl(vec_col)).alias("nrm"),
+        _dbl_norm(vec_col).alias("nrm"),
     )
     a = base.select(F.col("vid").alias("id_a"), F.col("vec").alias("va"), F.col("nrm").alias("na"))
     b = base.select(F.col("vid").alias("id_b"), F.col("vec").alias("vb"), F.col("nrm").alias("nb"))
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
         .withColumn(
-            "cosine", dot_expr(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
+            "cosine", dot_expr("va", "vb") / (F.col("na") * F.col("nb"))
         )
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
@@ -299,9 +307,9 @@ def hyperplane_signatures_batch(
     per-plane projection is a SEQUENTIAL fold in ascending dimension
     order (acc starts at 0.0; the numpy loop vectorizes across ROWS
     while adding one dimension at a time, so each plane's IEEE add
-    sequence equals the Column expression's zip_with+aggregate fold —
+    sequence equals the expression's zip_with+aggregate fold —
     asserted bit-for-bit in tests), with ±1 signs from the same
-    md5-parity formula. Exists because the num_tables × planes Column
+    md5-parity formula. Exists because the num_tables × planes expression
     form (16×16×64 ≈ 16k lambda terms at the defaults) exceeds
     whole-stage-codegen limits and falls back to interpreted HOF
     evaluation — measured ~46 vectors/sec/core (435 s for a 20k-vector
@@ -310,18 +318,12 @@ def hyperplane_signatures_batch(
     contract true. float32→float64 widening and the float64 Arrow
     round-trip are both exact.
     """
-    import hashlib
-
     import numpy as np
     import pandas as pd
 
-    def _sign(prefix: str, d: int) -> float:
-        h = int(hashlib.md5(f"{prefix}{d}".encode()).hexdigest()[:15], 16)
-        return 1.0 if h % 2 == 0 else -1.0
-
     total = num_tables * planes
     S = np.array(
-        [[_sign(f"plane{p}:", d) for d in range(dim)] for p in range(total)]
+        [_plane_signs(f"plane{p}:", dim) for p in range(total)]
     )  # (total_planes, dim)
     weights = np.array(
         [1 << (p % planes) for p in range(total)], dtype=np.int64
@@ -329,7 +331,7 @@ def hyperplane_signatures_batch(
 
     def batches(it):
         for pdf in it:
-            # NULL vectors: the Column form yields a NULL signature that
+            # NULL vectors: the expression form yields a NULL signature that
             # never equi-joins — dropping the row here is the same
             # observable behavior (and np.stack would crash on None)
             pdf = pdf[pdf[vec_col].notna()]
@@ -390,7 +392,7 @@ def embedding_near_dup_lsh(
     if dim is None:
         dim = _infer_dim(df, vec_col)
     # Signatures via the Arrow-batched numpy map (bit-identical to the
-    # Column form, which at 16 tables x 16 planes falls out of codegen
+    # expression form, which at 16 tables x 16 planes falls out of codegen
     # into interpreted HOF evaluation — a measured 50x on the 10x
     # probe); posexplode expands the per-table array AFTER the
     # expensive math, still one corpus scan.
@@ -398,7 +400,7 @@ def embedding_near_dup_lsh(
     blocked = sb.select(
         "vid",
         "vec",
-        norm_expr(F.col("vec")).alias("nrm"),
+        norm_expr("vec").alias("nrm"),
         F.posexplode("sigs").alias("table", "sig"),
     )
     wb = Window.partitionBy("table", "sig").orderBy("vid")
@@ -427,7 +429,7 @@ def embedding_near_dup_lsh(
     )
     return (
         cand.withColumn(
-            "cosine", dot_expr(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
+            "cosine", dot_expr("va", "vb") / (F.col("na") * F.col("nb"))
         )
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
@@ -474,10 +476,14 @@ def train_ivf_centroids(
 
 
 def _cell_sims_sql(vec_sql: str, centroids: list[list[float]]) -> str:
-    """SQL text of _cell_sims over a SQL expression — the whole
-    nlist-way centroid scorer parses in one round-trip (§7.3).
-    Identical tree: the double-cast map, per-centroid fold, constant
-    ||c|| divide and the (s, cid) struct all mirror the Column form."""
+    """array<struct<s: double, cid: int>> scoring a vector SQL
+    expression against each centroid; one narrow projection — no
+    shuffle, no join.
+
+    Score is dot(v, c)/||c|| with ||c|| a driver-side constant — same
+    argmax/ordering as cosine (||v|| is constant per row) without
+    re-folding the row norm once per centroid.
+    """
     import math
 
     v = _dbl_sql(vec_sql)
@@ -491,27 +497,22 @@ def _cell_sims_sql(vec_sql: str, centroids: list[list[float]]) -> str:
     return "array(" + ",".join(structs) + ")"
 
 
-def _cell_sims(vec_col: Column | str, centroids: list[list[float]]) -> Column:
-    """array<struct<s: double, cid: int>> scoring vec against each
-    centroid; one narrow projection — no shuffle, no join.
+def _cell_sql(vec_sql: str, centroids: list[list[float]]) -> str:
+    """The IVF cell of a vector: its best-scoring centroid's id."""
+    return "array_max(" + _cell_sims_sql(vec_sql, centroids) + ").cid"
 
-    Score is dot(v, c)/||c|| with ||c|| a driver-side constant — same
-    argmax/ordering as cosine (||v|| is constant per row) without
-    re-folding the row norm once per centroid.
-    """
-    import math
 
-    if isinstance(vec_col, str):
-        return F.expr(_cell_sims_sql(f"`{vec_col}`", centroids))
-    v = _dbl(vec_col)
-    structs = []
-    for cid, c in enumerate(centroids):
-        nc = math.sqrt(sum(x * x for x in c)) or 1.0
-        lit = _lit_dbl_array(c)
-        structs.append(
-            F.struct((dot_expr(v, lit) / F.lit(nc)).alias("s"), F.lit(cid).alias("cid"))
-        )
-    return F.array(*structs)
+def _cell_expr(vec_col: str, centroids: list[list[float]]) -> Column:
+    return F.expr(_cell_sql(sql_name(vec_col, "_cell_expr"), centroids))
+
+
+def _probes_expr(vec_col: str, centroids: list[list[float]], nprobe: int) -> Column:
+    """The ``nprobe`` best-scoring cell ids of a query vector column."""
+    return F.expr(
+        "transform(slice(reverse(array_sort("
+        + _cell_sims_sql(sql_name(vec_col, "_probes_expr"), centroids)
+        + f")), 1, {int(nprobe)}), s -> s.cid)"
+    )
 
 
 def ivf_topk(
@@ -543,23 +544,15 @@ def ivf_topk(
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         _dbl(vec_col).alias("c_vec"),
-        norm_expr(_dbl(vec_col)).alias("cn"),
+        _dbl_norm(vec_col).alias("cn"),
     )
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
         _dbl(vec_col).alias("q_vec"),
-        norm_expr(_dbl(vec_col)).alias("qn"),
+        _dbl_norm(vec_col).alias("qn"),
     )
-    c = c.withColumn(
-        "cell",
-        F.expr("array_max(" + _cell_sims_sql("`c_vec`", centroids) + ").cid"),
-    )
-    probes = F.expr(
-        "transform(slice(reverse(array_sort("
-        + _cell_sims_sql("`q_vec`", centroids)
-        + f")), 1, {int(nprobe)}), s -> s.cid)"
-    )
-    q = q.withColumn("cell", F.explode(probes))
+    c = c.withColumn("cell", _cell_expr("c_vec", centroids))
+    q = q.withColumn("cell", F.explode(_probes_expr("q_vec", centroids, nprobe)))
     scored = (
         c.join(F.broadcast(q), "cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))
@@ -602,29 +595,27 @@ def lsh_topk(
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
         _dbl(vec_col).alias("q_vec"),
-        norm_expr(_dbl(vec_col)).alias("qn"),
+        _dbl_norm(vec_col).alias("qn"),
     )
     # Distinct planes per table (global plane ids [t*planes, ...)).
-    # Corpus side: the Arrow-batched numpy signature map (the Column
-    # form at these defaults runs interpreted — see
-    # hyperplane_signatures_batch); query side stays the Column
-    # expression (q rows are few and broadcast).
+    # Corpus side: the Arrow-batched numpy signature map (the
+    # expression form at these defaults runs interpreted — see
+    # hyperplane_signatures_batch); query side stays the expression
+    # (q rows are few and broadcast), all tables in one parse.
     cb = hyperplane_signatures_batch(
         corpus, planes, num_tables, dim, id_col, vec_col
     )
     c_blocked = cb.select(
         F.col("vid").alias("neighbor_id"),
         F.col("vec").alias("c_vec"),
-        norm_expr(F.col("vec")).alias("cn"),
+        norm_expr("vec").alias("cn"),
         F.posexplode("sigs").alias("table", "sig"),
     )
-    q_sigs = F.array(*[
-        F.struct(
-            F.lit(t).alias("table"),
-            hyperplane_signature_offset("q_vec", planes, dim, t * planes).alias("sig"),
-        )
+    q_sigs = F.expr("array(" + ",".join(
+        f"struct({t} AS `table`, "
+        f"{hyperplane_sql('`q_vec`', planes, dim, t * planes)} AS sig)"
         for t in range(num_tables)
-    ])
+    ) + ")")
     cand = c_blocked.join(
         F.broadcast(q.select("*", F.inline(q_sigs))), ["table", "sig"]
     )
@@ -694,60 +685,54 @@ def train_pq_codebooks(
     return books
 
 
-def _unit_expr(vec: Column) -> Column:
-    n = norm_expr(vec)
-    return F.transform(vec, lambda x: x / n)
+def _unit_expr(vec_col: str) -> Column:
+    v = sql_name(vec_col, "_unit_expr")
+    return F.expr(f"transform({v}, u -> u / {norm_sql(v)})")
 
 
-def _sub_score(vec: Column, off: int, cent: list[float]) -> Column:
-    """|c|² − 2·(x·c) for vec[off : off+len(cent)] against a literal
+def _sub_score_sql(v: str, off: int, cent: list[float]) -> str:
+    """|c|² − 2·(x·c) for v[off : off+len(cent)] against a literal
     centroid: the squared L2 distance shifted by the per-row constant
     |x|², which cancels in every use here (argmin over centroids, and
     per-query ADC ranking). Higher-order form (slice + zip_with +
     aggregate): the input array is referenced ONCE per centroid, so a
-    transform-derived ``vec`` can't be re-evaluated per element — and
+    transform-derived ``v`` can't be re-evaluated per element — and
     the loop body beats the unrolled element_at chain in codegen
     (A/B'd at sf0.1: ~5.5 s vs ~7.2 s warm for the full encode).
     Summation is index-ascending, identical to the unrolled form, so
     double results are bit-equal and oracles are unaffected."""
-    sub = F.slice(vec, off + 1, len(cent))
-    dot = F.aggregate(
-        F.zip_with(sub, _lit_dbl_array(cent), lambda x, c: x * c),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return F.lit(sum(c * c for c in cent)) - 2.0 * dot
+    sub = f"slice({v}, {off + 1}, {len(cent)})"
+    dot = dot_sql(sub, _lit_dbl_array_sql(cent))
+    return f"{repr(float(sum(c * c for c in cent)))}D - {dot} * 2.0D"
 
 
-def pq_code_expr(vec: Column, codebooks: list[list[list[float]]]) -> Column:
-    """Encode a normalized vector as ``m`` small codes: per subspace,
-    the argmin-distance centroid id (array_min over (d2, code) structs
-    — ties to the lowest code, deterministically)."""
-    m = len(codebooks)
+def pq_code_expr(vec_col: str, codebooks: list[list[list[float]]]) -> Column:
+    """Encode a normalized vector column as ``m`` small codes: per
+    subspace, the argmin-distance centroid id (array_min over
+    (d2, code) structs — ties to the lowest code, deterministically)."""
+    v = sql_name(vec_col, "pq_code_expr")
     dsub = len(codebooks[0][0])
-    codes = []
-    for j in range(m):
-        entries = F.array(*[
-            F.struct(
-                _sub_score(vec, j * dsub, cent).alias("d2"),
-                F.lit(code).alias("code"),
-            )
-            for code, cent in enumerate(codebooks[j])
-        ])
-        codes.append(F.array_min(entries)["code"])
-    return F.array(*codes)
+    codes = [
+        "array_min(array(" + ",".join(
+            f"struct({_sub_score_sql(v, j * dsub, cent)} AS d2, {code} AS code)"
+            for code, cent in enumerate(book)
+        ) + ")).code"
+        for j, book in enumerate(codebooks)
+    ]
+    return F.expr("array(" + ",".join(codes) + ")")
 
 
-def _adc_table_expr(vec: Column, codebooks: list[list[list[float]]]) -> Column:
+def _adc_table_expr(vec_col: str, codebooks: list[list[list[float]]]) -> Column:
     """Per-query ADC lookup table: table[j][code] = the j-th
     subvector's distance score to that centroid (squared L2 shifted by
     the per-query constant Σ|q_j|² — candidate ORDERING per query is
     identical, which is all ADC ranking uses)."""
+    v = sql_name(vec_col, "_adc_table_expr")
     dsub = len(codebooks[0][0])
-    return F.array(*[
-        F.array(*[_sub_score(vec, j * dsub, cent) for cent in cb])
-        for j, cb in enumerate(codebooks)
-    ])
+    return F.expr("array(" + ",".join(
+        "array(" + ",".join(_sub_score_sql(v, j * dsub, cent) for cent in book) + ")"
+        for j, book in enumerate(codebooks)
+    ) + ")")
 
 
 def ivfpq_topk(
@@ -785,29 +770,25 @@ def ivfpq_topk(
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         _dbl(vec_col).alias("c_vec"),
-        norm_expr(_dbl(vec_col)).alias("cn"),
+        _dbl_norm(vec_col).alias("cn"),
     )
-    c = c.withColumn("cell", F.array_max(_cell_sims("c_vec", centroids))["cid"])
+    c = c.withColumn("cell", _cell_expr("c_vec", centroids))
     # Materialize the unit vector in its own column: element access in
     # the encoder then hits an attribute, not a re-embedded O(dim)
     # normalize transform (projection-collapse trap; A/B'd ~20% faster).
-    c = c.withColumn("c_unit", _unit_expr(F.col("c_vec"))).withColumn(
-        "codes", pq_code_expr(F.col("c_unit"), codebooks)
+    c = c.withColumn("c_unit", _unit_expr("c_vec")).withColumn(
+        "codes", pq_code_expr("c_unit", codebooks)
     ).drop("c_unit")
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
         _dbl(vec_col).alias("q_vec"),
-        norm_expr(_dbl(vec_col)).alias("qn"),
-    )
-    probes = F.transform(
-        F.slice(F.reverse(F.array_sort(_cell_sims("q_vec", centroids))), 1, nprobe),
-        lambda s: s["cid"],
+        _dbl_norm(vec_col).alias("qn"),
     )
     q = (
-        q.withColumn("q_unit", _unit_expr(F.col("q_vec")))
-        .withColumn("qtab", _adc_table_expr(F.col("q_unit"), codebooks))
+        q.withColumn("q_unit", _unit_expr("q_vec"))
+        .withColumn("qtab", _adc_table_expr("q_unit", codebooks))
         .drop("q_unit")
-        .withColumn("cell", F.explode(probes))
+        .withColumn("cell", F.explode(_probes_expr("q_vec", centroids, nprobe)))
     )
     adc = F.aggregate(
         F.sequence(F.lit(0), F.lit(m - 1)),
@@ -869,8 +850,8 @@ def write_ivf_index(
     assigned = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         _dbl(vec_col).alias("c_vec"),
-        norm_expr(_dbl(vec_col)).alias("cn"),
-    ).withColumn("cell", F.array_max(_cell_sims("c_vec", centroids))["cid"])
+        _dbl_norm(vec_col).alias("cn"),
+    ).withColumn("cell", _cell_expr("c_vec", centroids))
     assigned.write.partitionBy("cell").mode("overwrite").parquet(path)
     with open(os.path.join(path, "_ivf_centroids.json"), "w") as fh:
         json.dump(centroids, fh)
@@ -899,8 +880,8 @@ def append_to_ivf_index(
     assigned = new_corpus.select(
         F.col(id_col).alias("neighbor_id"),
         _dbl(vec_col).alias("c_vec"),
-        norm_expr(_dbl(vec_col)).alias("cn"),
-    ).withColumn("cell", F.array_max(_cell_sims("c_vec", centroids))["cid"])
+        _dbl_norm(vec_col).alias("cn"),
+    ).withColumn("cell", _cell_expr("c_vec", centroids))
     n = assigned.count()
     assigned.write.partitionBy("cell").mode("append").parquet(path)
     return n
@@ -931,13 +912,9 @@ def ivf_topk_indexed(
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
         _dbl(vec_col).alias("q_vec"),
-        norm_expr(_dbl(vec_col)).alias("qn"),
+        _dbl_norm(vec_col).alias("qn"),
     )
-    probes = F.transform(
-        F.slice(F.reverse(F.array_sort(_cell_sims("q_vec", centroids))), 1, nprobe),
-        lambda s: s["cid"],
-    )
-    q = q.withColumn("cell", F.explode(probes))
+    q = q.withColumn("cell", F.explode(_probes_expr("q_vec", centroids, nprobe)))
     probe_cells = sorted(
         {r["cell"] for r in q.select("cell").distinct().collect()}
     )
@@ -960,14 +937,13 @@ def ivf_topk_indexed(
     )
 
 
-def sqdist_expr(a: Column, b: Column) -> Column:
-    """Sequential-fold squared L2 distance in double — same
-    order-deterministic shape as dot_expr, so the DuckDB oracle's
-    list_reduce reproduces the exact IEEE result."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+def sqdist_sql(a: str, b: str) -> str:
+    """Sequential-fold squared L2 distance in double over two SQL
+    expressions — same order-deterministic shape as dot_sql, so the
+    DuckDB oracle's list_reduce reproduces the exact IEEE result."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), 0.0D, "
+        "(acc, x) -> acc + x)"
     )
 
 
@@ -1013,12 +989,10 @@ def kmeans_parallel_init(
     cands: list[list[float]] = [[float(x) for x in first["v"]]]
     cand_ids = {first["vid"]}
 
-    def _cents_lit(cs: list[list[float]]) -> Column:
-        return _lit_dbl_matrix(cs)
-
     for r in range(rounds):
-        d2 = F.array_min(
-            F.transform(_cents_lit(cands), lambda c: sqdist_expr(F.col("v"), c))
+        d2 = F.expr(
+            f"array_min(transform({_lit_dbl_matrix_sql(cands)}, "
+            f"c -> {sqdist_sql('`v`', 'c')}))"
         )
         phi = v.select(
             F.sum(d2.cast("decimal(38,12)")).alias("phi")
@@ -1039,11 +1013,9 @@ def kmeans_parallel_init(
                 cands.append([float(x) for x in row["v"]])
 
     # Weight every candidate by the corpus mass it attracts (one pass).
-    dists = F.transform(
-        _cents_lit(cands),
-        lambda c, i: F.struct(
-            sqdist_expr(F.col("v"), c).alias("d2"), i.alias("ci")
-        ),
+    dists = F.expr(
+        f"transform({_lit_dbl_matrix_sql(cands)}, "
+        f"(c, i) -> struct({sqdist_sql('`v`', 'c')} AS d2, i AS ci))"
     )
     wrows = (
         v.select(F.array_min(dists)["ci"].cast("int").alias("ci"))
@@ -1100,7 +1072,7 @@ def kmeans_lloyd(
     - assignment ties break to the lowest cluster id;
     - per-component means sum in DECIMAL(38,18) (order-free) and
       divide ONCE in double;
-    - distances are sequential folds (sqdist_expr ≡ list_reduce).
+    - distances are sequential folds (sqdist_sql ≡ list_reduce).
     Empty clusters keep their previous centroid.
 
     Scale shape per iteration: one broadcast of k·dim doubles (the
@@ -1154,7 +1126,7 @@ def kmeans_lloyd(
         #   the k·dim sqdist folds run in an Arrow batch map with the
         #   sequential-over-dims accumulation (the pair-kernel device:
         #   acc += (x_d−c_d)², one dim at a time, rows vectorized) —
-        #   exact sqdist_expr fold bits at numpy speed; np.argmin's
+        #   exact sqdist_sql fold bits at numpy speed; np.argmin's
         #   first-min is the lowest-cid tie-break because positions
         #   ascend with cid. The centroid table rides the task CLOSURE
         #   (k·dim doubles pickled once per task — the same bytes the
@@ -1163,7 +1135,7 @@ def kmeans_lloyd(
         #   cents column that made this path k-gated in the first
         #   place); the input stays the bare (vid, v) projection.
         # - larger k (the paper-scale k ≈ corpus/1k regime): the
-        #   Column form — JVM rows share the one broadcast struct
+        #   expression form — JVM rows share the one broadcast struct
         #   array by reference, so no per-task centroid copy; the HOF
         #   fold runs interpreted (measured 3× the whole-kmeans wall
         #   at sf0.1, the price of staying copy-free at huge k).
@@ -1220,12 +1192,9 @@ def kmeans_lloyd(
         carr = cents_df(cs).agg(
             F.array_sort(F.collect_list(F.struct("cid", "c"))).alias("cents")
         )
-        dists = F.transform(
-            F.col("cents"),
-            lambda s: F.struct(
-                sqdist_expr(F.col("v"), s["c"]).alias("d2"),
-                s["cid"].alias("cid"),
-            ),
+        dists = F.expr(
+            "transform(`cents`, s -> struct("
+            f"{sqdist_sql('`v`', 's.c')} AS d2, s.cid AS cid))"
         )
         # NULL vector: same defined semantics as the Arrow path —
         # lowest cluster id, NULL dist2 (never folded against a
@@ -1317,7 +1286,7 @@ _PAIR_BLOCK = 2048
 
 # kmeans_lloyd's Arrow assignment path materializes the joined
 # centroid array per row (k·dim doubles through Arrow), so it is
-# gated to small k; past the gate the Column form keeps assignments
+# gated to small k; past the gate the expression form keeps assignments
 # copy-free (JVM rows share the broadcast array by reference).
 _ARROW_ASSIGN_MAX_K = 64
 
@@ -1592,9 +1561,9 @@ def prototypicality(
             ).alias("c")
         )
     )
-    scored = v.join(cents.withColumn("cn", norm_expr(F.col("c"))), "grp").withColumn(
+    scored = v.join(cents.withColumn("cn", norm_expr("c")), "grp").withColumn(
         "proto_cosine",
-        dot_expr(F.col("v"), F.col("c")) / (norm_expr(F.col("v")) * F.col("cn")),
+        dot_expr("v", "c") / (norm_expr("v") * F.col("cn")),
     )
     w = Window.partitionBy("grp").orderBy(F.col("proto_cosine").desc(), "vid")
     return scored.select(
@@ -1648,7 +1617,7 @@ def d4_prune(
             # norms once per VECTOR before the pair join (the semdedup
             # device) — recomputing them per PAIR inside the filter is
             # |cluster|× more fold work for bit-identical doubles
-            norm_expr(_dbl(vec_col)).alias("nrm"),
+            _dbl_norm(vec_col).alias("nrm"),
         )
         .join(assign.select(F.col("vec_id").alias("vid"), "cluster_id"), "vid")
     )
@@ -1676,9 +1645,9 @@ def d4_prune(
         )
     )
     scored = kept.join(
-        cents.withColumn("cn", norm_expr(F.col("c"))), "cluster_id"
+        cents.withColumn("cn", norm_expr("c")), "cluster_id"
     ).withColumn(
-        "pc", dot_expr(F.col("v"), F.col("c")) / (F.col("nrm") * F.col("cn"))
+        "pc", dot_expr("v", "c") / (F.col("nrm") * F.col("cn"))
     )
     wr = Window.partitionBy("cluster_id").orderBy(F.col("pc").desc(), "vid")
     wn = Window.partitionBy("cluster_id")
@@ -1893,67 +1862,43 @@ def jl_project(
 
 
 def jl_sql(vec_sql: str, out_dim: int = 16, dim: int = 64) -> str:
-    """SQL text of the JL projection over a SQL expression — all
-    out_dim folds parse in ONE round-trip (§7.3); tree identical to
-    the historical Column build (each component one sequential fold
-    referenced exactly once — no lambda re-evaluation).
-
-    Sign planes depend only on the constants (j, d) — derived
-    driver-side with the same md5→first-15-hex→%2 formula hash60_expr
-    evaluates (so the SQL oracles that replay the derivation stay
-    bit-identical) and embedded as literals. The earlier in-plan
-    hash60_expr ran 1024 md5+conv calls PER ROW (16 comps × 64 dims)
-    and made JL-IVF serving ~10× slower than plain IVF."""
-    import hashlib
-
-    def _sign(prefix: str, d: int) -> float:
-        h = int(hashlib.md5(f"{prefix}{d}".encode()).hexdigest()[:15], 16)
-        return 1.0 if h % 2 == 0 else -1.0
-
+    """SQL text of the JL projection over a SQL expression: each
+    component one sequential fold against a literal sign plane (see
+    _plane_signs), referenced exactly once — no lambda
+    re-evaluation. The earlier in-plan hash60_expr ran 1024 md5+conv
+    calls PER ROW (16 comps × 64 dims) and made JL-IVF serving ~10×
+    slower than plain IVF."""
     v = _dbl_sql(vec_sql)
     scale = f"sqrt({repr(float(out_dim))}D)"
     comps = [
-        (
-            f"aggregate(zip_with({v}, "
-            + _lit_dbl_array_sql(_sign(f"jl{j}:", d) for d in range(dim))
-            + ", (x, s) -> x * s), 0.0D, (acc, x) -> acc + x) / " + scale
-        )
+        f"{dot_sql(v, _lit_dbl_array_sql(_plane_signs(f'jl{j}:', dim)))} / {scale}"
         for j in range(out_dim)
     ]
     return "array(" + ",".join(comps) + ")"
 
 
-def jl_expr(vec_col: Column | str, out_dim: int = 16, dim: int = 64) -> Column:
-    """The JL projection as a composable Column (array<double>(out_dim))
-    — lets callers attach the projected vector in the SAME narrow
+def jl_expr(vec_col: str, out_dim: int = 16, dim: int = 64) -> Column:
+    """The JL projection of an array column (array<double>(out_dim)) —
+    lets callers attach the projected vector in the SAME narrow
     projection as other derived columns (jl_ivf_topk carries full
     vector + JL twin through one select, no self-join). See jl_sql."""
-    if isinstance(vec_col, str):
-        return F.expr(jl_sql(f"`{vec_col}`", out_dim, dim))
-    import hashlib
+    return F.expr(jl_sql(sql_name(vec_col, "jl_expr"), out_dim, dim))
 
-    def _sign(prefix: str, d: int) -> float:
-        h = int(hashlib.md5(f"{prefix}{d}".encode()).hexdigest()[:15], 16)
-        return 1.0 if h % 2 == 0 else -1.0
 
-    v = _dbl(vec_col)
-    scale = F.sqrt(F.lit(float(out_dim)))
-    comps = [
-        (
-            F.aggregate(
-                F.zip_with(
-                    v,
-                    _lit_dbl_array(_sign(f"jl{j}:", d) for d in range(dim)),
-                    lambda x, s: x * s,
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            / scale
-        )
-        for j in range(out_dim)
-    ]
-    return F.array(*comps)
+def _jl_cell_expr(
+    vec_col: str, centroids: list[list[float]], out_dim: int, dim: int
+) -> Column:
+    """The IVF cell of a vector column's JL projection. The projection
+    is bound as a LAMBDA VARIABLE before the per-centroid dots
+    reference it: a plain alias is inlined by projection collapse into
+    EVERY centroid's zip_with — the 16-fold JL projection re-evaluated
+    nlist times per row (the pca_project re-evaluation trap; measured
+    3× on the sf0.1 serving path)."""
+    return F.expr(
+        "element_at(transform(array("
+        + jl_sql(sql_name(vec_col, "_jl_cell_expr"), out_dim, dim)
+        + "), j -> " + _cell_sql("j", centroids) + "), 1)"
+    )
 
 
 def jl_ivf_topk(
@@ -1993,34 +1938,22 @@ def jl_ivf_topk(
             id_col,
             "jl",
         )
-    # Bind the projected vector as a LAMBDA VARIABLE before the
-    # per-centroid dots reference it: a plain c_jl alias is inlined by
-    # projection collapse into EVERY centroid's zip_with — the 16-fold
-    # JL projection re-evaluated nlist times per row (the pca_project
-    # re-evaluation trap; measured 3× on the sf0.1 serving path).
-    cell = F.expr(
-        "element_at(transform(array(" + jl_sql(f"`{vec_col}`", out_dim, dim)
-        + "), j -> array_max(" + _cell_sims_sql("j", centroids)
-        + ").cid), 1)"
-    )
+    cell = _jl_cell_expr(vec_col, centroids, out_dim, dim)
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         _dbl(vec_col).alias("c_vec"),
-        norm_expr(_dbl(vec_col)).alias("cn"),
+        _dbl_norm(vec_col).alias("cn"),
         cell.alias("cell"),
     )
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
         _dbl(vec_col).alias("q_vec"),
-        norm_expr(_dbl(vec_col)).alias("qn"),
+        _dbl_norm(vec_col).alias("qn"),
         jl_expr(vec_col, out_dim, dim).alias("q_jl"),
     )
-    probes = F.expr(
-        "transform(slice(reverse(array_sort("
-        + _cell_sims_sql("`q_jl`", centroids)
-        + f")), 1, {int(nprobe)}), s -> s.cid)"
-    )
-    q = q.withColumn("cell", F.explode(probes)).drop("q_jl")
+    q = q.withColumn(
+        "cell", F.explode(_probes_expr("q_jl", centroids, nprobe))
+    ).drop("q_jl")
     scored = (
         c.join(F.broadcast(q), "cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))
@@ -2064,17 +1997,11 @@ def write_jl_ivf_index(
         centroids = train_ivf_centroids(
             jl_project(corpus, out_dim, dim, id_col, vec_col), nlist, id_col, "jl"
         )
-    # lambda-bind the projected vector (see jl_ivf_topk: a plain alias
-    # is inlined into every centroid's dot by projection collapse)
-    cell = F.expr(
-        "element_at(transform(array(" + jl_sql(f"`{vec_col}`", out_dim, dim)
-        + "), j -> array_max(" + _cell_sims_sql("j", centroids)
-        + ").cid), 1)"
-    )
+    cell = _jl_cell_expr(vec_col, centroids, out_dim, dim)
     assigned = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         _dbl(vec_col).alias("c_vec"),
-        norm_expr(_dbl(vec_col)).alias("cn"),
+        _dbl_norm(vec_col).alias("cn"),
         cell.alias("cell"),
     )
     assigned.write.partitionBy("cell").mode("overwrite").parquet(path)
@@ -2110,14 +2037,12 @@ def jl_ivf_topk_indexed(
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
         _dbl(vec_col).alias("q_vec"),
-        norm_expr(_dbl(vec_col)).alias("qn"),
+        _dbl_norm(vec_col).alias("qn"),
         jl_expr(vec_col, out_dim, dim).alias("q_jl"),
     )
-    probes = F.transform(
-        F.slice(F.reverse(F.array_sort(_cell_sims("q_jl", centroids))), 1, nprobe),
-        lambda s: s["cid"],
-    )
-    q = q.withColumn("cell", F.explode(probes)).drop("q_jl")
+    q = q.withColumn(
+        "cell", F.explode(_probes_expr("q_jl", centroids, nprobe))
+    ).drop("q_jl")
     probe_cells = sorted(
         {r["cell"] for r in q.select("cell").distinct().collect()}
     )

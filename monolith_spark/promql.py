@@ -1638,6 +1638,10 @@ def _label_join(node: Call, ctx: _Ctx) -> DataFrame:
 # -- histogram_quantile ---------------------------------------------------
 
 
+# the label map minus the bucket bound: a histogram's series identity
+_LABELS_SANS_LE = "map_filter(`labels`, (k, v) -> k != 'le')"
+
+
 def _histogram_quantile(
     phi: float, vec: DataFrame, extra_keys: tuple[str, ...] = ()
 ) -> DataFrame:
@@ -1653,10 +1657,9 @@ def _histogram_quantile(
         F.when(le_raw.isin("+Inf", "Inf", "inf"), F.lit(float("inf")))
         .otherwise(le_raw.try_cast("double"))  # ANSI-safe: bad le → null → dropped
     )
-    rest = F.map_filter(F.col("labels"), lambda k, _: k != F.lit("le"))
     pre = vec.filter(le_val.isNotNull()).select(
-        signature_expr(rest).alias("signature"),
-        rest.alias("labels"),
+        F.expr(signature_sql_text(_LABELS_SANS_LE)).alias("signature"),
+        F.expr(_LABELS_SANS_LE).alias("labels"),
         *extra_keys,
         le_val.alias("__le"),
         F.col("value").alias("__c"),
@@ -1765,10 +1768,9 @@ def _histogram_fraction(
         F.when(le_raw.isin("+Inf", "Inf", "inf"), F.lit(float("inf")))
         .otherwise(le_raw.try_cast("double"))
     )
-    rest = F.map_filter(F.col("labels"), lambda k, _: k != F.lit("le"))
     pre = vec.filter(le_val.isNotNull()).select(
-        signature_expr(rest).alias("signature"),
-        rest.alias("labels"),
+        F.expr(signature_sql_text(_LABELS_SANS_LE)).alias("signature"),
+        F.expr(_LABELS_SANS_LE).alias("labels"),
         *extra_keys,
         le_val.alias("__le"),
         F.col("value").alias("__c"),

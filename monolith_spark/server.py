@@ -16,6 +16,7 @@ happens in Spark; HTTP is just transport (SURVEY §2.1 S2).
 
 from __future__ import annotations
 
+import json
 import threading
 import zlib
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -639,6 +640,29 @@ def _admin_delete(db: MonolithDB, qs: dict[str, list[str]]) -> None:
         db.delete_series(ms, start_ms=start_ms, end_ms=end_ms)
 
 
+def _step_ms(qs: dict[str, list[str]]) -> int:
+    """The ``step`` parameter in ms: float seconds or a PromQL duration."""
+    from monolith_spark.promql import parse_duration_ms
+
+    raw = qs["step"][0]
+    try:
+        return int(float(raw) * 1000)
+    except ValueError:
+        return parse_duration_ms(raw)
+
+
+def _at_version(qs: dict[str, list[str]]) -> int | None:
+    """The retained manifest version ``at_version`` pins, if given."""
+    ver = qs.get("at_version", [None])[0]
+    return None if ver is None else int(ver)
+
+
+def _error_json(exc: Exception) -> bytes:
+    return json.dumps(
+        {"status": "error", "errorType": "bad_data", "error": str(exc)}
+    ).encode()
+
+
 class MonolithServer:
     """Blocking HTTP server; serve_background() for tests/demos."""
 
@@ -671,6 +695,18 @@ class MonolithServer:
             def log_message(self, *a):  # quiet
                 pass
 
+            def _reply(self, code: int, *body: bytes, **headers: str) -> None:
+                """One response: the status, ``headers`` in order (a
+                keyword's ``_`` is sent as ``-``), Content-Length, then
+                the body chunks."""
+                self.send_response(code)
+                for name, value in headers.items():
+                    self.send_header(name.replace("_", "-"), value)
+                self.send_header("Content-Length", str(sum(map(len, body))))
+                self.end_headers()
+                for chunk in body:
+                    self.wfile.write(chunk)
+
             def _read_body(self) -> bytes | None:
                 """The POST body, or None once refused: a declared
                 Content-Length past the decode limit is answered 413,
@@ -683,9 +719,7 @@ class MonolithServer:
                     n = -1
                 if 0 <= n <= proto.MAX_DECODED_BYTES:
                     return self.rfile.read(n)
-                self.send_response(400 if n < 0 else 413)
-                self.send_header("Content-Length", "0")
-                self.end_headers()
+                self._reply(400 if n < 0 else 413)
                 self.close_connection = True
                 return None
 
@@ -696,7 +730,6 @@ class MonolithServer:
                 /api/v1/labels, /api/v1/label/<name>/values, and
                 /api/v1/series?match[]=<selector> (all dim-only scans,
                 never the fact table)."""
-                import json
                 import time as _time
                 from urllib.parse import parse_qs, unquote, urlparse
 
@@ -712,10 +745,9 @@ class MonolithServer:
                     if u.path == promql_path:
                         query = qs["query"][0]
                         t = float(qs.get("time", [_time.time()])[0])
-                        ver = qs.get("at_version", [None])[0]
                         result = evaluate_promql(
                             server.db, query, int(t * 1000),
-                            at_version=int(ver) if ver is not None else None,
+                            at_version=_at_version(qs),
                         )
                         # Prometheus 3.x: ?limit= caps the number of
                         # returned series (0 = disabled)
@@ -725,21 +757,14 @@ class MonolithServer:
                             warnings.append(_TRUNCATED_WARNING)
                         data = {"resultType": "vector", "result": result}
                     elif u.path == promql_path + "_range":
-                        from monolith_spark.promql import parse_duration_ms
-
-                        step_raw = qs["step"][0]
-                        try:
-                            step_ms = int(float(step_raw) * 1000)
-                        except ValueError:
-                            step_ms = parse_duration_ms(step_raw)
-                        ver = qs.get("at_version", [None])[0]
+                        step_ms = _step_ms(qs)
                         result = evaluate_promql_range(
                             server.db,
                             qs["query"][0],
                             int(float(qs["start"][0]) * 1000),
                             int(float(qs["end"][0]) * 1000),
                             step_ms,
-                            at_version=int(ver) if ver is not None else None,
+                            at_version=_at_version(qs),
                         )
                         # ?limit= caps returned SERIES (matrix rows),
                         # Prometheus 3.x semantics
@@ -889,19 +914,13 @@ class MonolithServer:
                         text = federate_text(
                             server.db, qs.get("match[]", []), int(t * 1000)
                         )
-                        body = text.encode()
-                        self.send_response(200)
-                        self.send_header(
-                            "Content-Type", "text/plain; version=0.0.4"
+                        self._reply(
+                            200, text.encode(),
+                            Content_Type="text/plain; version=0.0.4",
                         )
-                        self.send_header("Content-Length", str(len(body)))
-                        self.end_headers()
-                        self.wfile.write(body)
                         return
                     else:
-                        self.send_response(404)
-                        self.send_header("Content-Length", "0")
-                        self.end_headers()
+                        self._reply(404)
                         return
                     env = {"status": "success", "data": data}
                     if warnings:
@@ -909,19 +928,9 @@ class MonolithServer:
                     body = json.dumps(env).encode()
                     code = 200
                 except Exception as exc:  # bad expr / engine error
-                    body = json.dumps(
-                        {
-                            "status": "error",
-                            "errorType": "bad_data",
-                            "error": str(exc),
-                        }
-                    ).encode()
+                    body = _error_json(exc)
                     code = 400
-                self.send_response(code)
-                self.send_header("Content-Type", "application/json")
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
+                self._reply(code, body, Content_Type="application/json")
 
             def do_POST(self) -> None:
                 from urllib.parse import parse_qs, urlparse
@@ -957,9 +966,7 @@ class MonolithServer:
                             # OTLP/JSON is a distinct encoding this
                             # receiver does not speak — tell the
                             # exporter to use protobuf
-                            self.send_response(415)
-                            self.send_header("Content-Length", "0")
-                            self.end_headers()
+                            self._reply(415)
                             return
                         body = self._read_body()
                         if body is None:
@@ -967,9 +974,7 @@ class MonolithServer:
                         if self.headers.get("Content-Encoding") == "gzip":
                             body = _gunzip_bounded(body, proto.MAX_DECODED_BYTES)
                             if body is None:
-                                self.send_response(413)
-                                self.send_header("Content-Length", "0")
-                                self.end_headers()
+                                self._reply(413)
                                 return
                         req, meta, stats = otlp.otlp_to_write_request(body)
                         # samples and metadata land in one commit
@@ -979,32 +984,20 @@ class MonolithServer:
                         # Exponential histograms classic-expand on
                         # ingest (sources/otlp.py) — the count is
                         # surfaced via header for observability.
-                        self.send_response(200)
-                        self.send_header(
-                            "Content-Type", otlp.OTLP_CONTENT_TYPE
-                        )
+                        headers = {"Content_Type": otlp.OTLP_CONTENT_TYPE}
                         if stats["expanded_exponential"]:
-                            self.send_header(
-                                "X-Otlp-Expanded-Exponential-Histograms",
-                                str(stats["expanded_exponential"]),
+                            headers["X_Otlp_Expanded_Exponential_Histograms"] = (
+                                str(stats["expanded_exponential"])
                             )
-                        self.send_header("Content-Length", "0")
-                        self.end_headers()
+                        self._reply(200, **headers)
                     except Exception as exc:
-                        msg = str(exc).encode()
-                        self.send_response(400)
-                        self.send_header("Content-Length", str(len(msg)))
-                        self.end_headers()
-                        self.wfile.write(msg)
+                        self._reply(400, str(exc).encode())
                     return
                 if u.path == "/api/v1/admin/rules/run":
                     # backfill trigger: evaluate the configured rule
                     # group over [start, end] at step and commit the
                     # output (overwrite=true re-runs idempotently).
-                    import json as _json
-
                     try:
-                        from monolith_spark.promql import parse_duration_ms
                         from monolith_spark.rules import (
                             backfill_alerts,
                             record_rules,
@@ -1014,11 +1007,7 @@ class MonolithServer:
                         if not (server.recording_rules
                                 or server.alerting_rules):
                             raise ValueError("no rules configured")
-                        step_raw = qs["step"][0]
-                        try:
-                            step_ms = int(float(step_raw) * 1000)
-                        except ValueError:
-                            step_ms = parse_duration_ms(step_raw)
+                        step_ms = _step_ms(qs)
                         start_b = int(float(qs["start"][0]) * 1000)
                         end_b = int(float(qs["end"][0]) * 1000)
                         ow = qs.get("overwrite", ["false"])[0] == "true"
@@ -1032,26 +1021,15 @@ class MonolithServer:
                                 server.db, server.alerting_rules,
                                 start_b, end_b, step_ms, overwrite=ow,
                             )
-                        self.send_response(204)
-                        self.send_header("Content-Length", "0")
-                        self.end_headers()
+                        self._reply(204)
                     except Exception as exc:
-                        body = _json.dumps(
-                            {"status": "error", "errorType": "bad_data",
-                             "error": str(exc)}
-                        ).encode()
-                        self.send_response(400)
-                        self.send_header("Content-Length", str(len(body)))
-                        self.end_headers()
-                        self.wfile.write(body)
+                        self._reply(400, _error_json(exc))
                     return
                 if u.path.startswith("/api/v1/admin/tsdb/"):
                     # Prometheus admin API: delete_series (match[] +
                     # optional start/end seconds) and clean_tombstones
                     # (here: vacuum — manifest snapshots play the role
                     # of tombstones). 204 on success, like Prometheus.
-                    import json as _json
-
                     try:
                         qs = parse_qs(u.query)
                         if u.path.endswith("/delete_series"):
@@ -1063,24 +1041,16 @@ class MonolithServer:
                             # manifest-pinned file set hardlinked into
                             # snapshots/<name> (engine.snapshot). 200 +
                             # {"name": ...}, matching Prometheus.
-                            ver = qs.get("at_version", [None])[0]
                             sname = server.db.snapshot(
-                                at_version=int(ver) if ver is not None
-                                else None
+                                at_version=_at_version(qs)
                             )
-                            body = _json.dumps(
+                            body = json.dumps(
                                 {"status": "success",
                                  "data": {"name": sname}}
                             ).encode()
-                            self.send_response(200)
-                            self.send_header(
-                                "Content-Type", "application/json"
+                            self._reply(
+                                200, body, Content_Type="application/json"
                             )
-                            self.send_header(
-                                "Content-Length", str(len(body))
-                            )
-                            self.end_headers()
-                            self.wfile.write(body)
                             return
                         elif u.path.endswith("/build_label_index"):
                             # build (or compact) the inverted label
@@ -1089,23 +1059,12 @@ class MonolithServer:
                             server.db.build_label_index()
                         else:
                             raise ValueError(f"unknown admin path {u.path}")
-                        self.send_response(204)
-                        self.send_header("Content-Length", "0")
-                        self.end_headers()
+                        self._reply(204)
                     except Exception as exc:
-                        body = _json.dumps(
-                            {"status": "error", "errorType": "bad_data",
-                             "error": str(exc)}
-                        ).encode()
-                        self.send_response(400)
-                        self.send_header("Content-Length", str(len(body)))
-                        self.end_headers()
-                        self.wfile.write(body)
+                        self._reply(400, _error_json(exc))
                     return
                 if self.path not in (write_path, read_path):
-                    self.send_response(404)
-                    self.send_header("Content-Length", "0")
-                    self.end_headers()
+                    self._reply(404)
                     return
                 if self.path == write_path:
                     ct = self.headers.get("Content-Type", "")
@@ -1117,9 +1076,7 @@ class MonolithServer:
                         # support the negotiated message MUST answer
                         # 415 — checked BEFORE touching the payload,
                         # never mis-decoded as another version
-                        self.send_response(415)
-                        self.send_header("Content-Length", "0")
-                        self.end_headers()
+                        self._reply(415)
                         return
                 try:
                     body = self._read_body()
@@ -1148,21 +1105,15 @@ class MonolithServer:
                             if batch.exemplars is not None:
                                 n_ex = int(batch.exemplars.valid().sum())
                             # remote-write 2.0: success is 204 No Content
-                            self.send_response(204)
-                            self.send_header(
-                                "X-Prometheus-Remote-Write-Samples-Written",
-                                str(n_samples),
+                            self._reply(
+                                204,
+                                X_Prometheus_Remote_Write_Samples_Written=str(
+                                    n_samples),
+                                X_Prometheus_Remote_Write_Histograms_Written=str(
+                                    req.native_histogram_points),
+                                X_Prometheus_Remote_Write_Exemplars_Written=str(
+                                    n_ex),
                             )
-                            self.send_header(
-                                "X-Prometheus-Remote-Write-Histograms-Written",
-                                str(req.native_histogram_points),
-                            )
-                            self.send_header(
-                                "X-Prometheus-Remote-Write-Exemplars-Written",
-                                str(n_ex),
-                            )
-                            self.send_header("Content-Length", "0")
-                            self.end_headers()
                             return
                         req = proto.decode_write_request(raw)
                         server.db.write(request_batch(req))
@@ -1180,35 +1131,19 @@ class MonolithServer:
                                 server.db, rreq,
                                 strict=strict_reference_matchers,
                             )
-                            self.send_response(200)
-                            self.send_header(
-                                "Content-Type",
-                                proto.STREAMED_CONTENT_TYPE,
+                            self._reply(
+                                200, *frames,
+                                Content_Type=proto.STREAMED_CONTENT_TYPE,
                             )
-                            self.send_header(
-                                "Content-Length",
-                                str(sum(len(f) for f in frames)),
-                            )
-                            self.end_headers()
-                            for f in frames:
-                                self.wfile.write(f)
                             return
                         resp = evaluate_read(
                             server.db, rreq,
                             strict=strict_reference_matchers,
                         )
                         payload = proto.snappy_compress(proto.encode_read_response(resp))
-                    self.send_response(200)
-                    self.send_header("Content-Encoding", "snappy")
-                    self.send_header("Content-Length", str(len(payload)))
-                    self.end_headers()
-                    self.wfile.write(payload)
+                    self._reply(200, payload, Content_Encoding="snappy")
                 except Exception as exc:  # 500 on parse/engine error (server.rs:79-89)
-                    msg = str(exc).encode()
-                    self.send_response(500)
-                    self.send_header("Content-Length", str(len(msg)))
-                    self.end_headers()
-                    self.wfile.write(msg)
+                    self._reply(500, str(exc).encode())
 
         self._httpd = ThreadingHTTPServer((host, port), Handler)
         self.port = self._httpd.server_address[1]

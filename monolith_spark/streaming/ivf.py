@@ -27,7 +27,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from monolith_spark.operators.similarity import _cell_sims, _dbl, norm_expr
+from monolith_spark.operators.similarity import _cell_expr, _dbl, _dbl_norm
 from monolith_spark.streaming.epoch import EpochSink
 
 
@@ -58,10 +58,8 @@ class StreamingIVFIndex(EpochSink):
         assigned = batch_df.select(
             F.col(self.id_col).alias("neighbor_id"),
             _dbl(self.vec_col).alias("c_vec"),
-            norm_expr(_dbl(self.vec_col)).alias("cn"),
-        ).withColumn(
-            "cell", F.array_max(_cell_sims("c_vec", self.centroids))["cid"]
-        )
+            _dbl_norm(self.vec_col).alias("cn"),
+        ).withColumn("cell", _cell_expr("c_vec", self.centroids))
         (
             assigned.write.partitionBy("cell")
             .mode("overwrite")

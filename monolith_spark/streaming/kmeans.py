@@ -30,7 +30,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from monolith_spark.operators.similarity import _dbl, sqdist_expr
+from monolith_spark.operators.similarity import _dbl, _lit_dbl_array_sql, sqdist_sql
 from monolith_spark.streaming.epoch import EpochSink
 
 
@@ -74,17 +74,11 @@ class StreamingKMeans(EpochSink):
 
     # ------------------------------------------------------------ batch
     def _assign(self, batch_df: DataFrame) -> DataFrame:
-        dists = F.array(
-            *[
-                F.struct(
-                    sqdist_expr(
-                        F.col("__v"), F.array(*[F.lit(float(x)) for x in c])
-                    ).alias("d2"),
-                    F.lit(cid).alias("cid"),
-                )
-                for cid, c in enumerate(self.centroids)
-            ]
-        )
+        dists = F.expr("array(" + ",".join(
+            f"struct({sqdist_sql('`__v`', _lit_dbl_array_sql(c))} AS d2, "
+            f"{cid} AS cid)"
+            for cid, c in enumerate(self.centroids)
+        ) + ")")
         return batch_df.select(
             F.col(self.id_col), _dbl(self.vec_col).alias("__v")
         ).withColumn("__best", F.array_min(dists)).select(

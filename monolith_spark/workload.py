@@ -32,6 +32,7 @@ from monolith_spark.labels import (
     RE,
     LabelMatcher,
     matcher_predicate,
+    signature_sql_text,
     superset_predicate,
 )
 from monolith_spark.labels import signature_expr as _signature_expr
@@ -6228,7 +6229,7 @@ def emb_dedup_keep_best_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = _sim.embedding_near_dup_pairs(embs, threshold=_EMB_TAU)
     clusters = _dedup.cluster_pairs(pairs, a="id_a", b="id_b")
     scored = embs.select(
-        "vec_id", _sim.norm_expr(_sim._dbl("embedding")).alias("nrm")
+        "vec_id", _sim._dbl_norm("embedding").alias("nrm")
     )
     return _dedup.keep_best(scored, clusters, "nrm", id_col="vec_id").withColumnRenamed(
         "doc_id", "vec_id"
@@ -10934,13 +10935,11 @@ def ts_exposition_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     back = parse_lines(format_lines(named))
-    stripped = F.map_filter(
-        F.col("labels"), lambda k, _: k != F.lit("__name__")
-    )
+    stripped = "map_filter(`labels`, (k, v) -> k != '__name__')"
     return (
         back.select(
             F.try_element_at("labels", F.lit("__name__")).alias("name"),
-            _signature_expr(stripped).alias("signature"),
+            F.expr(signature_sql_text(stripped)).alias("signature"),
             "timestamp",
             "value",
         )

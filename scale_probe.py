@@ -611,7 +611,7 @@ def top10_probe(spark, mult: int) -> dict:
     from monolith_spark.operators import similarity as _sim
     from monolith_spark.operators import text as _text
     from monolith_spark.sources.openmetrics import format_lines, parse_lines
-    from monolith_spark.labels import signature_expr
+    from monolith_spark.labels import signature_sql_text
 
     out: dict = {"mult": mult}
 
@@ -668,12 +668,12 @@ def top10_probe(spark, mult: int) -> dict:
             ),
         )
         back = parse_lines(format_lines(named))
-        stripped = F.map_filter(
-            F.col("labels"), lambda k, _: k != F.lit("__name__"))
         run(
             back.select(
                 F.try_element_at("labels", F.lit("__name__")).alias("name"),
-                signature_expr(stripped).alias("signature"),
+                F.expr(signature_sql_text(
+                    "map_filter(`labels`, (k, v) -> k != '__name__')"
+                )).alias("signature"),
                 "timestamp", "value",
             )
             .groupBy("name", "signature")

@@ -25,3 +25,28 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+def _py4j_calls(fn) -> int:
+    """py4j round trips made while ``fn`` runs."""
+    from py4j.java_gateway import GatewayClient
+
+    calls, send = [0], GatewayClient.send_command
+
+    def counting(client, *args, **kwargs):
+        calls[0] += 1
+        return send(client, *args, **kwargs)
+
+    GatewayClient.send_command = counting
+    try:
+        fn()
+    finally:
+        GatewayClient.send_command = send
+    return calls[0]
+
+
+@pytest.fixture(scope="session")
+def py4j_calls():
+    """The py4j round-trip counter: ``py4j_calls(fn)`` runs ``fn`` and
+    returns how many calls it sent to the JVM."""
+    return _py4j_calls

@@ -2818,14 +2818,14 @@ def test_arrow_pair_kernels_bit_identical_to_column_fold(spark):
 
     a = base.select("cluster_id", F.col("vid").alias("id_a"),
                     F.col("vec").alias("va"),
-                    sim.norm_expr(F.col("vec")).alias("na"))
+                    sim.norm_expr("vec").alias("na"))
     b = base.select("cluster_id", F.col("vid").alias("id_b"),
                     F.col("vec").alias("vb"),
-                    sim.norm_expr(F.col("vec")).alias("nb"))
+                    sim.norm_expr("vec").alias("nb"))
     pairs = (
         a.join(b, ["cluster_id"])
         .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", sim.dot_expr(F.col("va"), F.col("vb"))
+        .withColumn("cosine", sim.dot_expr("va", "vb")
                     / (F.col("na") * F.col("nb")))
     )
     tau = 0.35
@@ -2872,7 +2872,7 @@ def test_arrow_pair_kernels_bit_identical_to_column_fold(spark):
 def test_kmeans_arrow_assignment_bit_identical_to_column_form(spark, monkeypatch):
     """kmeans_lloyd's Arrow assignment (k-gated) and the Column HOF
     form produce the SAME bits — cluster ids AND the double dist2 —
-    because the numpy accumulation replays sqdist_expr's sequential
+    because the numpy accumulation replays sqdist_sql's sequential
     fold and argmin's first-min is the (d2, cid) struct-min."""
     import random
 

@@ -292,7 +292,8 @@ def test_session_stream_gap_semantics(spark, tmp_path):
     ids = {
         r["m"]: r["sid"]
         for r in spark.createDataFrame([("s",), ("t",)], "m string")
-        .select("m", series_id_expr(F.create_map(F.lit("m"), F.col("m"))).alias("sid"))
+        .select("m", F.create_map(F.lit("m"), F.col("m")).alias("lm"))
+        .select("m", series_id_expr("lm").alias("sid"))
         .collect()
     }
     sid_s, sid_t = ids["s"], ids["t"]

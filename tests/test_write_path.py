@@ -51,24 +51,6 @@ def _jobs(spark, group: str, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def _py4j_calls(fn) -> int:
-    """py4j round trips made while ``fn`` runs."""
-    from py4j.java_gateway import GatewayClient
-
-    calls, send = [0], GatewayClient.send_command
-
-    def counting(client, *args, **kwargs):
-        calls[0] += 1
-        return send(client, *args, **kwargs)
-
-    GatewayClient.send_command = counting
-    try:
-        fn()
-    finally:
-        GatewayClient.send_command = send
-    return calls[0]
-
-
 def _dim_files(db: MonolithDB) -> list[str]:
     return sorted(f for f in os.listdir(db.series_path) if f.endswith(".parquet"))
 
@@ -252,7 +234,7 @@ def test_request_with_metadata_commits_once(spark, tmp_path, kind):
 # ------------------------------------------------- known-series get-or-create
 
 
-def test_known_series_write_runs_no_dim_job(spark, tmp_path):
+def test_known_series_write_runs_no_dim_job(spark, tmp_path, py4j_calls):
     """Steady state: rewriting a known series set as a request batch
     runs no Spark job and makes no py4j call at all, adds no dim file
     and commits exactly one manifest version; one new series among
@@ -265,7 +247,7 @@ def test_known_series_write_runs_no_dim_job(spark, tmp_path):
     batch = request_batch(_req({n: [(3_000, 3.0), (4_000, 4.0)] for n in names}))
     calls = []
     n_jobs = _jobs(spark, "known_write",
-                   lambda: calls.append(_py4j_calls(lambda: db.write(batch))))
+                   lambda: calls.append(py4j_calls(lambda: db.write(batch))))
     assert (n_jobs, calls) == (0, [0])
     assert _dim_files(db) == files
     man = db._read_current()

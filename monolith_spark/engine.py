@@ -98,6 +98,28 @@ DEFAULT_CHUNK_MS = 12_000 * 1000
 
 QueryMatcher = LabelMatcher
 _LABELS_SCHEMA = StructType([SAMPLES_SCHEMA["labels"]])
+# The fact tables, all on the chunk_id grid (``<table>/chunk_id=N/``),
+# each with the schema it reads as when no file is live.
+_FACT_SCHEMAS = {
+    "samples": "series_id long, timestamp long, value double, chunk_id long",
+    "exemplars": "series_id long, timestamp long, value double, "
+    "exemplar_labels map<string,string>, chunk_id long",
+}
+FACT_TABLES = tuple(_FACT_SCHEMAS)
+
+
+def _partition_files(
+    base: str, key: str, parts: dict[str, list[str]], only=None
+) -> list[str]:
+    """``<base>/<key>=<p>/<file>`` for every file a manifest lists under
+    partition ``p`` in ``parts`` ({p: [files]}; only the partitions in
+    ``only`` when given): the one place the on-disk layout of a
+    partitioned table is spelled out."""
+    return [
+        os.path.join(base, f"{key}={p}", fn)
+        for p in (parts if only is None else map(str, only))
+        for fn in parts.get(p, [])
+    ]
 
 
 def _fsync_dir(path: str) -> None:
@@ -429,6 +451,24 @@ class MonolithDB:
             self._write_version(man)
             return man
 
+    @staticmethod
+    def _fact_paths(man: dict, table: str, chunk_ids=None) -> list[str]:
+        """The files of fact ``table`` live in snapshot ``man`` — of the
+        chunks ``chunk_ids`` only, when given — relative to the db
+        root."""
+        return _partition_files(table, "chunk_id", man.get(table, {}), chunk_ids)
+
+    @classmethod
+    def _manifest_files(cls, man: dict):
+        """Every data file snapshot ``man`` references, relative to the
+        db root: the dim, each fact table's chunks, the label index."""
+        yield from (os.path.join("series", fn) for fn in man["series"])
+        for table in FACT_TABLES:
+            yield from cls._fact_paths(man, table)
+        idx = man.get("label_index")
+        if idx:
+            yield from _partition_files("label_index", "kp", idx["buckets"])
+
     def _stage_and_move(
         self,
         df: DataFrame,
@@ -526,27 +566,10 @@ class MonolithDB:
                 if i >= keep_floor or now - m.get("committed_ms", 0) <= grace_ms:
                     retained.add(name)
                     referenced.update(
-                        os.path.join(self.series_path, fn) for fn in m["series"]
+                        os.path.join(self.path, p) for p in self._manifest_files(m)
                     )
-                    referenced.update(
-                        os.path.join(self.samples_path, f"chunk_id={cid}", fn)
-                        for cid, fl in m["samples"].items()
-                        for fn in fl
-                    )
-                    referenced.update(
-                        os.path.join(self.exemplars_path, f"chunk_id={cid}", fn)
-                        for cid, fl in m.get("exemplars", {}).items()
-                        for fn in fl
-                    )
-                    idx = m.get("label_index")
-                    if idx:
-                        referenced.update(
-                            os.path.join(self.index_path, f"kp={b}", fn)
-                            for b, fl in idx["buckets"].items()
-                            for fn in fl
-                        )
-            for base in (self.series_path, self.samples_path, self.index_path,
-                         self.exemplars_path):
+            tables = [os.path.join(self.path, t) for t in FACT_TABLES]
+            for base in (self.series_path, self.index_path, *tables):
                 if not os.path.isdir(base):
                     continue
                 for root, dirs, files in os.walk(base, topdown=False):
@@ -702,35 +725,8 @@ class MonolithDB:
                 shutil.copy2(src, dst)
 
         try:
-            for fn in man["series"]:
-                link(
-                    os.path.join(self.series_path, fn),
-                    os.path.join(staging, "series", fn),
-                )
-            for cid, files in man["samples"].items():
-                for fn in files:
-                    link(
-                        os.path.join(self.samples_path, f"chunk_id={cid}", fn),
-                        os.path.join(staging, "samples", f"chunk_id={cid}", fn),
-                    )
-            for cid, files in man.get("exemplars", {}).items():
-                for fn in files:
-                    link(
-                        os.path.join(self.exemplars_path, f"chunk_id={cid}", fn),
-                        os.path.join(staging, "exemplars", f"chunk_id={cid}", fn),
-                    )
-            idx = man.get("label_index")
-            if idx:
-                for b, files in idx["buckets"].items():
-                    for fn in files:
-                        link(
-                            os.path.join(self.index_path, f"kp={b}", fn),
-                            os.path.join(staging, "label_index", f"kp={b}", fn),
-                        )
-            link(
-                os.path.join(self.path, "metadata.json"),
-                os.path.join(staging, "metadata.json"),
-            )
+            for p in (*self._manifest_files(man), "metadata.json"):
+                link(os.path.join(self.path, p), os.path.join(staging, p))
             # a one-version manifest: the snapshot needs no history
             mdir = os.path.join(staging, "_manifest")
             os.makedirs(mdir, exist_ok=True)
@@ -845,7 +841,7 @@ class MonolithDB:
                 # a high-cardinality dim on every micro-batch would be
                 # the write path's scaling cliff.
                 new_series = new_series.join(
-                    self._dim_hint(self._dim_scan(live).select("series_id")),
+                    self._dim_hint(self._dim_scan(live).select("series_id"), live),
                     "series_id",
                     "left_anti",
                 )
@@ -865,15 +861,10 @@ class MonolithDB:
         post_stats: dict = {}
         if dim_files:
             cur = self._read_current()
-            idx0 = (cur or {}).get("label_index")
-            if idx0 and idx0["series"] == cur["series"]:
-                post_files = self._stage_and_move(
-                    self._postings_of(new_series, idx0["n_buckets"]),
-                    self.index_path,
-                    partition_by="kp",
-                    options=self._INDEX_WRITE_OPTS,
+            if cur is not None and self._index_fresh(cur):
+                post_files, post_stats = self._stage_postings(
+                    new_series, cur["label_index"]["n_buckets"]
                 )
-                post_stats = self._posting_stats_from_moved(post_files)
         if not (dim_files or any(facts.values()) or metadata):
             return
 
@@ -884,7 +875,7 @@ class MonolithDB:
             # stale and readers fall back until the next
             # build_label_index.
             idx = man.get("label_index")
-            extend_idx = post_files and idx and idx["series"] == man["series"]
+            extend_idx = post_files and self._index_fresh(man)
             man["series"] = sorted(set(man["series"]) | set(dim_files))
             for name, entry in (metadata or {}).items():
                 mm = man.setdefault("metric_metadata", {})
@@ -910,7 +901,7 @@ class MonolithDB:
                     else:
                         ks[k] = [n, ndv]
                 idx["series"] = man["series"]
-            elif idx is not None and idx["series"] != man["series"]:
+            elif idx is not None and not self._index_fresh(man):
                 # An index left stale (raced commit / legacy state)
                 # would ride every future manifest, pinning dead posting
                 # files forever — drop the entry; build_label_index
@@ -1159,23 +1150,8 @@ class MonolithDB:
         )
 
     def exemplars(self, at_version: int | None = None) -> DataFrame:
-        """The exemplars fact table at a snapshot — explicit file-list
-        read with basePath, exactly like samples()."""
-        man = self._load_manifest(at_version)
-        paths = [
-            os.path.join(self.exemplars_path, f"chunk_id={cid}", fn)
-            for cid, files in man.get("exemplars", {}).items()
-            for fn in files
-        ]
-        if not paths:
-            return self.spark.createDataFrame(
-                [],
-                "series_id long, timestamp long, value double, "
-                "exemplar_labels map<string,string>, chunk_id long",
-            )
-        return self.spark.read.option("basePath", self.exemplars_path).parquet(
-            *paths
-        )
+        """The exemplars fact table at a snapshot, read like samples()."""
+        return self._facts("exemplars", self._load_manifest(at_version))
 
     def query_exemplars(
         self, matchers, start_ms: int, end_ms: int, at_version: int | None = None
@@ -1185,15 +1161,10 @@ class MonolithDB:
         GET /api/v1/query_exemplars. Same plan family as query_flat:
         chunk-pruned exemplar scan ⋈ size-gated broadcast of the
         matched dim."""
-        sel = self._matched_series(matchers, at_version)
-        ex = time_trim(
-            self.exemplars(at_version).filter(
-                chunk_pred(start_ms, end_ms, self.chunk_size_ms)
-            ),
-            start_ms,
-            end_ms,
-        )
-        return ex.join(self._dim_hint(sel), "series_id").select(
+        man = self._load_manifest(at_version)
+        sel = self._matched_series(matchers, man)
+        ex = self._facts_in("exemplars", man, start_ms, end_ms)
+        return ex.join(self._dim_hint(sel, man["series"]), "series_id").select(
             "series_id", "signature", "labels", "exemplar_labels",
             "timestamp", "value",
         )
@@ -1219,12 +1190,15 @@ class MonolithDB:
         the first write — queries on an empty db return empty results,
         like the reference's fresh chunk. ``at_version`` time-travels
         to any retained snapshot (see history())."""
-        raw = self._series_raw(at_version)
-        if raw is None:
+        return self._dim(self._load_manifest(at_version))
+
+    def _dim(self, man: dict) -> DataFrame:
+        """series() of snapshot ``man``."""
+        if not man["series"]:
             return self.spark.createDataFrame(
                 [], "series_id long, signature string, labels map<string,string>"
             )
-        return raw.dropDuplicates(["series_id"])
+        return self._dim_scan(man["series"]).dropDuplicates(["series_id"])
 
     def _recover_compaction(self) -> None:
         """LEGACY-MIGRATION ONLY (called once from _migrate_legacy,
@@ -1274,36 +1248,32 @@ class MonolithDB:
 
     def samples(self, at_version: int | None = None) -> DataFrame:
         """The samples fact table at the current — or, with
-        ``at_version``, any retained historical — snapshot: an explicit
-        file-list read (with basePath, so chunk_id stays a partition
-        column and PartitionFilters prune exactly as with directory
-        discovery) — the plan is pinned to the manifest resolved here."""
-        man = self._load_manifest(at_version)
-        paths = [
-            os.path.join(self.samples_path, f"chunk_id={cid}", fn)
-            for cid, files in man["samples"].items()
-            for fn in files
-        ]
-        if not paths:
-            return self.spark.createDataFrame(
-                [], "series_id long, timestamp long, value double, chunk_id long"
-            )
-        return self.spark.read.option("basePath", self.samples_path).parquet(
-            *paths
-        )
+        ``at_version``, any retained historical — snapshot."""
+        return self._facts("samples", self._load_manifest(at_version))
 
-    def _query_samples(
-        self, start_ms: int, end_ms: int, at_version: int | None = None
-    ) -> DataFrame:
+    def _facts(self, table: str, man: dict) -> DataFrame:
+        """Fact ``table`` of snapshot ``man``: an explicit file-list
+        read (with basePath, so chunk_id stays a partition column and
+        PartitionFilters prune exactly as with directory discovery) —
+        the plan is pinned to that manifest."""
+        paths = [os.path.join(self.path, p) for p in self._fact_paths(man, table)]
+        if not paths:
+            return self.spark.createDataFrame([], _FACT_SCHEMAS[table])
+        base = os.path.join(self.path, table)
+        return self.spark.read.option("basePath", base).parquet(*paths)
+
+    def _facts_in(self, table: str, man: dict, start_ms: int, end_ms: int) -> DataFrame:
+        """_facts pruned to the chunks overlapping [start_ms, end_ms]
+        and trimmed to it."""
         return time_trim(
-            self.samples(at_version).filter(
+            self._facts(table, man).filter(
                 chunk_pred(start_ms, end_ms, self.chunk_size_ms)
             ),
             start_ms,
             end_ms,
         )
 
-    def _matched_series(self, matchers, at_version: int | None = None) -> DataFrame:
+    def _matched_series(self, matchers, man: dict | None = None) -> DataFrame:
         """Resolve matchers to dim rows. EQ and literal-set-regex
         matchers probe the at-rest inverted label index when a FRESH
         one exists (build_label_index) — the reference's J1-J3 posting
@@ -1313,8 +1283,11 @@ class MonolithDB:
         dim read, re-verified by the full predicate. Broad matches and
         index-less engines use the Catalyst ANDed dim scan (the
         always-correct fallback, and the cheapest plan when the match
-        isn't selective)."""
-        series = self.series(at_version)
+        isn't selective). ``man`` is the snapshot to match in, the
+        current one when None."""
+        if man is None:
+            man = self._load_manifest()
+        series = self._dim(man)
         if isinstance(matchers, dict):
             # Superset semantics: every entry requires label PRESENT and
             # equal (even ""), so all entries are posting-probeable.
@@ -1344,9 +1317,7 @@ class MonolithDB:
         if served and self.use_label_index:
             if any(not vs for vs in served.values()):
                 return series.filter(F.lit(False))  # contradictory matchers
-            cand = self._posting_candidates(
-                self._load_manifest(at_version), sorted(served.items())
-            )
+            cand = self._posting_candidates(man, sorted(served.items()))
             if cand is not None:
                 if not cand:
                     return series.filter(F.lit(False))
@@ -1386,9 +1357,9 @@ class MonolithDB:
         heuristic); the caller re-verifies all matchers on the
         candidate rows. An empty list is definitive: some required
         label pair has no postings, so nothing matches."""
-        idx = man.get("label_index")
-        if not idx or idx["series"] != man["series"]:
+        if not self._index_fresh(man):
             return None
+        idx = man["label_index"]
         reqs = [(k, {v} if isinstance(v, str) else set(v)) for k, v in pairs]
         stats = idx.get("key_stats")
         if stats is not None:
@@ -1464,23 +1435,15 @@ class MonolithDB:
 
         The index is a DERIVED table committed into the manifest with
         the exact series file list it was built from; any later dim
-        mutation makes ``idx["series"] != man["series"]`` and readers
-        fall back to the dim scan until the next build — stale postings
-        are never served. Rebuild after ingest/compaction/deletes (the
+        mutation leaves it stale (_index_fresh) and readers fall back
+        to the dim scan until the next build — stale postings are
+        never served. Rebuild after ingest/compaction/deletes (the
         operational cadence: build after each compaction pass).
         """
         man = self._load_manifest()
         if not man["series"]:
             return man
-        src = self._dim_scan(man["series"]).dropDuplicates(["series_id"])
-        postings = self._postings_of(src, n_buckets)
-        moved = self._stage_and_move(
-            postings,
-            self.index_path,
-            partition_by="kp",
-            options=self._INDEX_WRITE_OPTS,
-        )
-        stats = self._posting_stats_from_moved(moved)
+        moved, stats = self._stage_postings(self._dim(man), n_buckets)
 
         def set_index(m: dict) -> None:
             m["label_index"] = {
@@ -1507,20 +1470,24 @@ class MonolithDB:
             .collect()
         }
 
-    def _posting_stats_from_moved(self, moved: dict[str, list[str]]) -> dict:
-        """_posting_stats computed from the just-written index files
-        instead of re-evaluating the postings lineage: the explode +
-        bucket repartition shuffle already ran once to produce the
-        files, so the stats pass is a column-pruned (k, v) read of the
-        committed bytes — no second shuffle at any scale."""
-        paths = [
-            os.path.join(self.index_path, f"kp={b}", fn)
-            for b, files in moved.items()
-            for fn in files
-        ]
+    def _stage_postings(self, dim: DataFrame, n_buckets: int) -> tuple[dict, dict]:
+        """Stage the postings of dim rows ``dim`` into the index
+        (_stage_and_move; live once a commit lists them) and return
+        ({bucket: [files]}, key_stats). The stats are computed from the
+        just-written files instead of the postings lineage: the explode
+        + bucket repartition shuffle already ran once to produce them,
+        so the stats pass is a column-pruned (k, v) read of those bytes
+        — no second shuffle at any scale."""
+        moved = self._stage_and_move(
+            self._postings_of(dim, n_buckets),
+            self.index_path,
+            partition_by="kp",
+            options=self._INDEX_WRITE_OPTS,
+        )
+        paths = _partition_files(self.index_path, "kp", moved)
         if not paths:
-            return {}
-        return self._posting_stats(self.spark.read.parquet(*paths))
+            return moved, {}
+        return moved, self._posting_stats(self.spark.read.parquet(*paths))
 
     def _index_df(self, man: dict, keys: list[str] | None = None) -> DataFrame | None:
         """The fresh index as a DataFrame [series_id, k, v, kp] — pruned
@@ -1530,19 +1497,15 @@ class MonolithDB:
         no files (no series carries any of the keys)."""
         import zlib
 
-        idx = man.get("label_index")
-        if not idx or idx["series"] != man["series"]:
+        if not self._index_fresh(man):
             return None
+        idx = man["label_index"]
         nb = idx["n_buckets"]
         if keys is None:
             need = sorted(int(b) for b in idx["buckets"])
         else:
             need = sorted({zlib.crc32(k.encode("utf-8")) % nb for k in keys})
-        files = [
-            os.path.join(self.index_path, f"kp={b}", fn)
-            for b in need
-            for fn in idx["buckets"].get(str(b), [])
-        ]
+        files = _partition_files(self.index_path, "kp", idx["buckets"], need)
         if not files:
             return self.spark.range(0).drop("id")  # zero-column sentinel
         return self.spark.read.option("basePath", self.index_path).parquet(*files)
@@ -1553,13 +1516,13 @@ class MonolithDB:
         idx = man.get("label_index")
         return bool(idx) and idx["series"] == man["series"]
 
-    def _dim_hint(self, sel: DataFrame) -> DataFrame:
-        """Broadcast hint for the matched dim, gated on the dim's
-        on-disk size (an O(#files) driver-side stat, no job): a
-        Parquet dim under the bound decompresses well within executor
-        memory; past it the hint would force shipping a
-        high-cardinality dim everywhere, so AQE decides instead."""
-        live = self._load_manifest()["series"]
+    def _dim_hint(self, sel: DataFrame, live: list[str]) -> DataFrame:
+        """Broadcast hint for the matched dim, gated on the on-disk size
+        of the dim files ``live`` of the caller's snapshot (an
+        O(#files) driver-side stat, no job): a Parquet dim under the
+        bound decompresses well within executor memory; past it the
+        hint would force shipping a high-cardinality dim everywhere, so
+        AQE decides instead."""
         if not live:
             return F.broadcast(sel)  # empty dim
         total = 0
@@ -1585,9 +1548,10 @@ class MonolithDB:
         LabelMatcher for the full EQ/NEQ/RE/NRE surface. ``at_version``
         time-travels the WHOLE query (dim and facts from one snapshot).
         """
-        sel = self._matched_series(matchers, at_version)
-        return self._query_samples(start_ms, end_ms, at_version).join(
-            self._dim_hint(sel), "series_id"
+        man = self._load_manifest(at_version)
+        sel = self._matched_series(matchers, man)
+        return self._facts_in("samples", man, start_ms, end_ms).join(
+            self._dim_hint(sel, man["series"]), "series_id"
         )  # J6 metadata hydration; broadcast while the dim is small
 
     def query(
@@ -1629,10 +1593,13 @@ class MonolithDB:
         the sled point-get, at rest."""
         from monolith_spark.labels import python_signature
 
-        sel = self.series().filter(
+        man = self._load_manifest()
+        sel = self._dim(man).filter(
             F.col("signature") == F.lit(python_signature(full_labels))
         )
-        flat = self._query_samples(start_ms, end_ms).join(self._dim_hint(sel), "series_id")
+        flat = self._facts_in("samples", man, start_ms, end_ms).join(
+            self._dim_hint(sel, man["series"]), "series_id"
+        )
         return to_timeseries(flat, key_cols=["series_id", "signature"])
 
     # ----------------------------------------------------------- maintenance
@@ -1642,13 +1609,17 @@ class MonolithDB:
         chunk_id: int,
         target_bytes: int = 128 * 1024 * 1024,
         layout: str = "series",
+        table: str = "samples",
     ) -> bool:
-        """Rewrite one sealed chunk partition: merge the small files
-        micro-batch appends accumulate into ~target_bytes files sorted
-        by (series_id, timestamp) (``layout="series"``) or clustered
-        along the Morton curve over (series_id, timestamp)
-        (``layout="zorder"``, plans/zorder.py) so file/row-group
-        min/max stats prune in BOTH dimensions.
+        """Rewrite one sealed chunk partition of fact ``table`` (one of
+        FACT_TABLES): merge the small files micro-batch appends
+        accumulate — one per batch per chunk, in every table — into
+        ~target_bytes files sorted by (series_id, timestamp)
+        (``layout="series"``) or clustered along the Morton curve over
+        (series_id, timestamp) (``layout="zorder"``, plans/zorder.py) so
+        file/row-group min/max stats prune in BOTH dimensions. The
+        layout changes only the order of rows across and within files,
+        never what a read returns.
 
         The reference's unchecked TODO "Compression on swap chunk"
         (/root/reference/README.md:60; dormant Gorilla codec, SURVEY
@@ -1669,12 +1640,12 @@ class MonolithDB:
         Returns False if the chunk has no live files.
         """
         key = str(chunk_id)
-        man = self._load_manifest()
-        live = man["samples"].get(key)
-        if not live:
+        paths = [
+            os.path.join(self.path, p)
+            for p in self._fact_paths(self._load_manifest(), table, [key])
+        ]
+        if not paths:
             return False
-        part = os.path.join(self.samples_path, f"chunk_id={chunk_id}")
-        paths = [os.path.join(part, fn) for fn in live]
         in_bytes = sum(os.path.getsize(p) for p in paths)
         n_files = max(1, -(-in_bytes // target_bytes))
         src = self.spark.read.parquet(*paths)
@@ -1688,43 +1659,12 @@ class MonolithDB:
             )
         else:
             raise ValueError(f"unknown compaction layout: {layout!r}")
-        new_files = self._stage_and_move(laid_out, part)
+        new_files = self._stage_and_move(laid_out, os.path.dirname(paths[0]))
 
         def swap(m: dict) -> None:
-            m["samples"][key] = new_files
+            m.setdefault(table, {})[key] = new_files
 
-        self._commit(swap, op="compact")
-        return True
-
-    def compact_exemplar_chunk(
-        self, chunk_id: int, target_bytes: int = 128 * 1024 * 1024
-    ) -> bool:
-        """compact_chunk's exemplar twin: a streaming scrape with
-        exemplars appends one small file per micro-batch per exemplar
-        chunk, exactly the accumulation the sample path compacts away
-        — without this the exemplar store is the one table whose file
-        count grows unboundedly. Same manifest-swap shape; old files
-        reclaimed by vacuum."""
-        key = str(chunk_id)
-        man = self._load_manifest()
-        live = man.get("exemplars", {}).get(key)
-        if not live:
-            return False
-        part = os.path.join(self.exemplars_path, f"chunk_id={chunk_id}")
-        paths = [os.path.join(part, fn) for fn in live]
-        in_bytes = sum(os.path.getsize(p) for p in paths)
-        n_files = max(1, -(-in_bytes // target_bytes))
-        laid_out = (
-            self.spark.read.parquet(*paths)
-            .repartition(n_files, "series_id")
-            .sortWithinPartitions("series_id", "timestamp")
-        )
-        new_files = self._stage_and_move(laid_out, part)
-
-        def swap(m: dict) -> None:
-            m.setdefault("exemplars", {})[key] = new_files
-
-        self._commit(swap, op="compact-exemplars")
+        self._commit(swap, op="compact" if table == "samples" else f"compact-{table}")
         return True
 
     def compact(
@@ -1733,8 +1673,10 @@ class MonolithDB:
         layout: str = "series",
         rebuild_index: bool = True,
     ) -> int:
-        """Compact every chunk partition (optionally excluding e.g. the
-        chunk currently receiving appends). Returns chunks rewritten.
+        """Compact every chunk partition of every fact table with
+        compact_chunk's ``layout`` (optionally excluding e.g. the chunk
+        currently receiving appends). Returns the chunk partitions
+        rewritten, over all tables.
 
         Also compacts the inverted label index when one exists:
         incremental maintenance appends one posting file per ingest
@@ -1743,18 +1685,13 @@ class MonolithDB:
         file (and re-freshens a stale index, e.g. after a legacy
         layout migration). ``rebuild_index=False`` skips it."""
         exclude = exclude_chunk_ids or set()
-        done = 0
         man0 = self._load_manifest()
-        for key in sorted(man0["samples"], key=int):
-            cid = int(key)
-            if cid in exclude:
-                continue
-            done += int(self.compact_chunk(cid, layout=layout))
-        for key in sorted(man0.get("exemplars", {}), key=int):
-            cid = int(key)
-            if cid in exclude:
-                continue
-            done += int(self.compact_exemplar_chunk(cid))
+        done = sum(
+            self.compact_chunk(int(key), layout=layout, table=table)
+            for table in FACT_TABLES
+            for key in sorted(man0.get(table, {}), key=int)
+            if int(key) not in exclude
+        )
         idx = self._load_manifest().get("label_index")
         if rebuild_index and idx is not None:
             self.build_label_index(idx["n_buckets"])
@@ -1805,53 +1742,52 @@ class MonolithDB:
             .distinct()
         )
 
-    def _expired_chunks(self, cutoff_ms: int) -> list[str]:
-        """Manifest keys of chunks whose range ends before cutoff_ms."""
-        return sorted(
-            (
-                key
-                for key in self._load_manifest()["samples"]
-                if (int(key) + 1) * self.chunk_size_ms - 1 < cutoff_ms
-            ),
-            key=int,
-        )
-
-    def drop_chunks_before(self, cutoff_ms: int) -> int:
-        """Retention: drop whole chunks whose time range ends before
-        cutoff_ms — one manifest commit, no rewrite, no scan of
-        surviving data (the operational piece the reference's
-        sealed-chunk list implies but never implements; chunks
-        accumulate forever in /root/reference/src/db.rs:22-32).
-        Physical files are reclaimed by ``vacuum``. Returns the number
-        of distinct chunk time-buckets dropped — a bucket counts once
-        whether samples, exemplars, or both expired in it, and a
-        commit that only expired exemplar chunks reports their count
-        rather than a misleading 0.
-        """
-        expired = self._expired_chunks(cutoff_ms)
+    def _expired_chunks(self, cutoff_ms: int) -> dict[str, list[str]]:
+        """{table: manifest keys of its chunks whose range ends before
+        cutoff_ms} for every fact table. The tables share the chunk
+        grid, so retention drops a chunk from all of them at once — a
+        retained exemplar whose samples expired would serve trace
+        references into data that no longer exists."""
         man = self._load_manifest()
-        expired_ex = [
-            key
-            for key in man.get("exemplars", {})
-            if (int(key) + 1) * self.chunk_size_ms - 1 < cutoff_ms
-        ]
-        if not expired and not expired_ex:
+        return {
+            table: sorted(
+                (
+                    key
+                    for key in man.get(table, {})
+                    if (int(key) + 1) * self.chunk_size_ms - 1 < cutoff_ms
+                ),
+                key=int,
+            )
+            for table in FACT_TABLES
+        }
+
+    def _drop_chunks(self, expired: dict[str, list[str]], op: str) -> int:
+        """Drop the ``expired`` chunks ({table: keys}, _expired_chunks)
+        in one manifest commit (none when there are none). Returns the
+        number of distinct chunk time-buckets dropped over all tables."""
+        buckets = {int(key) for keys in expired.values() for key in keys}
+        if not buckets:
             return 0
 
         def drop(m: dict) -> None:
-            for key in expired:
-                m["samples"].pop(key, None)
-            ex = m.get("exemplars")
-            if ex:
-                # exemplars live on the same chunk grid — a retained
-                # exemplar whose samples expired would serve trace
-                # references into data that no longer exists
-                for key in list(ex):
-                    if (int(key) + 1) * self.chunk_size_ms - 1 < cutoff_ms:
-                        ex.pop(key, None)
+            for table, keys in expired.items():
+                for key in keys:
+                    m.get(table, {}).pop(key, None)
 
-        self._commit(drop, op="retention-drop")
-        return len({int(k) for k in expired} | {int(k) for k in expired_ex})
+        self._commit(drop, op=op)
+        return len(buckets)
+
+    def drop_chunks_before(self, cutoff_ms: int) -> int:
+        """Retention: drop whole chunks whose time range ends before
+        cutoff_ms, from every fact table — one manifest commit, no
+        rewrite, no scan of surviving data (the operational piece the
+        reference's sealed-chunk list implies but never implements;
+        chunks accumulate forever in /root/reference/src/db.rs:22-32).
+        Physical files are reclaimed by ``vacuum``. Returns the number
+        of distinct chunk time-buckets dropped — a bucket counts once
+        however many tables expired in it.
+        """
+        return self._drop_chunks(self._expired_chunks(cutoff_ms), "retention-drop")
 
     def _rollup(
         self, raw: DataFrame, step_ms: int, extra_keys: tuple[str, ...] = ()
@@ -1910,29 +1846,26 @@ class MonolithDB:
         partitions, then the commit drops the raw chunks). Raw files
         are reclaimed by ``vacuum``. Lossy by design — raw points are
         gone; use export_chunk_gorilla for the lossless cold archive.
-        Returns (chunks_rolled, chunks_dropped).
+        Expired exemplar chunks are dropped in the same commit, as
+        drop_chunks_before drops them. Returns (chunks_rolled,
+        chunks_dropped), the latter counted as drop_chunks_before
+        counts it.
         """
         expired = self._expired_chunks(cutoff_ms)
-        if not expired:
-            return (0, 0)
-        raw = self.samples().filter(
-            F.col("chunk_id").isin([int(k) for k in expired])
-        )
-        (
-            self._rollup(raw, step_ms, extra_keys=("chunk_id",))
-            .repartition("chunk_id")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("chunk_id")
-            .parquet(self._rollup_dir(step_ms))
-        )
-
-        def drop(m: dict) -> None:
-            for key in expired:
-                m["samples"].pop(key, None)
-
-        self._commit(drop, op="retention-tier")
-        return (len(expired), len(expired))
+        rolled = expired["samples"]
+        if rolled:
+            raw = self.samples().filter(
+                F.col("chunk_id").isin([int(k) for k in rolled])
+            )
+            (
+                self._rollup(raw, step_ms, extra_keys=("chunk_id",))
+                .repartition("chunk_id")
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("chunk_id")
+                .parquet(self._rollup_dir(step_ms))
+            )
+        return (len(rolled), self._drop_chunks(expired, "retention-tier"))
 
     def _rolled_chunk_ids(self, step_ms: int) -> list[int]:
         base = self._rollup_dir(step_ms)
@@ -1974,6 +1907,7 @@ class MonolithDB:
         reconstructs the exact whole-bucket aggregate. Returns
         [series_id, bucket_ms, n_points, value] ordered within series
         time-ascending by the caller's choice."""
+        man = self._load_manifest()
         rolled = self._rolled_chunk_ids(step_ms)
         lo = (start_ms // step_ms) * step_ms
         hi = (end_ms // step_ms + 1) * step_ms - 1  # end of end_ms's bucket
@@ -1996,7 +1930,7 @@ class MonolithDB:
                 .drop("chunk_id")
             )
             parts.append(ro)
-        raw = self.samples().filter(
+        raw = self._facts("samples", man).filter(
             chunk_pred(lo, hi, self.chunk_size_ms)
             & (F.col("timestamp") >= lo)
             & (F.col("timestamp") <= hi)
@@ -2007,8 +1941,8 @@ class MonolithDB:
         tiers = parts[0]
         for p in parts[1:]:
             tiers = tiers.unionByName(p, allowMissingColumns=False)
-        sel = self._matched_series(matchers).select("series_id")
-        tiers = tiers.join(self._dim_hint(sel), "series_id", "left_semi")
+        sel = self._matched_series(matchers, man).select("series_id")
+        tiers = tiers.join(self._dim_hint(sel, man["series"]), "series_id", "left_semi")
         # Merge partials: map-combinable, runs AFTER the semi-join
         # prunes to matched series. sum over DECIMAL(28,6) partials
         # widens to (38,6) — exact; struct-max of struct-max picks the
@@ -2071,37 +2005,61 @@ class MonolithDB:
         bounded = start_ms is not None or end_ms is not None
         lo = 0 if start_ms is None else start_ms
         hi = (1 << 62) if end_ms is None else end_ms
-        sel = self._matched_series(matchers).select("series_id").persist()
+        man = self._load_manifest()
+        sel = self._matched_series(matchers, man).select("series_id").persist()
         try:
             n = sel.count()
             if n == 0:
                 return 0
-            if not bounded:
-                kept = self.samples().join(
-                    self._dim_hint(sel), "series_id", "left_anti"
-                )
-                fact_files = self._stage_and_move(
+            # The chunks each fact table rewrites: all of them for a full
+            # delete (the identity goes from every table — GDPR: exemplar
+            # labels carry trace ids tied to the series), those
+            # overlapping [lo, hi] for a bounded one.
+            rewrite = {}
+            for table in FACT_TABLES:
+                keys = [
+                    key
+                    for key in man.get(table, {})
+                    if not bounded
+                    or (
+                        int(key) * self.chunk_size_ms <= hi
+                        and (int(key) + 1) * self.chunk_size_ms - 1 >= lo
+                    )
+                ]
+                if keys:
+                    rewrite[table] = keys
+            if bounded and not rewrite:
+                return n
+            hint = self._dim_hint(sel, man["series"])
+            facts = {}
+            for table, keys in rewrite.items():
+                src = self._facts(table, man)
+                if bounded:
+                    kept = (
+                        src.filter(F.col("chunk_id").isin([int(k) for k in keys]))
+                        .join(hint.withColumn("__m", F.lit(True)), "series_id", "left")
+                        .filter(
+                            ~(
+                                F.coalesce(F.col("__m"), F.lit(False))
+                                & F.col("timestamp").between(lo, hi)
+                            )
+                        )
+                        .drop("__m")
+                    )
+                else:
+                    kept = src.join(hint, "series_id", "left_anti")
+                facts[table] = self._stage_and_move(
                     kept.repartition("chunk_id").sortWithinPartitions(
                         "series_id", "timestamp"
                     ),
-                    self.samples_path,
+                    os.path.join(self.path, table),
                     partition_by="chunk_id",
                 )
-                # the deleted identity's exemplars go with it (GDPR:
-                # exemplar labels carry trace ids tied to the series)
-                ex_files: dict[str, list[str]] | None = None
-                if self._load_manifest().get("exemplars"):
-                    kept_ex = self.exemplars().join(
-                        self._dim_hint(sel), "series_id", "left_anti"
-                    )
-                    ex_files = self._stage_and_move(
-                        kept_ex.repartition("chunk_id").sortWithinPartitions(
-                            "series_id", "timestamp"
-                        ),
-                        self.exemplars_path,
-                        partition_by="chunk_id",
-                    )
-                kept_dim = self.series().join(sel, "series_id", "left_anti")
+            dim_files = None
+            post_files: dict[str, list[str]] = {}
+            post_stats: dict = {}
+            if not bounded:
+                kept_dim = self._dim(man).join(sel, "series_id", "left_anti")
                 dim_files = self._stage_and_move(
                     kept_dim.sortWithinPartitions("series_id"),
                     self.series_path,
@@ -2111,107 +2069,32 @@ class MonolithDB:
                 # go stale here of all places — rebuild its postings from
                 # the kept dim and swap them in the SAME commit, keeping
                 # the serving path index-backed across deletes.
-                cur0 = self._read_current()
-                idx0 = (cur0 or {}).get("label_index")
-                post_files: dict[str, list[str]] = {}
-                post_stats: dict = {}
-                if idx0 and idx0["series"] == cur0["series"]:
-                    kept_postings = self._postings_of(
-                        kept_dim, idx0["n_buckets"]
+                if self._index_fresh(man):
+                    post_files, post_stats = self._stage_postings(
+                        kept_dim, man["label_index"]["n_buckets"]
                     )
-                    post_files = self._stage_and_move(
-                        kept_postings,
-                        self.index_path,
-                        partition_by="kp",
-                        options=self._INDEX_WRITE_OPTS,
-                    )
-                    post_stats = self._posting_stats(kept_postings)
 
-                def swap(m: dict) -> None:
-                    idx = m.get("label_index")
-                    refresh = post_files and idx and idx["series"] == m["series"]
-                    m["samples"] = fact_files
-                    m["series"] = dim_files
-                    if ex_files is not None:
-                        m["exemplars"] = ex_files
-                    if refresh:
-                        idx["buckets"] = post_files
-                        idx["key_stats"] = post_stats
-                        idx["series"] = dim_files
-                    elif idx is not None and idx["series"] != m["series"]:
-                        # stale (or raced) index: drop the entry so its
-                        # files stop being pinned by future snapshots.
-                        del m["label_index"]
+            def swap(m: dict) -> None:
+                for table, keys in rewrite.items():
+                    chunks = m.setdefault(table, {})
+                    for key in keys:
+                        chunks.pop(key, None)
+                    chunks.update(facts[table])
+                if dim_files is None:
+                    return
+                refresh = post_files and self._index_fresh(m)
+                m["series"] = dim_files
+                if refresh:
+                    idx = m["label_index"]
+                    idx["buckets"] = post_files
+                    idx["key_stats"] = post_stats
+                    idx["series"] = dim_files
+                elif "label_index" in m and not self._index_fresh(m):
+                    # stale (or raced) index: drop the entry so its
+                    # files stop being pinned by future snapshots.
+                    del m["label_index"]
 
-                self._commit(swap, op="delete")
-                return n
-            man = self._load_manifest()
-
-            def _overlapping(chunks: dict) -> list[str]:
-                return [
-                    k
-                    for k in chunks
-                    if int(k) * self.chunk_size_ms <= hi
-                    and (int(k) + 1) * self.chunk_size_ms - 1 >= lo
-                ]
-
-            overlapping = _overlapping(man["samples"])
-            ex_overlapping = _overlapping(man.get("exemplars", {}))
-            if not overlapping and not ex_overlapping:
-                return n
-            marked = self._dim_hint(sel).withColumn("__m", F.lit(True))
-
-            def _kept(src):
-                return (
-                    src.join(marked, "series_id", "left")
-                    .filter(
-                        ~(
-                            F.coalesce(F.col("__m"), F.lit(False))
-                            & F.col("timestamp").between(lo, hi)
-                        )
-                    )
-                    .drop("__m")
-                )
-
-            fact_files: dict[str, list[str]] = {}
-            if overlapping:
-                src = self.samples().filter(
-                    F.col("chunk_id").isin([int(k) for k in overlapping])
-                )
-                fact_files = self._stage_and_move(
-                    _kept(src).repartition("chunk_id").sortWithinPartitions(
-                        "series_id", "timestamp"
-                    ),
-                    self.samples_path,
-                    partition_by="chunk_id",
-                )
-            ex_fact_files: dict[str, list[str]] = {}
-            if ex_overlapping:
-                ex_src = self.exemplars().filter(
-                    F.col("chunk_id").isin([int(k) for k in ex_overlapping])
-                )
-                ex_fact_files = self._stage_and_move(
-                    _kept(ex_src).repartition("chunk_id").sortWithinPartitions(
-                        "series_id", "timestamp"
-                    ),
-                    self.exemplars_path,
-                    partition_by="chunk_id",
-                )
-
-            def swap_bounded(m: dict) -> None:
-                for k in overlapping:
-                    m["samples"].pop(k, None)
-                for k, files in fact_files.items():
-                    m["samples"][k] = files
-                ex = m.setdefault("exemplars", {})
-                for k in ex_overlapping:
-                    ex.pop(k, None)
-                for k, files in ex_fact_files.items():
-                    ex[k] = files
-                if not ex:
-                    m.pop("exemplars", None)
-
-            self._commit(swap_bounded, op="delete")
+            self._commit(swap, op="delete")
             return n
         finally:
             sel.unpersist()
@@ -2227,8 +2110,10 @@ class MonolithDB:
         man = self._load_manifest()
         for key in sorted(man["samples"], key=int):
             cid = int(key)
-            d = os.path.join(self.samples_path, f"chunk_id={cid}")
-            files = [os.path.join(d, f) for f in man["samples"][key]]
+            files = [
+                os.path.join(self.path, p)
+                for p in self._fact_paths(man, "samples", [key])
+            ]
             nbytes = 0
             for f in files:
                 try:

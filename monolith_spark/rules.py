@@ -40,7 +40,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from monolith_spark import promql
@@ -114,14 +114,19 @@ def _validate(rules: list[RecordingRule]) -> None:
                 )
 
 
+def _labels_without(keys) -> Column:
+    """The ``labels`` map without the entries whose key is in ``keys``.
+    The keys are listed sorted, so the plan text is the same in every
+    process (a set's iteration order changes with the string hash
+    seed)."""
+    drop = F.array(*[F.lit(k) for k in sorted(keys)])
+    return F.map_filter(F.col("labels"), lambda k, _: ~F.array_contains(drop, k))
+
+
 def _relabel(out: DataFrame, rule: RecordingRule) -> DataFrame:
     """[signature, labels, t_ms, value] → [labels, timestamp, value]
     with __name__ set to the rule name and static labels overlaid."""
-    drop = {"__name__", *rule.labels}
-    kept = F.map_filter(
-        F.col("labels"),
-        lambda k, _: ~F.array_contains(F.array(*[F.lit(d) for d in drop]), k),
-    )
+    kept = _labels_without({"__name__", *rule.labels})
     pairs: list = [F.lit("__name__"), F.lit(rule.record)]
     for k, v in sorted(rule.labels.items()):
         pairs.extend([F.lit(k), F.lit(v)])
@@ -370,12 +375,8 @@ def evaluate_alerting_rules(
                         F.lit("firing").alias("__st"))
             )
             states = states.unionByName(carried)
-        drop = {"__name__", "alertname", "alertstate", *rule.labels}
-        kept = F.map_filter(
-            F.col("labels"),
-            lambda k, _: ~F.array_contains(
-                F.array(*[F.lit(d) for d in drop]), k),
-        )
+        kept = _labels_without(
+            {"__name__", "alertname", "alertstate", *rule.labels})
         pairs: list = [F.lit("alertname"), F.lit(rule.alert),
                        F.lit("alertstate"), F.col("__st")]
         for k, v in sorted(rule.labels.items()):

@@ -184,7 +184,8 @@ def _evaluate_hinted(db: MonolithDB, matchers, q: proto.Query) -> list[proto.Tim
     rows = (
         # J6 hydration reuses the engine's size-gated dim hint — a
         # forced broadcast here would ship an unbounded dim at scale.
-        ds.join(db._dim_hint(db.series().select("series_id", "labels")), "series_id")
+        ds.join(db._dim_hint(db.series().select("series_id", "labels"),
+                             db._load_manifest()["series"]), "series_id")
         .orderBy("signature", "bucket_ms")
         .collect()
     )
@@ -468,7 +469,7 @@ def tsdb_status(db: MonolithDB, limit: int = 10) -> dict:
     idx = man.get("label_index")
     label_index = {
         "present": idx is not None,
-        "fresh": bool(idx) and idx["series"] == man["series"],
+        "fresh": db._index_fresh(man),
         "nBuckets": idx["n_buckets"] if idx else 0,
         "numFiles": sum(len(fl) for fl in idx["buckets"].values()) if idx else 0,
     }

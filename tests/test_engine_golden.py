@@ -1179,6 +1179,20 @@ def test_exemplars_follow_retention_and_delete(spark, tmp_path):
     # time travel: the pre-maintenance snapshot still serves them all
     assert traces(at_version=v0) == ["t1", "t2", "t3", "t9"]
 
+    # tiered retention drops expired exemplar chunks too, those whose
+    # chunk holds no samples (t6) included
+    db.write(spark.createDataFrame([({"j": "b"}, 31_000, 1.0)], SAMPLES_SCHEMA))
+    db.write_exemplars(spark.createDataFrame(
+        [({"j": "b"}, 31_000, 1.0, {"trace_id": "t4"}),
+         ({"j": "b"}, 41_000, 2.0, {"trace_id": "t5"}),
+         ({"j": "b"}, 5_000, 3.0, {"trace_id": "t6"})],
+        "labels map<string,string>, timestamp long, value double, "
+        "exemplar_labels map<string,string>"))
+    assert traces() == ["t4", "t5", "t6"]
+    # one sample chunk rolled; chunks 0 and 3 dropped
+    assert db.downsample_retention(cutoff_ms=40_000, step_ms=5_000) == (1, 2)
+    assert traces() == ["t5"]
+
 
 def test_compact_exemplar_chunk_merges_files_preserves_results(
     spark, tmp_path
@@ -1198,10 +1212,14 @@ def test_compact_exemplar_chunk_merges_files_preserves_results(
             schema))
     files_before = db._load_manifest()["exemplars"]["0"]
     assert len(files_before) >= 3
-    before = sorted(
-        (r["timestamp"], r["value"], dict(r["exemplar_labels"])["trace_id"])
-        for r in db.query_exemplars({"m": "a"}, 0, 100_000).collect()
-    )
+
+    def rows():
+        return sorted(
+            (r["timestamp"], r["value"], dict(r["exemplar_labels"])["trace_id"])
+            for r in db.query_exemplars({"m": "a"}, 0, 100_000).collect()
+        )
+
+    before = rows()
 
     assert db.compact() >= 1  # sweeps exemplar chunks too
     files_after = db._load_manifest()["exemplars"]["0"]
@@ -1211,9 +1229,9 @@ def test_compact_exemplar_chunk_merges_files_preserves_results(
     assert sorted(
         f for f in os.listdir(part) if f.endswith(".parquet")
     ) == sorted(files_after)
-    after = sorted(
-        (r["timestamp"], r["value"], dict(r["exemplar_labels"])["trace_id"])
-        for r in db.query_exemplars({"m": "a"}, 0, 100_000).collect()
-    )
-    assert after == before
-    assert db.compact_exemplar_chunk(99) is False
+    assert rows() == before
+    assert db.compact_chunk(99, table="exemplars") is False
+
+    # a z-order rewrite of the exemplar chunk serves the same rows
+    assert db.compact_chunk(0, layout="zorder", table="exemplars") is True
+    assert rows() == before

@@ -157,6 +157,9 @@ def test_delete_series_rebuilds_postings_in_same_commit(spark, tmp_path):
     assert _rowset(db.query_flat({"job": "j2"}, LO, HI)) == _rowset(
         plain.query_flat({"job": "j2"}, LO, HI)
     )
+    # the planner stats the delete derived are a fresh build's
+    ks = man["label_index"]["key_stats"]
+    assert db.build_label_index()["label_index"]["key_stats"] == ks
 
 
 def test_delete_without_index_never_creates_one(spark, tmp_path):

@@ -308,6 +308,25 @@ def test_static_label_overrides_result_label(spark):
     assert out and all(r["labels"]["kb"] == "all" for r in out)
 
 
+def test_label_drop_lists_keys_sorted(spark):
+    """The label-drop array a rule's relabel builds lists its keys
+    sorted, so the plan text is the same in every process (a Python
+    set's order follows the string hash seed)."""
+    from monolith_spark.rules import _labels_without, _relabel
+
+    keys = ["zeta", "mu", "beta", "alpha", "kappa"]
+    want = sorted(["__name__", *keys])
+    assert "array(" + ", ".join(f"'{k}'" for k in want) + ")" in str(
+        _labels_without(set(["__name__", *keys]))
+    )
+    out = spark.createDataFrame(
+        [], "signature string, labels map<string,string>, t_ms long, value double"
+    )
+    rule = RecordingRule("r:x", "up", labels={k: "v" for k in keys})
+    plan = _relabel(out, rule)._jdf.queryExecution().analyzed().toString()
+    assert "array(" + ", ".join(want) + ")" in plan
+
+
 def test_alerting_rules_backfill(spark, tmp_path):
     """ALERTS historical backfill (r9 — the thing Prometheus cannot
     do: its ALERTS exist only from rule deployment): pending→firing

@@ -122,6 +122,12 @@ def _partition_files(
     ]
 
 
+def _rollup_base(step_ms) -> str:
+    """The rollup tier of one step, relative to the db root — its
+    files sit under ``chunk_id=N/`` like a fact table's."""
+    return os.path.join("rollups", f"step_ms={step_ms}")
+
+
 def _fsync_dir(path: str) -> None:
     """Make the renames into ``path`` durable: a rename is a change to
     the directory, so it survives a power loss only once the directory
@@ -461,10 +467,13 @@ class MonolithDB:
     @classmethod
     def _manifest_files(cls, man: dict):
         """Every data file snapshot ``man`` references, relative to the
-        db root: the dim, each fact table's chunks, the label index."""
+        db root: the dim, each fact table's chunks, each rollup tier's
+        chunks, the label index."""
         yield from (os.path.join("series", fn) for fn in man["series"])
         for table in FACT_TABLES:
             yield from cls._fact_paths(man, table)
+        for step_ms, parts in man.get("rollups", {}).items():
+            yield from _partition_files(_rollup_base(step_ms), "chunk_id", parts)
         idx = man.get("label_index")
         if idx:
             yield from _partition_files("label_index", "kp", idx["buckets"])
@@ -568,7 +577,9 @@ class MonolithDB:
                     referenced.update(
                         os.path.join(self.path, p) for p in self._manifest_files(m)
                     )
-            tables = [os.path.join(self.path, t) for t in FACT_TABLES]
+            tables = [
+                os.path.join(self.path, t) for t in (*FACT_TABLES, "rollups")
+            ]
             for base in (self.series_path, self.index_path, *tables):
                 if not os.path.isdir(base):
                     continue
@@ -1761,10 +1772,13 @@ class MonolithDB:
             for table in FACT_TABLES
         }
 
-    def _drop_chunks(self, expired: dict[str, list[str]], op: str) -> int:
+    def _drop_chunks(
+        self, expired: dict[str, list[str]], op: str, also=None
+    ) -> int:
         """Drop the ``expired`` chunks ({table: keys}, _expired_chunks)
-        in one manifest commit (none when there are none). Returns the
-        number of distinct chunk time-buckets dropped over all tables."""
+        in one manifest commit (none when there are none), which also
+        applies ``also(manifest)`` when given. Returns the number of
+        distinct chunk time-buckets dropped over all tables."""
         buckets = {int(key) for keys in expired.values() for key in keys}
         if not buckets:
             return 0
@@ -1773,6 +1787,8 @@ class MonolithDB:
             for table, keys in expired.items():
                 for key in keys:
                     m.get(table, {}).pop(key, None)
+            if also is not None:
+                also(m)
 
         self._commit(drop, op=op)
         return len(buckets)
@@ -1818,7 +1834,7 @@ class MonolithDB:
         )
 
     def _rollup_dir(self, step_ms: int) -> str:
-        return os.path.join(self.path, "rollups", f"step_ms={step_ms}")
+        return os.path.join(self.path, _rollup_base(step_ms))
 
     def downsample_retention(
         self, cutoff_ms: int, step_ms: int
@@ -1827,24 +1843,23 @@ class MonolithDB:
         downsampling story — keep raw data hot, keep only step-grain
         aggregates beyond the horizon): ONE filtered scan of every
         chunk whose range ends before ``cutoff_ms`` → one grouped
-        rollup keyed by (chunk_id, series, bucket) → one
-        dynamic-partition-overwrite write into
-        ``rollups/step_ms=<s>/chunk_id=<cid>`` — then delete the raw
-        partitions. Job count is O(1) per pass, independent of the
-        number of expired chunks (a years-deep backlog of 2-day chunks
-        is one Spark job, not thousands of serialized read→write
-        jobs); dynamic overwrite replaces exactly the partitions
-        present in this pass's data, so replays are idempotent and
-        previously rolled chunks are never touched. Grouping includes
-        chunk_id, so a step bucket straddling a chunk boundary stays a
-        per-chunk PARTIAL in its own partition — query_downsampled
-        re-merges partials (every stored stat is mergeable). A crash
-        between rollup write and the manifest commit leaves BOTH tiers
-        for a chunk; query_downsampled prefers the rollup for any
-        rolled chunk, so the window never double-counts, and a retried
-        pass converges (the re-roll dynamic-overwrites identical
-        partitions, then the commit drops the raw chunks). Raw files
-        are reclaimed by ``vacuum``. Lossy by design — raw points are
+        rollup keyed by (chunk_id, series, bucket) → one staged write
+        moved into ``rollups/step_ms=<s>/chunk_id=<cid>`` — then ONE
+        manifest commit that lists the new rollup files under
+        ``rollups[<s>][<cid>]`` and drops the raw chunks. Job count is
+        O(1) per pass, independent of the number of expired chunks (a
+        years-deep backlog of 2-day chunks is one Spark job, not
+        thousands of serialized read→write jobs). Rollup files are
+        manifest-listed like fact files, so snapshot and vacuum (with
+        every retained version) cover them, and a later pass over the same chunk (a late
+        write after the first) APPENDS a partial beside the earlier
+        ones rather than replacing them. Grouping includes chunk_id, so
+        a step bucket straddling a chunk boundary stays a per-chunk
+        PARTIAL in its own partition — query_downsampled re-merges
+        partials (every stored stat is mergeable). A crash before the
+        commit leaves only unreferenced files (invisible, reclaimed by
+        ``vacuum``); a retried pass converges. Raw files are reclaimed
+        by ``vacuum``. Lossy by design — raw points are
         gone; use export_chunk_gorilla for the lossless cold archive.
         Expired exemplar chunks are dropped in the same commit, as
         drop_chunks_before drops them. Returns (chunks_rolled,
@@ -1853,32 +1868,33 @@ class MonolithDB:
         """
         expired = self._expired_chunks(cutoff_ms)
         rolled = expired["samples"]
+        staged: dict[str, list[str]] = {}
         if rolled:
             raw = self.samples().filter(
                 F.col("chunk_id").isin([int(k) for k in rolled])
             )
-            (
+            staged = self._stage_and_move(
                 self._rollup(raw, step_ms, extra_keys=("chunk_id",))
-                .repartition("chunk_id")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("chunk_id")
-                .parquet(self._rollup_dir(step_ms))
+                .repartition("chunk_id"),
+                self._rollup_dir(step_ms),
+                partition_by="chunk_id",
             )
-        return (len(rolled), self._drop_chunks(expired, "retention-tier"))
+
+        def add_rollups(m: dict) -> None:
+            tier = m.setdefault("rollups", {}).setdefault(str(step_ms), {})
+            for cid, files in staged.items():
+                tier.setdefault(cid, []).extend(files)
+
+        return (
+            len(rolled),
+            self._drop_chunks(
+                expired, "retention-tier", add_rollups if staged else None),
+        )
 
     def _rolled_chunk_ids(self, step_ms: int) -> list[int]:
-        base = self._rollup_dir(step_ms)
-        if not os.path.isdir(base):
-            return []
-        out = []
-        for name in os.listdir(base):
-            if name.startswith("chunk_id="):
-                try:
-                    out.append(int(name.split("=", 1)[1]))
-                except ValueError:
-                    continue
-        return sorted(out)
+        """The chunks the current manifest lists a ``step_ms`` rollup for."""
+        tier = self._load_manifest().get("rollups", {}).get(str(step_ms), {})
+        return sorted(int(cid) for cid in tier)
 
     def query_downsampled(
         self,
@@ -1904,11 +1920,14 @@ class MonolithDB:
         arrives as per-chunk partials (one per rolled partition, plus
         possibly a raw-tier partial) — every stored stat is mergeable
         (sum/sum/min/max/struct-max), so the grouped merge
-        reconstructs the exact whole-bucket aggregate. Returns
+        reconstructs the exact whole-bucket aggregate. Both tiers are
+        the manifest's: every listed rollup file and every live raw
+        chunk, a late write into a rolled chunk included (its raw
+        partial merges with the rolled ones). Returns
         [series_id, bucket_ms, n_points, value] ordered within series
         time-ascending by the caller's choice."""
         man = self._load_manifest()
-        rolled = self._rolled_chunk_ids(step_ms)
+        rolled = man.get("rollups", {}).get(str(step_ms))
         lo = (start_ms // step_ms) * step_ms
         hi = (end_ms // step_ms + 1) * step_ms - 1  # end of end_ms's bucket
         parts = []
@@ -1920,8 +1939,13 @@ class MonolithDB:
             # [lo, hi]. Without this the rolled tier — which grows
             # unboundedly with retention age — scans every historical
             # rollup partition per query.
+            paths = [
+                os.path.join(self.path, p)
+                for p in _partition_files(_rollup_base(step_ms), "chunk_id", rolled)
+            ]
             ro = (
-                self.spark.read.parquet(self._rollup_dir(step_ms))
+                self.spark.read.option("basePath", self._rollup_dir(step_ms))
+                .parquet(*paths)
                 .filter(
                     chunk_pred(lo, hi, self.chunk_size_ms)
                     & (F.col("bucket_ms") >= lo)
@@ -1935,8 +1959,6 @@ class MonolithDB:
             & (F.col("timestamp") >= lo)
             & (F.col("timestamp") <= hi)
         )
-        if rolled:
-            raw = raw.filter(~F.col("chunk_id").isin(rolled))
         parts.append(self._rollup(raw, step_ms))
         tiers = parts[0]
         for p in parts[1:]:

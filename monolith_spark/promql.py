@@ -78,6 +78,8 @@ per-series dim (small by construction — one row per matched series).
 from __future__ import annotations
 
 import dataclasses
+import math
+import operator
 import re
 from dataclasses import dataclass
 from typing import Any
@@ -102,6 +104,8 @@ DEFAULT_LOOKBACK_MS = 300_000
 # shuffle unboundedly (Grafana's $__rate_interval ~ 4x step fits with
 # room to spare).
 RANGE_TILE_MAX_K = 16
+# the window-id key range evaluation adds to every shared operator
+_W = ("__w",)
 _DEC = "decimal(28,6)"
 
 # --------------------------------------------------------------------- AST
@@ -822,15 +826,30 @@ def eval_instant(
     ctx = _Ctx(samples, eval_ms, lookback_ms)
     kind, v = _eval(expr, ctx)
     if kind == "scalar":
-        spark = samples.sparkSession
-        return spark.range(1).select(
-            F.lit("").alias("signature"),
-            F.map_from_arrays(
-                F.array().cast("array<string>"), F.array().cast("array<string>")
-            ).alias("labels"),
-            F.lit(float(v)).cast("double").alias("value"),
-        )
+        return _unlabelled(
+            samples.sparkSession.range(1), F.lit(float(v)).cast("double"))
     return v
+
+
+def _unlabelled(df: DataFrame, value, *keys) -> DataFrame:
+    """One series with the empty label set per row of ``df`` — scalar
+    results, vector() and absence markers."""
+    return df.select(
+        F.lit("").alias("signature"),
+        F.map_from_arrays(
+            F.array().cast("array<string>"), F.array().cast("array<string>")
+        ).alias("labels"),
+        *keys,
+        value.alias("value"),
+    )
+
+
+def _absent_marker(vec: DataFrame) -> DataFrame:
+    """absent() in an instant query: one empty-labelled 1.0 when the
+    vector has no rows, else nothing."""
+    empty = vec.groupBy().agg(F.count("*").alias("__n")).filter(
+        F.col("__n") == 0)
+    return _unlabelled(empty, F.lit(1.0))
 
 
 def _eval(node, ctx: _Ctx):
@@ -844,7 +863,7 @@ def _eval(node, ctx: _Ctx):
             return (kind, v)
         if kind == "scalar":
             return ("scalar", -v)
-        return ("vector", v.withColumn("value", -F.col("value")))
+        return ("vector", _value_transform(v, "-"))
     if isinstance(node, Selector):
         if node.range_ms is not None:
             raise ValueError("range vector where an instant value is expected")
@@ -909,22 +928,36 @@ def _range_df(node: Selector, ctx: _Ctx) -> tuple[DataFrame, int, int]:
     return df, start, end
 
 
-def _instant_selector(node: Selector, ctx: _Ctx) -> DataFrame:
+def _instant_selector(
+    node: Selector, ctx: _Ctx, field: str = "value"
+) -> DataFrame:
     end = _anchor_ms(node, ctx) - node.offset_ms
     start = end - ctx.lookback_ms
     df = _base(
         node, ctx,
         (F.col("timestamp") >= start) & (F.col("timestamp") <= end),
     )
-    # struct-max gives the (ts desc, value desc) deterministic pick with
-    # map-side partials; labels ride separately (maps aren't orderable)
+    return _last_point(df, field)
+
+
+def _last_point(
+    df: DataFrame, field: str, extra_keys: tuple[str, ...] = ()
+) -> DataFrame:
+    """Each series' newest point (per window in range mode): its value,
+    or with ``field="timestamp"`` its own timestamp in seconds — the
+    instant selector and timestamp(). struct-max gives the (ts desc,
+    value desc) deterministic pick with map-side partials; labels ride
+    separately (maps aren't orderable)."""
+    top = F.col(f"__top.{field}")
+    if field == "timestamp":
+        top = (top / F.lit(1000.0)).cast("double")
     return (
-        df.groupBy("signature")
+        df.groupBy("signature", *extra_keys)
         .agg(
             F.max(F.struct("timestamp", "value")).alias("__top"),
             F.first("labels").alias("labels"),
         )
-        .select("signature", "labels", F.col("__top.value").alias("value"))
+        .select("signature", "labels", *extra_keys, top.alias("value"))
     )
 
 
@@ -1176,6 +1209,73 @@ _DATE_FUNCS = frozenset(
      "month", "year")
 )
 
+# row-wise value functions: vector in args[0], further args scalar
+_VALUE_FUNCS = frozenset(
+    (*_MATH_FUNCS, *_DATE_FUNCS, "sgn", "round", "clamp", "clamp_min",
+     "clamp_max")
+)
+
+
+def _value_transform(vec: DataFrame, f: str, args=()) -> DataFrame:
+    """A row-wise value function over a vector of either mode: unary
+    minus ("-") or one of _VALUE_FUNCS, with ``args`` its scalar
+    parameters already resolved to floats. Labels and keys pass
+    through untouched."""
+    v = F.col("value")
+    if f == "-":
+        expr = -v
+    elif f in _MATH_FUNCS:
+        expr = _MATH_FUNCS[f](v)
+    elif f in _DATE_FUNCS:
+        expr = _date_exprs()[f]
+    elif f == "sgn":
+        expr = F.signum(v)
+    elif f == "round":
+        # Prometheus: nearest multiple of `to`, ties round UP
+        to = args[0] if args else 1.0
+        expr = F.floor(v / F.lit(to) + F.lit(0.5)) * F.lit(to)
+    elif f == "clamp":
+        expr = F.least(F.greatest(v, F.lit(args[0])), F.lit(args[1]))
+    elif f == "clamp_min":
+        expr = F.greatest(v, F.lit(args[0]))
+    else:  # clamp_max
+        expr = F.least(v, F.lit(args[0]))
+    return vec.withColumn("value", expr.cast("double"))
+
+
+def _sort_operand(node: Call):
+    """The vector argument of a sort-family call. DataFrames are
+    unordered sets and Prometheus defines sorting only for API
+    presentation, so the vector passes through unchanged in both modes —
+    the serving layer orders the collected rows (sort_by_label* by the
+    label list it reads off the AST)."""
+    f = node.func
+    if f.startswith("sort_by_label"):
+        if len(node.args) < 2:
+            raise ValueError(f"{f}() expects a vector and >=1 label name")
+        for a in node.args[1:]:
+            if not isinstance(a, StringLit):
+                raise ValueError(f"{f}() label names must be strings")
+    if not node.args:
+        raise ValueError(f"{f}() expects an instant vector")
+    return node.args[0]
+
+
+def _info_selector(node: Call) -> Selector:
+    """The info metric an info() call enriches from: the optional second
+    argument (an instant selector, named target_info unless it names a
+    metric), else every target_info series."""
+    if len(node.args) < 2:
+        return Selector("target_info", ())
+    isel = node.args[1]
+    if not isinstance(isel, Selector) or isel.range_ms is not None:
+        raise ValueError("info() second argument must be an instant selector")
+    if isel.name is None and not any(
+        m.name == "__name__" for m in isel.matchers
+    ):
+        isel = dataclasses.replace(isel, name="target_info")
+    return isel
+
 
 def _scalar_arg(node, ctx, func: str) -> float:
     kind, v = _eval(node, ctx)
@@ -1184,174 +1284,77 @@ def _scalar_arg(node, ctx, func: str) -> float:
     return float(v)
 
 
+def _eval_vector(node, ctx: _Ctx, func: str) -> DataFrame:
+    kind, v = _eval(node, ctx)
+    if kind != "vector":
+        raise ValueError(f"{func}() expects an instant vector")
+    return v
+
+
 def _eval_call(node: Call, ctx: _Ctx):
     f = node.func
     if f in _RANGE_FUNCS:
         return ("vector", _eval_range_func(node, ctx))
     if f == "pi":
-        import math
-
         return ("scalar", math.pi)
-    if f in ("sort", "sort_desc"):
-        # DataFrames are unordered sets; Prometheus defines sort() only
-        # for instant-API presentation. Vector identity here — a
-        # serving layer orders the collected rows.
-        kind, v = _eval(node.args[0], ctx)
-        if kind != "vector":
-            raise ValueError(f"{f}() expects an instant vector")
-        return ("vector", v)
-    if f in ("sort_by_label", "sort_by_label_desc"):
-        # Prometheus 3.x experimental: order by the named labels'
-        # values. Ordering is API presentation only (the serving layer
-        # reads the label list off the AST); the vector is unchanged.
-        if len(node.args) < 2:
-            raise ValueError(f"{f}() expects a vector and >=1 label name")
-        for a in node.args[1:]:
-            if not isinstance(a, StringLit):
-                raise ValueError(f"{f}() label names must be strings")
-        kind, v = _eval(node.args[0], ctx)
-        if kind != "vector":
-            raise ValueError(f"{f}() expects an instant vector")
-        return ("vector", v)
-    if f in _MATH_FUNCS:
-        (kind, v) = _eval(node.args[0], ctx)
-        if kind == "scalar":
-            import math
+    if f in ("sort", "sort_desc", "sort_by_label", "sort_by_label_desc"):
+        return ("vector", _eval_vector(_sort_operand(node), ctx, f))
+    if f in _DATE_FUNCS and not node.args:
+        # zero-arg form: the query evaluation time
+        import datetime as _dt
 
+        t = _dt.datetime.fromtimestamp(
+            ctx.eval_ms / 1000.0, tz=_dt.timezone.utc
+        )
+        vals = {
+            "minute": t.minute, "hour": t.hour,
+            "day_of_week": (t.weekday() + 1) % 7,  # 0 = Sunday
+            "day_of_month": t.day,
+            "days_in_month": (
+                (t.replace(day=28) + _dt.timedelta(days=4)).replace(day=1)
+                - _dt.timedelta(days=1)
+            ).day,
+            "month": t.month, "year": t.year,
+        }
+        return ("scalar", float(vals[f]))
+    if f in _VALUE_FUNCS:
+        kind, v = _eval(node.args[0], ctx)
+        if kind == "scalar" and (f in _MATH_FUNCS or f == "sgn"):
             py = {"abs": abs, "ceil": math.ceil, "floor": math.floor,
                   "exp": math.exp, "ln": math.log, "log2": math.log2,
                   "log10": math.log10, "sqrt": math.sqrt,
                   "sin": math.sin, "cos": math.cos, "tan": math.tan,
                   "asin": math.asin, "acos": math.acos, "atan": math.atan,
                   "sinh": math.sinh, "cosh": math.cosh, "tanh": math.tanh,
-                  "deg": math.degrees, "rad": math.radians}[f]
+                  "deg": math.degrees, "rad": math.radians,
+                  "sgn": lambda x: (x > 0) - (x < 0)}[f]
             return ("scalar", float(py(v)))
-        fn = _MATH_FUNCS[f]
-        return ("vector", v.withColumn("value", fn(F.col("value")).cast("double")))
-    if f in _DATE_FUNCS:
-        if not node.args:  # zero-arg form: the query evaluation time
-            import datetime as _dt
-
-            t = _dt.datetime.fromtimestamp(
-                ctx.eval_ms / 1000.0, tz=_dt.timezone.utc
-            )
-            vals = {
-                "minute": t.minute, "hour": t.hour,
-                "day_of_week": (t.weekday() + 1) % 7,  # 0 = Sunday
-                "day_of_month": t.day,
-                "days_in_month": (
-                    (t.replace(day=28) + _dt.timedelta(days=4)).replace(day=1)
-                    - _dt.timedelta(days=1)
-                ).day,
-                "month": t.month, "year": t.year,
-            }
-            return ("scalar", float(vals[f]))
-        (kind, v) = _eval(node.args[0], ctx)
         if kind != "vector":
             raise ValueError(f"{f}() expects an instant vector")
-        expr = _date_exprs()[f]
-        return ("vector", v.withColumn("value", expr.cast("double")))
+        args = [_scalar_arg(a, ctx, f) for a in node.args[1:]]
+        return ("vector", _value_transform(v, f, args))
     if f == "timestamp":
         # the sample timestamp of each series' point; instant selectors
         # evaluate to their latest point, whose ts the struct-max keeps
         arg = node.args[0] if node.args else None
         if not (isinstance(arg, Selector) and arg.range_ms is None):
             raise ValueError("timestamp() expects an instant selector")
-        end = _anchor_ms(arg, ctx) - arg.offset_ms
-        start = end - ctx.lookback_ms
-        df = _base(
-            arg, ctx,
-            (F.col("timestamp") >= start) & (F.col("timestamp") <= end),
-        )
-        out = (
-            df.groupBy("signature")
-            .agg(
-                F.max(F.struct("timestamp", "value")).alias("__top"),
-                F.first("labels").alias("labels"),
-            )
-            .select(
-                "signature", "labels",
-                (F.col("__top.timestamp") / F.lit(1000.0))
-                .cast("double").alias("value"),
-            )
-        )
-        return ("vector", out)
-    if f == "round":
-        (kind, v) = _eval(node.args[0], ctx)
-        to = _scalar_arg(node.args[1], ctx, f) if len(node.args) > 1 else 1.0
-        # Prometheus: nearest multiple of `to`, ties round UP
-        expr = F.floor(F.col("value") / F.lit(to) + F.lit(0.5)) * F.lit(to)
-        return ("vector", v.withColumn("value", expr.cast("double")))
-    if f in ("clamp", "clamp_min", "clamp_max"):
-        (kind, v) = _eval(node.args[0], ctx)
-        if f == "clamp":
-            lo = _scalar_arg(node.args[1], ctx, f)
-            hi = _scalar_arg(node.args[2], ctx, f)
-            expr = F.least(F.greatest(F.col("value"), F.lit(lo)), F.lit(hi))
-        elif f == "clamp_min":
-            expr = F.greatest(F.col("value"), F.lit(_scalar_arg(node.args[1], ctx, f)))
-        else:
-            expr = F.least(F.col("value"), F.lit(_scalar_arg(node.args[1], ctx, f)))
-        return ("vector", v.withColumn("value", expr.cast("double")))
+        return ("vector", _instant_selector(arg, ctx, "timestamp"))
     if f == "absent_over_time":
         arg = node.args[0] if node.args else None
         if not (isinstance(arg, Selector) and arg.range_ms is not None):
             raise ValueError("absent_over_time() takes a range selector")
         df, _, _ = _range_df(arg, ctx)
-        marker = (
-            df.groupBy()
-            .agg(F.count("*").alias("__n"))
-            .filter(F.col("__n") == 0)
-            .select(
-                F.lit("").alias("signature"),
-                F.map_from_arrays(
-                    F.array().cast("array<string>"),
-                    F.array().cast("array<string>"),
-                ).alias("labels"),
-                F.lit(1.0).alias("value"),
-            )
-        )
-        return ("vector", marker)
+        return ("vector", _absent_marker(df))
     if f == "absent":
         kind, v = _eval(node.args[0], ctx)
-        marker = (
-            v.groupBy()
-            .agg(F.count("*").alias("__n"))
-            .filter(F.col("__n") == 0)
-            .select(
-                F.lit("").alias("signature"),
-                F.map_from_arrays(
-                    F.array().cast("array<string>"),
-                    F.array().cast("array<string>"),
-                ).alias("labels"),
-                F.lit(1.0).alias("value"),
-            )
-        )
-        return ("vector", marker)
-    if f == "sgn":
-        kind, v = _eval(node.args[0], ctx)
-        if kind == "scalar":
-            return ("scalar", float((v > 0) - (v < 0)))
-        return (
-            "vector",
-            v.withColumn("value", F.signum(F.col("value")).cast("double")),
-        )
+        return ("vector", _absent_marker(v))
     if f == "time":
         return ("scalar", ctx.eval_ms / 1000.0)
     if f == "vector":
         s = _scalar_arg(node.args[0], ctx, f)
-        spark = ctx.samples.sparkSession
-        return (
-            "vector",
-            spark.range(1).select(
-                F.lit("").alias("signature"),
-                F.map_from_arrays(
-                    F.array().cast("array<string>"),
-                    F.array().cast("array<string>"),
-                ).alias("labels"),
-                F.lit(float(s)).cast("double").alias("value"),
-            ),
-        )
+        return ("vector", _unlabelled(ctx.samples.sparkSession.range(1),
+                                      F.lit(float(s)).cast("double")))
     if f == "scalar":
         # Prometheus scalar(): the single series' value, NaN otherwise.
         # The operand is a series-grain vector, so the driver-side
@@ -1362,10 +1365,9 @@ def _eval_call(node: Call, ctx: _Ctx):
         rows = v.select("value").limit(2).collect()
         return ("scalar", float(rows[0]["value"]) if len(rows) == 1
                 else float("nan"))
-    if f == "label_replace":
-        return ("vector", _label_replace(node, ctx))
-    if f == "label_join":
-        return ("vector", _label_join(node, ctx))
+    if f in ("label_replace", "label_join"):
+        v = _eval_vector(node.args[0], ctx, f)
+        return ("vector", _relabel(v, node))
     if f == "info":
         # Prometheus 3.x experimental info(): enrich every series with
         # the DATA labels of the info metric (default target_info —
@@ -1377,23 +1379,8 @@ def _eval_call(node: Call, ctx: _Ctx):
         # identity raises at execution (the many-to-one guard); the
         # series' own labels win on collision. One series-grain join —
         # the info side is a latest-per-series instant selection.
-        import dataclasses
-
-        kind, v = _eval(node.args[0], ctx)
-        if kind != "vector":
-            raise ValueError("info() expects an instant vector")
-        if len(node.args) > 1:
-            isel = node.args[1]
-            if not isinstance(isel, Selector) or isel.range_ms is not None:
-                raise ValueError(
-                    "info() second argument must be an instant selector")
-            if isel.name is None and not any(
-                m.name == "__name__" for m in isel.matchers
-            ):
-                isel = dataclasses.replace(isel, name="target_info")
-        else:
-            isel = Selector("target_info", ())
-        return ("vector", _info_enrich(v, isel, ctx))
+        v = _eval_vector(node.args[0], ctx, f)
+        return ("vector", _info_enrich(v, _info_selector(node), ctx))
     if f == "histogram_quantile":
         phi = _scalar_arg(node.args[0], ctx, f)
         kind, v = _eval(node.args[1], ctx)
@@ -1568,12 +1555,16 @@ def _eval_subquery_func(
 # -- label manipulation ---------------------------------------------------
 
 
-def _resign(df: DataFrame, new_labels) -> DataFrame:
-    return df.select(
-        new_labels.alias("labels"), "value"
-    ).withColumn("signature", signature_expr("labels")).select(
-        "signature", "labels", "value"
-    )
+def _vec_cols(extra_keys: tuple[str, ...] = ()) -> list[str]:
+    """A vector's columns: one row per series (per window in range
+    mode, whose window id rides in ``extra_keys``)."""
+    return ["signature", "labels", *extra_keys, "value"]
+
+
+def _resign(df: DataFrame, extra_keys: tuple[str, ...] = ()) -> DataFrame:
+    """Re-derive the signature of a vector whose labels were rewritten."""
+    return df.withColumn("signature", signature_expr("labels")).select(
+        *_vec_cols(extra_keys))
 
 
 def _map_set(labels, key: str, value) -> Any:
@@ -1581,7 +1572,7 @@ def _map_set(labels, key: str, value) -> Any:
     return F.map_concat(cleaned, F.create_map(F.lit(key), value))
 
 
-def _str_args(args, ctx, func, n) -> list[str]:
+def _str_args(args, func, n) -> list[str]:
     out = []
     for a in args:
         if not isinstance(a, StringLit):
@@ -1593,8 +1584,7 @@ def _str_args(args, ctx, func, n) -> list[str]:
 
 
 def _label_replace_expr(dst: str, repl: str, src: str, regex: str):
-    """The label_replace transform as a pure Column over `labels` —
-    shared by the instant path and the tiled (range) path."""
+    """The label_replace transform as a pure Column over `labels`."""
     if not re.fullmatch(r"[a-zA-Z_][a-zA-Z0-9_]*", dst):
         raise ValueError(f"label_replace: invalid destination label {dst!r}")
     anchored = f"^(?:{regex})$"
@@ -1623,16 +1613,19 @@ def _label_join_expr(dst: str, sep: str, srcs: list[str]):
     ).otherwise(F.map_filter(labels, lambda k, _: k != F.lit(dst)))
 
 
-def _label_replace(node: Call, ctx: _Ctx) -> DataFrame:
-    kind, v = _eval(node.args[0], ctx)
-    dst, repl, src, regex = _str_args(node.args[1:5], ctx, "label_replace", 4)
-    return _resign(v, _label_replace_expr(dst, repl, src, regex))
-
-
-def _label_join(node: Call, ctx: _Ctx) -> DataFrame:
-    kind, v = _eval(node.args[0], ctx)
-    strs = _str_args(node.args[1:], ctx, "label_join", 3)
-    return _resign(v, _label_join_expr(strs[0], strs[1], strs[2:]))
+def _relabel(
+    vec: DataFrame, node: Call, extra_keys: tuple[str, ...] = ()
+) -> DataFrame:
+    """label_replace / label_join over a vector of either mode: the
+    rewritten label map, then the signature re-derived."""
+    if node.func == "label_replace":
+        dst, repl, src, regex = _str_args(node.args[1:5], "label_replace", 4)
+        labels = _label_replace_expr(dst, repl, src, regex)
+    else:
+        strs = _str_args(node.args[1:], "label_join", 3)
+        labels = _label_join_expr(strs[0], strs[1], strs[2:])
+    return _resign(
+        vec.select(labels.alias("labels"), *extra_keys, "value"), extra_keys)
 
 
 # -- histogram_quantile ---------------------------------------------------
@@ -1743,10 +1736,9 @@ def _info_enrich(
     val = F.when(
         F.col("__n1").isNull() | (F.col("__n1") == 1), F.col("value")
     ).otherwise(guard)
-    return (
-        j.select(merged.alias("labels"), *extra_keys, val.alias("value"))
-        .withColumn("signature", signature_expr("labels"))
-        .select("signature", "labels", *extra_keys, "value")
+    return _resign(
+        j.select(merged.alias("labels"), *extra_keys, val.alias("value")),
+        extra_keys,
     )
 
 
@@ -1844,125 +1836,93 @@ def _group_map_sql(by, without) -> str:
     return "map_filter(labels, (k, v) -> false)"
 
 
-def _group_map(by, without):
-    return F.expr(_group_map_sql(by, without))
-
-
-def _eval_agg(node: Agg, ctx: _Ctx):
-    kind, vec = _eval(node.expr, ctx)
-    if kind != "vector":
-        raise ValueError(f"{node.op} expects an instant vector")
-    gm_sql = _group_map_sql(node.by, node.without)
+def _aggregate(
+    vec: DataFrame,
+    op: str,
+    by,
+    without,
+    param,
+    extra_keys: tuple[str, ...] = (),
+) -> DataFrame:
+    """One PromQL aggregation operator over a vector of either mode:
+    grouped by the by/without label projection, and per window in range
+    mode (``extra_keys=("__w",)`` joins the window id into every group
+    key and ranking partition). ``param`` is the resolved float k / φ /
+    ratio, or the StringLit label name of count_values."""
+    cols = _vec_cols(extra_keys)
+    gm_sql = _group_map_sql(by, without)
     keyed = vec.select(
         F.expr(signature_sql_text(gm_sql)).alias("__gsig"),
         F.expr(gm_sql).alias("__glabels"),
         "signature",
         "labels",
+        *extra_keys,
         "value",
     )
-    if node.op in ("topk", "bottomk"):
-        k = int(_scalar_arg(node.param, ctx, node.op))
-        order = (
-            [F.col("value").desc(), F.col("signature")]
-            if node.op == "topk"
-            else [F.col("value").asc(), F.col("signature")]
-        )
-        w = Window.partitionBy("__gsig").orderBy(*order)
-        out = (
-            keyed.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= k)
-            .select("signature", "labels", "value")
-        )
-        return ("vector", out)
-    if node.op == "limitk":
-        # Prometheus 3.x experimental aggregation: "sample k input
-        # series" — the spec leaves WHICH k unspecified, so this engine
-        # makes the choice deterministic (md5 of the series signature,
-        # then signature): any engine, any partitioning, any run picks
-        # the same k series per group. Original labels survive, like
-        # topk.
-        k = int(_scalar_arg(node.param, ctx, node.op))
-        w = Window.partitionBy("__gsig").orderBy(
-            F.md5("signature"), F.col("signature")
-        )
-        out = (
-            keyed.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= k)
-            .select("signature", "labels", "value")
-        )
-        return ("vector", out)
-    if node.op == "limit_ratio":
+    if op == "limit_ratio":
         # Prometheus 3.x experimental: deterministic hash sampling of
         # approximately r of the input series, with the complement
         # contract limit_ratio(r) ∪ limit_ratio(-(1-r)) = everything.
         # h = first 15 md5 hex chars of the signature / 2^60 ∈ [0,1):
         # r >= 0 keeps h <= r, r < 0 keeps h > 1+r — replayable in any
-        # SQL engine (CAST('0x'||substr(md5(sig),1,15) AS BIGINT)).
-        r = _scalar_arg(node.param, ctx, node.op)
+        # SQL engine (CAST('0x'||substr(md5(sig),1,15) AS BIGINT)). The
+        # keep set is a pure function of the signature, so in range
+        # mode it is the SAME series at every step — one row filter.
+        r = float(param)
         if not -1.0 <= r <= 1.0:
             raise ValueError("limit_ratio expects a ratio in [-1, 1]")
         h = _hash60("signature").cast("double") / F.lit(float(1 << 60))
-        cond = (h <= F.lit(float(r))) if r >= 0 else (h > F.lit(1.0 + float(r)))
-        return ("vector", keyed.filter(cond).select("signature", "labels", "value"))
-    if node.op == "quantile":
-        phi = _scalar_arg(node.param, ctx, node.op)
-        agg = _hashable_group(
-            keyed,
-            ["__gsig"],
-            "__glabels",
-            F.sort_array(F.collect_list("value")).alias("__a"),
+        cond = (h <= F.lit(r)) if r >= 0 else (h > F.lit(1.0 + r))
+        return keyed.filter(cond).select(*cols)
+    if op in ("topk", "bottomk", "limitk"):
+        # the k ranked INPUT series per group (per window: membership
+        # re-evaluates each step, the Grafana "top 5 per step" shape),
+        # original labels kept. topk/bottomk break value ties by
+        # signature. limitk (Prometheus 3.x experimental) "samples k
+        # input series" — the spec leaves WHICH k open, so this engine
+        # picks by (md5(signature), signature): any engine, any
+        # partitioning, any run picks the same k.
+        if op == "limitk":
+            order = [F.md5("signature"), F.col("signature")]
+        elif op == "topk":
+            order = [F.col("value").desc(), F.col("signature")]
+        else:
+            order = [F.col("value").asc(), F.col("signature")]
+        w = Window.partitionBy("__gsig", *extra_keys).orderBy(*order)
+        return (
+            keyed.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") <= int(param))
+            .select(*cols)
         )
-        n = F.size("__a")
-        rank = F.lit(phi) * (n - F.lit(1)).cast("double")
-        lo = F.floor(rank).cast("int")
-        frac = rank - lo.cast("double")
-        v_lo = F.element_at("__a", lo + 1)
-        v_hi = F.element_at("__a", F.least(lo + 2, n))
-        val = (v_lo + (v_hi - v_lo) * frac).cast("double")
-        out = agg.select(
-            F.col("__gsig").alias("signature"), "labels", val.alias("value")
-        )
-        return ("vector", out)
-    if node.op == "count_values":
-        if not isinstance(node.param, StringLit):
+    if op == "count_values":
+        if not isinstance(param, StringLit):
             raise ValueError("count_values expects a label-name string")
-        dst = node.param.value
+        dst = param.value
         if not re.fullmatch(r"[a-zA-Z_][a-zA-Z0-9_]*", dst):
             raise ValueError(f"count_values: invalid label name {dst!r}")
         # group key gains the stringified sample value as a label
-        val_str = F.col("value").cast("string")
         gmap2 = F.map_concat(
             F.map_filter(F.col("__glabels"), lambda k, _: k != F.lit(dst)),
-            F.create_map(F.lit(dst), val_str),
+            F.create_map(F.lit(dst), F.col("value").cast("string")),
         )
-        out = _hashable_group(
-            keyed.select(gmap2.alias("labels"), "value"),
-            [signature_expr("labels").alias("signature")],
+        return _hashable_group(
+            keyed.select(gmap2.alias("labels"), *extra_keys, "value"),
+            [signature_expr("labels").alias("signature"), *extra_keys],
             "labels",
             F.count("*").cast("double").alias("value"),
-        ).select("signature", "labels", "value")
-        return ("vector", out)
-    exprs = {
-        "sum": F.sum(F.col("value").cast(_DEC)).cast("double"),
-        "min": F.min("value"),
-        "max": F.max("value"),
-        "count": F.count("*").cast("double"),
-        "group": F.lit(1.0),
-    }
-    if node.op in exprs:
-        out = _hashable_group(
-            keyed, ["__gsig"], "__glabels", exprs[node.op].alias("value")
+        ).select(*cols)
+    group_keys = ["__gsig", *extra_keys]
+    if op == "quantile":
+        agg = _hashable_group(
+            keyed, group_keys, "__glabels",
+            F.sort_array(F.collect_list("value")).alias("__a"),
         )
-    elif node.op == "avg":
-        out = _hashable_group(
-            keyed,
-            ["__gsig"],
-            "__glabels",
-            (
-                F.sum(F.col("value").cast(_DEC)).cast("double") / F.count("*")
-            ).alias("value"),
+        val = _array_quantile(F.col("__a"), F.lit(float(param)))
+        return agg.select(
+            F.col("__gsig").alias("signature"), "labels", *extra_keys,
+            val.cast("double").alias("value"),
         )
-    elif node.op in ("stddev", "stdvar"):
+    if op in ("stddev", "stdvar"):
         y = F.col("value").cast("decimal(18,2)")
         var = F.greatest(
             (
@@ -1973,17 +1933,37 @@ def _eval_agg(node: Agg, ctx: _Ctx):
             / F.count("*"),
             F.lit(0.0),
         )
-        out = _hashable_group(
-            keyed,
-            ["__gsig"],
-            "__glabels",
-            (F.sqrt(var) if node.op == "stddev" else var).alias("value"),
-        )
+        expr = F.sqrt(var) if op == "stddev" else var
+    elif op == "sum":
+        expr = F.sum(F.col("value").cast(_DEC)).cast("double")
+    elif op == "avg":
+        expr = F.sum(F.col("value").cast(_DEC)).cast("double") / F.count("*")
+    elif op == "min":
+        expr = F.min("value")
+    elif op == "max":
+        expr = F.max("value")
+    elif op == "count":
+        expr = F.count("*").cast("double")
+    elif op == "group":
+        expr = F.lit(1.0)
     else:
-        raise ValueError(f"unsupported aggregation {node.op!r}")
+        raise ValueError(f"unsupported aggregation {op!r}")
+    out = _hashable_group(keyed, group_keys, "__glabels", expr.alias("value"))
+    return out.select(
+        F.col("__gsig").alias("signature"), "labels", *extra_keys, "value"
+    )
+
+
+def _eval_agg(node: Agg, ctx: _Ctx):
+    kind, vec = _eval(node.expr, ctx)
+    if kind != "vector":
+        raise ValueError(f"{node.op} expects an instant vector")
+    param = node.param
+    if param is not None and node.op != "count_values":
+        param = _scalar_arg(param, ctx, node.op)
     return (
         "vector",
-        out.select(F.col("__gsig").alias("signature"), "labels", "value"),
+        _aggregate(vec, node.op, node.by, node.without, param),
     )
 
 
@@ -2153,10 +2133,9 @@ def _unique_per_match_key(node, match) -> bool:
 
 
 def _copy_group_extras(labels, olabels_col: str, extras) -> "F.Column":
-    """The group_left/group_right label-copy rule, shared by the
-    instant and tiled paths: each listed extra label is copied from
-    the one side onto the many side's label set; an absent/empty
-    source label removes the destination (Prometheus's
+    """The group_left/group_right label-copy rule: each listed extra
+    label is copied from the one side onto the many side's label set;
+    an absent/empty source label removes the destination (Prometheus's
     empty-equals-absent rule)."""
     new_labels = labels
     for e in extras:
@@ -2170,148 +2149,144 @@ def _copy_group_extras(labels, olabels_col: str, extras) -> "F.Column":
     return new_labels
 
 
-def _eval_many_to_one(node: BinOp, lv: DataFrame, rv: DataFrame):
-    """Many-to-one vector matching (group_left/group_right): every
-    many-side series joins its one-side partner on the on/ignoring
-    key; the listed extra labels are copied from the one side onto the
-    many side's label set (an absent/empty source label removes the
-    destination — Prometheus's empty-equals-absent rule) and the
-    result re-signs. The one side must be unique per key — a duplicate
-    raises AT EXECUTION, Prometheus's "multiple matches for labels"
-    error, never a silent row multiplication. Both operands are
-    per-series instant vectors, so the join and the one-side
-    uniqueness window shuffle series-count rows, never points."""
+# the Column forms of the comparison and arithmetic operators
+_CMP = {"==": operator.eq, "!=": operator.ne, ">": operator.gt,
+        "<": operator.lt, ">=": operator.ge, "<=": operator.le}
+_ARITH = {"+": operator.add, "-": operator.sub, "*": operator.mul,
+          "/": operator.truediv, "%": operator.mod, "^": F.pow,
+          "atan2": F.atan2}
+
+
+def _binop_rows(
+    df: DataFrame, op: str, bool_mode: bool, a, b, head: list, kept,
+    ok=None, error: str = "",
+) -> DataFrame:
+    """``head`` plus the value of ``a op b`` for every row of ``df``. A
+    comparison filters rows, keeping the value ``kept``, unless
+    ``bool_mode`` turns it into 0/1. With an ``ok`` condition, a row
+    failing it raises ``error`` at execution (the matching guards)."""
+
+    def guarded(x):
+        if ok is None:
+            return x
+        return F.when(ok, x).otherwise(
+            F.raise_error(F.lit(error)).cast("double"))
+
+    if op in _CMP:
+        cond = _CMP[op](a, b)
+        if bool_mode:
+            return df.select(*head, guarded(cond.cast("double")).alias("value"))
+        return (
+            df.select(*head, guarded(kept).alias("value"), cond.alias("__c"))
+            .filter("__c")
+            .drop("__c")
+        )
+    val = guarded(_ARITH[op](a, b).cast("double"))
+    return df.select(*head, val.alias("value"))
+
+
+def _vector_scalar(
+    vec: DataFrame, node: BinOp, scalar, vec_left: bool,
+    extra_keys: tuple[str, ...] = (),
+) -> DataFrame:
+    """Vector–scalar binary op: ``scalar`` is a Column — a literal, or
+    the range path's per-window scalar() column joined onto ``vec``.
+    A filtering comparison keeps the vector's own value."""
+    v = F.col("value")
+    a, b = (v, scalar) if vec_left else (scalar, v)
+    head = ["signature", "labels", *extra_keys]
+    return _binop_rows(vec, node.op, node.bool_mode, a, b, head, v)
+
+
+def _vector_binop(
+    node: BinOp, lv: DataFrame, rv: DataFrame,
+    extra_keys: tuple[str, ...] = (),
+) -> DataFrame:
+    """Vector–vector binary op, matched on the on/ignoring key — per
+    (key, window) in range mode, where ``extra_keys=("__w",)``. Both
+    operands are series-grain vectors, so every join and count window
+    here shuffles series (× windows) rows, never points.
+
+    - and/or/unless are keyed semi/anti/union joins: `and` keeps lhs
+      series whose key exists on the rhs, `unless` the complement,
+      `or` is lhs plus the rhs series whose key lhs lacks.
+    - 1:1 matching: a key matching more than one series on either side
+      raises AT EXECUTION, Prometheus's many-to-many error, never a
+      silent duplicate.
+    - group_left/group_right (many-to-one): every many-side series joins
+      its one-side partner; the listed extra labels are copied from the
+      one side (_copy_group_extras) and the result re-signs. A duplicate
+      one side raises at execution, Prometheus's "multiple matches for
+      labels" error.
+
+    The count windows behind both guards exist only to raise those
+    errors; a side PROVABLY unique per key (_unique_per_match_key)
+    skips its window and the sort + shuffle it costs."""
+    key = _match_key(node.match)
+    on = ["__k", *extra_keys]
+    within = " within a step" if extra_keys else ""
+    if node.op in ("and", "or", "unless"):
+        left = lv.withColumn("__k", key)
+        right = rv.withColumn("__k", key)
+        if node.op == "and":
+            out = left.join(right.select(*on).distinct(), on, "left_semi")
+        elif node.op == "unless":
+            out = left.join(right.select(*on).distinct(), on, "left_anti")
+        else:
+            extra = right.join(left.select(*on).distinct(), on, "left_anti")
+            out = left.unionByName(extra)
+        return out.select(*_vec_cols(extra_keys))
+    wk = Window.partitionBy(*on)
+    if node.group is None:
+        left = lv.select(
+            key.alias("__k"), "signature", "labels", *extra_keys,
+            F.col("value").alias("__lv"),
+        )
+        right = rv.select(
+            key.alias("__k"), *extra_keys, F.col("value").alias("__rv"))
+        ok = None
+        if not _unique_per_match_key(node.lhs, node.match):
+            left = left.withColumn("__nl", F.count("*").over(wk))
+            ok = F.col("__nl") == 1
+        if not _unique_per_match_key(node.rhs, node.match):
+            right = right.withColumn("__nr", F.count("*").over(wk))
+            c = F.col("__nr") == 1
+            ok = c if ok is None else (ok & c)
+        a = F.col("__lv")
+        return _binop_rows(
+            left.join(right, on), node.op, node.bool_mode, a, F.col("__rv"),
+            ["signature", "labels", *extra_keys], a, ok,
+            f"PromQL vector matching is not one-to-one{within} (use "
+            "on/ignoring to narrow the match key)",
+        )
     gkind, extras = node.group
     many, one = (lv, rv) if gkind == "left" else (rv, lv)
     one_node = node.rhs if gkind == "left" else node.lhs
-    key = _match_key(node.match)
     one_s = one.select(
-        key.alias("__k"),
+        key.alias("__k"), *extra_keys,
         F.col("labels").alias("__olabels"),
         F.col("value").alias("__ov"),
     )
-    # the count window exists only to raise Prometheus's
-    # multiple-matches error; a one side PROVABLY unique per key skips
-    # it (and the sort + shuffle it costs)
     ok = None
     if not _unique_per_match_key(one_node, node.match):
-        one_s = one_s.withColumn(
-            "__n1", F.count("*").over(Window.partitionBy("__k"))
-        )
+        one_s = one_s.withColumn("__n1", F.count("*").over(wk))
         ok = F.col("__n1") == 1
-    many_s = many.select(key.alias("__k"), "labels", F.col("value").alias("__mv"))
-    j = many_s.join(one_s, "__k")
-    guard = F.raise_error(
-        F.lit("PromQL many-to-one matching found multiple matches on the "
-              "one side (narrow the on/ignoring key)")
-    ).cast("double")
-
-    def _guarded(x):
-        return x if ok is None else F.when(ok, x).otherwise(guard)
-
+    many_s = many.select(
+        key.alias("__k"), *extra_keys, "labels", F.col("value").alias("__mv")
+    )
     new_labels = _copy_group_extras(F.col("labels"), "__olabels", extras)
     a, b = (
         (F.col("__mv"), F.col("__ov"))
         if gkind == "left"
         else (F.col("__ov"), F.col("__mv"))
     )
-    if node.op in _CMP_OPS:
-        cond = {"==": a == b, "!=": a != b, ">": a > b,
-                "<": a < b, ">=": a >= b, "<=": a <= b}[node.op]
-        if node.bool_mode:
-            val = _guarded(cond.cast("double"))
-            out = j.select(new_labels.alias("labels"), val.alias("value"))
-        else:
-            val = _guarded(a)
-            out = (
-                j.select(new_labels.alias("labels"), val.alias("value"),
-                         cond.alias("__c"))
-                .filter("__c")
-                .drop("__c")
-            )
-    else:
-        expr = {"+": a + b, "-": a - b, "*": a * b, "/": a / b,
-                "%": a % b, "^": F.pow(a, b), "atan2": F.atan2(a, b)}[node.op]
-        val = _guarded(expr.cast("double"))
-        out = j.select(new_labels.alias("labels"), val.alias("value"))
-    out = out.withColumn("signature", signature_expr("labels")).select(
-        "signature", "labels", "value"
+    out = _binop_rows(
+        many_s.join(one_s, on), node.op, node.bool_mode, a, b,
+        [new_labels.alias("labels"), *extra_keys], a, ok,
+        "PromQL many-to-one matching found multiple matches on the one "
+        f"side{within} (narrow the on/ignoring key)",
     )
-    return ("vector", out)
-
-
-def _eval_vv(node: BinOp, lv: DataFrame, rv: DataFrame):
-    """Vector-vector binary op with 1:1 matching (Prometheus
-    on/ignoring; group_left/right routes to _eval_many_to_one). Both
-    sides are per-series instant vectors — series-count rows — so the
-    match join and the per-key count windows are small keyed shuffles,
-    never point-level. A key matching more than one series on either
-    side raises AT EXECUTION (raise_error in the live projection),
-    exactly Prometheus's many-to-many error, never a silent
-    duplicate."""
-    if node.group is not None:
-        return _eval_many_to_one(node, lv, rv)
-    key = _match_key(node.match)
-    wl = Window.partitionBy("__k")
-    left = lv.select(
-        key.alias("__k"), "signature", "labels", F.col("value").alias("__lv")
-    )
-    right = rv.select(key.alias("__k"), F.col("value").alias("__rv"))
-    # the per-key count windows exist only to raise Prometheus's
-    # many-to-many error; a side PROVABLY unique per key skips its
-    # window (and the sort + shuffle it costs)
-    ok = None
-    if not _unique_per_match_key(node.lhs, node.match):
-        left = left.withColumn("__nl", F.count("*").over(wl))
-        ok = F.col("__nl") == 1
-    if not _unique_per_match_key(node.rhs, node.match):
-        right = right.withColumn("__nr", F.count("*").over(wl))
-        c = F.col("__nr") == 1
-        ok = c if ok is None else (ok & c)
-    j = left.join(right, "__k")
-    guard = F.raise_error(
-        F.lit("PromQL vector matching is not one-to-one (use on/ignoring "
-              "to narrow the match key)")
-    ).cast("double")
-
-    def _guarded(x):
-        return x if ok is None else F.when(ok, x).otherwise(guard)
-
-    a, b = F.col("__lv"), F.col("__rv")
-    if node.op in _CMP_OPS:
-        cond = {"==": a == b, "!=": a != b, ">": a > b,
-                "<": a < b, ">=": a >= b, "<=": a <= b}[node.op]
-        if node.bool_mode:
-            val = _guarded(cond.cast("double"))
-            out = j.select("signature", "labels", val.alias("value"))
-        else:
-            val = _guarded(a)
-            out = j.select(
-                "signature", "labels", val.alias("value"), cond.alias("__c")
-            ).filter("__c").drop("__c")
-        return ("vector", out)
-    expr = {"+": a + b, "-": a - b, "*": a * b, "/": a / b,
-            "%": a % b, "^": F.pow(a, b), "atan2": F.atan2(a, b)}[node.op]
-    val = _guarded(expr.cast("double"))
-    return ("vector", j.select("signature", "labels", val.alias("value")))
-
-
-def _eval_setop(node: BinOp, lv: DataFrame, rv: DataFrame):
-    """PromQL set operators over instant vectors: `and` keeps lhs
-    series whose match key exists on the rhs (left-semi), `unless`
-    the complement (left-anti), `or` is lhs plus the rhs series whose
-    key lhs lacks — all keyed joins on series-count relations."""
-    key = _match_key(node.match)
-    left = lv.withColumn("__k", key)
-    right = rv.withColumn("__k", key)
-    if node.op == "and":
-        out = left.join(right.select("__k").distinct(), "__k", "left_semi")
-    elif node.op == "unless":
-        out = left.join(right.select("__k").distinct(), "__k", "left_anti")
-    else:  # or
-        extra = right.join(left.select("__k").distinct(), "__k", "left_anti")
-        out = left.unionByName(extra)
-    return ("vector", out.select("signature", "labels", "value"))
+    return _resign(out, extra_keys)
 
 
 def _eval_binop(node: BinOp, ctx: _Ctx):
@@ -2320,46 +2295,22 @@ def _eval_binop(node: BinOp, ctx: _Ctx):
     if node.op in ("and", "or", "unless"):
         if lk != "vector" or rk != "vector":
             raise ValueError(f"{node.op} requires two instant vectors")
-        return _eval_setop(node, lv, rv)
+        return ("vector", _vector_binop(node, lv, rv))
     if lk == "scalar" and rk == "scalar":
         return ("scalar", _scalar_binop(node.op, lv, rv, node.bool_mode))
     if lk == "vector" and rk == "vector":
-        return _eval_vv(node, lv, rv)
+        return ("vector", _vector_binop(node, lv, rv))
     if node.group is not None:
         raise ValueError(
             "group_left/group_right is only valid between two instant vectors"
         )
     vec, scalar, vec_left = (lv, rv, True) if lk == "vector" else (rv, lv, False)
-    val = F.col("value")
-    s = F.lit(float(scalar))
-    a, b = (val, s) if vec_left else (s, val)
-    if node.op in _CMP_OPS:
-        cond = {
-            "==": a == b, "!=": a != b, ">": a > b,
-            "<": a < b, ">=": a >= b, "<=": a <= b,
-        }[node.op]
-        if node.bool_mode:
-            return ("vector", vec.withColumn("value", cond.cast("double")))
-        return ("vector", vec.filter(cond))
-    expr = {
-        "+": a + b,
-        "-": a - b,
-        "*": a * b,
-        "/": a / b,
-        "%": a % b,
-        "^": F.pow(a, b),
-        "atan2": F.atan2(a, b),
-    }[node.op]
-    return ("vector", vec.withColumn("value", expr.cast("double")))
+    return ("vector", _vector_scalar(vec, node, F.lit(float(scalar)), vec_left))
 
 
 def _scalar_binop(op: str, a: float, b: float, bool_mode: bool) -> float:
-    import math
-
-    if op in _CMP_OPS:
-        r = {"==": a == b, "!=": a != b, ">": a > b,
-             "<": a < b, ">=": a >= b, "<=": a <= b}[op]
-        return 1.0 if r else 0.0
+    if op in _CMP:
+        return 1.0 if _CMP[op](a, b) else 0.0
     if op == "+":
         return a + b
     if op == "-":
@@ -2395,9 +2346,8 @@ def eval_range(
     [signature, labels, t_ms (window END, the evaluation timestamp),
     value].
 
-    Supported shapes (anything else raises with a clear message —
-    arbitrary expressions would need a per-step replan, which is the
-    scan-multiplicity class this engine bans):
+    Range evaluation is the second of two SELECTION modes over one
+    operator layer. What differs from eval_instant is selection only:
     - instant selector: last sample per window per series (no
       cross-window lookback carry — a window without samples emits no
       point, where Prometheus would carry up to the lookback; this is
@@ -2409,39 +2359,34 @@ def eval_range(
       between windows; overlapping windows share samples via a bounded
       ≤k-way explode, still ONE scan): rate/increase/delta/irate/
       idelta/resets/changes/deriv/predict_linear/holt_winters and all
-      <agg>_over_time incl. quantile_over_time; histogram_quantile
-      composes over any tiled inner;
-    - subqueries under avg/sum/min/max/count/last_over_time when the
-      grid step and the subquery range are whole multiples of the
-      subquery step: the inner expression (the FULL tiled class)
-      evaluates once as its own S-grid and fans into the outer
-      windows — `max_over_time(rate(m[5m])[30m:5m])` as a panel;
-    - grouping aggregations (sum/avg/min/max/count/stddev/stdvar/
-      group/quantile/count_values/topk/bottomk/limitk/limit_ratio,
-      by/without) over any tiled expression — aggregated per window;
+      <agg>_over_time incl. quantile_over_time;
+    - subqueries under <agg>_over_time when the grid step and the
+      subquery range are whole multiples of the subquery step: the
+      inner expression (the FULL tiled class) evaluates once as its
+      own S-grid and fans into the outer windows —
+      `max_over_time(rate(m[5m])[30m:5m])` as a panel;
     - `@`-pinned subtrees (every selector carries @, no time()): one
       instant evaluation at the anchors — start()/end() resolve to
       the RANGE bounds — fanned across the step grid (the constant
       reference line Grafana draws with `m @ end()`);
-    - binary operators COMPOSING tiled expressions per window: scalar
-      arithmetic/comparisons (with bool), 1:1 vector matching with
-      on/ignoring (duplicate keys within a window raise, exactly the
-      instant evaluator's many-to-many error), and the set operators
-      and/or/unless — each side evaluates in its own single pass and
-      the match is one keyed join per (key, window), so the
-      error-ratio dashboard graph `sum by(k)(increase(a[s])) /
-      on(k) sum by(k)(increase(b[s]))` costs two tiled passes + one
-      series-grain join, never a per-step replan. Many-to-one
-      group_left/group_right matches per (key, window) with the
-      instant path's label-copy and one-side-uniqueness guard; unary
-      minus composes.
-    - value transforms over any tiled expression: the math functions
-      (abs/ceil/floor/exp/ln/log2/log10/sqrt/sgn) and
-      round/clamp/clamp_min/clamp_max with scalar bounds;
-    - timestamp(selector) per window, info() enrichment (anchored at
-      the range end), the sort family (presentation-level unwrap, the
-      serving layer orders off the AST), and histogram_fraction over
-      any tiled inner.
+    - absent()/absent_over_time() markers and vector() per window, and
+      scalar() operands as a per-window scalar relation;
+    - scalar parameters (k, φ, bounds) must be compile-time constants.
+
+    Everything above selection is the operator layer eval_instant
+    uses, called with the window id as one more key
+    (``extra_keys=("__w",)``): aggregations (_aggregate), vector
+    matching, set operators and vector–scalar ops (_vector_binop,
+    _vector_scalar — a duplicate match key within a window raises the
+    instant error, "within a step"), value transforms
+    (_value_transform), label_replace/label_join (_relabel),
+    timestamp() (_last_point), info() enrichment (anchored at the
+    range end), histogram_quantile/histogram_fraction and the sort
+    family (presentation only). Each side of a binary operator
+    evaluates in its own single pass and the match is one keyed join
+    per (key, window), so the error-ratio graph `sum by(k)(increase(a[s]))
+    / on(k) sum by(k)(increase(b[s]))` costs two tiled passes + one
+    series-grain join, never a per-step replan.
     """
     if isinstance(expr, str):
         expr = parse(expr)
@@ -2464,8 +2409,6 @@ def _resolve_range_at(node, start_ms: int, end_ms: int):
     anchors and fans the per-series result across the window grid —
     the semantics Grafana relies on when it emits `@` in range queries
     (VERDICT r7 next-round #6). Returns (rewritten_node, pinned)."""
-    import dataclasses
-
     state = {"any": False, "unpinned": False, "step_dep": False}
 
     def rw(n, under_pinned: bool):
@@ -2615,16 +2558,7 @@ def _tiled_values(node, start_ms: int, end_ms: int, step_ms: int, ctx: _Ctx) -> 
     if isinstance(node, Selector):
         if node.range_ms is not None:
             raise ValueError("eval_range: bare range selector — wrap in a function")
-        pts = tiles(node)
-        return (
-            pts.groupBy("signature", "__w")
-            .agg(
-                F.max(F.struct("timestamp", "value")).alias("__top"),
-                F.first("labels").alias("labels"),
-            )
-            .select("signature", "labels", "__w",
-                    F.col("__top.value").alias("value"))
-        )
+        return _last_point(tiles(node), "value", _W)
     if (
         isinstance(node, Call)
         and node.func in ("rate", "increase", "delta", "resets", "changes",
@@ -2725,7 +2659,7 @@ def _tiled_values(node, start_ms: int, end_ms: int, step_ms: int, ctx: _Ctx) -> 
     ):
         sel = node.args[0]
         op = node.func[: -len("_over_time")]
-        return _over_time(tiles(sel, sel.range_ms), op, extra_keys=("__w",)).select(
+        return _over_time(tiles(sel, sel.range_ms), op, extra_keys=_W).select(
             "signature", "labels", "__w", "value"
         )
     if (
@@ -2740,7 +2674,7 @@ def _tiled_values(node, start_ms: int, end_ms: int, step_ms: int, ctx: _Ctx) -> 
             raise ValueError("quantile_over_time expects a scalar φ")
         sel = node.args[1]
         return _over_time(
-            tiles(sel, sel.range_ms), "quantile", phi, extra_keys=("__w",)
+            tiles(sel, sel.range_ms), "quantile", phi, extra_keys=_W
         ).select("signature", "labels", "__w", "value")
     if (
         isinstance(node, Call)
@@ -2835,15 +2769,8 @@ def _tiled_values(node, start_ms: int, end_ms: int, step_ms: int, ctx: _Ctx) -> 
         allw = ctx.samples.sparkSession.range(max(int(n_tiles), 0)).select(
             F.col("id").cast("long").alias("__w")
         )
-        return allw.join(present, "__w", "left_anti").select(
-            F.lit("").alias("signature"),
-            F.map_from_arrays(
-                F.array().cast("array<string>"),
-                F.array().cast("array<string>"),
-            ).alias("labels"),
-            "__w",
-            F.lit(1.0).alias("value"),
-        )
+        return _unlabelled(
+            allw.join(present, "__w", "left_anti"), F.lit(1.0), "__w")
     if isinstance(node, Call) and node.func.endswith("_over_time") and (
         (
             node.func[: -len("_over_time")] in
@@ -2895,15 +2822,9 @@ def _tiled_values(node, start_ms: int, end_ms: int, step_ms: int, ctx: _Ctx) -> 
                 f"exceeds RANGE_TILE_MAX_K={RANGE_TILE_MAX_K}"
             )
         if n_tiles <= 0:
-            empty = ctx.samples.sparkSession.range(0)
-            return empty.select(
-                F.lit("").alias("signature"),
-                F.map_from_arrays(
-                    F.array().cast("array<string>"),
-                    F.array().cast("array<string>"),
-                ).alias("labels"),
+            return _unlabelled(
+                ctx.samples.sparkSession.range(0), F.lit(0.0),
                 F.col("id").cast("long").alias("__w"),
-                F.lit(0.0).alias("value"),
             )
         inner = _tiled_values(
             sq.expr, start_ms - sq.offset_ms - R, end_ms - sq.offset_ms,
@@ -2939,28 +2860,15 @@ def _tiled_values(node, start_ms: int, end_ms: int, step_ms: int, ctx: _Ctx) -> 
         )
         return _over_time(
             fanned, node.func[: -len("_over_time")], sq_param,
-            extra_keys=("__w",),
+            extra_keys=_W,
         ).select("signature", "labels", "__w", "value")
     if isinstance(node, Call) and node.func == "info" and node.args:
         # info() in range mode: the tiled inner grid enriched per row
         # with the info metric's data labels — the info selection
         # anchors at the range END (the latest resource identity, the
         # Grafana panel semantics); __w passes straight through
-        import dataclasses as _dc
-
         v = _tiled_values(node.args[0], start_ms, end_ms, step_ms, ctx)
-        if len(node.args) > 1:
-            isel = node.args[1]
-            if not isinstance(isel, Selector) or isel.range_ms is not None:
-                raise ValueError(
-                    "info() second argument must be an instant selector")
-            if isel.name is None and not any(
-                m.name == "__name__" for m in isel.matchers
-            ):
-                isel = _dc.replace(isel, name="target_info")
-        else:
-            isel = Selector("target_info", ())
-        return _info_enrich(v, isel, ctx, extra_keys=("__w",))
+        return _info_enrich(v, _info_selector(node), ctx, _W)
     if (
         isinstance(node, Call)
         and node.func == "timestamp"
@@ -2970,35 +2878,11 @@ def _tiled_values(node, start_ms: int, end_ms: int, step_ms: int, ctx: _Ctx) -> 
     ):
         # timestamp() per window: the last sample's own timestamp (in
         # seconds) — same grouped top-struct as the bare selector
-        pts = tiles(node.args[0])
-        return (
-            pts.groupBy("signature", "__w")
-            .agg(
-                F.max(F.struct("timestamp", "value")).alias("__top"),
-                F.first("labels").alias("labels"),
-            )
-            .select(
-                "signature", "labels", "__w",
-                (F.col("__top.timestamp") / F.lit(1000.0))
-                .cast("double").alias("value"),
-            )
-        )
+        return _last_point(tiles(node.args[0]), "timestamp", _W)
     if isinstance(node, Call) and node.func in (
         "sort", "sort_desc", "sort_by_label", "sort_by_label_desc"
     ):
-        # ordering is API presentation only (the engine's matrices are
-        # unordered sets — the serving layer reads the label list off
-        # the AST and orders the assembled series); vector identity
-        # here, exactly the instant evaluator's rule
-        if node.func.startswith("sort_by_label"):
-            if len(node.args) < 2:
-                raise ValueError(
-                    f"{node.func}() expects a vector and >=1 label name")
-            for a in node.args[1:]:
-                if not isinstance(a, StringLit):
-                    raise ValueError(
-                        f"{node.func}() label names must be strings")
-        return _tiled_values(node.args[0], start_ms, end_ms, step_ms, ctx)
+        return _tiled_values(_sort_operand(node), start_ms, end_ms, step_ms, ctx)
     if (
         isinstance(node, Call)
         and node.func == "histogram_quantile"
@@ -3008,7 +2892,7 @@ def _tiled_values(node, start_ms: int, end_ms: int, step_ms: int, ctx: _Ctx) -> 
         if phi is None:
             raise ValueError("histogram_quantile expects a scalar φ")
         vec = _tiled_values(node.args[1], start_ms, end_ms, step_ms, ctx)
-        return _histogram_quantile(float(phi), vec, extra_keys=("__w",))
+        return _histogram_quantile(float(phi), vec, extra_keys=_W)
     if (
         isinstance(node, Call)
         and node.func == "histogram_fraction"
@@ -3019,8 +2903,7 @@ def _tiled_values(node, start_ms: int, end_ms: int, step_ms: int, ctx: _Ctx) -> 
         if lo is None or hi is None:
             raise ValueError("histogram_fraction expects scalar bounds")
         vec = _tiled_values(node.args[2], start_ms, end_ms, step_ms, ctx)
-        return _histogram_fraction(
-            float(lo), float(hi), vec, extra_keys=("__w",))
+        return _histogram_fraction(float(lo), float(hi), vec, extra_keys=_W)
     if isinstance(node, Call) and node.func == "vector" and len(node.args) == 1:
         # a constant series present at EVERY step — the `or vector(0)`
         # no-data fallback every dashboard uses; n_tiles rows from a
@@ -3028,197 +2911,38 @@ def _tiled_values(node, start_ms: int, end_ms: int, step_ms: int, ctx: _Ctx) -> 
         s = _const_scalar(node.args[0])
         if s is None:
             raise ValueError("eval_range: vector() expects a scalar literal")
-        return ctx.samples.sparkSession.range(max(int(n_tiles), 0)).select(
-            F.lit("").alias("signature"),
-            F.map_from_arrays(
-                F.array().cast("array<string>"),
-                F.array().cast("array<string>"),
-            ).alias("labels"),
+        return _unlabelled(
+            ctx.samples.sparkSession.range(max(int(n_tiles), 0)),
+            F.lit(float(s)).cast("double"),
             F.col("id").cast("long").alias("__w"),
-            F.lit(float(s)).cast("double").alias("value"),
         )
     if isinstance(node, Call) and node.func in ("label_replace",
                                                 "label_join"):
-        # pure per-row label transforms — the same Column expression
-        # the instant path applies, re-signed with __w carried through
         v = _tiled_values(node.args[0], start_ms, end_ms, step_ms, ctx)
-        if node.func == "label_replace":
-            dst, repl, src, regex = _str_args(
-                node.args[1:5], ctx, "label_replace", 4)
-            new_labels = _label_replace_expr(dst, repl, src, regex)
-        else:
-            strs = _str_args(node.args[1:], ctx, "label_join", 3)
-            new_labels = _label_join_expr(strs[0], strs[1], strs[2:])
-        return (
-            v.select(new_labels.alias("labels"), "__w", "value")
-            .withColumn("signature", signature_expr("labels"))
-            .select("signature", "labels", "__w", "value")
-        )
-    if isinstance(node, Call) and node.func in _MATH_FUNCS:
-        v = _tiled_values(node.args[0], start_ms, end_ms, step_ms, ctx)
-        fn = _MATH_FUNCS[node.func]
-        return v.withColumn("value", fn(F.col("value")).cast("double"))
-    if isinstance(node, Call) and node.func in ("round", "clamp",
-                                                "clamp_min", "clamp_max"):
-        v = _tiled_values(node.args[0], start_ms, end_ms, step_ms, ctx)
+        return _relabel(v, node, _W)
+    if (
+        isinstance(node, Call)
+        and node.func in _VALUE_FUNCS - _DATE_FUNCS
+        and node.args
+    ):
+        # the date functions stay instant-only: their zero-arg forms
+        # read the evaluation time, which the tiled class does not carry
         args = [_const_scalar(a) for a in node.args[1:]]
         if any(a is None for a in args):
             raise ValueError(f"{node.func}() bounds must be scalars")
-        if node.func == "round":
-            to = args[0] if args else 1.0
-            expr = F.floor(F.col("value") / F.lit(to) + F.lit(0.5)) * F.lit(to)
-        elif node.func == "clamp":
-            expr = F.least(
-                F.greatest(F.col("value"), F.lit(args[0])), F.lit(args[1])
-            )
-        elif node.func == "clamp_min":
-            expr = F.greatest(F.col("value"), F.lit(args[0]))
-        else:
-            expr = F.least(F.col("value"), F.lit(args[0]))
-        return v.withColumn("value", expr.cast("double"))
+        v = _tiled_values(node.args[0], start_ms, end_ms, step_ms, ctx)
+        return _value_transform(v, node.func, args)
     if isinstance(node, Agg):
-        if node.op not in ("sum", "avg", "min", "max", "count",
-                           "stddev", "stdvar", "group", "quantile",
-                           "count_values",
-                           "topk", "bottomk", "limitk", "limit_ratio"):
-            raise ValueError(
-                f"eval_range supports sum/avg/min/max/count/stddev/"
-                f"stdvar/group/quantile/count_values/topk/bottomk/"
-                f"limitk/limit_ratio grouping, not {node.op}"
-            )
+        param = node.param
+        if param is not None and node.op != "count_values":
+            param = _const_scalar(param)
+            if param is None:
+                raise ValueError(f"{node.op} expects a scalar parameter")
         per = _tiled_values(node.expr, start_ms, end_ms, step_ms, ctx)
-        if node.op == "limit_ratio":
-            # deterministic hash sampling (see _eval_agg): the keep set
-            # is a pure function of the series signature, so in range
-            # mode it is the SAME series at every step — one filter on
-            # the tiled rows, no window
-            r = _const_scalar(node.param)
-            if r is None or not -1.0 <= r <= 1.0:
-                raise ValueError("limit_ratio expects a scalar in [-1, 1]")
-            h = _hash60("signature").cast("double") / F.lit(float(1 << 60))
-            cond = (h <= F.lit(float(r))) if r >= 0 else (
-                h > F.lit(1.0 + float(r))
-            )
-            return per.filter(cond).select("signature", "labels", "__w", "value")
-        if node.op == "limitk":
-            # k deterministic series per (group, window) — membership
-            # re-evaluates per step over the series PRESENT in that
-            # window, ordered by (md5(signature), signature)
-            k = _const_scalar(node.param)
-            if k is None:
-                raise ValueError("limitk expects a scalar k")
-            gsig = F.expr(signature_sql_text(
-                _group_map_sql(node.by, node.without)))
-            w = Window.partitionBy(gsig, "__w").orderBy(
-                F.md5("signature"), F.col("signature")
-            )
-            return (
-                per.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") <= int(k))
-                .select("signature", "labels", "__w", "value")
-            )
-        if node.op in ("topk", "bottomk"):
-            # the k ranked INPUT series per (group, window) — series
-            # membership re-evaluates each step, the Grafana "top 5
-            # per step" shape; ties break by signature, deterministic
-            k = _const_scalar(node.param)
-            if k is None:
-                raise ValueError(f"{node.op} expects a scalar k")
-            gsig = F.expr(signature_sql_text(
-                _group_map_sql(node.by, node.without)))
-            order = (
-                [F.col("value").desc(), F.col("signature")]
-                if node.op == "topk"
-                else [F.col("value").asc(), F.col("signature")]
-            )
-            w = Window.partitionBy(gsig, "__w").orderBy(*order)
-            return (
-                per.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") <= int(k))
-                .select("signature", "labels", "__w", "value")
-            )
-        gm_sql = _group_map_sql(node.by, node.without)
-        keyed = per.select(
-            F.expr(signature_sql_text(gm_sql)).alias("__gsig"),
-            F.expr(gm_sql).alias("__glabels"),
-            "__w",
-            "value",
-        )
-        if node.op == "count_values":
-            # per-window value histogram — the discrete-value heatmap
-            # shape; identical label construction to the instant path,
-            # with __w joined into the group key
-            if not isinstance(node.param, StringLit):
-                raise ValueError("count_values expects a label-name string")
-            dst = node.param.value
-            if not re.fullmatch(r"[a-zA-Z_][a-zA-Z0-9_]*", dst):
-                raise ValueError(f"count_values: invalid label name {dst!r}")
-            gmap2 = F.map_concat(
-                F.map_filter(F.col("__glabels"), lambda k, _: k != F.lit(dst)),
-                F.create_map(F.lit(dst), F.col("value").cast("string")),
-            )
-            return _hashable_group(
-                keyed.select(gmap2.alias("labels"), "__w", "value"),
-                [signature_expr("labels").alias("signature"), "__w"],
-                "labels",
-                F.count("*").cast("double").alias("value"),
-            ).select("signature", "labels", "__w", "value")
-        if node.op == "quantile":
-            phi = _const_scalar(node.param)
-            if phi is None:
-                raise ValueError("quantile grouping expects a scalar φ")
-            agg = _hashable_group(
-                keyed,
-                ["__gsig", "__w"],
-                "__glabels",
-                F.sort_array(F.collect_list("value")).alias("__a"),
-            )
-            n = F.size("__a")
-            rank = F.lit(float(phi)) * (n - F.lit(1)).cast("double")
-            lo = F.floor(rank).cast("int")
-            frac = rank - lo.cast("double")
-            v_lo = F.element_at("__a", lo + 1)
-            v_hi = F.element_at("__a", F.least(lo + 2, n))
-            val = (v_lo + (v_hi - v_lo) * frac).cast("double")
-            return agg.select(
-                F.col("__gsig").alias("signature"), "labels", "__w",
-                val.alias("value"),
-            )
-        y = F.col("value").cast("decimal(18,2)")
-        var = F.greatest(
-            (
-                F.sum(y * y).cast("double")
-                - F.sum(y).cast("double") * F.sum(y).cast("double")
-                / F.count("*")
-            )
-            / F.count("*"),
-            F.lit(0.0),
-        )
-        exprs = {
-            "sum": F.sum(F.col("value").cast(_DEC)).cast("double"),
-            "avg": F.sum(F.col("value").cast(_DEC)).cast("double")
-            / F.count("*"),
-            "min": F.min("value"),
-            "max": F.max("value"),
-            "count": F.count("*").cast("double"),
-            "stddev": F.sqrt(var),
-            "stdvar": var,
-            "group": F.max(F.lit(1.0)),
-        }
-        out = _hashable_group(
-            keyed,
-            ["__gsig", "__w"],
-            "__glabels",
-            exprs[node.op].cast("double").alias("value"),
-        )
-        return out.select(
-            F.col("__gsig").alias("signature"), "labels", "__w", "value"
-        )
+        return _aggregate(per, node.op, node.by, node.without, param, _W)
     if isinstance(node, Unary):
         v = _tiled_values(node.expr, start_ms, end_ms, step_ms, ctx)
-        if node.op == "-":
-            v = v.withColumn("value", (-F.col("value")).cast("double"))
-        return v
+        return _value_transform(v, "-") if node.op == "-" else v
     if isinstance(node, BinOp):
         return _tiled_binop(node, start_ms, end_ms, step_ms, ctx)
     raise ValueError(
@@ -3246,201 +2970,47 @@ def _const_scalar(node) -> float | None:
     return None
 
 
-def _tiled_many_to_one(node: BinOp, lv: DataFrame, rv: DataFrame) -> DataFrame:
-    """Many-to-one matching per (key, window): the instant
-    _eval_many_to_one semantics with __w joined into the match key and
-    the one-side uniqueness window — every many-side series finds its
-    one-side partner within its own step, extras copied, result
-    re-signed. Same scale shape: the join and the uniqueness count
-    shuffle (series × windows) rows, never points."""
-    gkind, extras = node.group
-    many, one = (lv, rv) if gkind == "left" else (rv, lv)
-    one_node = node.rhs if gkind == "left" else node.lhs
-    key = _match_key(node.match)
-    one_s = one.select(
-        key.alias("__k"), "__w",
-        F.col("labels").alias("__olabels"),
-        F.col("value").alias("__ov"),
-    )
-    # per-window twin of the instant guard elision: the one side skips
-    # its count window when it is provably unique per (key, window)
-    ok = None
-    if not _unique_per_match_key(one_node, node.match):
-        one_s = one_s.withColumn(
-            "__n1", F.count("*").over(Window.partitionBy("__k", "__w"))
-        )
-        ok = F.col("__n1") == 1
-    many_s = many.select(
-        key.alias("__k"), "__w", "labels", F.col("value").alias("__mv")
-    )
-    j = many_s.join(one_s, ["__k", "__w"])
-    guard = F.raise_error(
-        F.lit("PromQL many-to-one matching found multiple matches on the "
-              "one side within a step (narrow the on/ignoring key)")
-    ).cast("double")
-
-    def _guarded(x):
-        return x if ok is None else F.when(ok, x).otherwise(guard)
-
-    new_labels = _copy_group_extras(F.col("labels"), "__olabels", extras)
-    a, b = (
-        (F.col("__mv"), F.col("__ov"))
-        if gkind == "left"
-        else (F.col("__ov"), F.col("__mv"))
-    )
-    if node.op in _CMP_OPS:
-        cond = {"==": a == b, "!=": a != b, ">": a > b,
-                "<": a < b, ">=": a >= b, "<=": a <= b}[node.op]
-        if node.bool_mode:
-            val = _guarded(cond.cast("double"))
-            out = j.select(new_labels.alias("labels"), "__w",
-                           val.alias("value"))
-        else:
-            val = _guarded(a)
-            out = (
-                j.select(new_labels.alias("labels"), "__w",
-                         val.alias("value"), cond.alias("__c"))
-                .filter("__c")
-                .drop("__c")
-            )
-    else:
-        expr = {"+": a + b, "-": a - b, "*": a * b, "/": a / b,
-                "%": a % b, "^": F.pow(a, b), "atan2": F.atan2(a, b)}[node.op]
-        val = _guarded(expr.cast("double"))
-        out = j.select(new_labels.alias("labels"), "__w", val.alias("value"))
-    return out.withColumn("signature", signature_expr("labels")).select(
-        "signature", "labels", "__w", "value"
-    )
-
-
 def _tiled_binop(
     node: BinOp, start_ms: int, end_ms: int, step_ms: int, ctx: _Ctx
 ) -> DataFrame:
-    """Binary operators over per-window vectors — the instant
-    evaluator's matching semantics applied per (key, window)."""
-    if node.group is not None:
-        lv = _tiled_values(node.lhs, start_ms, end_ms, step_ms, ctx)
-        rv = _tiled_values(node.rhs, start_ms, end_ms, step_ms, ctx)
-        return _tiled_many_to_one(node, lv, rv)
-    ls, rs = _const_scalar(node.lhs), _const_scalar(node.rhs)
-    if ls is not None and rs is not None:
-        raise ValueError("eval_range needs at least one vector operand")
-    if ls is not None or rs is not None:
-        if node.op in ("and", "or", "unless"):
-            raise ValueError(f"{node.op} requires two instant vectors")
-        vec_node = node.lhs if rs is not None else node.rhs
-        vec = _tiled_values(vec_node, start_ms, end_ms, step_ms, ctx)
-        val = F.col("value")
-        s = F.lit(float(rs if rs is not None else ls))
-        a, b = (val, s) if rs is not None else (s, val)
-        if node.op in _CMP_OPS:
-            cond = {"==": a == b, "!=": a != b, ">": a > b,
-                    "<": a < b, ">=": a >= b, "<=": a <= b}[node.op]
-            if node.bool_mode:
-                return vec.withColumn("value", cond.cast("double"))
-            return vec.filter(cond)
-        expr = {"+": a + b, "-": a - b, "*": a * b, "/": a / b,
-                "%": a % b, "^": F.pow(a, b), "atan2": F.atan2(a, b)}[node.op]
-        return vec.withColumn("value", expr.cast("double"))
+    """Binary operators over per-window vectors: the scalar operand is
+    a compile-time constant or a per-window scalar() relation, and
+    vector operands match per (key, window) in _vector_binop."""
 
-    def _tiled_scalar(n) -> DataFrame | None:
-        """scalar(X) as a per-window scalar relation [__w, __sv] —
+    def tiled(n) -> DataFrame:
+        return _tiled_values(n, start_ms, end_ms, step_ms, ctx)
+
+    def tiled_scalar(n):
+        """The scalar operand as a Column over the vector side's rows:
+        a literal, or scalar(X) as a per-window relation [__w, __sv] —
         the share-of-total graph `m / scalar(sum(m))`. Prometheus
         semantics: a window whose inner vector is not exactly one
         series yields NaN (and a window with no inner rows simply has
-        no entry — the left join below turns that into NaN too)."""
-        if not (isinstance(n, Call) and n.func == "scalar"
-                and len(n.args) == 1):
-            return None
-        inner = _tiled_values(n.args[0], start_ms, end_ms, step_ms, ctx)
-        return inner.groupBy("__w").agg(
-            F.when(F.count("*") == 1, F.first("value"))
-            .otherwise(F.lit(float("nan"))).alias("__sv")
-        )
-
-    lsc, rsc = _tiled_scalar(node.lhs), _tiled_scalar(node.rhs)
-    if lsc is not None and rsc is not None:
-        raise ValueError("eval_range needs at least one vector operand")
-    if lsc is not None or rsc is not None:
-        if node.op in ("and", "or", "unless"):
-            raise ValueError(f"{node.op} requires two instant vectors")
-        vec_node = node.lhs if rsc is not None else node.rhs
-        vec = _tiled_values(vec_node, start_ms, end_ms, step_ms, ctx)
-        sc = rsc if rsc is not None else lsc
-        j = vec.join(sc, "__w", "left")
-        s = F.coalesce(F.col("__sv"), F.lit(float("nan")))
-        val = F.col("value")
-        a, b = (val, s) if rsc is not None else (s, val)
-        if node.op in _CMP_OPS:
-            cond = {"==": a == b, "!=": a != b, ">": a > b,
-                    "<": a < b, ">=": a >= b, "<=": a <= b}[node.op]
-            if node.bool_mode:
-                return j.select("signature", "labels", "__w",
-                                cond.cast("double").alias("value"))
-            return j.filter(cond).select(
-                "signature", "labels", "__w", "value")
-        expr = {"+": a + b, "-": a - b, "*": a * b, "/": a / b,
-                "%": a % b, "^": F.pow(a, b), "atan2": F.atan2(a, b)}[node.op]
-        return j.select("signature", "labels", "__w",
-                        expr.cast("double").alias("value"))
-    lv = _tiled_values(node.lhs, start_ms, end_ms, step_ms, ctx)
-    rv = _tiled_values(node.rhs, start_ms, end_ms, step_ms, ctx)
-    key = _match_key(node.match)
-    if node.op in ("and", "or", "unless"):
-        left = lv.withColumn("__k", key)
-        right = rv.withColumn("__k", key)
-        rk = right.select("__k", "__w").distinct()
-        if node.op == "and":
-            out = left.join(rk, ["__k", "__w"], "left_semi")
-        elif node.op == "unless":
-            out = left.join(rk, ["__k", "__w"], "left_anti")
-        else:
-            extra = right.join(
-                left.select("__k", "__w").distinct(),
-                ["__k", "__w"], "left_anti",
+        no entry — the left join turns that into NaN too)."""
+        c = _const_scalar(n)
+        if c is not None:
+            return F.lit(float(c)), None
+        if isinstance(n, Call) and n.func == "scalar" and len(n.args) == 1:
+            sv = tiled(n.args[0]).groupBy("__w").agg(
+                F.when(F.count("*") == 1, F.first("value"))
+                .otherwise(F.lit(float("nan"))).alias("__sv")
             )
-            out = left.unionByName(extra)
-        return out.select("signature", "labels", "__w", "value")
-    wl = Window.partitionBy("__k", "__w")
-    left = lv.select(
-        key.alias("__k"), "signature", "labels", "__w",
-        F.col("value").alias("__lv"),
-    )
-    right = rv.select(key.alias("__k"), "__w", F.col("value").alias("__rv"))
-    # per-window twin of the instant guard elision: a side provably
-    # unique per (key, window) skips its count window
-    ok = None
-    if not _unique_per_match_key(node.lhs, node.match):
-        left = left.withColumn("__nl", F.count("*").over(wl))
-        ok = F.col("__nl") == 1
-    if not _unique_per_match_key(node.rhs, node.match):
-        right = right.withColumn("__nr", F.count("*").over(wl))
-        c = F.col("__nr") == 1
-        ok = c if ok is None else (ok & c)
-    j = left.join(right, ["__k", "__w"])
-    guard = F.raise_error(
-        F.lit("PromQL vector matching is not one-to-one within a step "
-              "(use on/ignoring to narrow the match key)")
-    ).cast("double")
+            return F.coalesce(F.col("__sv"), F.lit(float("nan"))), sv
+        return None, None
 
-    def _guarded(x):
-        return x if ok is None else F.when(ok, x).otherwise(guard)
-
-    a, b = F.col("__lv"), F.col("__rv")
-    if node.op in _CMP_OPS:
-        cond = {"==": a == b, "!=": a != b, ">": a > b,
-                "<": a < b, ">=": a >= b, "<=": a <= b}[node.op]
-        if node.bool_mode:
-            val = _guarded(cond.cast("double"))
-            return j.select("signature", "labels", "__w", val.alias("value"))
-        val = _guarded(a)
-        return (
-            j.select("signature", "labels", "__w", val.alias("value"),
-                     cond.alias("__c"))
-            .filter("__c")
-            .drop("__c")
-        )
-    expr = {"+": a + b, "-": a - b, "*": a * b, "/": a / b,
-            "%": a % b, "^": F.pow(a, b), "atan2": F.atan2(a, b)}[node.op]
-    val = _guarded(expr.cast("double"))
-    return j.select("signature", "labels", "__w", val.alias("value"))
+    if node.group is None:
+        ls, lrel = tiled_scalar(node.lhs)
+        rs, rrel = tiled_scalar(node.rhs)
+        if ls is not None and rs is not None:
+            raise ValueError("eval_range needs at least one vector operand")
+        if ls is not None or rs is not None:
+            if node.op in ("and", "or", "unless"):
+                raise ValueError(f"{node.op} requires two instant vectors")
+            vec_left = rs is not None
+            vec = tiled(node.lhs if vec_left else node.rhs)
+            rel = rrel if vec_left else lrel
+            if rel is not None:
+                vec = vec.join(rel, "__w", "left")
+            return _vector_scalar(
+                vec, node, rs if vec_left else ls, vec_left, _W)
+    return _vector_binop(node, tiled(node.lhs), tiled(node.rhs), _W)

@@ -10648,11 +10648,12 @@ def ts_promql_range_at_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ts_promql_range_group_left_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Many-to-one matching in RANGE mode (promql._tiled_many_to_one):
-    the per-(kb, event_type) daily purchase share of each kb's total
-    volume — `/ on(kb) group_left` joins every many-side series to its
-    unique one-side partner per (key, window), with the instant path's
-    one-side-uniqueness guard and label-copy rule. Both grids are one
+    """Many-to-one matching in RANGE mode (promql._vector_binop with
+    the window key): the per-(kb, event_type) daily purchase share of
+    each kb's total volume — `/ on(kb) group_left` joins every
+    many-side series to its unique one-side partner per (key, window),
+    with the one-side-uniqueness guard and label-copy rule both modes
+    share. Both grids are one
     tiled pass; the match shuffles (series × windows) rows, never
     points. The oracle replays both grids and the per-window kb
     join."""

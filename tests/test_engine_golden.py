@@ -880,6 +880,42 @@ def test_downsample_retention_tiers_serve_identically(spark, tmp_path):
     shutil.rmtree(str(tmp_path / "db"), ignore_errors=True)
 
 
+def test_rollups_are_manifest_listed(spark, tmp_path):
+    """Rollup files live in the manifest like fact files: a snapshot
+    carries the rolled tier, a late point written into a rolled chunk
+    is served beside its rollup, and a second retention pass over that
+    chunk adds a partial instead of replacing the first. Each read is
+    (buckets, points) of a count query over both tiers."""
+    import os
+
+    from monolith_spark.labels import SAMPLES_SCHEMA
+
+    db = MonolithDB(spark, str(tmp_path / "db"), chunk_size_ms=10_000)
+    db.write(spark.createDataFrame(
+        [({"j": "a"}, t, 1.0) for t in range(1_000, 40_000, 1_000)],
+        SAMPLES_SCHEMA))
+
+    def read(d):
+        rows = d.query_downsampled({"j": "a"}, 0, 40_000, 5_000, "count")
+        rows = rows.collect()
+        return len(rows), int(sum(r["value"] for r in rows))
+
+    assert db.downsample_retention(20_000, 5_000) == (2, 2)
+    assert db._rolled_chunk_ids(5_000) == [0, 1]
+    assert read(db) == (8, 39)
+    snap = os.path.join(db.path, "snapshots", db.snapshot("s1"))
+    assert read(MonolithDB(spark, snap, chunk_size_ms=10_000)) == (8, 39)
+
+    db.write(spark.createDataFrame([({"j": "a"}, 500, 1.0)], SAMPLES_SCHEMA))
+    assert read(db) == (8, 40)
+
+    assert db.downsample_retention(20_000, 5_000) == (1, 1)
+    assert read(db) == (8, 40)
+    # vacuum walks the rollup tier but keeps every listed file
+    db.vacuum(grace_ms=0)
+    assert read(db) == (8, 40)
+
+
 @pytest.mark.slow
 def test_downsample_retention_straddling_buckets_merge(spark, tmp_path):
     """ADVICE r5 high: when step_ms does not divide chunk_size_ms, a

@@ -1461,6 +1461,76 @@ def test_eval_range_k_fanout(spark):
     assert all(math.isclose(rr[k], ri[k] / 40.0, rel_tol=1e-12) for k in rr)
 
 
+def test_eval_range_operators_match_instant(spark):
+    """Instant and range evaluation share every operator above sample
+    selection, so each window of eval_range must equal eval_instant at
+    that window's end: aggregations (by and without), vector matching,
+    set operators and value/label transforms. The instant lookback is
+    one step, the range selector's window; samples sit off the step
+    grid, where the closed instant window and the left-open range
+    window agree (PARITY.md). Three window ends per shape keep the
+    check in the fast tier."""
+    from functools import reduce
+
+    rows = []
+    for j in ("a", "b"):
+        for k in ("x", "y"):
+            for i in range(20):
+                t = 1_500 + i * 7_000  # never lands on a 10s boundary
+                rows.append(({"__name__": "m", "j": j, "k": k}, t,
+                             (i * 3 + ord(j) + 2 * ord(k)) % 7 + 0.5))
+                rows.append(({"__name__": "n", "j": j, "k": k}, t,
+                             (i * 2 + ord(j) + ord(k)) % 5 + 1.25))
+        # `o`: one series per j with an extra label, in every window
+        for t in range(5_000, 140_000, 10_000):
+            rows.append(({"__name__": "o", "j": j, "tier": f"t{j}"}, t, 2.0))
+    df = spark.createDataFrame(
+        rows, "labels map<string,string>, timestamp long, value double")
+    START, END, STEP = 0, 140_000, 10_000
+    ends = [40_000, 80_000, 130_000]
+
+    exprs = [
+        "sum by (j) (m)", "avg without (k) (m)", "min by (k) (m)",
+        "max without (j) (m)", "count by (j) (m)", "stddev by (j) (m)",
+        "stdvar without (k) (m)", "group by (k) (m)",
+        'count_values by (j) ("v", m)', "topk by (j) (1, m)",
+        "bottomk without (j) (1, m)", "quantile by (k) (0.5, m)",
+        "limitk by (j) (1, m)", "limit_ratio(0.7, m)",
+        "sum without (j, k) (m)",
+        "m * on(j, k) n", "m > on(j, k) n", "m > bool on(j, k) n",
+        "m * on(j) group_left(tier) o", "o * on(j) group_right(tier) m",
+        "(m > 3) and on(j, k) (n > 4)", "(m > 3) or on(j, k) n",
+        "(m > 3) unless on(j, k) (n > 5)",
+        "m - 2", "2 > bool m", "m < 4",
+        "-m", "abs(m - 4)", "sgn(m - 4)", "clamp(m, 2, 5)",
+        "round(m / 3, 0.5)", 'label_replace(m, "z", "$1", "j", "(.*)")',
+        'label_join(m, "z", "-", "j", "k")', "sort_desc(m)",
+        "timestamp(m)", "m", "m / scalar(sum(m))",
+    ]
+    for expr in exprs:
+        rg = promql.eval_range(df, expr, START, END, STEP).filter(
+            F.col("t_ms").isin(ends)
+        ).select("signature", "t_ms", "value", F.lit(True).alias("rg"))
+        inst = [
+            promql.eval_instant(df, expr, t, lookback_ms=STEP).select(
+                "signature", F.lit(t).cast("long").alias("t_ms"), "value",
+                F.lit(False).alias("rg"))
+            for t in ends
+        ]
+        got, expected = {}, {}
+        for r in reduce(lambda a, b: a.unionByName(b), inst, rg).collect():
+            (got if r["rg"] else expected)[(r["signature"], r["t_ms"])] = (
+                r["value"])
+        assert expected, f"{expr}: no instant rows — the shape checks nothing"
+        assert set(got) == set(expected), expr
+        for key, v in expected.items():
+            if math.isnan(v):
+                assert math.isnan(got[key]), (expr, key)
+            else:
+                assert math.isclose(got[key], v, rel_tol=1e-9, abs_tol=1e-9), (
+                    expr, key, got[key], v)
+
+
 def test_instant_lookback_no_staleness_markers(spark):
     """Documented divergence (PARITY.md): instant selectors honor the
     5m lookback but do NOT special-case NaN staleness markers — a

@@ -1,11 +1,27 @@
-"""Capture .explain('formatted') for bench workload rows into
-plans/r09/<name>_<tag>.txt (tag = before/after), plus a one-line
+"""Capture query plans of workload rows, in one of two modes.
+
+Physical mode (default): .explain('formatted') for bench workload rows
+into plans/r10/<name>_<tag>.txt (tag = before/after), plus a one-line
 plan-shape summary (Exchange count, join strategies, Python-eval
 nodes, PushedFilters presence) to stdout for quick diffing.
 
-Usage: python tools/capture_plans.py <tag> [name ...]
+    python tools/capture_plans.py <tag> [name ...]
+
 With no names, captures every workload row that appears in bench.py's
 R01_WORKLOAD_NAMES + EXTRA_WORKLOAD_NAMES.
+
+Logical mode: each row's OPTIMIZED LOGICAL plan into <out_dir>/<name>.txt,
+with expression ids (#123) and the numeric suffixes of Column-API
+lambda variables (x_17) normalized, so two checkouts' captures compare
+with a plain recursive diff — the plan-equality check for a refactor:
+
+    python tools/capture_plans.py --logical <out_dir> [name ...]
+    diff -r <out_dir of checkout A> <out_dir of checkout B>
+
+With no names, captures every registry row whose name starts with
+``ts_``. Rows read $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1).
+Capture both sides with the same $SPARK_GRAFT_CPUS: a Range node prints
+its split count, the session's default parallelism.
 """
 
 from __future__ import annotations
@@ -36,6 +52,14 @@ def plan_text(df) -> str:
     return buf.getvalue()
 
 
+def logical_plan_text(df) -> str:
+    """The optimized logical plan with run-dependent names normalized:
+    expression ids and lambda-variable counters."""
+    txt = df._jdf.queryExecution().optimizedPlan().toString()
+    txt = re.sub(r"#\d+L?", "#N", txt)
+    return re.sub(r"\b(lambda \w+?)_\d+#N", r"\1_N#N", txt)
+
+
 def summarize(txt: str) -> str:
     n_ex = len(re.findall(r"\bExchange\b", txt))
     joins = sorted(
@@ -49,7 +73,24 @@ def summarize(txt: str) -> str:
             f"python={','.join(py) or '-'} pushed_filters={pushed}")
 
 
+def capture_logical(out_dir: str, names: list[str]) -> None:
+    os.makedirs(out_dir, exist_ok=True)
+    spark = get_spark(app_name="plan-capture")
+    qs = all_queries()
+    for name in names or sorted(n for n in qs if n.startswith("ts_")):
+        try:
+            txt = logical_plan_text(qs[name].spark_fn(spark, SF_DIR))
+        except Exception as exc:  # noqa: BLE001 - report and continue
+            txt = f"ERROR {type(exc).__name__}: {exc}\n"
+        with open(os.path.join(out_dir, f"{name}.txt"), "w") as fh:
+            fh.write(txt)
+        print(f"{name}: {len(txt.splitlines())} plan lines")
+
+
 def main() -> None:
+    if sys.argv[1] == "--logical":
+        capture_logical(sys.argv[2], sys.argv[3:])
+        return
     tag = sys.argv[1]
     names = sys.argv[2:]
     if not names:

@@ -122,6 +122,28 @@ def _partition_files(
     ]
 
 
+def _disk_partitions(base: str) -> dict[str, list[str]]:
+    """{chunk_id: [parquet files]} of every non-empty ``chunk_id=N``
+    directory under ``base``: a table as its directories list it, for
+    data written before the manifest listed it."""
+    parts: dict[str, list[str]] = {}
+    if not os.path.isdir(base):
+        return parts
+    for name in sorted(os.listdir(base)):
+        if not name.startswith("chunk_id="):
+            continue
+        cid = name.split("=", 1)[1]
+        try:
+            int(cid)
+        except ValueError:
+            continue
+        part = os.path.join(base, name)
+        files = sorted(f for f in os.listdir(part) if f.endswith(".parquet"))
+        if files:
+            parts[cid] = files
+    return parts
+
+
 def _rollup_base(step_ms) -> str:
     """The rollup tier of one step, relative to the db root — its
     files sit under ``chunk_id=N/`` like a fact table's."""
@@ -332,7 +354,8 @@ class MonolithDB:
         ``at_version`` is given (time travel: every commit is a full
         file listing, so any retained version reads consistently).
         A vacuumed-away version fails loudly. Migrates a legacy
-        directory-layout db (pre-manifest) on first contact."""
+        directory-layout db (pre-manifest), and adopts rollups written
+        outside the manifest (_adopt_rollups), on first contact."""
         if at_version is not None:
             path = os.path.join(self._manifest_dir(), f"v{at_version:012d}.json")
             try:
@@ -344,13 +367,11 @@ class MonolithDB:
                     "committed, or expired by vacuum)"
                 ) from None
         man = self._read_current()
-        if man is not None:
-            return man
-        with self._manifest_lock():
-            man = self._read_current()  # lost the migration race: done
-            if man is not None:
-                return man
-            return self._migrate_legacy()
+        if man is None:
+            with self._manifest_lock():
+                # a lost migration race finds the winner's manifest
+                man = self._read_current() or self._migrate_legacy()
+        return self._adopt_rollups(man)
 
     def history(self) -> list[dict]:
         """The retained snapshot log, oldest first: [{version,
@@ -390,31 +411,47 @@ class MonolithDB:
             series_files = sorted(
                 f for f in os.listdir(self.series_path) if f.endswith(".parquet")
             )
-        samples: dict[str, list[str]] = {}
-        if os.path.isdir(self.samples_path):
-            for name in sorted(os.listdir(self.samples_path)):
-                if not name.startswith("chunk_id="):
-                    continue
-                cid = name.split("=", 1)[1]
-                try:
-                    int(cid)
-                except ValueError:
-                    continue
-                part = os.path.join(self.samples_path, name)
-                files = sorted(
-                    f for f in os.listdir(part) if f.endswith(".parquet")
-                )
-                if files:
-                    samples[cid] = files
         man = {
             "version": 1,
             "committed_ms": int(time.time() * 1000),
             "op": "migrate",
             "series": series_files,
-            "samples": samples,
+            "samples": _disk_partitions(self.samples_path),
         }
+        self._list_disk_rollups(man)
         self._write_version(man)
         return man
+
+    def _list_disk_rollups(self, man: dict) -> None:
+        """List in ``man`` (in place) every rollup file on disk under
+        ``rollups/step_ms=<s>/chunk_id=<c>/``, and drop each raw samples
+        chunk a rollup covers: the pass that rolled it was cut before
+        its raw drop, and engines that kept rollups outside the manifest
+        served such a chunk from its rollup alone. A no-op once ``man``
+        has a ``rollups`` entry — every manifest written since has one."""
+        if "rollups" in man:
+            return
+        root = os.path.join(self.path, "rollups")
+        man["rollups"] = tiers = {}
+        for name in sorted(os.listdir(root)) if os.path.isdir(root) else ():
+            step = name.removeprefix("step_ms=")
+            if step != name and step.isdigit():
+                parts = _disk_partitions(os.path.join(root, name))
+                if parts:
+                    tiers[step] = parts
+        for parts in tiers.values():
+            for cid in parts:
+                man["samples"].pop(cid, None)
+
+    def _adopt_rollups(self, man: dict) -> dict:
+        """The current manifest ``man``, once it lists the rolled tier.
+        Engines before this one wrote rollups to disk only; the first
+        contact with such a db adopts them in ONE commit
+        (_list_disk_rollups). Without it their rolled history would drop
+        out of query_downsampled, and vacuum would delete it."""
+        if "rollups" in man or not os.path.isdir(os.path.join(self.path, "rollups")):
+            return man
+        return self._commit(self._list_disk_rollups, op="adopt-rollups")
 
     def _write_version(self, man: dict) -> None:
         """Durably write v{N}.json, then atomically swing CURRENT —
@@ -558,9 +595,11 @@ class MonolithDB:
         (file not found), never silently drops rows. Returns the
         number of data files deleted."""
         deleted = 0
+        man = self._read_current()
+        if man is None:
+            return 0
+        self._adopt_rollups(man)  # before unlisted rollups look unreferenced
         with self._manifest_lock():
-            if self._read_current() is None:
-                return 0
             d = self._manifest_dir()
             versions = sorted(
                 n for n in os.listdir(d)
@@ -1262,16 +1301,27 @@ class MonolithDB:
         ``at_version``, any retained historical — snapshot."""
         return self._facts("samples", self._load_manifest(at_version))
 
-    def _facts(self, table: str, man: dict) -> DataFrame:
-        """Fact ``table`` of snapshot ``man``: an explicit file-list
-        read (with basePath, so chunk_id stays a partition column and
-        PartitionFilters prune exactly as with directory discovery) —
-        the plan is pinned to that manifest."""
-        paths = [os.path.join(self.path, p) for p in self._fact_paths(man, table)]
+    def _read_listed(self, base: str, parts: dict[str, list[str]]) -> DataFrame | None:
+        """The files ``parts`` ({chunk_id: [files]}) lists under ``base``
+        (relative to the db root) as ONE explicit file-list read, None
+        when it lists none. basePath keeps chunk_id a partition column,
+        so PartitionFilters prune exactly as with directory discovery,
+        and the plan is pinned to the listed files."""
+        paths = [
+            os.path.join(self.path, p)
+            for p in _partition_files(base, "chunk_id", parts)
+        ]
         if not paths:
-            return self.spark.createDataFrame([], _FACT_SCHEMAS[table])
-        base = os.path.join(self.path, table)
+            return None
+        base = os.path.join(self.path, base)
         return self.spark.read.option("basePath", base).parquet(*paths)
+
+    def _facts(self, table: str, man: dict) -> DataFrame:
+        """Fact ``table`` of snapshot ``man`` (_read_listed)."""
+        df = self._read_listed(table, man.get(table, {}))
+        if df is None:
+            return self.spark.createDataFrame([], _FACT_SCHEMAS[table])
+        return df
 
     def _facts_in(self, table: str, man: dict, start_ms: int, end_ms: int) -> DataFrame:
         """_facts pruned to the chunks overlapping [start_ms, end_ms]
@@ -1773,12 +1823,13 @@ class MonolithDB:
         }
 
     def _drop_chunks(
-        self, expired: dict[str, list[str]], op: str, also=None
+        self, expired: dict[str, list[str]], op: str, rollups=None
     ) -> int:
         """Drop the ``expired`` chunks ({table: keys}, _expired_chunks)
         in one manifest commit (none when there are none), which also
-        applies ``also(manifest)`` when given. Returns the number of
-        distinct chunk time-buckets dropped over all tables."""
+        lists ``rollups`` = (step_ms, {chunk_id: [files]}) in that
+        step's rolled tier when given. Returns the number of distinct
+        chunk time-buckets dropped over all tables."""
         buckets = {int(key) for keys in expired.values() for key in keys}
         if not buckets:
             return 0
@@ -1787,8 +1838,11 @@ class MonolithDB:
             for table, keys in expired.items():
                 for key in keys:
                     m.get(table, {}).pop(key, None)
-            if also is not None:
-                also(m)
+            if rollups is not None:
+                step_ms, staged = rollups
+                tier = m.setdefault("rollups", {}).setdefault(str(step_ms), {})
+                for cid, files in staged.items():
+                    tier.setdefault(cid, []).extend(files)
 
         self._commit(drop, op=op)
         return len(buckets)
@@ -1833,9 +1887,6 @@ class MonolithDB:
             F.max(F.struct(F.col("timestamp"), F.col("value"))).alias("last"),
         )
 
-    def _rollup_dir(self, step_ms: int) -> str:
-        return os.path.join(self.path, _rollup_base(step_ms))
-
     def downsample_retention(
         self, cutoff_ms: int, step_ms: int
     ) -> tuple[int, int]:
@@ -1876,19 +1927,12 @@ class MonolithDB:
             staged = self._stage_and_move(
                 self._rollup(raw, step_ms, extra_keys=("chunk_id",))
                 .repartition("chunk_id"),
-                self._rollup_dir(step_ms),
+                os.path.join(self.path, _rollup_base(step_ms)),
                 partition_by="chunk_id",
             )
-
-        def add_rollups(m: dict) -> None:
-            tier = m.setdefault("rollups", {}).setdefault(str(step_ms), {})
-            for cid, files in staged.items():
-                tier.setdefault(cid, []).extend(files)
-
         return (
             len(rolled),
-            self._drop_chunks(
-                expired, "retention-tier", add_rollups if staged else None),
+            self._drop_chunks(expired, "retention-tier", (step_ms, staged)),
         )
 
     def _rolled_chunk_ids(self, step_ms: int) -> list[int]:
@@ -1927,11 +1971,13 @@ class MonolithDB:
         [series_id, bucket_ms, n_points, value] ordered within series
         time-ascending by the caller's choice."""
         man = self._load_manifest()
-        rolled = man.get("rollups", {}).get(str(step_ms))
+        rolled = self._read_listed(
+            _rollup_base(step_ms), man.get("rollups", {}).get(str(step_ms), {})
+        )
         lo = (start_ms // step_ms) * step_ms
         hi = (end_ms // step_ms + 1) * step_ms - 1  # end of end_ms's bucket
         parts = []
-        if rolled:
+        if rolled is not None:
             # chunk_id pruning on the rollup tier too: a bucket partial
             # stored in chunk c only aggregates points inside c's range,
             # so partials for buckets starting in [lo, end_ms] (points
@@ -1939,21 +1985,13 @@ class MonolithDB:
             # [lo, hi]. Without this the rolled tier — which grows
             # unboundedly with retention age — scans every historical
             # rollup partition per query.
-            paths = [
-                os.path.join(self.path, p)
-                for p in _partition_files(_rollup_base(step_ms), "chunk_id", rolled)
-            ]
-            ro = (
-                self.spark.read.option("basePath", self._rollup_dir(step_ms))
-                .parquet(*paths)
-                .filter(
+            parts.append(
+                rolled.filter(
                     chunk_pred(lo, hi, self.chunk_size_ms)
                     & (F.col("bucket_ms") >= lo)
                     & (F.col("bucket_ms") <= end_ms)
-                )
-                .drop("chunk_id")
+                ).drop("chunk_id")
             )
-            parts.append(ro)
         raw = self._facts("samples", man).filter(
             chunk_pred(lo, hi, self.chunk_size_ms)
             & (F.col("timestamp") >= lo)

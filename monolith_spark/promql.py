@@ -227,7 +227,9 @@ def _tokenize(text: str) -> list[tuple[str, str]]:
 
 # ------------------------------------------------------------------ parser
 
-_CMP_OPS = {"==", "!=", ">", "<", ">=", "<="}
+# the comparison operators, each with its Column/float function
+_CMP = {"==": operator.eq, "!=": operator.ne, ">": operator.gt,
+        "<": operator.lt, ">=": operator.ge, "<=": operator.le}
 # precedence: higher binds tighter; ^ is right-associative
 _BIN_PREC = {"or": 1, "and": 2, "unless": 2,
              "==": 3, "!=": 3, ">": 3, "<": 3, ">=": 3, "<=": 3,
@@ -267,7 +269,7 @@ class _Parser:
                 return lhs
             self.next()
             bool_mode = False
-            if op in _CMP_OPS and self.peek() == ("IDENT", "bool"):
+            if op in _CMP and self.peek() == ("IDENT", "bool"):
                 self.next()
                 bool_mode = True
             match = None
@@ -2149,9 +2151,7 @@ def _copy_group_extras(labels, olabels_col: str, extras) -> "F.Column":
     return new_labels
 
 
-# the Column forms of the comparison and arithmetic operators
-_CMP = {"==": operator.eq, "!=": operator.ne, ">": operator.gt,
-        "<": operator.lt, ">=": operator.ge, "<=": operator.le}
+# the Column forms of the arithmetic operators (comparisons: _CMP)
 _ARITH = {"+": operator.add, "-": operator.sub, "*": operator.mul,
           "/": operator.truediv, "%": operator.mod, "^": F.pow,
           "atan2": F.atan2}

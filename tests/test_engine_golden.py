@@ -850,11 +850,12 @@ def test_downsample_retention_tiers_serve_identically(spark, tmp_path):
     before = {a: snap(a) for a in ("avg", "sum", "min", "max", "last", "count")}
     assert len(before["avg"]) > 0
 
-    # crash injection: rollup for chunk 0 lands, raw survives — the
-    # query must prefer the rollup and not double-count
+    # crash injection: a rollup file for chunk 0 lands, but the commit
+    # that lists it never happens — the unlisted file is invisible, so
+    # the raw chunk alone serves it and nothing double-counts
     raw0 = spark.read.parquet(os.path.join(db.samples_path, "chunk_id=0"))
     db._rollup(raw0, 5_000).write.mode("overwrite").parquet(
-        os.path.join(db._rollup_dir(5_000), "chunk_id=0")
+        os.path.join(db.path, "rollups", "step_ms=5000", "chunk_id=0")
     )
     assert {a: snap(a) for a in before} == before
 
@@ -914,6 +915,50 @@ def test_rollups_are_manifest_listed(spark, tmp_path):
     # vacuum walks the rollup tier but keeps every listed file
     db.vacuum(grace_ms=0)
     assert read(db) == (8, 40)
+
+
+def test_rollups_outside_the_manifest_are_adopted(spark, tmp_path):
+    """A db whose rollups were written to disk only (no ``rollups``
+    manifest entry, as engines before the manifest listed them left it)
+    keeps its rolled history: the first contact lists the files in one
+    commit, drops the raw chunk a cut pass left beside its rollup, and
+    query_downsampled and vacuum(grace_ms=0) both keep the tier."""
+    import os
+
+    from monolith_spark.labels import SAMPLES_SCHEMA
+
+    db = MonolithDB(spark, str(tmp_path / "db"), chunk_size_ms=10_000)
+    db.write(spark.createDataFrame(
+        [({"j": "a"}, t, 1.0) for t in range(1_000, 40_000, 1_000)],
+        SAMPLES_SCHEMA))
+
+    def read():
+        rows = db.query_downsampled({"j": "a"}, 0, 40_000, 5_000, "count")
+        rows = rows.collect()
+        return len(rows), int(sum(r["value"] for r in rows))
+
+    # the old layout: chunks 0-1 rolled with their raw chunks dropped,
+    # chunk 2 rolled by a pass cut before its raw drop, chunk 3 raw
+    raw = db.samples().filter("chunk_id < 3")
+    db._rollup(raw, 5_000, extra_keys=("chunk_id",)).write.partitionBy(
+        "chunk_id").parquet(os.path.join(db.path, "rollups", "step_ms=5000"))
+
+    def old_layout(m):
+        del m["rollups"]
+        m["samples"].pop("0")
+        m["samples"].pop("1")
+
+    db._commit(old_layout, op="old-layout")
+    version = db._read_current()["version"]
+
+    assert read() == (8, 39)
+    man = db._load_manifest()
+    assert (man["version"], man["op"]) == (version + 1, "adopt-rollups")
+    assert db._rolled_chunk_ids(5_000) == [0, 1, 2]
+    assert sorted(man["samples"]) == ["3"]
+    db.vacuum(grace_ms=0)
+    assert read() == (8, 39)
+    assert db._load_manifest()["version"] == version + 1  # adopted once
 
 
 @pytest.mark.slow

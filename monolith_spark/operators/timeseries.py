@@ -173,6 +173,16 @@ def downsample(
     )
 
 
+def counter_step(cur: Column, prev: Column, lagged: bool = True) -> Column:
+    """Reset-corrected counter increase from ``prev`` to ``cur``: the
+    difference, or ``cur`` itself after a counter reset (a drop) — the
+    one step expression behind every rate/increase/irate. ``lagged``:
+    ``prev`` is a lag, null on a series' first point, which then has
+    no step."""
+    case = F.when(prev.isNull(), F.lit(None)) if lagged else F
+    return case.when(cur >= prev, cur - prev).otherwise(cur)
+
+
 def range_func_by_step(
     df: DataFrame,
     step_ms: int,
@@ -200,11 +210,7 @@ def range_func_by_step(
     dec = F.col("value").cast("decimal(28,6)")
     prev_v = F.lag(dec).over(w)
     prev_t = F.lag(F.col(ts)).over(w)
-    inc_step = (
-        F.when(prev_v.isNull(), F.lit(None))
-        .when(dec >= prev_v, dec - prev_v)
-        .otherwise(dec)  # counter reset: the new value IS the increase
-    )
+    inc_step = counter_step(dec, prev_v)
     delta_step = F.when(prev_v.isNull(), F.lit(None)).otherwise(dec - prev_v)
     bucket = (F.floor(F.col(ts) / F.lit(step_ms)) * F.lit(step_ms)).cast("long")
     stepped = df.select(
@@ -367,28 +373,6 @@ def range_join(
         s.join(i, "__bucket")
         .filter(F.col(ts).between(F.col(start), F.col(end)))
         .drop("__bucket")
-    )
-
-
-def delta_stats(df: DataFrame, key_cols: list[str] | None = None, ts: str = "timestamp") -> DataFrame:
-    """Per-series consecutive-point deltas (rate()-style building block).
-
-    Values are diffed in DECIMAL so sums are order-independent —
-    important for oracle parity and for deterministic results under
-    shuffle at scale.
-    """
-    key_cols = key_cols or ["series_id"]
-    w = Window.partitionBy(*key_cols).orderBy(F.col(ts))
-    dec = F.col("value").cast("decimal(28,6)")
-    diff = (dec - F.lag(dec).over(w)).alias("delta")
-    return (
-        df.select(*key_cols, F.col(ts), diff)
-        .filter(F.col("delta").isNotNull())
-        .groupBy(*key_cols)
-        .agg(
-            F.sum("delta").cast("double").alias("sum_delta"),
-            F.count("*").alias("n_deltas"),
-        )
     )
 
 
@@ -718,14 +702,15 @@ def predict_linear(
     ts: str = "timestamp",
     value: str = "value",
     t0: int = 0,
-    at_ms: int = 0,
+    at_ms: int | Column = 0,
     out: str = "predicted",
 ) -> DataFrame:
     """PromQL predict_linear(): least-squares extrapolation of each
-    series to ``t0 + at_ms``, from the same five exact DECIMAL
-    accumulators as :func:`linreg_slope` (one map-combinable
-    aggregation, no sort). The reference parses the PromQL func hint
-    but never evaluates it (ReadHints at
+    series to ``t0 + at_ms`` (a Column over the key columns gives
+    each group its own horizon, e.g. per evaluation window), from the
+    same five exact DECIMAL accumulators as :func:`linreg_slope` (one
+    map-combinable aggregation, no sort). The reference parses the
+    PromQL func hint but never evaluates it (ReadHints at
     /root/reference/src/proto/types.rs:1248-1257, unread by the
     server); this is the server-side evaluation Spark makes cheap.
 
@@ -748,8 +733,35 @@ def predict_linear(
     denom = n * F.col("__sxx") - F.col("__sx") * F.col("__sx")
     slope_ms = (n * F.col("__sxy") - F.col("__sx") * F.col("__sy")) / denom
     intercept = (F.col("__sy") - slope_ms * F.col("__sx")) / n
-    predicted = intercept + slope_ms * F.lit(float(at_ms))
+    at = at_ms if isinstance(at_ms, Column) else F.lit(float(at_ms))
+    predicted = intercept + slope_ms * at
     return agg.filter(denom > 0).select(*key_cols, "n_points", predicted.alias(out))
+
+
+def _last_two(df: DataFrame, key_cols: list[str], ts: str, value: str) -> DataFrame:
+    """The last two samples per key, [*key, __v1, __v2, __t1, __t2]
+    newest first: a row_number top-2 over a (time desc, value desc)
+    sort — one shuffle; the value tie-break makes the pair
+    deterministic under duplicate timestamps. Values are DECIMAL;
+    keys without two distinct trailing timestamps are dropped."""
+    w = Window.partitionBy(*key_cols).orderBy(F.desc(ts), F.desc(value))
+    d = F.col(value).cast("decimal(28,6)")
+    ranked = df.select(
+        *key_cols,
+        F.col(ts).alias("__t"),
+        d.alias("__v"),
+        F.row_number().over(w).alias("__rn"),
+    ).filter(F.col("__rn") <= 2)
+    return (
+        ranked.groupBy(*key_cols)
+        .agg(
+            F.max(F.when(F.col("__rn") == 1, F.col("__v"))).alias("__v1"),
+            F.max(F.when(F.col("__rn") == 2, F.col("__v"))).alias("__v2"),
+            F.max(F.when(F.col("__rn") == 1, F.col("__t"))).alias("__t1"),
+            F.max(F.when(F.col("__rn") == 2, F.col("__t"))).alias("__t2"),
+        )
+        .filter(F.col("__t2").isNotNull() & (F.col("__t1") > F.col("__t2")))
+    )
 
 
 def irate(
@@ -761,36 +773,30 @@ def irate(
     out: str = "irate",
 ) -> DataFrame:
     """PromQL irate(): reset-corrected rate from the LAST TWO samples
-    per series ([*key, out]). A row_number top-2 over a (time desc,
-    value desc) sort — one shuffle; the value tie-break makes the pair
-    deterministic under duplicate timestamps. The step stays DECIMAL
-    until the final double divide. Series without two distinct
-    trailing timestamps are dropped (rate undefined)."""
+    per series ([*key, out]), the step DECIMAL until the final double
+    divide. Series without two distinct trailing timestamps are
+    dropped (rate undefined)."""
     key_cols = key_cols or ["series_id"]
-    w = Window.partitionBy(*key_cols).orderBy(F.desc(ts), F.desc(value))
-    d = F.col(value).cast("decimal(28,6)")
-    ranked = df.select(
-        *key_cols,
-        F.col(ts).alias("__t"),
-        d.alias("__v"),
-        F.row_number().over(w).alias("__rn"),
-    ).filter(F.col("__rn") <= 2)
-    agg = (
-        ranked.groupBy(*key_cols)
-        .agg(
-            F.max(F.when(F.col("__rn") == 1, F.col("__v"))).alias("__v1"),
-            F.max(F.when(F.col("__rn") == 2, F.col("__v"))).alias("__v2"),
-            F.max(F.when(F.col("__rn") == 1, F.col("__t"))).alias("__t1"),
-            F.max(F.when(F.col("__rn") == 2, F.col("__t"))).alias("__t2"),
-        )
-        .filter(F.col("__t2").isNotNull() & (F.col("__t1") > F.col("__t2")))
-    )
-    step = F.when(F.col("__v1") >= F.col("__v2"), F.col("__v1") - F.col("__v2")).otherwise(
-        F.col("__v1")
-    )
-    return agg.select(
+    step = counter_step(F.col("__v1"), F.col("__v2"), lagged=False)
+    return _last_two(df, key_cols, ts, value).select(
         *key_cols,
         (step.cast("double") / (F.col("__t1") - F.col("__t2")) * F.lit(per)).alias(out),
+    )
+
+
+def idelta(
+    df: DataFrame,
+    key_cols: list[str] | None = None,
+    ts: str = "timestamp",
+    value: str = "value",
+    out: str = "idelta",
+) -> DataFrame:
+    """PromQL idelta(): the raw difference of the LAST TWO samples per
+    series ([*key, out]), exact in DECIMAL. Series without two distinct
+    trailing timestamps are dropped."""
+    key_cols = key_cols or ["series_id"]
+    return _last_two(df, key_cols, ts, value).select(
+        *key_cols, (F.col("__v1") - F.col("__v2")).cast("double").alias(out)
     )
 
 

@@ -13,9 +13,11 @@ DataFrame comes out.
 Scope and semantics (documented divergences from Prometheus, chosen to
 match this repo's established, oracle-verified conventions):
 
-- Single-point INSTANT evaluation at ``eval_ms``: selectors, range
-  functions, aggregations, scalar arithmetic. (A step-range API is one
-  loop above this; range_func_by_step covers the hinted remote-read.)
+- Two evaluation modes over one operator layer: eval_instant at one
+  ``eval_ms``, and eval_range over a whole step grid in one pass (each
+  step a window id, ``__w``, the operators key on). The modes differ
+  only in how samples are selected; every range function, aggregation,
+  vector match and transform is one function both call.
 - Range windows are INCLUSIVE on both ends — ``m[5m]`` at T reads
   ts ∈ [T-5m, T] — matching the engine's F3 inclusive trim
   (SURVEY §7.2 M1), where Prometheus uses a left-open window.
@@ -68,11 +70,12 @@ single-series operand driver-side
 (a bounded 1-row collect — the one documented driver touch).
 
 Scale shape: every range function is one (series, time)-sorted window
-or one map-combinable aggregation per series; aggregations re-key by
-the grouped label subset's signature; nothing collects to the driver.
-Builder-backed functions (irate/deriv/predict_linear/holt_winters/
-resets/changes) re-attach labels via a broadcast self-join on the
-per-series dim (small by construction — one row per matched series).
+or one map-combinable aggregation per series (per window in range
+mode); aggregations re-key by the grouped label subset's signature;
+nothing collects to the driver. Builder-backed functions (irate/
+idelta/deriv/predict_linear/holt_winters/resets/changes) carry the
+labels through their grouping key as its entries array, so no second
+pass re-attaches them.
 """
 
 from __future__ import annotations
@@ -963,33 +966,7 @@ def _last_point(
     )
 
 
-def _attach_labels(out: DataFrame, src: DataFrame, value_col: str) -> DataFrame:
-    """Re-attach the labels map to a builder result keyed by signature
-    (builders group by signature only — maps aren't groupable). The
-    per-series dim is one row per matched series → broadcast join."""
-    dim = src.select("signature", "labels").dropDuplicates(["signature"])
-    return out.join(F.broadcast(dim), "signature").select(
-        "signature", "labels", F.col(value_col).cast("double").alias("value")
-    )
-
-
-# -- range-function machinery --------------------------------------------
-
-
-def _steps(df: DataFrame) -> DataFrame:
-    """Reset-corrected consecutive increases per series (the shared
-    core of rate/increase — ts_rate's exact construction)."""
-    w = Window.partitionBy("signature").orderBy("timestamp", "value")
-    dec = F.col("value").cast(_DEC)
-    prev = F.lag(dec).over(w)
-    step = (
-        F.when(prev.isNull(), F.lit(None))
-        .when(dec >= prev, dec - prev)
-        .otherwise(dec)
-    )
-    return df.select(
-        "signature", "labels", F.col("timestamp").alias("ts_ms"), step.alias("step")
-    ).filter(F.col("step").isNotNull())
+# -- the range-function layer ---------------------------------------------
 
 
 def _hashable_group(df: DataFrame, keys: list, label_src: str, *aggs) -> DataFrame:
@@ -1020,66 +997,45 @@ def _hashable_group(df: DataFrame, keys: list, label_src: str, *aggs) -> DataFra
 _STRUCT_BUFFER_OPS = frozenset(("last", "ts_of_max", "ts_of_min"))
 
 
-def _per_series(
-    df: DataFrame,
-    *aggs,
-    extra_keys: tuple[str, ...] = (),
-    hash_friendly: bool = True,
+def _rate(
+    pts: DataFrame, f: str, extra_keys: tuple[str, ...] = (),
+    range_ms: int | None = None,
 ) -> DataFrame:
-    if not hash_friendly:
-        return df.groupBy("signature", *extra_keys).agg(
-            F.first("labels").alias("labels"), *aggs
-        )
-    return _hashable_group(df, ["signature", *extra_keys], "labels", *aggs)
-
-
-def _rate(df, start, end, per_second=True):
-    agg = _per_series(
-        _steps(df),
-        F.sum("step").cast("double").alias("__s"),
-        F.min("ts_ms").alias("__mn"),
-        F.max("ts_ms").alias("__mx"),
+    """rate/increase/delta: the sum of each group's consecutive steps in
+    DECIMAL (order-free) — reset-corrected for rate and increase
+    (ts_rate's exact construction), plain differences for delta. rate
+    divides by ``range_ms`` (range and subquery evaluation) or, with
+    None (instant evaluation), by the span its steps cover, dropping a
+    series whose steps share one timestamp (PARITY.md)."""
+    w = Window.partitionBy("signature", *extra_keys).orderBy(
+        "timestamp", "value")
+    dec = F.col("value").cast(_DEC)
+    prev = F.lag(dec).over(w)
+    step = (
+        F.when(prev.isNull(), F.lit(None)).otherwise(dec - prev)
+        if f == "delta" else _tsops.counter_step(dec, prev)
     )
-    if per_second:
-        agg = agg.filter(F.col("__mx") > F.col("__mn"))
-        val = F.col("__s") / (F.col("__mx") - F.col("__mn")) * F.lit(1000.0)
-    else:
-        val = F.col("__s")
-    return agg.select("signature", "labels", val.alias("value"))
-
-
-def _delta(df):
-    agg = _per_series(
-        df,
-        F.max(F.struct("timestamp", "value")).alias("__last"),
-        F.min(F.struct("timestamp", "value")).alias("__first"),
-        F.count("*").alias("__n"),
-        hash_friendly=False,  # struct buffers sort-aggregate regardless
-    ).filter(F.col("__n") >= 2)
-    return agg.select(
-        "signature",
+    span = f == "rate" and range_ms is None
+    stepped = pts.select(
+        "signature", "labels", *extra_keys,
+        *([F.col("timestamp").alias("ts_ms")] if span else []),
+        step.alias("__step"),
+    ).filter(F.col("__step").isNotNull())
+    out = _hashable_group(
+        stepped,
+        ["signature", *extra_keys],
         "labels",
-        (F.col("__last.value") - F.col("__first.value")).alias("value"),
+        F.sum("__step").cast("double").alias("value"),
+        *([F.min("ts_ms").alias("__mn"), F.max("ts_ms").alias("__mx")]
+          if span else []),
     )
-
-
-def _idelta(df):
-    w = Window.partitionBy("signature").orderBy(
-        F.col("timestamp").desc(), F.col("value").desc()
-    )
-    ranked = df.select(
-        "signature", "labels", "value", F.row_number().over(w).alias("__rn")
-    ).filter(F.col("__rn") <= 2)
-    agg = _hashable_group(
-        ranked,
-        ["signature"],
-        "labels",
-        F.max(F.when(F.col("__rn") == 1, F.col("value"))).alias("__v1"),
-        F.max(F.when(F.col("__rn") == 2, F.col("value"))).alias("__v2"),
-    ).filter(F.col("__v2").isNotNull())
-    return agg.select(
-        "signature", "labels", (F.col("__v1") - F.col("__v2")).alias("value")
-    )
+    val = F.col("value")
+    if span:
+        out = out.filter(F.col("__mx") > F.col("__mn"))
+        val = val / (F.col("__mx") - F.col("__mn")) * F.lit(1000.0)
+    elif f == "rate":
+        val = val / F.lit(range_ms / 1000.0)
+    return out.select("signature", "labels", *extra_keys, val.alias("value"))
 
 
 def _array_quantile(arr, phi):
@@ -1158,10 +1114,11 @@ def _over_time(df, op: str, param: float | None = None,
         val = _array_quantile(devs, F.lit(0.5))
     else:  # pragma: no cover
         raise ValueError(f"unknown over_time op {op!r}")
-    agg = _per_series(
-        df, *a, extra_keys=extra_keys,
-        hash_friendly=op not in _STRUCT_BUFFER_OPS,
-    )
+    if op in _STRUCT_BUFFER_OPS:
+        agg = df.groupBy("signature", *extra_keys).agg(
+            F.first("labels").alias("labels"), *a)
+    else:
+        agg = _hashable_group(df, ["signature", *extra_keys], "labels", *a)
     return agg.select(
         "signature", "labels", *extra_keys, val.cast("double").alias("value")
     )
@@ -1179,6 +1136,122 @@ _RANGE_FUNCS = {
     # sample in the range (seconds)
     "ts_of_max_over_time", "ts_of_min_over_time", "ts_of_last_over_time",
 }
+# the scalar parameters of the range functions that take any (the range
+# argument comes first, except quantile_over_time's φ)
+_RANGE_PARAMS = {
+    "quantile_over_time": 1, "predict_linear": 1, "holt_winters": 2,
+    "double_exponential_smoothing": 2,
+}
+# <op>_over_time functions a subquery may feed: the inner values carry
+# the window index as their timestamp, so the ts_of_* family is out
+_SUBQUERY_OPS = frozenset((
+    "avg", "sum", "min", "max", "count", "last", "present", "stddev",
+    "stdvar", "mad", "quantile",
+))
+
+
+def _range_args(node: Call, scalar) -> tuple[Any, list[float]]:
+    """Split range-function call ``node`` into its range argument (a
+    range selector or a subquery) and its scalar parameters, each
+    resolved by the evaluation mode's ``scalar(arg)``."""
+    f = node.func
+    n = 1 + _RANGE_PARAMS.get(f, 0)
+    if len(node.args) != n:
+        raise ValueError(f"{f}() takes {n} argument(s)")
+    args = list(node.args)
+    rng = args.pop(1 if f == "quantile_over_time" else 0)
+    if not (isinstance(rng, Subquery)
+            or (isinstance(rng, Selector) and rng.range_ms is not None)):
+        raise ValueError(f"{f}() expects a range selector, e.g. m[5m]")
+    return rng, [scalar(a) for a in args]
+
+
+def _subquery_op(f: str) -> str:
+    op = f[: -len("_over_time")] if f.endswith("_over_time") else None
+    if op not in _SUBQUERY_OPS:
+        raise ValueError(f"subquery argument not supported for {f}()")
+    return op
+
+
+def _range_func(
+    pts: DataFrame,
+    f: str,
+    params: list[float],
+    t0: int,
+    at,
+    extra_keys: tuple[str, ...] = (),
+    range_ms: int | None = None,
+) -> DataFrame:
+    """Every PromQL range function, one implementation each, over the
+    selected points [signature, labels, *extra_keys, timestamp, value]
+    grouped by (signature, *extra_keys) → [signature, labels,
+    *extra_keys, value]. Instant evaluation calls it with no extra key
+    (one closed window [t-R, t]); range and subquery evaluation with
+    the window id ``("__w",)`` over their tiles, so each window's
+    state (counter resets, smoothing, regression) is isolated.
+    ``params`` are the resolved scalar arguments (_range_args);
+    ``t0`` is the regression origin and ``at`` the evaluation time
+    relative to it (a Column per window); ``range_ms`` is rate's
+    divisor (None: the covered span, see _rate)."""
+    if f in ("rate", "increase", "delta"):
+        return _rate(pts, f, extra_keys, range_ms)
+    if f.endswith("_over_time"):
+        return _over_time(
+            pts, f[: -len("_over_time")], *params, extra_keys=extra_keys)
+    # the labels ride through the keyed builder as their entries array
+    # (maps aren't groupable), as in _hashable_group
+    pts = pts.withColumn("__lent", F.map_entries("labels"))
+    keys, col = ["signature", *extra_keys, "__lent"], "__v"
+    if f == "irate":
+        out = _tsops.irate(pts, key_cols=keys, out=col)
+    elif f == "idelta":
+        out = _tsops.idelta(pts, key_cols=keys, out=col)
+    elif f in ("resets", "changes"):
+        out, col = _tsops.changes_resets(pts, key_cols=keys), f"n_{f}"
+    elif f == "deriv":
+        out = _tsops.linreg_slope(pts, key_cols=keys, t0=t0, out=col)
+    elif f == "predict_linear":
+        horizon_ms = params[0] * 1000
+        at_ms = (at + int(horizon_ms) if isinstance(at, int)
+                 else at + F.lit(horizon_ms))
+        out = _tsops.predict_linear(
+            pts, key_cols=keys, t0=t0, at_ms=at_ms, out=col)
+    else:  # holt_winters / double_exponential_smoothing
+        sf, tf = params
+        out = _tsops.holt_winters(pts, key_cols=keys, sf=sf, tf=tf, out=col)
+    return out.select(
+        "signature", F.map_from_entries("__lent").alias("labels"),
+        *extra_keys, F.col(col).cast("double").alias("value"),
+    )
+
+
+def _fan_out(df: DataFrame, win, k: int, n_tiles: int) -> DataFrame:
+    """[signature, labels, __w, timestamp, value]: each point of ``df``
+    in the ≤k consecutive windows [w0, w0+k-1] ∩ [0, n_tiles) whose
+    range covers its base tile w0 = ``win`` — a function range of k
+    tiles as a bounded explode over ONE scan, never a per-window
+    rescan. The caller's scan filter keeps w0 ≥ -(k-1), so sequence()
+    never reverses; the filter keeps the degenerate empty grid empty."""
+    w0 = win.cast("long")
+    if k == 1:
+        return df.select(
+            "signature", "labels", w0.alias("__w"), "timestamp", "value"
+        ).filter((F.col("__w") >= 0) & (F.col("__w") < n_tiles))
+    base = df.select(
+        "signature", "labels", w0.alias("__w0"), "timestamp", "value"
+    ).filter((F.col("__w0") < n_tiles) & (F.col("__w0") + (k - 1) >= 0))
+    wins = F.sequence(
+        F.greatest(F.col("__w0"), F.lit(0).cast("long")),
+        F.least(
+            F.col("__w0") + F.lit(int(k - 1)).cast("long"),
+            F.lit(int(n_tiles - 1)).cast("long"),
+        ),
+    )
+    return base.select(
+        "signature", "labels", F.explode(wins).alias("__w"),
+        "timestamp", "value",
+    )
+
 
 _MATH_FUNCS = {
     "abs": F.abs, "ceil": F.ceil, "floor": F.floor, "exp": F.exp,
@@ -1397,93 +1470,35 @@ def _eval_call(node: Call, ctx: _Ctx):
 
 def _eval_range_func(node: Call, ctx: _Ctx) -> DataFrame:
     f = node.func
-    if f == "quantile_over_time":
-        # PromQL argument order: quantile_over_time(φ, m[range])
-        phi = _scalar_arg(node.args[0], ctx, f)
-        sel = node.args[1]
-        if isinstance(sel, Subquery):
-            return _eval_subquery_func(f, sel, node, ctx, param=phi)
-        if not isinstance(sel, Selector) or sel.range_ms is None:
-            raise ValueError("quantile_over_time expects (φ, m[range])")
-        df, _, _ = _range_df(sel, ctx)
-        return _over_time(df, "quantile", phi)
-    sel_arg = node.args[0]
-    if isinstance(sel_arg, Subquery):
-        return _eval_subquery_func(f, sel_arg, node, ctx)
-    if not isinstance(sel_arg, Selector) or sel_arg.range_ms is None:
-        raise ValueError(f"{f}() expects a range selector, e.g. m[5m]")
-    df, start, end = _range_df(sel_arg, ctx)
-    if f == "rate":
-        return _rate(df, start, end, per_second=True)
-    if f == "increase":
-        return _rate(df, start, end, per_second=False)
-    if f == "delta":
-        return _delta(df)
-    if f == "idelta":
-        return _idelta(df)
-    if f == "irate":
-        out = _tsops.irate(df, key_cols=["signature"], out="__v")
-        return _attach_labels(out, df, "__v")
-    if f in ("resets", "changes"):
-        out = _tsops.changes_resets(df, key_cols=["signature"])
-        col = "n_resets" if f == "resets" else "n_changes"
-        return _attach_labels(out, df, col)
-    if f == "deriv":
-        out = _tsops.linreg_slope(df, key_cols=["signature"], t0=start, out="__v")
-        return _attach_labels(out, df, "__v")
-    if f == "predict_linear":
-        t_sec = _scalar_arg(node.args[1], ctx, f)
-        at_ms = (end - start) + int(t_sec * 1000)  # relative to t0=start
-        out = _tsops.predict_linear(
-            df, key_cols=["signature"], t0=start, at_ms=at_ms, out="__v"
-        )
-        return _attach_labels(out, df, "__v")
-    if f in ("holt_winters", "double_exponential_smoothing"):
-        sf = _scalar_arg(node.args[1], ctx, f)
-        tf = _scalar_arg(node.args[2], ctx, f)
-        out = _tsops.holt_winters(
-            df, key_cols=["signature"], sf=sf, tf=tf, out="__v"
-        )
-        return _attach_labels(out, df, "__v")
-    if f.endswith("_over_time"):
-        return _over_time(df, f[: -len("_over_time")])
-    raise ValueError(f"unsupported range function {f!r}")
+    rng, params = _range_args(node, lambda a: _scalar_arg(a, ctx, f))
+    if isinstance(rng, Subquery):
+        return _eval_subquery_func(f, rng, params, ctx)
+    df, start, end = _range_df(rng, ctx)
+    return _range_func(df, f, params, start, end - start)
 
 
 def _eval_subquery_func(
-    f: str, sq: Subquery, node: Call, ctx: _Ctx, param: float | None = None
+    f: str, sq: Subquery, params: list[float], ctx: _Ctx
 ) -> DataFrame:
-    """``<agg>_over_time(inner[R:step])`` where inner is rate/increase/
-    delta of a range selector. The outer range is tiled by step-width
-    windows anchored at (eval - offset - R); the inner function runs
-    isolated per window — a lag partitioned on (series, window) — so
-    counter state never leaks across evaluations
+    """``<agg>_over_time(inner[R:S])`` in an instant query, with inner
+    a range function of a range selector. The outer range is tiled by
+    S-wide windows anchored at (eval - offset - R), closed on the left
+    (the instant convention, PARITY.md); the inner function runs
+    isolated per window — the range-function layer keyed by the
+    window id — so counter state never leaks across evaluations
     (ts_subquery_max_rate's pinned semantics). The inner range may be
-    any whole multiple k = inner_range/step up to RANGE_TILE_MAX_K
-    (samples fan into the ≤k windows whose range covers their tile —
-    bounded explode, one scan); with inner == step (the common
-    dashboard shape) the duplication is exactly 1 — one sort shuffle."""
-    if not (f.endswith("_over_time") and f[: -len("_over_time")] in
-            ("avg", "sum", "min", "max", "count", "last", "present",
-             "stddev", "stdvar", "mad", "quantile")):
-        raise ValueError(f"subquery argument not supported for {f}()")
-    op = f[: -len("_over_time")]
-    inner = sq.expr
-    if not (
-        isinstance(inner, Call)
-        and inner.func in ("rate", "increase", "delta")
-        and len(inner.args) == 1
-        and isinstance(inner.args[0], Selector)
-        and inner.args[0].range_ms is not None
-    ):
+    any whole multiple k = inner_range/S up to RANGE_TILE_MAX_K:
+    samples fan into the ≤k windows whose range covers their tile
+    (_fan_out, the device eval_range's tiles use); with inner == S
+    (the common dashboard shape) each sample lands in one window."""
+    op = _subquery_op(f)
+    inner, sel = sq.expr, None
+    if isinstance(inner, Call) and inner.func in _RANGE_FUNCS:
+        sel, inner_params = _range_args(
+            inner, lambda a: _scalar_arg(a, ctx, inner.func))
+    if not isinstance(sel, Selector):
         raise ValueError(
-            "subquery inner must be rate/increase/delta of a range selector"
-        )
-    sel = inner.args[0]
-    # inner range = k*subquery-step (k a whole multiple, capped): each
-    # sample fans into the ≤k consecutive windows whose inner range
-    # covers its tile — the same bounded-explode device eval_range's
-    # tiles() uses, so `avg_over_time(rate(m[5m])[1h:1m])` works
+            "subquery inner must be a range function of a range selector")
     k = _tile_k(sel.range_ms, sq.step_ms)
     if sel.at_ms is not None:
         raise ValueError(
@@ -1497,61 +1512,18 @@ def _eval_subquery_func(
         (F.col("timestamp") >= start - (k - 1) * sq.step_ms)
         & (F.col("timestamp") <= end),
     )
-    win = F.floor((F.col("timestamp") - F.lit(start)) / F.lit(sq.step_ms))
-    # a point at exactly ts == end would index one past the tiling
-    # (floor(R/step)) — clamp it out rather than opening a spurious
-    # single-instant window
-    n_tiles = -(-sq.range_ms // sq.step_ms)
-    if k == 1:
-        pts = df.select(
-            "signature", "labels", win.alias("__w"), "timestamp", "value"
-        ).filter(F.col("__w") < n_tiles)
-    else:
-        base_pts = df.select(
-            "signature", "labels", win.alias("__w0"), "timestamp", "value"
-        ).filter(
-            (F.col("__w0") < n_tiles) & (F.col("__w0") + (k - 1) >= 0)
-        )
-        wins = F.sequence(
-            F.greatest(F.col("__w0").cast("long"), F.lit(0).cast("long")),
-            F.least(
-                F.col("__w0").cast("long") + F.lit(int(k - 1)).cast("long"),
-                F.lit(int(n_tiles - 1)).cast("long"),
-            ),
-        )
-        pts = base_pts.select(
-            "signature", "labels", F.explode(wins).alias("__w"),
-            "timestamp", "value",
-        )
-    w = Window.partitionBy("signature", "__w").orderBy("timestamp", "value")
-    dec = F.col("value").cast(_DEC)
-    prev = F.lag(dec).over(w)
-    if inner.func == "delta":
-        step = F.when(prev.isNull(), F.lit(None)).otherwise(dec - prev)
-    else:
-        step = (
-            F.when(prev.isNull(), F.lit(None))
-            .when(dec >= prev, dec - prev)
-            .otherwise(dec)
-        )
-    stepped = pts.select(
-        "signature", "labels", "__w", step.alias("__step")
-    ).filter(F.col("__step").isNotNull())
-    per_win = _hashable_group(
-        stepped,
-        ["signature", "__w"],
-        "labels",
-        F.sum("__step").cast("double").alias("__v"),
+    # a point at exactly ts == end opens tile R/S, past the tiling —
+    # _fan_out clips it rather than open a single-instant window
+    pts = _fan_out(
+        df, F.floor((F.col("timestamp") - F.lit(start)) / F.lit(sq.step_ms)),
+        k, -(-sq.range_ms // sq.step_ms),
     )
-    if inner.func == "rate":
-        per_win = per_win.withColumn(
-            "__v", F.col("__v") / F.lit(sel.range_ms / 1000.0)
-        )
-    inner_vals = per_win.select(
-        "signature", "labels", F.col("__v").alias("value"),
-        F.col("__w").alias("timestamp"),  # window index as pseudo-time
+    vals = _range_func(
+        pts, inner.func, inner_params, start,
+        (F.col("__w") + 1) * F.lit(float(sq.step_ms)), _W, sel.range_ms,
     )
-    return _over_time(inner_vals, op, param)
+    # the window index is the pseudo-time last_over_time orders by
+    return _over_time(vals.withColumnRenamed("__w", "timestamp"), op, *params)
 
 
 # -- label manipulation ---------------------------------------------------
@@ -2014,7 +1986,7 @@ def _unique_series(node) -> bool:
     if isinstance(node, Call):
         f = node.func
         if f in _RANGE_FUNCS:
-            return True  # _per_series aggregation
+            return True  # one row per (series, window)
         if f in ("absent", "absent_over_time", "vector", "timestamp",
                  "histogram_quantile", "histogram_fraction"):
             return True  # grouped, or at most one synthetic series
@@ -2350,16 +2322,17 @@ def eval_range(
     operator layer. What differs from eval_instant is selection only:
     - instant selector: last sample per window per series (no
       cross-window lookback carry — a window without samples emits no
-      point, where Prometheus would carry up to the lookback; this is
-      the tile semantics range_func_by_step already pins);
+      point, where Prometheus would carry up to the lookback);
     - EVERY range function with R = k*step (k a whole number up to
       RANGE_TILE_MAX_K — covers Grafana's $__rate_interval ~ 4x step;
-      a non-multiple range or a larger fan-out raises loudly), each
-      window's range isolated (reset and smoothing state never leaks
-      between windows; overlapping windows share samples via a bounded
-      ≤k-way explode, still ONE scan): rate/increase/delta/irate/
-      idelta/resets/changes/deriv/predict_linear/holt_winters and all
-      <agg>_over_time incl. quantile_over_time;
+      a non-multiple range or a larger fan-out raises loudly) selects
+      the k left-open tiles its window covers, each window's range
+      isolated (reset and smoothing state never leaks between windows;
+      overlapping windows share samples via a bounded ≤k-way explode,
+      still ONE scan), and runs the one implementation instant
+      evaluation runs (_range_func) keyed by the window. Only rate
+      keeps a per-mode convention: it divides by R here, by the
+      covered span in an instant query (PARITY.md);
     - subqueries under <agg>_over_time when the grid step and the
       subquery range are whole multiples of the subquery step: the
       inner expression (the FULL tiled class) evaluates once as its
@@ -2375,7 +2348,8 @@ def eval_range(
 
     Everything above selection is the operator layer eval_instant
     uses, called with the window id as one more key
-    (``extra_keys=("__w",)``): aggregations (_aggregate), vector
+    (``extra_keys=("__w",)``): range functions (_range_func),
+    aggregations (_aggregate), vector
     matching, set operators and vector–scalar ops (_vector_binop,
     _vector_scalar — a duplicate match key within a window raises the
     instant error, "within a step"), value transforms
@@ -2523,226 +2497,31 @@ def _tiled_values(node, start_ms: int, end_ms: int, step_ms: int, ctx: _Ctx) -> 
             (F.col("timestamp") > start_ms - sel.offset_ms - (k - 1) * step_ms)
             & (F.col("timestamp") <= end_ms - sel.offset_ms),
         )
+        # left-open tiles (start + w*step, start + (w+1)*step]
         win = F.floor(
             (F.col("timestamp") - F.lit(start_ms - sel.offset_ms) - F.lit(1))
             / F.lit(step_ms)
-        ).cast("long")
-        if k == 1:
-            return df.select(
-                "signature", "labels", win.alias("__w"), "timestamp", "value"
-            ).filter((F.col("__w") >= 0) & (F.col("__w") < n_tiles))
-        # range = k*step (the Grafana $__rate_interval shape): a sample
-        # whose base tile is w0 is inside the range of the k
-        # consecutive windows [w0, w0+k-1] — a bounded explode (≤k
-        # output rows per sample) clipped to the grid. The scan-time
-        # timestamp filter above makes the clipped bounds ascending,
-        # so sequence() never reverses; the defensive filter keeps the
-        # degenerate start==end grid empty.
-        base = df.select(
-            "signature", "labels", win.alias("__w0"), "timestamp", "value"
-        ).filter(
-            (F.col("__w0") < n_tiles) & (F.col("__w0") + (k - 1) >= 0)
         )
-        wins = F.sequence(
-            F.greatest(F.col("__w0"), F.lit(0).cast("long")),
-            F.least(
-                F.col("__w0") + F.lit(int(k - 1)).cast("long"),
-                F.lit(int(n_tiles - 1)).cast("long"),
-            ),
-        )
-        return base.select(
-            "signature", "labels", F.explode(wins).alias("__w"),
-            "timestamp", "value",
-        )
+        return _fan_out(df, win, k, n_tiles)
 
     if isinstance(node, Selector):
         if node.range_ms is not None:
             raise ValueError("eval_range: bare range selector — wrap in a function")
         return _last_point(tiles(node), "value", _W)
-    if (
-        isinstance(node, Call)
-        and node.func in ("rate", "increase", "delta", "resets", "changes",
-                          "irate", "idelta")
-        and len(node.args) == 1
-        and isinstance(node.args[0], Selector)
-        and node.args[0].range_ms is not None
-    ):
-        sel = node.args[0]
-        pts = tiles(sel, sel.range_ms)
-        if node.func in ("resets", "changes"):
-            # per-window counterpart of changes_resets: one lag over a
-            # (series, window, time) sort, integer counts — a window
-            # with ≥1 point emits (0 when no pairs), like the batch op
-            w = Window.partitionBy("signature", "__w").orderBy(
-                "timestamp", "value")
-            seq = pts.select(
-                "signature", "labels", "__w", "value",
-                F.lag("value").over(w).alias("__prev"),
-            )
-            cond = (
-                (F.col("value") < F.col("__prev"))
-                if node.func == "resets"
-                else (F.col("value") != F.col("__prev"))
-            )
-            out = _hashable_group(
-                seq,
-                ["signature", "__w"],
-                "labels",
-                F.count(F.when(F.col("__prev").isNotNull() & cond, 1))
-                .cast("double").alias("value"),
-            )
-            return out.select("signature", "labels", "__w", "value")
-        if node.func in ("irate", "idelta"):
-            # last two samples per (series, window) — the tiled twin of
-            # operators/timeseries.irate (reset-corrected DECIMAL step
-            # for irate; raw diff for idelta, like Prometheus)
-            w = Window.partitionBy("signature", "__w").orderBy(
-                F.desc("timestamp"), F.desc("value"))
-            d = F.col("value").cast(_DEC)
-            ranked = pts.select(
-                "signature", "labels", "__w",
-                F.col("timestamp").alias("__t"), d.alias("__v"),
-                F.row_number().over(w).alias("__rn"),
-            ).filter(F.col("__rn") <= 2)
-            agg = _hashable_group(
-                ranked,
-                ["signature", "__w"],
-                "labels",
-                F.max(F.when(F.col("__rn") == 1, F.col("__v"))).alias("__v1"),
-                F.max(F.when(F.col("__rn") == 2, F.col("__v"))).alias("__v2"),
-                F.max(F.when(F.col("__rn") == 1, F.col("__t"))).alias("__t1"),
-                F.max(F.when(F.col("__rn") == 2, F.col("__t"))).alias("__t2"),
-            ).filter(F.col("__t2").isNotNull() & (F.col("__t1") > F.col("__t2")))
-            if node.func == "idelta":
-                val = (F.col("__v1") - F.col("__v2")).cast("double")
-            else:
-                step = F.when(
-                    F.col("__v1") >= F.col("__v2"), F.col("__v1") - F.col("__v2")
-                ).otherwise(F.col("__v1"))
-                val = (
-                    step.cast("double")
-                    / (F.col("__t1") - F.col("__t2")) * F.lit(1000.0)
-                )
-            return agg.select(
-                "signature", "labels", "__w", val.alias("value"))
-        w = Window.partitionBy("signature", "__w").orderBy("timestamp", "value")
-        dec = F.col("value").cast(_DEC)
-        prev = F.lag(dec).over(w)
-        if node.func == "delta":
-            step = F.when(prev.isNull(), F.lit(None)).otherwise(dec - prev)
-        else:
-            step = (
-                F.when(prev.isNull(), F.lit(None))
-                .when(dec >= prev, dec - prev)
-                .otherwise(dec)
-            )
-        stepped = pts.select(
-            "signature", "labels", "__w", step.alias("__step")
-        ).filter(F.col("__step").isNotNull())
-        out = _hashable_group(
-            stepped,
-            ["signature", "__w"],
-            "labels",
-            F.sum("__step").cast("double").alias("value"),
-        )
-        if node.func == "rate":
-            out = out.withColumn(
-                "value", F.col("value") / F.lit(sel.range_ms / 1000.0))
-        return out.select("signature", "labels", "__w", "value")
-    if (
-        isinstance(node, Call)
-        and node.func.endswith("_over_time")
-        and node.func in _RANGE_FUNCS
-        and len(node.args) == 1
-        and isinstance(node.args[0], Selector)
-        and node.args[0].range_ms is not None
-    ):
-        sel = node.args[0]
-        op = node.func[: -len("_over_time")]
-        return _over_time(tiles(sel, sel.range_ms), op, extra_keys=_W).select(
-            "signature", "labels", "__w", "value"
-        )
-    if (
-        isinstance(node, Call)
-        and node.func == "quantile_over_time"
-        and len(node.args) == 2
-        and isinstance(node.args[1], Selector)
-        and node.args[1].range_ms is not None
-    ):
-        phi = _const_scalar(node.args[0])
-        if phi is None:
-            raise ValueError("quantile_over_time expects a scalar φ")
-        sel = node.args[1]
-        return _over_time(
-            tiles(sel, sel.range_ms), "quantile", phi, extra_keys=_W
-        ).select("signature", "labels", "__w", "value")
-    if (
-        isinstance(node, Call)
-        and node.func in ("holt_winters", "double_exponential_smoothing")
-        and len(node.args) == 3
-        and isinstance(node.args[0], Selector)
-        and node.args[0].range_ms is not None
-    ):
-        sel = node.args[0]
-        sf_ = _const_scalar(node.args[1])
-        tf_ = _const_scalar(node.args[2])
-        if sf_ is None or tf_ is None:
-            raise ValueError("holt_winters expects scalar smoothing factors")
-        pts = tiles(sel, sel.range_ms)
-        out = _tsops.holt_winters(
-            pts, key_cols=["signature", "__w"], sf=sf_, tf=tf_, out="__v"
-        )
-        dim = pts.select("signature", "labels").dropDuplicates(["signature"])
-        return out.join(F.broadcast(dim), "signature").select(
-            "signature", "labels", "__w",
-            F.col("__v").cast("double").alias("value"),
-        )
-    if (
-        isinstance(node, Call)
-        and node.func in ("deriv", "predict_linear")
-        and node.args
-        and isinstance(node.args[0], Selector)
-        and node.args[0].range_ms is not None
-    ):
-        sel = node.args[0]
-        # per-window least squares from the five exact DECIMAL
-        # accumulators (linreg_slope's construction keyed by window);
-        # ONE map-combinable aggregation, no sort
-        pts = tiles(sel, sel.range_ms)
-        x = (F.col("timestamp") - F.lit(start_ms)).cast("decimal(20,0)")
-        y = F.col("value").cast("decimal(18,2)")
-        agg = _hashable_group(
-            pts,
-            ["signature", "__w"],
-            "labels",
-            F.count("*").alias("__n"),
-            F.sum(x).cast("double").alias("__sx"),
-            F.sum(y).cast("double").alias("__sy"),
-            F.sum(x * x).cast("double").alias("__sxx"),
-            F.sum(x * y).cast("double").alias("__sxy"),
-        )
-        n = F.col("__n")
-        denom = n * F.col("__sxx") - F.col("__sx") * F.col("__sx")
-        agg = agg.filter(denom != 0)  # zero x-variance → slope undefined
-        slope_ms = (n * F.col("__sxy") - F.col("__sx") * F.col("__sy")) / denom
-        if node.func == "deriv":
-            val = slope_ms * F.lit(1000.0)
-        else:
-            t_sec = (
-                _const_scalar(node.args[1]) if len(node.args) > 1 else None
-            )
-            if t_sec is None:
-                raise ValueError("predict_linear expects a scalar horizon")
-            intercept = (F.col("__sy") - slope_ms * F.col("__sx")) / n
-            # extrapolate from each window's END (its evaluation time,
-            # relative to the t0=start centering) — the instant
-            # evaluator's at_ms = range_end + t convention per window
-            at = (F.col("__w") + 1) * F.lit(float(step_ms)) + F.lit(
-                t_sec * 1000.0
-            )
-            val = intercept + slope_ms * at
-        return agg.select(
-            "signature", "labels", "__w", val.cast("double").alias("value")
+    if isinstance(node, Call) and node.func in _RANGE_FUNCS:
+        def scalar(a) -> float:
+            c = _const_scalar(a)
+            if c is None:
+                raise ValueError(f"{node.func}() expects a scalar argument")
+            return c
+
+        rng, params = _range_args(node, scalar)
+        if isinstance(rng, Subquery):
+            return _tiled_subquery(
+                node.func, rng, params, start_ms, end_ms, step_ms, ctx)
+        return _range_func(
+            tiles(rng, rng.range_ms), node.func, params, start_ms,
+            (F.col("__w") + 1) * F.lit(float(step_ms)), _W, rng.range_ms,
         )
     if (
         isinstance(node, Call)
@@ -2771,97 +2550,6 @@ def _tiled_values(node, start_ms: int, end_ms: int, step_ms: int, ctx: _Ctx) -> 
         )
         return _unlabelled(
             allw.join(present, "__w", "left_anti"), F.lit(1.0), "__w")
-    if isinstance(node, Call) and node.func.endswith("_over_time") and (
-        (
-            node.func[: -len("_over_time")] in
-            ("avg", "sum", "min", "max", "count", "last", "present",
-             "stddev", "stdvar", "mad")
-            and len(node.args) == 1
-            and isinstance(node.args[0], Subquery)
-        )
-        or (
-            node.func == "quantile_over_time"
-            and len(node.args) == 2
-            and isinstance(node.args[1], Subquery)
-        )
-    ):
-        # subquery in RANGE mode — `max_over_time(rate(m[5m])[30m:5m])`
-        # as a query_range panel. The inner expression evaluates ONCE
-        # as its own tiled grid at the subquery step S over
-        # [start-offset-R, end-offset]; because the grid step G is a
-        # multiple of S, every outer window's subquery tiles land on
-        # that same S-grid (the instant path's per-anchor tiling,
-        # shared), so inner tile j feeds the outer windows w with
-        # (w+1)·(G/S) < j+1 ≤ (w+1)·(G/S) + R/S — a bounded explode of
-        # ≤⌈(R/S)/(G/S)⌉ windows per inner value, series grain, never
-        # a per-step replan.
-        if node.func == "quantile_over_time":
-            sq_param = _const_scalar(node.args[0])
-            if sq_param is None:
-                raise ValueError("quantile_over_time expects a scalar φ")
-            sq = node.args[1]
-        else:
-            sq_param = None
-            sq = node.args[0]
-        if sq.at_ms is not None:
-            raise ValueError(
-                "eval_range: @ on a subquery inside a step-varying "
-                "subtree the tiled evaluator cannot split"
-            )
-        S, R = sq.step_ms, sq.range_ms
-        if step_ms % S or R % S:
-            raise ValueError(
-                "eval_range: subquery needs the grid step and the "
-                f"subquery range to be whole multiples of the subquery "
-                f"step ({step_ms}ms grid, {R}ms range vs {S}ms step)"
-            )
-        m, r = step_ms // S, R // S
-        if -(-r // m) > RANGE_TILE_MAX_K:
-            raise ValueError(
-                f"eval_range: subquery window fan-out {-(-r // m)} "
-                f"exceeds RANGE_TILE_MAX_K={RANGE_TILE_MAX_K}"
-            )
-        if n_tiles <= 0:
-            return _unlabelled(
-                ctx.samples.sparkSession.range(0), F.lit(0.0),
-                F.col("id").cast("long").alias("__w"),
-            )
-        inner = _tiled_values(
-            sq.expr, start_ms - sq.offset_ms - R, end_ms - sq.offset_ms,
-            S, ctx,
-        )
-        j = F.col("__w")
-        w_lo = (F.floor((j - F.lit(int(r)) + F.lit(int(m)))
-                        / F.lit(int(m))) - 1).cast("long")
-        w_hi = (F.floor(j / F.lit(int(m))) - 1).cast("long")
-        fanned = (
-            inner.select(
-                "signature", "labels",
-                F.col("__w").alias("timestamp"),  # inner tile id as the
-                # pseudo-time last_over_time orders by (instant path's
-                # convention)
-                "value", w_lo.alias("__lo"), w_hi.alias("__hi"),
-            )
-            .filter(
-                (F.col("__hi") >= 0)
-                & (F.col("__lo") < n_tiles)
-                & (F.col("__lo") <= F.col("__hi"))
-            )
-            .select(
-                "signature", "labels", "timestamp", "value",
-                F.explode(
-                    F.sequence(
-                        F.greatest(F.col("__lo"), F.lit(0).cast("long")),
-                        F.least(F.col("__hi"),
-                                F.lit(int(n_tiles - 1)).cast("long")),
-                    )
-                ).alias("__w"),
-            )
-        )
-        return _over_time(
-            fanned, node.func[: -len("_over_time")], sq_param,
-            extra_keys=_W,
-        ).select("signature", "labels", "__w", "value")
     if isinstance(node, Call) and node.func == "info" and node.args:
         # info() in range mode: the tiled inner grid enriched per row
         # with the info metric's data labels — the info selection
@@ -2950,6 +2638,78 @@ def _tiled_values(node, start_ms: int, end_ms: int, step_ms: int, ctx: _Ctx) -> 
         "<agg>_over_time(m[step]), grouping aggregations, and binary "
         "operators composing those — got an unsupported shape"
     )
+
+
+def _tiled_subquery(
+    f: str, sq: Subquery, params: list[float],
+    start_ms: int, end_ms: int, step_ms: int, ctx: _Ctx,
+) -> DataFrame:
+    """A subquery under <agg>_over_time in RANGE mode —
+    `max_over_time(rate(m[5m])[30m:5m])` as a query_range panel. The
+    inner expression evaluates ONCE as its own tiled grid at the
+    subquery step S over [start-offset-R, end-offset]; because the grid
+    step G is a multiple of S, every outer window's subquery tiles land
+    on that same S-grid (the instant path's per-anchor tiling, shared),
+    so inner tile j feeds the outer windows w with
+    (w+1)·(G/S) < j+1 ≤ (w+1)·(G/S) + R/S — a bounded explode of
+    ≤⌈(R/S)/(G/S)⌉ windows per inner value, series grain, never a
+    per-step replan."""
+    op = _subquery_op(f)
+    if sq.at_ms is not None:
+        raise ValueError(
+            "eval_range: @ on a subquery inside a step-varying "
+            "subtree the tiled evaluator cannot split"
+        )
+    S, R = sq.step_ms, sq.range_ms
+    if step_ms % S or R % S:
+        raise ValueError(
+            "eval_range: subquery needs the grid step and the "
+            f"subquery range to be whole multiples of the subquery "
+            f"step ({step_ms}ms grid, {R}ms range vs {S}ms step)"
+        )
+    m, r = step_ms // S, R // S
+    if -(-r // m) > RANGE_TILE_MAX_K:
+        raise ValueError(
+            f"eval_range: subquery window fan-out {-(-r // m)} "
+            f"exceeds RANGE_TILE_MAX_K={RANGE_TILE_MAX_K}"
+        )
+    n_tiles = -(-(end_ms - start_ms) // step_ms)
+    if n_tiles <= 0:
+        return _unlabelled(
+            ctx.samples.sparkSession.range(0), F.lit(0.0),
+            F.col("id").cast("long").alias("__w"),
+        )
+    inner = _tiled_values(
+        sq.expr, start_ms - sq.offset_ms - R, end_ms - sq.offset_ms, S, ctx)
+    j = F.col("__w")
+    w_lo = (F.floor((j - F.lit(int(r)) + F.lit(int(m)))
+                    / F.lit(int(m))) - 1).cast("long")
+    w_hi = (F.floor(j / F.lit(int(m))) - 1).cast("long")
+    fanned = (
+        inner.select(
+            "signature", "labels",
+            # the inner tile id is the pseudo-time last_over_time
+            # orders by (the instant path's convention)
+            F.col("__w").alias("timestamp"),
+            "value", w_lo.alias("__lo"), w_hi.alias("__hi"),
+        )
+        .filter(
+            (F.col("__hi") >= 0)
+            & (F.col("__lo") < n_tiles)
+            & (F.col("__lo") <= F.col("__hi"))
+        )
+        .select(
+            "signature", "labels", "timestamp", "value",
+            F.explode(
+                F.sequence(
+                    F.greatest(F.col("__lo"), F.lit(0).cast("long")),
+                    F.least(F.col("__hi"),
+                            F.lit(int(n_tiles - 1)).cast("long")),
+                )
+            ).alias("__w"),
+        )
+    )
+    return _over_time(fanned, op, *params, extra_keys=_W)
 
 
 def _const_scalar(node) -> float | None:

@@ -169,23 +169,28 @@ def _evaluate_hinted(db: MonolithDB, matchers, q: proto.Query) -> list[proto.Tim
 
     from monolith_spark.operators.timeseries import downsample, range_func_by_step
 
-    flat = db.query_flat(matchers, q.start_timestamp_ms, q.end_timestamp_ms)
+    # the labels query_flat already joined ride along as one more
+    # grouping key (their entries array — a map is not groupable;
+    # series_id determines it), so the query resolves ONE snapshot and
+    # scans the dim once
+    flat = db.query_flat(
+        matchers, q.start_timestamp_ms, q.end_timestamp_ms
+    ).withColumn("__lent", F.map_entries("labels"))
+    keys = ["series_id", "signature", "__lent"]
     if agg is None:  # rate/increase/delta/irate
         agg = h.func
-        ds = range_func_by_step(
-            flat, h.step_ms, func=h.func, key_cols=["series_id", "signature"]
-        )
+        ds = range_func_by_step(flat, h.step_ms, func=h.func, key_cols=keys)
     else:
-        ds = downsample(flat, h.step_ms, key_cols=["series_id", "signature"], agg=agg)
-    ds = ds.withColumn(
-        "bucket_ms",
-        F.greatest(F.col("bucket_ms"), F.lit(q.start_timestamp_ms)),
-    ).filter(F.col(f"{agg}_value").isNotNull())
+        ds = downsample(flat, h.step_ms, key_cols=keys, agg=agg)
     rows = (
-        # J6 hydration reuses the engine's size-gated dim hint — a
-        # forced broadcast here would ship an unbounded dim at scale.
-        ds.join(db._dim_hint(db.series().select("series_id", "labels"),
-                             db._load_manifest()["series"]), "series_id")
+        ds.filter(F.col(f"{agg}_value").isNotNull())
+        .select(
+            "signature",
+            F.map_from_entries("__lent").alias("labels"),
+            F.greatest(F.col("bucket_ms"), F.lit(q.start_timestamp_ms))
+            .alias("bucket_ms"),
+            f"{agg}_value",
+        )
         .orderBy("signature", "bucket_ms")
         .collect()
     )

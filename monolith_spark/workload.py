@@ -814,7 +814,7 @@ def ts_counter_increase(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("signature").orderBy("timestamp", "value")
     dec = F.col("value").cast("decimal(28,6)")
     prev = F.lag(dec).over(w)
-    step = F.when(prev.isNull(), F.lit(None)).when(dec >= prev, dec - prev).otherwise(dec)
+    step = _tsops.counter_step(dec, prev)
     return (
         s.select("signature", step.alias("step"))
         .filter(F.col("step").isNotNull())
@@ -857,7 +857,7 @@ def ts_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("signature").orderBy("timestamp", "value")
     dec = F.col("value").cast("decimal(28,6)")
     prev = F.lag(dec).over(w)
-    step = F.when(prev.isNull(), F.lit(None)).when(dec >= prev, dec - prev).otherwise(dec)
+    step = _tsops.counter_step(dec, prev)
     agg = (
         s.select("signature", F.col("timestamp").alias("ts_ms"), step.alias("step"))
         .filter(F.col("step").isNotNull())
@@ -8178,7 +8178,7 @@ def ts_max_daily_increase(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("signature").orderBy("timestamp", "value")
     dec = F.col("value").cast("decimal(28,6)")
     prev = F.lag(dec).over(w)
-    step = F.when(prev.isNull(), F.lit(None)).when(dec >= prev, dec - prev).otherwise(dec)
+    step = _tsops.counter_step(dec, prev)
     day = F.floor((F.col("timestamp") - F.lit(JAN1)) / F.lit(DAY_MS)).cast("long")
     daily = (
         s.select("signature", day.alias("day"), step.alias("step"))
@@ -9561,9 +9561,7 @@ def ts_subquery_max_rate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.col("value").cast("decimal(28,6)").alias("v"))
     w = Window.partitionBy("signature", "sb").orderBy("ts_ms", "v")
     prev = F.lag("v").over(w)
-    step = F.when(prev.isNull(), F.lit(None)).when(
-        F.col("v") >= prev, F.col("v") - prev
-    ).otherwise(F.col("v"))
+    step = _tsops.counter_step(F.col("v"), prev)
     subrates = (
         pts.select("signature", "sb", step.alias("step"))
         .filter(F.col("step").isNotNull())

@@ -1432,6 +1432,17 @@ def test_eval_range_k_fanout(spark):
         'predict_linear({j=~".+"}[40s], 60)',
         'holt_winters({j=~".+"}[40s], 0.5, 0.5)',
         'histogram_quantile(0.9, sum by (j) (increase({j=~".+"}[40s])))',
+        'idelta({j=~".+"}[40s])',
+        'min_over_time({j=~".+"}[40s])',
+        'count_over_time({j=~".+"}[40s])',
+        'last_over_time({j=~".+"}[40s])',
+        'present_over_time({j=~".+"}[40s])',
+        'stddev_over_time({j=~".+"}[40s])',
+        'stdvar_over_time({j=~".+"}[40s])',
+        'mad_over_time({j=~".+"}[40s])',
+        'ts_of_max_over_time({j=~".+"}[40s])',
+        'ts_of_min_over_time({j=~".+"}[40s])',
+        'ts_of_last_over_time({j=~".+"}[40s])',
     ]
     steps = list(range(START + STEP, END + 1, STEP))
     for expr in exprs:
@@ -1459,6 +1470,23 @@ def test_eval_range_k_fanout(spark):
                             STEP).collect()}
     assert set(rr) == set(ri)
     assert all(math.isclose(rr[k], ri[k] / 40.0, rel_tol=1e-12) for k in rr)
+    # ... where instant rate divides the increase by the span its steps
+    # cover, so a window holding a single step (zero span) is absent
+    pts = sorted((t, v) for lab, t, v in rows if lab["j"] == "a")
+    one_step = 0
+    for t in steps:
+        win = [(ts, v) for ts, v in pts if t - 40_000 <= ts <= t]
+        got = {r["signature"]: r["value"] for r in promql.eval_instant(
+            df, 'rate({j="a"}[40s])', t).collect()}
+        if len(win) < 3:
+            one_step += len(win) == 2
+            assert got == {} and ("j=a", t) in rr, t
+            continue
+        inc = sum(v - p if v >= p else v
+                  for (_, p), (_, v) in zip(win, win[1:]))
+        span_s = (win[-1][0] - win[1][0]) / 1000.0
+        assert math.isclose(got["j=a"], inc / span_s, rel_tol=1e-12), t
+    assert one_step
 
 
 def test_eval_range_operators_match_instant(spark):
@@ -1707,6 +1735,10 @@ def test_eval_range_subquery(spark):
         ('stddev_over_time(increase({j="a"}[20s])[40s:10s])', 10_000),
         ('quantile_over_time(0.9, increase({j="a"}[20s])[40s:20s])', 20_000),
         ('present_over_time(rate({j="a"}[10s])[30s:10s])', 10_000),
+        # any range function as the inner: both modes run the one
+        # range-function layer per window
+        ('max_over_time(irate({j="a"}[20s])[40s:10s])', 10_000),
+        ('avg_over_time(deriv({j="a"}[20s])[40s:20s])', 20_000),
     ]:
         rg = {(r["signature"], r["t_ms"]): r["value"]
               for r in promql.eval_range(df, expr, 0, 200_000, G).collect()}

@@ -215,6 +215,13 @@ def test_hinted_range_funcs_semantics(spark, tmp_path):
     # irate: last step in each bucket over its own duration (ms→s);
     # bucket 0's step spans t=1→10 (9 ms), bucket 20's t=20→30 (10 ms)
     assert hinted("irate") == [(0, 5.0 / 0.009), (20, 5.0 / 0.010)]
+    # a hinted query resolves ONE snapshot: the labels ride along with
+    # the points query_flat returns, no second dim or manifest read
+    loads = []
+    load = db._load_manifest
+    db._load_manifest = lambda *a, **k: loads.append(a) or load(*a, **k)
+    assert hinted("avg_over_time") == [(0, 2.5), (20, 4.5)]
+    assert len(loads) == 1
 
 
 def test_range_func_matches_counter_increase_on_fixture(spark, sf_dir):
